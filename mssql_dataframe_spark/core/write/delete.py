@@ -15,7 +15,6 @@ Cost ∝ touched data, not table size.
 
 from __future__ import annotations
 
-import os
 import shutil
 
 from typing import Optional
@@ -25,7 +24,57 @@ from pyspark.sql import functions as F
 
 from ...store import TableStore
 from ...validation import precheck_dataframe_deferred
-from .update import resolve_match_columns, stage_validated_source
+from .update import (
+    discover_touched,
+    existing_candidates,
+    file_names,
+    matched_file_names,
+    resolve_match_columns,
+    split_entries,
+    stage_validated_source,
+)
+
+
+def _rows(entries) -> int:
+    """Row total of manifest entries — no scan."""
+    return sum(e.get("rows") or 0 for e in entries)
+
+
+def _parent_keys(deleted_rows, fk):
+    """The distinct non-NULL keys ``fk`` references among the deleted
+    rows, under the FK's own column names."""
+    return (
+        deleted_rows.select(
+            *[
+                F.col(rc).alias(c)
+                for c, rc in zip(fk["columns"], fk["ref_columns"])
+            ]
+        )
+        .na.drop(how="any")
+        .distinct()
+    )
+
+
+def _key_bounds(cols, keys):
+    """Per-column min/max of the deleted ``keys`` — one small agg over
+    the persisted key set, computed ONCE per FK and reused by the
+    initial probe, the set_null discovery scan, and any re-probe (the
+    key set never changes within one delete)."""
+    brow = keys.agg(
+        *[
+            f
+            for i, c in enumerate(cols)
+            for f in (
+                F.min(c).alias(f"__lo_{i}"),
+                F.max(c).alias(f"__hi_{i}"),
+            )
+        ]
+    ).collect()[0]
+    return {
+        c: (brow[f"__lo_{i}"], brow[f"__hi_{i}"])
+        for i, c in enumerate(cols)
+        if brow[f"__lo_{i}"] is not None
+    }
 
 
 def fk_references(store, table_name) -> list[tuple]:
@@ -117,90 +166,38 @@ def _check_restrict_references(
             "retry"
         )
 
-    def _key_bounds(fk, parent_keys):
-        """Per-column min/max of the deleted keys — one small agg over
-        the persisted key set, computed ONCE per FK and reused by the
-        initial probe, the set_null discovery scan, and any re-probe
-        (the key set never changes within this call)."""
-        brow = parent_keys.agg(
-            *[
-                f
-                for i, c in enumerate(fk["columns"])
-                for f in (
-                    F.min(c).alias(f"__lo_{i}"),
-                    F.max(c).alias(f"__hi_{i}"),
-                )
-            ]
-        ).collect()[0]
-        return {
-            c: (brow[f"__lo_{i}"], brow[f"__hi_{i}"])
-            for i, c in enumerate(fk["columns"])
-            if brow[f"__lo_{i}"] is not None
-        }
+    def _referencing(t, fk, parent_keys, bounds, version) -> list:
+        """``t``'s candidate files when one of their rows references a
+        deleted key via ``fk``, else [] — one keys-only semi join over
+        ``existing_candidates``: the key bounds intersect the child
+        manifest's per-file FK-column stats, then the deleted keys
+        probe the candidates' bloom sidecars when the child indexes
+        its FK columns, so probe cost is ∝ files that could reference
+        the keys, not child-table size.
 
-    def _candidates(t, key_bounds, parent_keys=None, fk_cols=None,
-                    version=None):
-        """Stats-pruned candidate files of ``t`` that could hold a
-        row referencing the deleted keys: the key bounds intersect
-        the child manifest's per-file FK-column stats, so a delete on
-        a key range no child file covers reads ZERO child files —
-        probe cost ∝ files that could reference the keys, not
-        child-table size. Empty child manifests short-circuit the
-        same way (and never hit the empty-table no-_metadata read
-        shape).
-
-        ``version`` pins BOTH manifest-shaped reads (the stats split
-        and the bloom candidates) to one snapshot — the caller passes
+        ``version`` pins every read (the stats split, the bloom
+        candidates, the scan) to one snapshot — the caller passes
         ``expected[t]``, the version every probe verdict on ``t`` is
         declared valid against, so re-probes after an own action see
-        the post-action files via the refreshed ``expected[t]``. Two
-        unpinned reads straddling a foreign commit could each clear a
-        different file set and their intersection would silently drop
-        files from the FK probe (ADVICE r12); the revalidation pass
-        backstopped that only by repeating the same racy read pair.
-
-        When the child bloom-indexes its FK columns, the deleted key
-        set additionally probes each candidate's sidecar — the same
-        batch-key narrowing as write discovery: high-entropy FKs
-        overlap every file's stats range, but the sidecars still
-        prove most files reference-free."""
-        if not key_bounds:  # no non-NULL deleted keys: nothing can
-            return []       # reference them
-        if version is None:
-            version = store.meta(t).version
-        touched, _ = store.split_by_key_ranges(
-            t, key_bounds, version=version
+        the post-action files. Two unpinned reads straddling a foreign
+        commit could each clear a different file set (ADVICE r12), and
+        reading pinned files under a LATER schema (concurrent MODIFY
+        COLUMN on the child) could mistype the FK columns to NULL, so a
+        false no-hit would silently delete a still-referenced parent
+        (ADVICE r13)."""
+        touched = existing_candidates(
+            store, t, version, bounds, parent_keys, fk["columns"]
         )
-        if not touched or parent_keys is None:
-            return touched
-        from .update import bloom_narrow_entries
-
-        entries_t = store.manifest(t, version)
-        tset = set(touched)
-        cand = [e for e in entries_t if e["path"] in tset]
-        surv = bloom_narrow_entries(store, t, cand, parent_keys, fk_cols)
-        if surv is not None:
-            return [e["path"] for e in surv]
-        return touched
-
-    def _probe_hit(t, fk, parent_keys, touched, version=None) -> bool:
-        """True iff a row of ``t``'s ``touched`` candidate files
-        references a deleted key via ``fk`` — one keys-only semi
-        join. ``version`` pins the scan to the snapshot the candidate
-        list was computed against: reading pinned files under a LATER
-        schema (concurrent MODIFY COLUMN on the child) could mistype
-        the FK columns to NULL and a false no-hit would silently
-        delete a still-referenced parent (ADVICE r13 class)."""
-        if not touched:
-            return False
-        return bool(
+        if touched and (
             store.read_files(t, touched, version=version)
             .select(*fk["columns"])
             .na.drop(how="any")
             .join(parent_keys, fk["columns"], "left_semi")
             .limit(1)
             .count()
-        )
+        ):
+            return touched
+        return []
 
     deleted_rows = deleted_rows.persist()
     # (t, fk, parent_keys, bounds) per FK, for the final revalidation
@@ -208,29 +205,16 @@ def _check_restrict_references(
     try:
         for t, nm, fk in refs:
             action = fk.get("on_delete", "no_action")
-            parent_keys = (
-                deleted_rows.select(
-                    *[
-                        F.col(rc).alias(c)
-                        for c, rc in zip(fk["columns"], fk["ref_columns"])
-                    ]
-                )
-                .na.drop(how="any")
-                .distinct()
-            )
-            bounds = _key_bounds(fk, parent_keys)
+            parent_keys = _parent_keys(deleted_rows, fk)
+            bounds = _key_bounds(fk["columns"], parent_keys)
             probed.append((t, fk, parent_keys, bounds))
             # capture BEFORE the probe reads anything — a foreign
             # commit after this point is caught by the final
             # revalidation pass below or by the parent commit's
             # precondition, never silently absorbed
             expected.setdefault(t, store.meta(t).version)
-            touched = _candidates(
-                t, bounds, parent_keys, fk["columns"],
-                version=expected[t],
-            )
-            if not _probe_hit(t, fk, parent_keys, touched,
-                              version=expected[t]):
+            touched = _referencing(t, fk, parent_keys, bounds, expected[t])
+            if not touched:
                 continue
             if action == "cascade":
                 if t in _chain or t == table_name:
@@ -249,11 +233,7 @@ def _check_restrict_references(
                 # that landed mid-action shows up here and fails
                 # cleanly instead of being orphaned
                 expected[t] = store.meta(t).version
-                if _probe_hit(t, fk, parent_keys,
-                             _candidates(t, bounds, parent_keys,
-                                         fk["columns"],
-                                         version=expected[t]),
-                             version=expected[t]):
+                if _referencing(t, fk, parent_keys, bounds, expected[t]):
                     _conflict(t)
             elif action == "set_null":
                 key_cols = set(fk["columns"])
@@ -264,28 +244,14 @@ def _check_restrict_references(
                 # scan itself runs over the stats-pruned candidates
                 # the probe already computed, so discovery cost is
                 # ∝ candidate files too.
-                child_scan = store.read_files(t, touched)
-                matched_files = {
-                    os.path.basename(r["f"])
-                    for r in child_scan
-                    .select(
-                        *fk["columns"],
-                        F.col("_metadata.file_path").alias("f"),
-                    )
-                    .na.drop(how="any", subset=list(fk["columns"]))
-                    .join(parent_keys, list(fk["columns"]), "left_semi")
-                    .select("f")
-                    .distinct()
-                    .collect()
-                }
+                matched_files = matched_file_names(
+                    store.read_files(t, touched), parent_keys,
+                    list(fk["columns"]),
+                )
                 v_child = store.meta(t).version
-                entries = store.manifest(t, v_child)
-                touched = [
-                    e["path"] for e in entries if e["path"] in matched_files
-                ]
-                keep_entries = [
-                    e for e in entries if e["path"] not in matched_files
-                ]
+                keep_entries, touched = split_entries(
+                    store.manifest(t, v_child), matched_files
+                )
                 child = store.read_files(t, touched)
                 # null the FK columns on matching rows; a left-semi
                 # flag via join would lose non-matching rows, so flag
@@ -313,11 +279,7 @@ def _check_restrict_references(
                 )
                 # own commit: capture AFTER + re-probe (see cascade)
                 expected[t] = store.meta(t).version
-                if _probe_hit(t, fk, parent_keys,
-                             _candidates(t, bounds, parent_keys,
-                                         fk["columns"],
-                                         version=expected[t]),
-                             version=expected[t]):
+                if _referencing(t, fk, parent_keys, bounds, expected[t]):
                     _conflict(t)
             else:
                 raise SQLForeignKeyViolation(
@@ -339,11 +301,8 @@ def _check_restrict_references(
             if v_now == expected[t]:
                 continue
             for t2, fk, parent_keys, bounds in probed:
-                if t2 == t and _probe_hit(
-                    t, fk, parent_keys,
-                    _candidates(t, bounds, parent_keys, fk["columns"],
-                                version=v_now),
-                    version=v_now,
+                if t2 == t and _referencing(
+                    t, fk, parent_keys, bounds, v_now
                 ):
                     _conflict(t)
             expected[t] = v_now
@@ -385,8 +344,7 @@ def delete_op(
         # same no-match contract delete_where honors; committing here
         # published phantom 'delete' versions)
         return 0
-    pk_match = match == list(meta.primary_key)
-    can_prune = pk_match and len(match) == 1
+    can_prune = match == list(meta.primary_key) and len(match) == 1
     # stage the distinct key set ONCE (guide §2.4): the pruning bounds
     # ride the staging write as observe() metrics, and every consumer
     # below — bloom/content discovery, the per-child referential-action
@@ -402,183 +360,81 @@ def delete_op(
         store, table_name, plan, finish
     )
     try:
-        return _delete_apply(
-            store, table_name, meta, match, keys, bounds, entries,
-            can_prune, _chain,
-        )
-    finally:
-        shutil.rmtree(src_stage, ignore_errors=True)
-
-
-def _delete_apply(
-    store, table_name, meta, match, keys, bounds, entries, can_prune,
-    _chain,
-) -> int:
-    """Discovery + referential actions + rewrite + commit over the
-    staged key LEAF ``keys`` (see ``stage_validated_source``)."""
-    keep_entries = None
-    stats_decided = False
-    single_bounds = (bounds or {}).get(match[0]) if can_prune else None
-    if single_bounds is not None and single_bounds[0] is not None:
-        # stats pruning: zero-scan manifest min/max split on the PK;
-        # when it runs, its verdict stands (see merge_op)
-        stats_decided = True
-        touched, kept = store.split_by_key_range(
-            table_name, match[0], single_bounds[0], single_bounds[1],
-            version=meta.version,
+        keep_entries, touched = discover_touched(
+            store, table_name, meta, bounds, keys, match,
+            stats_final=can_prune,
         )
         if not touched:
-            # no file's key range intersects the source: nothing can
-            # match — no rewrite, no commit (same contract as the
-            # content path's no-match short-circuit)
-            return 0
-        if kept:
-            keep_entries = kept
-            target = store.read_files(table_name, touched)
-    if keep_entries is None and stats_decided and entries:
-        # stats kept nothing — interleaved/high-entropy layouts make
-        # min/max blind, but batch-key bloom probes (driver-side, no
-        # extra job) can still isolate the touched files; [] survivors
-        # = no key exists anywhere, so the delete is a no-op
-        from .update import bloom_narrow_entries
-
-        surviving = bloom_narrow_entries(
-            store, table_name, entries, keys, match, meta=meta
-        )
-        if surviving is not None:
-            if not surviving:
-                return 0  # nothing matches: no rewrite, no commit
-            if len(surviving) < len(entries):
-                spaths = {e["path"] for e in surviving}
-                keep_entries = [
-                    e for e in entries if e["path"] not in spaths
-                ]
-                target = store.read_files(table_name, sorted(spaths))
-    if keep_entries is None and not stats_decided and entries:
-        # content pruning fallback (the delete_where shape) for
-        # composite-PK / non-PK match keys — e.g. an ON DELETE
-        # CASCADE child delete matching on FK columns: one slim scan
-        # (match columns + _metadata.file_path) finds the files
-        # holding a matching row; the rest carry by reference instead
-        # of rewriting the whole table. A composite-PK match first
-        # stats-narrows the scan to candidate files via per-column
-        # bounds intersection. (empty-manifest tables skip this:
-        # their read is not a parquet scan, so _metadata does not
-        # resolve — and a delete from an empty table is a no-op
-        # anyway.)
-        from .update import discover_matched_files, split_entries
-
-        matched_files = discover_matched_files(
-            store, table_name, bounds, keys, match, meta=meta
-        )
-        if not matched_files:
             return 0  # nothing matches: no rewrite, no commit
-        kept, touched = split_entries(entries, matched_files)
-        if kept:
-            keep_entries = kept
-            target = store.read_files(table_name, touched)
-    if keep_entries is None:
-        target = store.read(table_name)
+        target = store.read_files(table_name, touched)
 
-    # deleted rows live only in the touched files (pruned files are
-    # provably match-free), so the referential-action probes read the
-    # pruned target, never the full table
-    child_deps = _check_restrict_references(
-        store, table_name,
-        target.join(keys, on=match, how="left_semi"),
-        _chain=_chain,
-    )
-    survivors = target.join(keys, on=match, how="left_anti")
-    # self-referencing FKs: fk_references skips the table itself (a
-    # row being deleted may legitimately reference another deleted
-    # row), so the check runs HERE against what REMAINS — pruned
-    # survivors plus the carried files, stats-narrowed to the files
-    # whose FK-column ranges intersect the deleted keys. Only
-    # no_action self-FKs exist (cascade/set_null are rejected at
-    # declaration, SQL Server error 1785).
-    self_fks = {
-        nm: fk
-        for nm, fk in (meta.properties.get("foreign_keys") or {}).items()
-        if fk["ref_table"] == table_name
-    }
-    if self_fks:
-        from ...errors import SQLForeignKeyViolation
-
-        deleted = target.join(keys, on=match, how="left_semi")
-        keep_paths = {
-            e["path"] for e in (keep_entries or [])
+        # deleted rows live only in the touched files (pruned files are
+        # provably match-free), so the referential-action probes read the
+        # pruned target, never the full table
+        child_deps = _check_restrict_references(
+            store, table_name,
+            target.join(keys, on=match, how="left_semi"),
+            _chain=_chain,
+        )
+        survivors = target.join(keys, on=match, how="left_anti")
+        # self-referencing FKs: fk_references skips the table itself (a
+        # row being deleted may legitimately reference another deleted
+        # row), so the check runs HERE against what REMAINS — pruned
+        # survivors plus the carried files, stats-narrowed to the files
+        # whose FK-column ranges intersect the deleted keys. Only
+        # no_action self-FKs exist (cascade/set_null are rejected at
+        # declaration, SQL Server error 1785).
+        self_fks = {
+            nm: fk
+            for nm, fk in (meta.properties.get("foreign_keys") or {}).items()
+            if fk["ref_table"] == table_name
         }
-        for nm, fk in self_fks.items():
-            parent_keys = (
-                deleted.select(
-                    *[
-                        F.col(rc).alias(c)
-                        for c, rc in zip(fk["columns"], fk["ref_columns"])
-                    ]
+        if self_fks:
+            from ...errors import SQLForeignKeyViolation
+
+            deleted = target.join(keys, on=match, how="left_semi")
+            for nm, fk in self_fks.items():
+                parent_keys = _parent_keys(deleted, fk)
+                kb = _key_bounds(fk["columns"], parent_keys)
+                if not kb:  # no non-NULL deleted keys: nothing refers
+                    continue
+                probe = survivors.select(*fk["columns"])
+                carried = existing_candidates(
+                    store, table_name, meta.version, kb, parent_keys,
+                    fk["columns"], carried=keep_entries, meta=meta,
                 )
-                .na.drop(how="any")
-                .distinct()
-            )
-            brow = parent_keys.agg(
-                *[
-                    f
-                    for i, c in enumerate(fk["columns"])
-                    for f in (
-                        F.min(c).alias(f"__lo_{i}"),
-                        F.max(c).alias(f"__hi_{i}"),
-                    )
-                ]
-            ).collect()[0]
-            kb = {
-                c: (brow[f"__lo_{i}"], brow[f"__hi_{i}"])
-                for i, c in enumerate(fk["columns"])
-                if brow[f"__lo_{i}"] is not None
-            }
-            if not kb:
-                continue  # no non-NULL deleted keys: nothing references
-            probe = survivors.select(*fk["columns"])
-            if keep_paths:
-                touched_c, _ = store.split_by_key_ranges(
-                    table_name, kb, version=meta.version
-                )
-                sel = [pth for pth in touched_c if pth in keep_paths]
-                if sel:
+                if carried:
                     probe = probe.unionByName(
-                        store.read_files(table_name, sel)
+                        store.read_files(table_name, carried)
                         .select(*fk["columns"])
                     )
-            hit = (
-                probe.na.drop(how="any")
-                .join(parent_keys, fk["columns"], "left_semi")
-                .limit(1)
-                .count()
-            )
-            if hit:
-                raise SQLForeignKeyViolation(
-                    f"DELETE from {table_name!r} violates "
-                    f"self-referencing FOREIGN KEY {nm!r}: surviving "
-                    f"rows still reference deleted key(s) via "
-                    f"{fk['columns']}"
+                hit = (
+                    probe.na.drop(how="any")
+                    .join(parent_keys, fk["columns"], "left_semi")
+                    .limit(1)
+                    .count()
                 )
-    total_before = sum(e.get("rows") or 0 for e in entries)
-    # CHECK constraints cannot be newly violated by row removal; no
-    # enforcement pass is needed on a pure delete.
-    if keep_entries is not None:
+                if hit:
+                    raise SQLForeignKeyViolation(
+                        f"DELETE from {table_name!r} violates "
+                        f"self-referencing FOREIGN KEY {nm!r}: surviving "
+                        f"rows still reference deleted key(s) via "
+                        f"{fk['columns']}"
+                    )
+        # CHECK constraints cannot be newly violated by row removal; no
+        # enforcement pass is needed on a pure delete.
         store.replace_files(
             table_name, survivors, keep_entries, op="delete",
             preconditions=child_deps, expected_version=meta.version,
         )
-    else:
-        store.overwrite(
-            table_name, survivors, op="delete", preconditions=child_deps,
-            expected_version=meta.version,
+        # deleted count from manifest row totals — no extra scan or job.
+        # expected_version pins this commit to meta.version + 1; the
+        # CURRENT version may already hold a later writer's rows
+        return _rows(entries) - _rows(
+            store.manifest(table_name, meta.version + 1)
         )
-    # deleted count from manifest row totals — no extra scan or job
-    total_after = sum(
-        e.get("rows") or 0
-        for e in store.manifest(table_name, store.meta(table_name).version)
-    )
-    return total_before - total_after
+    finally:
+        shutil.rmtree(src_stage, ignore_errors=True)
 
 
 def delete_where_op(
@@ -636,17 +492,12 @@ def delete_where_op(
         table_name, [e["path"] for e in scan_entries]
     ) if len(scan_entries) != len(entries) else store.read(table_name)
     cond = F.expr(cond_sql)
-    matched = {
-        os.path.basename(r["f"])
-        for r in target_all.filter(cond)
-        .select(F.col("_metadata.file_path").alias("f"))
-        .distinct()
-        .collect()
-    }
+    matched = file_names(
+        target_all.filter(cond).select(F.col("_metadata.file_path").alias("f"))
+    )
     if not matched:
         return 0
-    touched = [e["path"] for e in entries if e["path"] in matched]
-    keep_entries = [e for e in entries if e["path"] not in matched]
+    keep_entries, touched = split_entries(entries, matched)
 
     child_deps = _check_restrict_references(
         store, table_name, target_all.filter(cond)
@@ -654,16 +505,14 @@ def delete_where_op(
     survivors = store.read_files(table_name, touched).filter(
         ~F.coalesce(cond, F.lit(False))
     )
-    total_before = sum(e.get("rows") or 0 for e in entries)
     store.replace_files(
         table_name, survivors, keep_entries, op="delete_where",
         preconditions=child_deps, expected_version=meta.version,
     )
-    total_after = sum(
-        e.get("rows") or 0
-        for e in store.manifest(table_name, store.meta(table_name).version)
+    # this commit's own version (see delete_op)
+    return _rows(entries) - _rows(
+        store.manifest(table_name, meta.version + 1)
     )
-    return total_before - total_after
 
 
 def truncate_op(store: TableStore, table_name: str) -> int:
@@ -685,9 +534,7 @@ def truncate_op(store: TableStore, table_name: str) -> int:
             f"cannot truncate {table_name!r}: referenced by "
             f"foreign key {nm!r} on {t!r}"
         )
-    n = sum(
-        e.get("rows") or 0 for e in store.manifest(table_name, meta.version)
-    )
+    n = _rows(store.manifest(table_name, meta.version))
     empty = store.spark.createDataFrame([], meta.spark_schema)
     store.overwrite(
         table_name, empty, op="truncate", expected_version=meta.version

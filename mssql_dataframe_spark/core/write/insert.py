@@ -26,12 +26,7 @@ from pyspark.sql.window import Window
 from ...errors import DataframeColumnInvalidValue, SQLUniqueConstraintViolation
 from ...store import TableStore
 from .. import generated
-from ...validation import (
-    enforce_check_constraints,
-    enforce_foreign_keys,
-    enforce_unique_constraints,
-    precheck_dataframe_deferred,
-)
+from ...validation import precheck_dataframe_deferred
 from .. import datetimeoffset as dto
 
 logger = logging.getLogger("mssql_dataframe_spark")
@@ -207,9 +202,10 @@ def insert(
 
     out = df.select(*meta.spark_schema.fieldNames())
     out = generated.materialize(out, meta)
-    checks = meta.properties.get("check_constraints") or {}
-    fks = meta.properties.get("foreign_keys") or {}
-    uniques = meta.properties.get("unique_constraints") or {}
+    # deferred import: update imports this module's ensure_time_columns
+    from .update import constraint_probe, existing_candidates
+
+    probe = constraint_probe(store, table_name, meta)
 
     def _pre_commit(stage_entries, stage_dir):
         # Runs inside store.append's discard guard, after the staging
@@ -229,62 +225,17 @@ def insert(
         #    the eager path's exact errors) and take the per-PK-column
         #    pruning bounds from the same metrics.
         pk_bounds = finish_validation()
-        paths = [os.path.join(stage_dir, e["path"]) for e in stage_entries]
-        if not paths:
-            # empty batch: nothing can violate or collide (and with
-            # no rows published, no FK parent pin is needed either)
-            return None
-        spark = out.sparkSession
-        staged = None
-        if checks or fks or uniques:
-            staged = spark.read.schema(meta.spark_schema).parquet(*paths)
-        # 2) CHECK constraints — same single agg job, over the staged
-        #    files instead of a source re-execution.
-        enforce_check_constraints(staged, checks)
-        # 3) FOREIGN KEYs — keys-only bounds + per-FK anti-join probes
-        #    over the staged files; the returned parent-version pins
-        #    become cross-table OCC preconditions via the hook's
-        #    return value (checked by store.append immediately after
-        #    this hook, so the probe-to-commit window is minimal and
-        #    still OCC-covered).
-        fk_deps = enforce_foreign_keys(
-            store, staged, fks, table_name=table_name,
-        ) if fks else None
-        # 4) UNIQUE constraints — batch-dup + pruned-snapshot probes,
-        #    keys read from the staged files.
-        if uniques:
-            def _existing_for(cols, bounds):
-                centries = store.manifest(table_name, meta.version)
-                if not centries:
-                    return None
-                touched, _ = store.split_by_key_ranges(
-                    table_name, bounds, version=meta.version
-                )
-                if not touched:
-                    return None
-                # batch-key bloom narrowing, same shape as the PK
-                # probe: a file whose sidecar excludes every batch
-                # value of some constraint column cannot collide
-                from .update import bloom_narrow_entries
-
-                tset = set(touched)
-                cand = [e for e in centries if e["path"] in tset]
-                surv = bloom_narrow_entries(
-                    store, table_name, cand, staged.select(*cols),
-                    list(cols), meta=meta,
-                )
-                if surv is not None:
-                    touched = [e["path"] for e in surv]
-                if not touched:
-                    return None
-                return store.read_files(table_name, touched)
-
-            enforce_unique_constraints(
-                staged, uniques, existing_for=_existing_for
-            )
-        if not pk:
+        # 2) CHECK, FOREIGN KEY and UNIQUE probes over the staged files
+        #    (see constraint_probe); the FK probe's parent-version pins
+        #    become cross-table OCC preconditions via the hook's return
+        #    value (checked by store.append immediately after this
+        #    hook, so the probe-to-commit window is minimal and still
+        #    OCC-covered). An empty batch can neither violate nor
+        #    collide, and with no rows published no FK pin is needed.
+        fk_deps = probe(stage_entries, stage_dir)
+        if not (pk and stage_entries):
             return fk_deps
-        # 2) PK enforcement, one keys-only job over the STAGED files.
+        # 3) PK enforcement, one keys-only job over the STAGED files.
         #    Collision discovery vs the standing snapshot is
         #    stats-PRUNED to just the files whose key range intersects
         #    the batch. Single AND composite PKs prune: every PK
@@ -296,53 +247,24 @@ def insert(
         #    files; an empty table skips the probe entirely. Files
         #    written before composite stats were recorded lack the
         #    per-column entries and count as touched (safe fallback,
-        #    self-heals as they are rewritten).
+        #    self-heals as they are rewritten). Batch-key bloom
+        #    narrowing comes on top: random/high-entropy keys (UUIDs,
+        #    hashes) overlap every file's min/max, but the batch's keys
+        #    probing each candidate's sidecar still prove files
+        #    collision-free (the only added cost is a bounded
+        #    distinct-collect of the staged keys, and only on tables
+        #    that bloom-index their PK).
+        paths = [os.path.join(stage_dir, e["path"]) for e in stage_entries]
         kschema = T.StructType([meta.spark_schema[c] for c in pk])
         staged_keys = (
-            spark.read.schema(kschema).parquet(*paths).select(*pk)
+            out.sparkSession.read.schema(kschema).parquet(*paths)
+            .select(*pk)
         )
-        entries = store.manifest(table_name, meta.version)
-        existing_keys = None
-        usable = {
-            c: b
-            for c, b in (pk_bounds or {}).items()
-            if b[0] is not None and b[1] is not None
-        }
-        if entries and usable:
-            touched, _ = store.split_by_key_ranges(
-                table_name, usable, version=meta.version
-            )
-            if touched:
-                # batch-key bloom narrowing on top of the stats
-                # verdict: random/high-entropy keys (UUIDs, hashes)
-                # overlap every file's min/max, but the batch's keys
-                # probing each candidate's sidecar still prove files
-                # collision-free — an all-fresh append then reads ZERO
-                # existing files (the only added cost is the helper's
-                # bounded distinct-collect of the batch keys — now
-                # read from the staged files, not a source
-                # re-execution — and only on tables that bloom-index
-                # their PK)
-                from .update import bloom_narrow_entries
-
-                tset = set(touched)
-                cand = [e for e in entries if e["path"] in tset]
-                surv = bloom_narrow_entries(
-                    store, table_name, cand, staged_keys, pk,
-                    meta=meta,
-                )
-                if surv is not None:
-                    touched = [e["path"] for e in surv]
-                if touched:
-                    # pin the scan to the snapshot the candidate list
-                    # came from: a concurrent MODIFY COLUMN would
-                    # otherwise mistype the PK columns and a false
-                    # no-duplicate verdict lands duplicate keys
-                    # (ADVICE r13 class)
-                    existing_keys = store.read_files(
-                        table_name, touched, version=meta.version
-                    ).select(*pk)
-        if existing_keys is None:
+        existing = existing_candidates(
+            store, table_name, meta.version, pk_bounds or {}, staged_keys,
+            pk, meta=meta,
+        )
+        if not existing:
             # batch-internal duplicates only (no standing key overlaps)
             dup = (
                 staged_keys.groupBy(*pk).count()
@@ -356,7 +278,14 @@ def insert(
         else:
             # batch duplicates AND snapshot collisions in the SAME job:
             # union the staged keys (tagged new) with the pruned
-            # existing keys, one hash aggregate per key
+            # existing keys, one hash aggregate per key. The scan is
+            # pinned to the snapshot the candidate list came from: a
+            # concurrent MODIFY COLUMN would otherwise mistype the PK
+            # columns and a false no-duplicate verdict lands duplicate
+            # keys (ADVICE r13 class)
+            existing_keys = store.read_files(
+                table_name, existing, version=meta.version
+            )
             merged = staged_keys.select(
                 *pk, F.lit(1).alias("__new")
             ).unionByName(

@@ -23,7 +23,6 @@ distinct source key values (the scale-safe version of the reference's
 from __future__ import annotations
 
 import logging
-import os
 import shutil
 
 from typing import Optional
@@ -34,14 +33,18 @@ from pyspark.sql import functions as F
 from ...errors import DataframeColumnDoesNotExist, SQLColumnDoesNotExist
 from ...store import TableStore
 from .. import generated
-from ...validation import (
-    enforce_check_constraints,
-    enforce_foreign_keys,
-    precheck_dataframe_deferred,
-)
+from ...validation import _bq, precheck_dataframe_deferred
 from .. import datetimeoffset as dto
 from .insert import assign_identity, ensure_time_columns
-from .update import resolve_match_columns, stage_validated_source
+from .update import (
+    constraint_probe,
+    discover_touched,
+    file_names,
+    reject_missing_not_null,
+    resolve_match_columns,
+    split_entries,
+    stage_validated_source,
+)
 
 logger = logging.getLogger("mssql_dataframe_spark")
 
@@ -211,70 +214,6 @@ def merge_op(
     )
     try:
         update_cols = [c for c in src.columns if c not in match]
-
-        keep_entries = None
-        stats_decided = False
-        entries = store.manifest(table_name, meta.version)
-        single_bounds = (bounds or {}).get(match[0]) if can_prune else None
-        if single_bounds is not None and single_bounds[0] is not None:
-            # stats pruning: zero-scan manifest min/max split on the PK.
-            # When it runs, its verdict stands even if it keeps nothing —
-            # a full-range source touches every file, and the content scan
-            # below would only re-discover that at the cost of an extra
-            # job.
-            stats_decided = True
-            touched, kept = store.split_by_key_range(
-                table_name, match[0], single_bounds[0], single_bounds[1],
-                version=meta.version,
-            )
-            if kept:
-                keep_entries = kept
-                target = store.read_files(table_name, touched)
-            elif entries:
-                # stats kept nothing — on an interleaved / high-entropy
-                # key layout every file's min/max spans the batch, but the
-                # batch keys probing each file's bloom sidecar (driver-
-                # side, no extra job) can still isolate the touched files
-                # (VERDICT r11 #4). [] survivors = no key exists anywhere:
-                # the merge is a pure insert, every file carries.
-                from .update import bloom_narrow_entries
-
-                surviving = bloom_narrow_entries(
-                    store, table_name, entries,
-                    src.select(*match).distinct(), match, meta=meta,
-                )
-                if surviving is not None and len(surviving) < len(entries):
-                    spaths = {e["path"] for e in surviving}
-                    keep_entries = [
-                        e for e in entries if e["path"] not in spaths
-                    ]
-                    target = store.read_files(table_name, sorted(spaths))
-        if (
-            keep_entries is None and structurally_prunable
-            and not stats_decided and entries
-        ):
-            # content pruning fallback (mirrors delete/update): an upsert
-            # on a composite PK or non-PK match key can't take the
-            # single-column stats verdict, but files with no matching row
-            # are still bit-identical — one slim scan (match columns +
-            # _metadata.file_path) finds the touched files; unmatched
-            # SOURCE rows insert via the rewritten portion regardless. A
-            # composite-PK match first stats-narrows the scan to the
-            # files whose per-column key ranges intersect the source.
-            # (empty-manifest tables skip this: their read is not a
-            # parquet scan, so _metadata does not resolve — and there is
-            # nothing to prune.)
-            from .update import discover_matched_files, split_entries
-
-            matched_files = discover_matched_files(
-                store, table_name, bounds,
-                src.select(*match).distinct(), match, meta=meta,
-            )
-            kept, touched = split_entries(entries, matched_files)
-            if kept:
-                keep_entries = kept
-                target = store.read_files(table_name, touched)
-
         # distinct source value sets per delete_requires column — shared by
         # the file-discovery probe below and the keep-rule flags later
         dr_val_sets = {
@@ -285,70 +224,24 @@ def merge_op(
             )
             for c in delete_requires
         }
-        if keep_entries is None and delete_requires and entries:
-            # content pruning for the delete_requires shape (the
-            # incremental / partition-scoped reload): the delete clause is
-            # BOUNDED — a target-only row deletes only when EVERY
-            # delete_requires column's value appears in the source. A file
-            # with no source-matched row AND no row whose delete_requires
-            # values are all present is therefore bit-identical and
-            # carries by reference. One slim scan (match + delete_requires
-            # columns + _metadata.file_path) discovers the touched files —
-            # this turns the reference's partition-scoped-delete merge
-            # from a full rewrite into cost ∝ the reloaded partition.
-            import os as _os
-
-            probe_src = store.read(table_name)
-            if not all(c in probe_src.columns for c in match):
-                # auto-evolved match column: no stored row can match (see
-                # the upsert content block) and a membership over an
-                # absent (all-NULL) column never holds, so nothing is
-                # deletable either — every file carries
-                matched_files = set()
-            else:
-                # delete_requires columns absent from the stored schema
-                # (just auto-evolved) read NULL everywhere: no row can
-                # satisfy ALL memberships, so only source matches touch
-                avail_dr = [
-                    c for c in delete_requires if c in probe_src.columns
-                ]
-                deletable = len(avail_dr) == len(delete_requires)
-                extra_dr = [c for c in avail_dr if c not in match]
-                probe = probe_src.select(
-                    *match, *extra_dr, F.col("_metadata.file_path").alias("f")
+        if structurally_prunable:
+            # unmatched SOURCE rows insert via the rewritten portion
+            # regardless, so no touched file = a pure insert that
+            # carries every file
+            keep_entries, touched = discover_touched(
+                store, table_name, meta, bounds, src, match,
+                stats_final=can_prune,
+            )
+        else:
+            entries = store.manifest(table_name, meta.version)
+            matched_files = {e["path"] for e in entries}
+            if delete_requires and entries:
+                matched_files = _delete_requires_files(
+                    store, table_name, entries, src, match,
+                    delete_requires, dr_val_sets,
                 )
-                keys = (
-                    src.select(*match).distinct().withColumn("__m", F.lit(True))
-                )
-                probe = probe.join(keys, on=match, how="left")
-                all_in = F.lit(True) if deletable else F.lit(False)
-                for c in avail_dr if deletable else []:
-                    vals = dr_val_sets[c]
-                    # no broadcast hint: the distinct value set is usually
-                    # tiny (AQE broadcasts it from its runtime size), but a
-                    # high-cardinality delete_requires column must not be
-                    # FORCED driver-side — an unbounded hint OOMs there,
-                    # while a shuffled hash join merely costs a shuffle
-                    probe = probe.join(
-                        vals, probe[c] == vals[f"__drv_{c}"], "left"
-                    ).drop(f"__drv_{c}")
-                    all_in = all_in & F.col(f"__in_{c}").isNotNull()
-                matched_files = {
-                    _os.path.basename(r["f"])
-                    for r in probe.filter(F.col("__m").isNotNull() | all_in)
-                    .select("f")
-                    .distinct()
-                    .collect()
-                }
-            kept = [e for e in entries if e["path"] not in matched_files]
-            if kept:
-                keep_entries = kept
-                target = store.read_files(
-                    table_name,
-                    [e["path"] for e in entries if e["path"] in matched_files],
-                )
-        if keep_entries is None:
-            target = store.read(table_name)
+            keep_entries, touched = split_entries(entries, matched_files)
+        target = store.read_files(table_name, touched)
         if evolved_meta_changes:
             # catalog still has the pre-evolution schema (written only on
             # success below) — surface the new columns as NULL on the
@@ -412,8 +305,6 @@ def merge_op(
         # stacked Column-operator form paid one py4j round trip per
         # operator — several hundred per merge; the text form pays one
         # per expression with an identical parsed tree.
-        from ...validation import _bq
-
         renamed = src.selectExpr(
             *[f"{_bq(c)} AS {_bq(f'__s_{c}')}" for c in src.columns],
             "true AS `__s`",
@@ -445,36 +336,18 @@ def merge_op(
         )
 
         # inserted rows take tgt[c] (= NULL on the null-extended side) for
-        # every column absent from the source — a NOT NULL or PRIMARY KEY
-        # column missing from the dataframe therefore makes ANY insert a
-        # constraint violation (SQL Server MERGE raises error 515 there).
-        # One limit(1) probe, and only on the rare missing-column path;
-        # identity and computed columns are engine-filled, not NULL.
-        computed_cols = meta.properties.get("computed_columns") or {}
-        # _time_insert is engine-stamped on every inserted row when
-        # metadata timestamps are on, so it is exempt like identity.
+        # every column absent from the source. Identity columns are
+        # engine-filled. _time_insert is engine-stamped on every inserted
+        # row when metadata timestamps are on, so it is exempt too;
         # _time_update is NOT: inserts store NULL there (only matched rows
         # get stamped), so a NOT NULL _time_update still rejects — that
         # rejection is genuine, not false.
-        engine_stamped = (
-            {"_time_insert"} if include_metadata_timestamps else set()
+        reject_missing_not_null(
+            meta, src.columns,
+            {meta.identity_column,
+             *(["_time_insert"] if include_metadata_timestamps else [])},
+            joined, is_insert, "MERGE cannot insert rows", "inserted rows",
         )
-        missing_nn = [
-            c
-            for c in dict.fromkeys((*meta.not_nullable, *meta.primary_key))
-            if c != meta.identity_column
-            and c not in src.columns
-            and c not in computed_cols
-            and c not in engine_stamped
-        ]
-        if missing_nn and joined.filter(is_insert).limit(1).count() > 0:
-            from ...errors import DataframeColumnInvalidValue
-
-            raise DataframeColumnInvalidValue(
-                f"MERGE cannot insert rows: NOT NULL / PRIMARY KEY "
-                f"column(s) {missing_nn} are absent from the source "
-                "dataframe, so inserted rows would store NULL there"
-            )
 
         # WHEN NOT MATCHED BY SOURCE ... SET expressions are
         # grammar-whitelisted above, but the grammar cannot see the
@@ -538,68 +411,23 @@ def merge_op(
 
         result = joined.selectExpr(*out_cols)
         result = generated.materialize(result, meta)
-        checks = meta.properties.get("check_constraints") or {}
-        fks = meta.properties.get("foreign_keys") or {}
-        uniques = dict(meta.properties.get("unique_constraints") or {})
-        pk = list(meta.primary_key)
-        pk_at_risk = bool(pk) and not meta.properties.get(
-            "pk_not_enforced"
-        ) and (
+        # SQL Server still enforces the PK in three shapes; the common
+        # match==PK case never enters (PK columns are then match columns,
+        # not update columns, and a matched key can only update its own
+        # row)
+        pk = set(meta.primary_key)
+        pk_at_risk = (
             # a merge matching on non-PK columns can rewrite PK columns
-            bool(set(update_cols) & set(pk))
+            bool(set(update_cols) & pk)
             # match strictly wider than the PK: a source row whose full
             # match tuple is absent INSERTS even when its PK value
             # already exists — without this, two rows with the same PK
             # commit silently
-            or (set(pk) < set(match))
+            or pk < set(match)
             # a NMBS SET expression can rewrite a non-match PK column on
             # every target-only row
-            or bool(set(nmbs_set) & set(pk))
+            or bool(set(nmbs_set) & pk)
         )
-        if pk_at_risk:
-            # SQL Server still enforces the PK in all three shapes; ride
-            # the same keys-only dup-agg/semi-join hook (the common
-            # match==PK case never enters: PK columns are then match
-            # columns, not update columns, and a matched key can only
-            # update its own row)
-            uniques["PRIMARY KEY"] = pk
-
-        def _pre_commit(stage_entries, stage_dir):
-            # CHECK/FK/UNIQUE probes run post-stage over the STAGED
-            # (rewritten) files — a columnar read — so the merge's
-            # full-outer-join rewrite executes exactly once (the staging
-            # write); the eager shape re-executed it once per probe family.
-            # Runs inside the commit's discard guard: a violation aborts
-            # the commit and drops the staged files (with auto-evolve, the
-            # deferred schema publication is discarded with them). The FK
-            # probe's parent pins return as cross-table OCC preconditions.
-            if not (checks or fks or uniques):
-                return None
-            paths = [
-                os.path.join(stage_dir, e["path"]) for e in stage_entries
-            ]
-            if not paths:
-                return None  # nothing written: nothing can violate
-            staged = result.sparkSession.read.schema(
-                meta.spark_schema
-            ).parquet(*paths)
-            enforce_check_constraints(staged, checks)
-            fk_deps = enforce_foreign_keys(
-                store, staged, fks, table_name=table_name,
-            ) if fks else None
-            if uniques:
-                from ...validation import enforce_unique_constraints
-
-                enforce_unique_constraints(
-                    staged, uniques,
-                    existing=(
-                        store.read_files(
-                            table_name, [e["path"] for e in keep_entries]
-                        )
-                        if keep_entries else None
-                    ),
-                )
-            return fk_deps
 
         # schema evolution (if any) rides the SAME meta write that moves
         # the version pointer, inside the commit's exclusive claim — an
@@ -609,23 +437,64 @@ def merge_op(
         evolved_types = meta.column_types if evolved_meta_changes else None
         # caller bookkeeping (e.g. a foreachBatch sink's applied-batch-id
         # ledger) publishes atomically with the merge commit — the
-        # exactly-once pattern append documents
-        if keep_entries is not None:
-            store.replace_files(
-                table_name, result, keep_entries, op="merge",
-                expected_version=meta.version,
-                new_schema=evolved_schema, new_column_types=evolved_types,
-                extra_meta=identity_meta, extra_properties=extra_properties,
-                pre_commit_check=_pre_commit,
-            )
-        else:
-            store.overwrite(
-                table_name, result, op="merge",
-                expected_version=meta.version,
-                new_schema=evolved_schema, new_column_types=evolved_types,
-                extra_meta=identity_meta, extra_properties=extra_properties,
-                pre_commit_check=_pre_commit,
-            )
+        # exactly-once pattern append documents. With auto-evolve, a
+        # constraint violation discards the deferred schema publication
+        # with the staged files.
+        store.replace_files(
+            table_name, result, keep_entries, op="merge",
+            expected_version=meta.version,
+            new_schema=evolved_schema, new_column_types=evolved_types,
+            extra_meta=identity_meta, extra_properties=extra_properties,
+            pre_commit_check=constraint_probe(
+                store, table_name, meta, carried=keep_entries,
+                pk_at_risk=pk_at_risk,
+            ),
+        )
     finally:
         shutil.rmtree(src_stage, ignore_errors=True)
     return plan
+
+
+def _delete_requires_files(store, table_name, entries, src, match,
+                           delete_requires, dr_val_sets) -> set:
+    """Content pruning for the delete_requires shape (the incremental /
+    partition-scoped reload): the delete clause is BOUNDED — a
+    target-only row deletes only when EVERY delete_requires column's
+    value appears in the source. A file with no source-matched row AND
+    no row whose delete_requires values are all present is therefore
+    bit-identical and carries by reference. One slim scan (match +
+    delete_requires columns + _metadata.file_path) of the snapshot's
+    ``entries`` returns the touched file names — this turns the
+    reference's partition-scoped-delete merge from a full rewrite into
+    cost ∝ the reloaded partition."""
+    probe_src = store.read_files(table_name, [e["path"] for e in entries])
+    if not all(c in probe_src.columns for c in match):
+        # auto-evolved match column: no stored row can match (NULL never
+        # equals) and a membership over an absent (all-NULL) column
+        # never holds, so nothing is deletable either — every file
+        # carries
+        return set()
+    # delete_requires columns absent from the stored schema (just
+    # auto-evolved) read NULL everywhere: no row can satisfy ALL
+    # memberships, so only source matches touch
+    avail_dr = [c for c in delete_requires if c in probe_src.columns]
+    deletable = len(avail_dr) == len(delete_requires)
+    extra_dr = [c for c in avail_dr if c not in match]
+    probe = probe_src.select(
+        *match, *extra_dr, F.col("_metadata.file_path").alias("f")
+    )
+    keys = src.select(*match).distinct().withColumn("__m", F.lit(True))
+    probe = probe.join(keys, on=match, how="left")
+    all_in = F.lit(True) if deletable else F.lit(False)
+    for c in avail_dr if deletable else []:
+        vals = dr_val_sets[c]
+        # no broadcast hint: the distinct value set is usually tiny (AQE
+        # broadcasts it from its runtime size), but a high-cardinality
+        # delete_requires column must not be FORCED driver-side — an
+        # unbounded hint OOMs there, while a shuffled hash join merely
+        # costs a shuffle
+        probe = probe.join(
+            vals, probe[c] == vals[f"__drv_{c}"], "left"
+        ).drop(f"__drv_{c}")
+        all_in = all_in & F.col(f"__in_{c}").isNotNull()
+    return file_names(probe.filter(F.col("__m").isNotNull() | all_in))

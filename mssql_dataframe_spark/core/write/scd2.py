@@ -20,7 +20,6 @@ one shuffle any MERGE pays; nothing else.
 
 from __future__ import annotations
 
-import os
 import shutil
 
 from functools import reduce
@@ -34,12 +33,14 @@ from ...errors import DataframeColumnDoesNotExist, SQLColumnDoesNotExist
 from ...store import TableStore
 from .. import datetimeoffset as dto
 from .. import generated
-from ...validation import (
-    enforce_check_constraints,
-    enforce_foreign_keys,
-    precheck_dataframe_deferred,
+from ...validation import _bq, _sq, precheck_dataframe_deferred
+from .update import (
+    constraint_probe,
+    discover_touched,
+    reject_missing_not_null,
+    resolve_match_columns,
+    stage_validated_source,
 )
-from .update import resolve_match_columns, stage_validated_source
 
 
 def merge_scd2(
@@ -115,8 +116,6 @@ def merge_scd2(
         # SQL-text projections/predicates below (guide §1.2): one py4j
         # round trip per expression instead of one per Column operator;
         # the parsed trees are identical
-        from ...validation import _bq, _sq
-
         renamed = src.selectExpr(
             *[f"{_bq(c)} AS {_bq(f'__s_{c}')}" for c in src.columns],
             "true AS `__s`",
@@ -127,46 +126,20 @@ def merge_scd2(
         # (declare ``stats_column`` / ``stats_columns`` = business key on
         # history tables) miss the source carry over by manifest
         # reference; composite business keys prune by per-column
-        # intersection (see store.split_by_key_ranges)
-        keep_entries = None
-        usable = {
-            c: b
-            for c, b in (bounds or {}).items()
-            if b[0] is not None and b[1] is not None
-        }
-        if usable:
-            touched, kept = store.split_by_key_ranges(
-                table_name, usable, version=meta.version
-            )
-            if kept:
-                keep_entries = kept
-                target = store.read_files(table_name, touched)
-        entries = store.manifest(table_name, meta.version)
-        if keep_entries is None and entries:
-            # content pruning fallback (mirrors update/merge): SCD2 only
-            # CLOSES current rows whose business key appears in the source
-            # (historical rows never change, and brand-new keys append),
-            # so a file with no CURRENT matching row is bit-identical —
-            # one slim scan (match columns + current flag +
-            # _metadata.file_path), stats-narrowed to candidate files
-            # first, discovers the touched files. Sound because each key
-            # has at most one current row: if it exists, its file is
-            # discovered and the close happens there; pruned files hold
-            # only non-matching or historical rows.
-            from .update import discover_matched_files, split_entries
-
-            matched_files = discover_matched_files(
-                store, table_name, bounds,
-                src.select(*match).distinct(), match,
-                pre_filter=(F.col(current_col) == F.lit(True)),
-                meta=meta,
-            )
-            kept, touched = split_entries(entries, matched_files)
-            if kept:
-                keep_entries = kept
-                target = store.read_files(table_name, touched)
-        if keep_entries is None:
-            target = store.read(table_name)
+        # intersection (see store.split_by_key_ranges), and a split that
+        # carries a file is the verdict. Otherwise the content scan keeps
+        # only CURRENT rows: SCD2 closes only current rows whose business
+        # key appears in the source (historical rows never change, and
+        # brand-new keys append), so a file with no current matching row
+        # is bit-identical.
+        # Sound because each key has at most one current row: if it
+        # exists, its file is discovered and the close happens there;
+        # pruned files hold only non-matching or historical rows.
+        keep_entries, touched = discover_touched(
+            store, table_name, meta, bounds, src, match,
+            pre_filter=f"{_bq(current_col)} = true",
+        )
+        target = store.read_files(table_name, touched)
         tgt = target.selectExpr("*", "true AS `__t`")
 
         cond = reduce(
@@ -184,35 +157,17 @@ def merge_scd2(
         ) + ") = false)"
 
         # new-current rows take NULL for every schema column absent from
-        # the source (``row_struct("new")`` below) — a NOT NULL or PRIMARY
-        # KEY column missing from the dataframe therefore makes ANY row
-        # that synthesizes a new version (src-only insert OR
-        # matched-and-changed replacement) a constraint violation (SQL
-        # Server MERGE raises error 515 there; same probe as write.merge).
-        # The three SCD bookkeeping columns are engine-stamped, and
-        # computed columns are engine-materialized, so they are exempt; an
-        # identity column is NOT — merge_scd2 does not assign identity
-        # values, so its absence from the source would silently store NULL
-        # keys. One limit(1) probe, only on the rare missing-column path.
-        computed_cols = meta.properties.get("computed_columns") or {}
-        missing_nn = [
-            c
-            for c in dict.fromkeys((*meta.not_nullable, *meta.primary_key))
-            if c not in src.columns
-            and c not in computed_cols
-            and c not in scd_cols
-        ]
-        if missing_nn and j.filter(
-            f"{is_src_only} OR ({is_matched} AND {changed})"
-        ).limit(1).count():
-            from ...errors import DataframeColumnInvalidValue
-
-            raise DataframeColumnInvalidValue(
-                f"SCD2 merge cannot write new version rows: NOT NULL / "
-                f"PRIMARY KEY column(s) {missing_nn} are absent from the "
-                "source dataframe, so new current rows would store NULL "
-                "there"
-            )
+        # the source (``row_struct("new")`` below), so every row that
+        # synthesizes a new version (src-only insert OR matched-and-changed
+        # replacement) counts. The three SCD bookkeeping columns are
+        # engine-stamped, so they are exempt; an identity column is NOT —
+        # merge_scd2 does not assign identity values, so its absence from
+        # the source would silently store NULL keys.
+        reject_missing_not_null(
+            meta, src.columns, scd_cols, j,
+            f"{is_src_only} OR ({is_matched} AND {changed})",
+            "SCD2 merge cannot write new version rows", "new current rows",
+        )
 
         def row_struct(kind: str) -> str:
             fields = []
@@ -254,8 +209,6 @@ def merge_scd2(
             ]
         )
         out = generated.materialize(out, meta)
-        checks = meta.properties.get("check_constraints") or {}
-        fks = meta.properties.get("foreign_keys") or {}
         # PK uniqueness at risk (same shapes as write.merge): a business
         # key STRICTLY WIDER than the PK inserts a new current row even
         # when its PK value already exists; a tracked (rewritten) PK
@@ -264,17 +217,8 @@ def merge_scd2(
         # equals an existing version's start. The common PK==match case
         # never enters: SCD2 history itself duplicates the business key,
         # so such a PK is unenforceable by construction and merge_scd2
-        # keeps the reference's in-place-merge behavior there. Keys-only
-        # agg + semi join against the carried files — slim at any scale.
-        pk = list(meta.primary_key)
-        pk_at_risk = bool(pk) and not meta.properties.get(
-            "pk_not_enforced"
-        ) and (
-            (set(pk) < set(match))
-            or bool(set(pk) & set(tracked))
-            or valid_from_col in pk
-        )
-        # recorded UNIQUE constraints are enforced like every other write
+        # keeps the reference's in-place-merge behavior there.
+        # Recorded UNIQUE constraints are enforced like every other write
         # verb (they exist so FK references against non-PK parent columns
         # stay unambiguous): an SCD2 rewrite that would leave a closed row
         # and a new current row sharing a constrained value — or take a
@@ -282,56 +226,18 @@ def merge_scd2(
         # constraint would in SQL Server. History tables that WANT
         # duplicate-across-versions attributes simply don't declare the
         # constraint.
-        uniques = dict(meta.properties.get("unique_constraints") or {})
-        if pk_at_risk:
-            uniques["PRIMARY KEY"] = pk
-
-        def _pre_commit(stage_entries, stage_dir):
-            # CHECK/FK/UNIQUE probes run post-stage over the STAGED
-            # (rewritten) files — a columnar read — so the SCD2 join+explode
-            # rewrite executes exactly once (the staging write); the eager
-            # shape re-executed it once per probe family. Runs inside the
-            # commit's discard guard ("nothing visible on failure"
-            # unchanged); the FK probe's parent pins return as cross-table
-            # OCC preconditions.
-            if not (checks or fks or uniques):
-                return None
-            paths = [
-                os.path.join(stage_dir, e["path"]) for e in stage_entries
-            ]
-            if not paths:
-                return None  # nothing written: nothing can violate
-            staged = out.sparkSession.read.schema(
-                meta.spark_schema
-            ).parquet(*paths)
-            enforce_check_constraints(staged, checks)
-            fk_deps = enforce_foreign_keys(
-                store, staged, fks, table_name=table_name,
-            ) if fks else None
-            if uniques:
-                from ...validation import enforce_unique_constraints
-
-                enforce_unique_constraints(
-                    staged, uniques,
-                    existing=(
-                        store.read_files(
-                            table_name, [e["path"] for e in keep_entries]
-                        )
-                        if keep_entries else None
-                    ),
-                )
-            return fk_deps
-
-        if keep_entries is not None:
-            store.replace_files(
-                table_name, out, keep_entries, op="merge_scd2",
-                expected_version=meta.version, pre_commit_check=_pre_commit,
-            )
-        else:
-            store.overwrite(
-                table_name, out, op="merge_scd2",
-                expected_version=meta.version, pre_commit_check=_pre_commit,
-            )
+        pk = set(meta.primary_key)
+        store.replace_files(
+            table_name, out, keep_entries, op="merge_scd2",
+            expected_version=meta.version,
+            pre_commit_check=constraint_probe(
+                store, table_name, meta, carried=keep_entries,
+                pk_at_risk=(
+                    pk < set(match) or bool(pk & set(tracked))
+                    or valid_from_col in pk
+                ),
+            ),
+        )
     finally:
         shutil.rmtree(src_stage, ignore_errors=True)
     return plan

@@ -8,9 +8,9 @@ ignored, every dataframe column not in the match set is updated, and
 ``_time_update = GETDATE()`` is stamped when metadata timestamps are on
 (update.py:135-136).
 
-Spark realization: no staging needed (the DataFrame IS the staged
-source — SURVEY.md §2.3 #17); one distributed left join rewrites the
-snapshot copy-on-write. Catalyst picks broadcast vs sort-merge for the
+Spark realization: the validated source is staged once
+(``stage_validated_source``); one distributed left join rewrites the
+touched files copy-on-write. Catalyst picks broadcast vs sort-merge for the
 join; with a small update batch against a large table this is a
 broadcast join, i.e. no shuffle of the big side.
 """
@@ -26,12 +26,19 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ...errors import SQLColumnDoesNotExist, SQLUndefinedPrimaryKey
+from ...errors import (
+    DataframeColumnInvalidValue,
+    SQLColumnDoesNotExist,
+    SQLUndefinedPrimaryKey,
+)
 from ...store import TableStore
 from .. import generated
 from ...validation import (
+    _bq,
+    _sq,
     enforce_check_constraints,
     enforce_foreign_keys,
+    enforce_unique_constraints,
     precheck_dataframe_deferred,
 )
 from .. import datetimeoffset as dto
@@ -87,8 +94,6 @@ def stage_validated_source(store, table_name, plan, finish,
         else:  # empty source: nothing was written
             leaf = spark.createDataFrame([], plan.schema)
         if unique_key:
-            from ...validation import _bq, _sq
-
             keyed = " AND ".join(
                 f"{_bq(k)} IS NOT NULL" for k in unique_key
             )
@@ -284,8 +289,6 @@ def discover_matched_files(
     files neither check examined — unfixable downstream because the
     no-match early return commits nothing, so the caller's
     expected_version OCC backstop never fires (ADVICE r12)."""
-    import os as _os
-
     if meta is None:
         meta = store.meta(table_name)
     candidates = stats_candidates(
@@ -320,14 +323,26 @@ def discover_matched_files(
         return set()
     if pre_filter is not None:
         scan = scan.filter(pre_filter)
+    return matched_file_names(scan, src_keys, match)
+
+
+def matched_file_names(scan, keys, cols) -> set:
+    """Basenames of ``scan``'s files holding a row whose ``cols`` equal
+    a row of ``keys`` — one slim scan (``cols`` plus
+    ``_metadata.file_path``, so Parquet reads only the key columns).
+    NULL keys never match."""
+    return file_names(
+        scan.select(*cols, F.col("_metadata.file_path").alias("f"))
+        .join(keys, on=cols, how="left_semi")
+    )
+
+
+def file_names(rows) -> set:
+    """Distinct basenames of a discovery scan's ``f`` column (the
+    ``_metadata.file_path`` of each matching row) — one collect."""
     return {
-        _os.path.basename(r["f"])
-        for r in scan
-        .select(*match, F.col("_metadata.file_path").alias("f"))
-        .join(src_keys, on=match, how="left_semi")
-        .select("f")
-        .distinct()
-        .collect()
+        os.path.basename(r["f"])
+        for r in rows.select("f").distinct().collect()
     }
 
 
@@ -337,6 +352,14 @@ def split_entries(entries, matched_files):
     kept = [e for e in entries if e["path"] not in matched_files]
     touched = [e["path"] for e in entries if e["path"] in matched_files]
     return kept, touched
+
+
+def _known_bounds(bounds) -> dict:
+    """The source's ``{col: (lo, hi)}`` bounds with both ends known."""
+    return {
+        c: b for c, b in (bounds or {}).items()
+        if b[0] is not None and b[1] is not None
+    }
 
 
 def stats_candidates(store, table_name, bounds, version=None):
@@ -350,19 +373,171 @@ def stats_candidates(store, table_name, bounds, version=None):
     scans the whole table as before. Returns the candidate path list
     when stats pruned anything (possibly empty = nothing can match),
     else None."""
-    if not isinstance(bounds, dict):
-        return None
-    usable = {
-        c: b
-        for c, b in bounds.items()
-        if b[0] is not None and b[1] is not None
-    }
+    usable = _known_bounds(bounds) if isinstance(bounds, dict) else None
     if not usable:
         return None
     touched, kept = store.split_by_key_ranges(
         table_name, usable, version=version
     )
     return touched if kept else None
+
+
+def discover_touched(store, table_name, meta, bounds, src, match,
+                     stats_final=False, pre_filter=None):
+    """File discovery shared by update/delete/merge/SCD2, against the
+    caller's pinned ``meta.version``. Returns ``(keep_entries,
+    touched_paths)``: the entries that provably hold no matching row
+    and carry into the next manifest by reference, and the files to
+    rewrite. Together they cover the snapshot; ``touched_paths == []``
+    means no file can hold a match, and what that means is the
+    caller's call (update/delete commit nothing, merge/SCD2 only
+    insert).
+
+    The manifest min/max split on the source ``bounds`` comes first.
+    With ``stats_final`` (a single-column-PK match) its verdict stands
+    even when it carries nothing — a full-range source touches every
+    file, and a content scan would only re-discover that at the cost
+    of a job — and then only the batch-key bloom probe (driver-side)
+    narrows it. A ``pre_filter``ed (SCD2) discovery keeps a split that
+    carried any file as its verdict. Otherwise the slim content scan
+    of ``discover_matched_files`` (itself stats- and bloom-narrowed)
+    decides. Empty tables discover nothing: their read is not a
+    parquet scan, so ``_metadata`` would not resolve."""
+    entries = store.manifest(table_name, meta.version)
+    if not entries:
+        return [], []
+    usable = _known_bounds(bounds)
+    stats_final = stats_final and bool(usable)
+    if stats_final or (usable and pre_filter is not None):
+        touched, kept = store.split_by_key_ranges(
+            table_name, usable, version=meta.version
+        )
+        if kept or not touched:
+            return kept, touched
+    # the key side, built only now that a probe needs it (delete's
+    # staged source is its distinct key set already)
+    keys = src if len(src.columns) == len(match) else (
+        src.select(*match).distinct()
+    )
+    if stats_final:
+        # stats kept nothing — interleaved/high-entropy layouts make
+        # min/max blind, but batch-key bloom probes can still isolate
+        # the touched files
+        surviving = bloom_narrow_entries(
+            store, table_name, entries, keys, match, meta=meta
+        )
+        return split_entries(entries, {
+            e["path"] for e in (entries if surviving is None else surviving)
+        })
+    return split_entries(entries, discover_matched_files(
+        store, table_name, bounds, keys, match,
+        pre_filter=pre_filter, meta=meta,
+    ))
+
+
+def existing_candidates(store, table_name, version, bounds, keys, cols,
+                        carried=None, meta=None):
+    """The "existing rows" side of a key probe (UNIQUE/PK collisions,
+    FK references): paths of the pinned snapshot ``version``'s files
+    that could hold a row whose ``cols`` equal a key of ``keys``. The
+    per-column stats split on the batch ``bounds`` comes first,
+    restricted to the ``carried`` entries (default: the whole
+    snapshot; a rewrite verb passes the files it carries, since its
+    rewritten rows are the staged side), then batch-key bloom
+    narrowing. So probe cost is ∝ files whose recorded key ranges and
+    sidecars admit the batch, not table size. No ``bounds`` (no
+    non-NULL batch key) or nothing carried: nothing can match."""
+    if not bounds or (carried is not None and not carried):
+        return []
+    touched, _ = store.split_by_key_ranges(
+        table_name, bounds, version=version
+    )
+    if not touched:
+        return []
+    if carried is None:
+        carried = store.manifest(table_name, version)
+    tset = set(touched)
+    cand = [e for e in carried if e["path"] in tset]
+    surviving = bloom_narrow_entries(
+        store, table_name, cand, keys, cols, meta=meta
+    ) if cand else None
+    return [e["path"] for e in (cand if surviving is None else surviving)]
+
+
+def constraint_probe(store, table_name, meta, carried=None,
+                     pk_at_risk=False):
+    """The ``pre_commit_check`` hook of every write verb's commit.
+    CHECK, FOREIGN KEY and UNIQUE probes run post-stage over the
+    STAGED (written or rewritten) files — a columnar read — so the
+    verb's rewrite plan executes exactly once (the staging write); the
+    eager shape re-executed it once per probe family. The hook runs
+    inside the commit's discard guard: a violation aborts the commit
+    and drops the staged files ("nothing visible on failure"). The FK
+    probe's parent pins return as cross-table OCC preconditions.
+
+    ``pk_at_risk`` adds the PRIMARY KEY to the unique probes, for a
+    rewrite that can change or duplicate PK values (SQL Server still
+    enforces the PK there); ``pk_not_enforced`` tables opt out. Each
+    unique probe's existing side is ``existing_candidates`` over the
+    ``carried`` entries."""
+    checks = meta.properties.get("check_constraints") or {}
+    fks = meta.properties.get("foreign_keys") or {}
+    uniques = dict(meta.properties.get("unique_constraints") or {})
+    if (
+        pk_at_risk and meta.primary_key
+        and not meta.properties.get("pk_not_enforced")
+    ):
+        uniques["PRIMARY KEY"] = list(meta.primary_key)
+
+    def _pre_commit(stage_entries, stage_dir):
+        if not (checks or fks or uniques) or not stage_entries:
+            return None  # nothing declared, or nothing written
+        staged = store.spark.read.schema(meta.spark_schema).parquet(*[
+            os.path.join(stage_dir, e["path"]) for e in stage_entries
+        ])
+        enforce_check_constraints(staged, checks)
+        fk_deps = enforce_foreign_keys(
+            store, staged, fks, table_name=table_name,
+        ) if fks else None
+
+        def _existing_for(cols, bounds):
+            paths = existing_candidates(
+                store, table_name, meta.version, bounds,
+                staged.select(*cols), list(cols), carried=carried,
+                meta=meta,
+            )
+            if not paths:
+                return None
+            # pinned: a concurrent MODIFY COLUMN must not mistype the
+            # key columns into a false no-collision verdict
+            return store.read_files(table_name, paths, version=meta.version)
+
+        enforce_unique_constraints(staged, uniques, existing_for=_existing_for)
+        return fk_deps
+
+    return _pre_commit
+
+
+def reject_missing_not_null(meta, src_columns, exempt, joined, new_rows,
+                            cannot, rows):
+    """A NOT NULL or PRIMARY KEY column absent from a merge source makes
+    every row the merge synthesizes (``joined.filter(new_rows)``) store
+    NULL there — SQL Server MERGE raises error 515. One limit(1) probe,
+    and only on the rare missing-column path; computed columns (engine
+    materialized) and the caller's ``exempt`` engine-filled columns do
+    not count."""
+    computed = meta.properties.get("computed_columns") or {}
+    missing = [
+        c
+        for c in dict.fromkeys((*meta.not_nullable, *meta.primary_key))
+        if c not in src_columns and c not in computed and c not in exempt
+    ]
+    if missing and joined.filter(new_rows).limit(1).count():
+        raise DataframeColumnInvalidValue(
+            f"{cannot}: NOT NULL / PRIMARY KEY column(s) {missing} are "
+            f"absent from the source dataframe, so {rows} would store "
+            "NULL there"
+        )
 
 
 def update_op(
@@ -384,8 +559,7 @@ def update_op(
     # target rows through the join; T-SQL raises "attempted to UPDATE
     # the same row more than once" — so do we (inside the same
     # single-job validation pass).
-    pk_match = match == list(meta.primary_key)
-    can_prune = pk_match and len(match) == 1
+    can_prune = match == list(meta.primary_key) and len(match) == 1
     dataframe = dto.derive(dataframe, meta)
     update_cols = [c for c in dataframe.columns if c not in match]
     if not update_cols:
@@ -413,190 +587,62 @@ def update_op(
         store, table_name, plan, finish, unique_key=match
     )
     try:
-        _update_apply(
-            store, table_name, meta, match, src, bounds, update_cols,
-            can_prune, include_metadata_timestamps,
+        # file pruning: UPDATE never inserts or deletes, so rows in files
+        # holding no matching key are bit-identical — carry them over by
+        # manifest reference and rewrite only touched files (see
+        # store.replace_files; the Delta MERGE INTO commit shape)
+        keep_entries, touched = discover_touched(
+            store, table_name, meta, bounds, src, match,
+            stats_final=can_prune,
+        )
+        if not touched:
+            # no target row matches the source: UPDATE changes nothing —
+            # commit nothing (rewriting the table byte-identically would
+            # be a catastrophic no-op at 100 TB, and committing published
+            # phantom versions)
+            return plan
+        target = store.read_files(table_name, touched)
+        # SQL-text projection (guide §1.2 — one py4j round trip per
+        # expression instead of one per Column operator; identical trees)
+        renamed = src.selectExpr(
+            *[f"{_bq(c)} AS {_bq(f'__s_{c}')}" for c in src.columns],
+            "true AS `__s`",
+        )
+
+        cond = [target[k] == renamed[f"__s_{k}"] for k in match]
+        joined = target.join(renamed, cond, "left")
+
+        matched = "(`__s` IS NOT NULL)"
+        out_cols = []
+        for f in meta.spark_schema.fields:
+            c = f.name
+            q, qs = _bq(c), _bq(f"__s_{c}")
+            if c in update_cols:
+                col = f"CASE WHEN {matched} THEN {qs} ELSE {q} END"
+            elif c == "_time_update" and include_metadata_timestamps:
+                col = (
+                    f"CASE WHEN {matched} THEN "
+                    f"CAST(current_timestamp() AS TIMESTAMP_NTZ) ELSE {q} END"
+                )
+            else:
+                col = q
+            out_cols.append(
+                f"CAST(({col}) AS {f.dataType.simpleString()}) AS {q}"
+            )
+
+        result = joined.selectExpr(*out_cols)
+        result = generated.materialize(result, meta)
+        # an update matching on non-PK columns can rewrite PK columns — the
+        # PK is still enforced there (match==PK never enters: PK columns
+        # are then match columns, no extra jobs)
+        store.replace_files(
+            table_name, result, keep_entries, op="update",
+            expected_version=meta.version,
+            pre_commit_check=constraint_probe(
+                store, table_name, meta, carried=keep_entries,
+                pk_at_risk=bool(set(update_cols) & set(meta.primary_key)),
+            ),
         )
     finally:
         shutil.rmtree(src_stage, ignore_errors=True)
     return plan
-
-
-def _update_apply(
-    store, table_name, meta, match, src, bounds, update_cols,
-    can_prune, include_metadata_timestamps,
-) -> None:
-    """Discovery + rewrite + commit over the staged-source LEAF
-    ``src`` (see ``stage_validated_source``). Early returns are the
-    no-match cases: UPDATE changes nothing, commit nothing."""
-    # file pruning: UPDATE never inserts or deletes, so rows in files
-    # whose PK range misses the source are bit-identical — carry them
-    # over by manifest reference and rewrite only touched files
-    # (see store.replace_files; the Delta MERGE INTO commit shape)
-    keep_entries = None
-    stats_decided = False
-    single_bounds = (bounds or {}).get(match[0]) if can_prune else None
-    if single_bounds is not None and single_bounds[0] is not None:
-        # stats pruning: zero-scan manifest min/max split on the PK;
-        # when it runs, its verdict stands (see merge_op)
-        stats_decided = True
-        touched, kept = store.split_by_key_range(
-            table_name, match[0], single_bounds[0], single_bounds[1],
-            version=meta.version,
-        )
-        if not touched:
-            # every file's key range misses the source: no target row
-            # can match, so UPDATE changes nothing — commit nothing
-            # (the same no-match contract the content-discovery path
-            # below honors; committing here published phantom
-            # versions for no-op updates)
-            return
-        if kept:
-            keep_entries = kept
-            target = store.read_files(table_name, touched)
-    entries = store.manifest(table_name, meta.version)
-    if keep_entries is None and stats_decided and entries:
-        # stats kept nothing — interleaved/high-entropy layouts make
-        # min/max blind, but batch-key bloom probes (driver-side, no
-        # extra job) can still isolate the touched files; [] survivors
-        # = no key exists anywhere, so UPDATE changes nothing
-        surviving = bloom_narrow_entries(
-            store, table_name, entries,
-            src.select(*match).distinct(), match, meta=meta,
-        )
-        if surviving is not None:
-            if not surviving:
-                return  # no-match: no rewrite, no commit
-            if len(surviving) < len(entries):
-                spaths = {e["path"] for e in surviving}
-                keep_entries = [
-                    e for e in entries if e["path"] not in spaths
-                ]
-                target = store.read_files(table_name, sorted(spaths))
-    if keep_entries is None and not stats_decided and entries:
-        # content pruning fallback for composite-PK / non-PK match
-        # keys (shared tier-2 discovery — see discover_matched_files):
-        # UPDATE only changes rows whose match key appears in the
-        # source, so files with no matching row carry by reference.
-        matched_files = discover_matched_files(
-            store, table_name, bounds,
-            src.select(*match).distinct(), match, meta=meta,
-        )
-        if not matched_files:
-            # no target row matches the source: UPDATE changes nothing
-            # — commit nothing (the delete/no-match contract). Without
-            # this, an empty match rewrote the ENTIRE table
-            # byte-identically: a catastrophic no-op at 100 TB.
-            return
-        kept, touched = split_entries(entries, matched_files)
-        if kept:
-            keep_entries = kept
-            target = store.read_files(table_name, touched)
-    if keep_entries is None:
-        target = store.read(table_name)
-    # SQL-text projection (guide §1.2 — one py4j round trip per
-    # expression instead of one per Column operator; identical trees)
-    from ...validation import _bq
-
-    renamed = src.selectExpr(
-        *[f"{_bq(c)} AS {_bq(f'__s_{c}')}" for c in src.columns],
-        "true AS `__s`",
-    )
-
-    cond = [target[k] == renamed[f"__s_{k}"] for k in match]
-    joined = target.join(renamed, cond, "left")
-
-    matched = "(`__s` IS NOT NULL)"
-    out_cols = []
-    for f in meta.spark_schema.fields:
-        c = f.name
-        q, qs = _bq(c), _bq(f"__s_{c}")
-        if c in update_cols:
-            col = f"CASE WHEN {matched} THEN {qs} ELSE {q} END"
-        elif c == "_time_update" and include_metadata_timestamps:
-            col = (
-                f"CASE WHEN {matched} THEN "
-                f"CAST(current_timestamp() AS TIMESTAMP_NTZ) ELSE {q} END"
-            )
-        else:
-            col = q
-        out_cols.append(
-            f"CAST(({col}) AS {f.dataType.simpleString()}) AS {q}"
-        )
-
-    result = joined.selectExpr(*out_cols)
-    result = generated.materialize(result, meta)
-    checks = meta.properties.get("check_constraints") or {}
-    fks = meta.properties.get("foreign_keys") or {}
-    uniques = dict(meta.properties.get("unique_constraints") or {})
-    if (
-        meta.primary_key
-        and set(update_cols) & set(meta.primary_key)
-        and not meta.properties.get("pk_not_enforced")
-    ):
-        # an update matching on non-PK columns can rewrite PK columns —
-        # SQL Server still enforces the PK there (match==PK never
-        # enters: PK columns are then match columns, no extra jobs)
-        uniques["PRIMARY KEY"] = list(meta.primary_key)
-
-    def _pre_commit(stage_entries, stage_dir):
-        # CHECK/FK/UNIQUE probes run post-stage over the STAGED
-        # (rewritten) files — a columnar read — so the rewrite join
-        # executes exactly once (the staging write); the eager shape
-        # re-executed it once per probe family. Runs inside the commit's
-        # discard guard: a violation aborts the commit and drops the
-        # staged files ("nothing visible on failure" unchanged). The FK
-        # probe's parent pins return as cross-table OCC preconditions.
-        if not (checks or fks or uniques):
-            return None
-        paths = [
-            os.path.join(stage_dir, e["path"]) for e in stage_entries
-        ]
-        if not paths:
-            return None  # nothing written: nothing can violate
-        staged = result.sparkSession.read.schema(
-            meta.spark_schema
-        ).parquet(*paths)
-        enforce_check_constraints(staged, checks)
-        fk_deps = enforce_foreign_keys(
-            store, staged, fks, table_name=table_name,
-        ) if fks else None
-        if uniques:
-            from ...validation import enforce_unique_constraints
-
-            # when pruned, the staged files hold only the rewritten
-            # rows — the carried-over files' keys are the cross-check
-            # side, and the probe stats-prunes to just the kept files
-            # whose recorded key ranges intersect the batch (insert's
-            # existing_for shape: scanning ALL kept files made the
-            # probe cost proportional to table size instead of to the
-            # overlap)
-            keep_paths = (
-                {e["path"] for e in keep_entries} if keep_entries
-                else set()
-            )
-
-            def _existing_for(cols, b):
-                if not keep_paths:
-                    return None
-                touched_p, _ = store.split_by_key_ranges(
-                    table_name, b, version=meta.version
-                )
-                sel = [pth for pth in touched_p if pth in keep_paths]
-                return store.read_files(table_name, sel) if sel else None
-
-            enforce_unique_constraints(
-                staged, uniques, existing_for=_existing_for
-            )
-        return fk_deps
-
-    if keep_entries is not None:
-        store.replace_files(
-            table_name, result, keep_entries, op="update",
-            expected_version=meta.version, pre_commit_check=_pre_commit,
-        )
-    else:
-        store.overwrite(
-            table_name, result, op="update",
-            expected_version=meta.version, pre_commit_check=_pre_commit,
-        )

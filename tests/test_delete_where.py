@@ -89,3 +89,35 @@ def test_truncate_is_metadata_only_and_fk_guarded(engine, spark):
 
     with pytest.raises(E.SQLForeignKeyViolation, match="truncate"):
         engine.write.truncate("dbo.dw")
+
+
+@pytest.mark.parametrize("verb", ["delete", "delete_where"])
+def test_deleted_count_reads_own_commit(engine, spark, verb):
+    """The returned count is the rows this delete removed, read from the
+    version it committed — not from whatever version is current when
+    the call returns. A writer appending right after the delete's
+    commit must not shift the count."""
+    _mk(engine, spark)
+    store = engine.store
+    commit = store.replace_files
+
+    def commit_then_race(*args, **kwargs):
+        commit(*args, **kwargs)
+        engine.write.insert(
+            "dbo.dw",
+            spark.createDataFrame([Row(id=500, v=5)], "id long, v int"),
+        )
+
+    store.replace_files = commit_then_race
+    try:
+        if verb == "delete":
+            n = engine.write.delete(
+                "dbo.dw",
+                spark.createDataFrame([Row(id=i) for i in range(3)], "id long"),
+            )
+        else:
+            n = engine.write.delete_where("dbo.dw", "v < 3")
+    finally:
+        store.replace_files = commit
+    assert n == 3
+    assert engine.read.table("dbo.dw").count() == 20 - 3 + 1

@@ -371,3 +371,169 @@ def test_delete_executes_key_source_once(engine, spark):
         F.min("k").alias("lo")
     ).collect()[0]["lo"]
     assert remaining == 40
+
+
+def _commit_in_group(engine, spark, table, tag, verb):
+    """Run ``verb()`` in its own Spark job group and return
+    ``(jobs, previous manifest, new manifest, newest history row)``;
+    asserts the file accounting of the commit it made: the new
+    manifest is carried entries of the previous one plus new files,
+    and the row totals balance."""
+    sc = spark.sparkContext
+    store = engine.store
+    prev = store.manifest(table, store.meta(table).version)
+    sc.setJobGroup(tag, "verb job-count pin")
+    try:
+        verb()
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(tag) or [])
+    new = store.manifest(table, store.meta(table).version)
+    prev_by_path = {e["path"]: e for e in prev}
+    carried = [e for e in new if e["path"] in prev_by_path]
+    added = [e for e in new if e["path"] not in prev_by_path]
+    removed = [e for e in prev if e["path"] not in {x["path"] for x in new}]
+    for e in carried:
+        assert e == prev_by_path[e["path"]], "carried entry changed"
+
+    def rows(es):
+        return sum(e["rows"] for e in es)
+
+    assert rows(new) == rows(prev) - rows(removed) + rows(added)
+    assert len(carried) + len(removed) == len(prev)
+    top = store.history(table)[0]
+    assert top["n_files_kept"] == len(carried)
+    assert top["n_files_added"] == len(added)
+    return jobs, prev, new, top
+
+
+def test_write_verb_job_counts_and_file_accounting(engine, spark):
+    """Per-verb Spark job counts, pinned exactly, plus carry-by-reference
+    file accounting for every write verb: insert, update, delete, upsert
+    merge on a single-column and on a composite PK, merge with
+    ``delete_requires`` and SCD2. Each table is loaded as four disjoint
+    key-range files, and each batch touches one of them, so pruning
+    engages everywhere (``n_files_kept`` > 0). The counts are the
+    deterministic cross-check on write-path refactors: they may only
+    stay the same or fall."""
+    eng = engine
+    got = {}
+
+    eng.create.table("dbo.jc", {"k": "bigint", "v": "bigint"},
+                     primary_key_column="k")
+    eng.write.insert(
+        "dbo.jc",
+        spark.range(200).selectExpr("id AS k", "id AS v")
+        .repartitionByRange(4, "k"),
+    )
+    jobs, prev, new, top = _commit_in_group(
+        eng, spark, "dbo.jc", "jc_insert",
+        lambda: eng.write.insert(
+            "dbo.jc", spark.range(200, 220).selectExpr("id AS k", "id AS v")
+        ),
+    )
+    got["insert"] = jobs
+    assert top["n_files_kept"] == len(prev) == 4
+    jobs, _, _, top = _commit_in_group(
+        eng, spark, "dbo.jc", "jc_update",
+        lambda: eng.write.update(
+            "dbo.jc", spark.range(10, 20).selectExpr("id AS k", "-id AS v")
+        ),
+    )
+    got["update"] = jobs
+    assert top["n_files_kept"] > 0
+    jobs, _, _, top = _commit_in_group(
+        eng, spark, "dbo.jc", "jc_merge",
+        lambda: eng.write.merge(
+            "dbo.jc", spark.range(60, 70).selectExpr("id AS k", "0 AS v"),
+            upsert=True,
+        ),
+    )
+    got["merge_upsert"] = jobs
+    assert top["n_files_kept"] > 0
+    deleted = {}
+    jobs, _, _, top = _commit_in_group(
+        eng, spark, "dbo.jc", "jc_delete",
+        lambda: deleted.setdefault("n", eng.write.delete(
+            "dbo.jc", spark.range(110, 115).selectExpr("id AS k")
+        )),
+    )
+    got["delete"] = jobs
+    assert deleted["n"] == 5 and top["n_files_kept"] > 0
+
+    eng.create.table("dbo.jcc", {"a": "bigint", "b": "bigint", "v": "bigint"},
+                     primary_key_column=["a", "b"])
+    eng.write.insert(
+        "dbo.jcc",
+        spark.range(200).selectExpr("id AS a", "id % 3 AS b", "id AS v")
+        .repartitionByRange(4, "a", "b"),
+    )
+    jobs, _, _, top = _commit_in_group(
+        eng, spark, "dbo.jcc", "jc_merge_composite",
+        lambda: eng.write.merge(
+            "dbo.jcc",
+            spark.range(10, 20).selectExpr("id AS a", "id % 3 AS b", "0 AS v"),
+            upsert=True,
+        ),
+    )
+    got["merge_composite"] = jobs
+    assert top["n_files_kept"] > 0
+
+    eng.create.table("dbo.jcd", {"k": "bigint", "part": "bigint", "v": "bigint"},
+                     primary_key_column="k")
+    eng.write.insert(
+        "dbo.jcd",
+        spark.range(200).selectExpr("id AS k", "id DIV 50 AS part", "id AS v")
+        .repartitionByRange(4, "k"),
+    )
+    # reload partition 1 without its last ten keys
+    jobs, _, _, top = _commit_in_group(
+        eng, spark, "dbo.jcd", "jc_merge_delete_requires",
+        lambda: eng.write.merge(
+            "dbo.jcd",
+            spark.range(50, 90).selectExpr("id AS k", "1 AS part", "0 AS v"),
+            delete_requires=["part"],
+        ),
+    )
+    got["merge_delete_requires"] = jobs
+    assert top["n_files_kept"] > 0
+    assert eng.read.table("dbo.jcd").count() == 190
+
+    eng.create.table(
+        "dbo.jcs",
+        {"k": "bigint", "attr": "bigint", "_valid_from": "datetime2",
+         "_valid_to": "datetime2", "_is_current": "bit"},
+    )
+    eng.store.update_meta("dbo.jcs", properties={"stats_column": "k"})
+    eng.write.insert(
+        "dbo.jcs",
+        spark.range(200).select(
+            F.col("id").alias("k"), F.col("id").alias("attr"),
+            F.lit("2024-01-01 00:00:00").cast("timestamp_ntz")
+            .alias("_valid_from"),
+            F.lit(None).cast("timestamp_ntz").alias("_valid_to"),
+            F.lit(True).alias("_is_current"),
+        ).repartitionByRange(4, "k"),
+    )
+    jobs, _, _, top = _commit_in_group(
+        eng, spark, "dbo.jcs", "jc_scd2",
+        lambda: eng.write.merge_scd2(
+            "dbo.jcs",
+            spark.range(150, 160).selectExpr("id AS k", "-id AS attr"),
+            match_columns=["k"],
+            as_of=F.lit("2024-06-01 00:00:00").cast("timestamp_ntz"),
+        ),
+    )
+    got["scd2"] = jobs
+    assert top["n_files_kept"] > 0
+    assert eng.read.table("dbo.jcs").count() == 210
+
+    assert got == {
+        "insert": 4,
+        "update": 6,
+        "merge_upsert": 7,
+        "delete": 3,
+        "merge_composite": 11,
+        "merge_delete_requires": 15,
+        "scd2": 7,
+    }
