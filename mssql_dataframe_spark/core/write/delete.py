@@ -489,8 +489,8 @@ def delete_where_op(
             bset = set(touched_b)
             scan_entries = [e for e in entries if e["path"] in bset]
     target_all = store.read_files(
-        table_name, [e["path"] for e in scan_entries]
-    ) if len(scan_entries) != len(entries) else store.read(table_name)
+        table_name, [e["path"] for e in scan_entries], version=meta.version
+    )
     cond = F.expr(cond_sql)
     matched = file_names(
         target_all.filter(cond).select(F.col("_metadata.file_path").alias("f"))
@@ -535,8 +535,7 @@ def truncate_op(store: TableStore, table_name: str) -> int:
             f"foreign key {nm!r} on {t!r}"
         )
     n = _rows(store.manifest(table_name, meta.version))
-    empty = store.spark.createDataFrame([], meta.spark_schema)
     store.overwrite(
-        table_name, empty, op="truncate", expected_version=meta.version
+        table_name, None, op="truncate", expected_version=meta.version
     )
     return n

@@ -222,7 +222,7 @@ def insert(
         #
         # 1) Deferred validation: the staging write already computed
         #    the fused agg as observe() metrics; apply them (raises
-        #    the eager path's exact errors) and take the per-PK-column
+        #    the validation errors) and take the per-PK-column
         #    pruning bounds from the same metrics.
         pk_bounds = finish_validation()
         # 2) CHECK, FOREIGN KEY and UNIQUE probes over the staged files

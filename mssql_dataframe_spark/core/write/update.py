@@ -70,8 +70,7 @@ def stage_validated_source(store, table_name, plan, finish,
     Returns ``(leaf_df, bounds, stage_dir)``. The caller must remove
     ``stage_dir`` when the verb finishes (try/finally); the
     ``.stage_`` prefix keeps crash litter under vacuum's age-gated
-    reaper. Raises exactly the eager path's validation errors before
-    returning.
+    reaper. Raises the validation errors before returning.
     """
     tdir = store._table_dir(table_name)
     os.makedirs(tdir, exist_ok=True)

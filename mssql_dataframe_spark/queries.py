@@ -11208,6 +11208,20 @@ def customer_revenue_gini(spark, sf_dir):
 # already-green entries. Rotated each round as evidence lands
 # (VERDICT.md round 3, "Next round: do this" #3).
 _GRADE_FIRST = [
+    # -- the 11 registry entries that appear in no CORRECTNESS_r*.json
+    # (added after the r13 rotation was fixed), graded first so every
+    # entry gets a driver correctness row; registry order --
+    "string_agg_listagg",
+    "mode_median_functions",
+    "histogram_width_bucket",
+    "approx_topk_priorities",
+    "events_acf_daily",
+    "benford_first_digit",
+    "attribution_last_touch",
+    "events_seasonal_anomaly",
+    "events_adoption_curve",
+    "events_peak_hours",
+    "customer_revenue_gini",
     # r14 rotation (VERDICT r13 "Next round: do this" #1): (a) the 5
     # entries added during r13 that have no driver CORRECTNESS row
     # anywhere (queries.py HLL/bitmap/stats/ANSI block; all

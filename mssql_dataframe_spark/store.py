@@ -1277,7 +1277,7 @@ class TableStore:
         return entries, stage
 
     def _publish_staged(
-        self, name: str, stage_dir: str, entries: list[dict]
+        self, name: str, stage_dir: Optional[str], entries: list[dict]
     ) -> None:
         """Move a commit's staged files into the shared pool — called
         only after the version claim succeeded, so every published
@@ -1295,13 +1295,14 @@ class TableStore:
                 os.path.join(stage_dir, e["path"]),
                 os.path.join(pool, e["path"]),
             )
-        shutil.rmtree(stage_dir, ignore_errors=True)
+        self._discard_staged(stage_dir)
 
     @staticmethod
-    def _discard_staged(stage_dir: str) -> None:
-        """Drop a losing commit's staging directory — the single
-        cleanup path every OCC failure shares."""
-        shutil.rmtree(stage_dir, ignore_errors=True)
+    def _discard_staged(stage_dir: Optional[str]) -> None:
+        """Drop a commit's staging directory (``None``: nothing was
+        staged) — the single cleanup path every OCC failure shares."""
+        if stage_dir is not None:
+            shutil.rmtree(stage_dir, ignore_errors=True)
 
     # -- data ---------------------------------------------------------
     def create(
@@ -1352,29 +1353,37 @@ class TableStore:
         meta = self.meta(name)
         v = meta.version if version is None else int(version)
         if version is not None:
-            if v > meta.version or not os.path.exists(
-                self._manifest_path(name, v)
-            ):
-                raise ValueError(
-                    f"version {v} of table {name!r} is not available "
-                    f"(current {meta.version}, retention keeps "
-                    f"{self._retention(meta)} prior snapshots)"
-                )
+            self._require_version(name, meta, v)
         paths = [
             os.path.join(self._pool_dir(name), e["path"])
             for e in self.manifest(name, v)
         ]
-        schema = meta.spark_schema
-        if version is not None and v != meta.version:
-            recorded = self.commit_info(name, v).get("schema")
-            if recorded is not None:
-                schema = T.StructType.fromJson(recorded)
-        if not paths:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*paths)
+        return self._read_paths(self._version_schema(name, meta, version),
+                                paths)
 
-    def _read_paths(self, meta: TableMeta, paths: list[str]) -> DataFrame:
-        schema = meta.spark_schema
+    def _require_version(self, name: str, meta: TableMeta, v: int) -> None:
+        """Raise unless version ``v`` of ``name`` is still retained."""
+        if v > meta.version or not os.path.exists(
+            self._manifest_path(name, v)
+        ):
+            raise ValueError(
+                f"version {v} of table {name!r} is not available "
+                f"(current {meta.version}, retention keeps "
+                f"{self._retention(meta)} prior snapshots)"
+            )
+
+    def _version_schema(
+        self, name: str, meta: TableMeta, version: Optional[int]
+    ) -> T.StructType:
+        """Schema ``version``'s files read with: the one recorded in its
+        commit for a retained prior version, else the declared one."""
+        if version is not None and int(version) != meta.version:
+            recorded = self.commit_info(name, int(version)).get("schema")
+            if recorded is not None:
+                return T.StructType.fromJson(recorded)
+        return meta.spark_schema
+
+    def _read_paths(self, schema: T.StructType, paths: list[str]) -> DataFrame:
         if not paths:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(*paths)
@@ -1389,16 +1398,10 @@ class TableStore:
         files predate any later MODIFY COLUMN rewrite, so reading them
         with the current schema would yield NULL/mistyped columns."""
         pool = self._pool_dir(name)
-        meta = self.meta(name)
-        paths = [os.path.join(pool, p) for p in entry_paths]
-        if version is not None and int(version) != meta.version:
-            recorded = self.commit_info(name, int(version)).get("schema")
-            if recorded is not None:
-                schema = T.StructType.fromJson(recorded)
-                if not paths:
-                    return self.spark.createDataFrame([], schema)
-                return self.spark.read.schema(schema).parquet(*paths)
-        return self._read_paths(meta, paths)
+        return self._read_paths(
+            self._version_schema(name, self.meta(name), version),
+            [os.path.join(pool, p) for p in entry_paths],
+        )
 
     def split_by_key_range(
         self, name: str, col: str, lo, hi,
@@ -1482,14 +1485,7 @@ class TableStore:
         meta = self.meta(name)
         v_new = meta.version if v_new is None else int(v_new)
         for v in (int(v_old), v_new):
-            if v > meta.version or not os.path.exists(
-                self._manifest_path(name, v)
-            ):
-                raise ValueError(
-                    f"version {v} of table {name!r} is not available "
-                    f"(current {meta.version}, retention keeps "
-                    f"{self._retention(meta)} prior snapshots)"
-                )
+            self._require_version(name, meta, v)
         return (
             {e["path"] for e in self.manifest(name, int(v_old))},
             {e["path"] for e in self.manifest(name, v_new)},
@@ -1509,91 +1505,21 @@ class TableStore:
         files. Versioning every insert makes ``read(version=N)`` a
         stable snapshot (a reader holding version N never sees rows
         appended after it asked) and lets manifest-diff CDC report
-        plain inserts between consecutive versions.
-
-        ``extra_properties`` are folded into ``meta.properties`` in the
-        SAME meta write that publishes the new version — callers that
-        must update bookkeeping atomically with the data commit (e.g.
-        ingest_directory's ingested-files ledger) pass it here instead
-        of issuing a separate post-commit update_meta, so a crash can
-        never land data without its ledger entry.
-
-        ``expected_version`` is the version the caller planned this
-        write against (defaults to the version read here): the commit
-        fails cleanly if any other writer advanced the table since,
-        so a plan built on stale state can never erase a concurrent
-        commit. Claim order — stage privately, validate, claim the
-        version's manifest exclusively, publish files, move the meta
-        pointer — keeps readers and concurrent vacuums safe at every
-        step (the manifest claim makes the files referenced BEFORE
-        they enter the shared pool).
-
-        ``pre_commit_check(entries, stage_dir)`` runs AFTER staging and
-        BEFORE the version claim, inside the discard guard: a raise
-        aborts the commit and drops the staged files. Insert uses it
-        for deferred validation (the checks ride the staging write as
-        ``observe()`` metrics) and for the post-stage PK/CHECK/FK/
-        UNIQUE probes — the staged files are readable at ``stage_dir``
-        and their manifest ``entries`` already carry harvested
-        per-file column stats. The hook may return a list of
-        ``(table, version)`` cross-table OCC preconditions (e.g. the
-        FK probe's parent-version pins), merged into ``preconditions``
-        before the precondition check — probing inside the guard keeps
-        the probe-to-commit race window minimal while the OCC check
-        still covers what remains of it."""
-        meta = self.meta(name)
-        base = meta.version if expected_version is None else int(
+        plain inserts between consecutive versions. Insert's
+        ``pre_commit_check`` applies its deferred validation and runs
+        its PK/CHECK/FK/UNIQUE probes over the staged files;
+        ``extra_properties`` carry bookkeeping that must land with the
+        data (e.g. ingest_directory's ingested-files ledger). The commit
+        contract is ``_commit``'s."""
+        base = self.meta(name).version if expected_version is None else int(
             expected_version
         )
-        entries, stage_dir = self._stage_in(
-            name, df, meta.spark_schema, self._stats_col(meta),
-            cluster=bool(meta.properties.get("cluster_on_write")),
-            extra_stats_cols=self._stats_cols(meta),
-            cluster_cols=self._cluster_cols(meta),
-            bloom_cols=self._bloom_cols(meta),
-        )
-        next_v = base + 1
-        try:
-            # inside the discard guard: a corrupt or vacuumed-out
-            # carried manifest (json error / SQLSnapshotUnavailable)
-            # must not leak the staged files on disk
-            if pre_commit_check is not None:
-                extra_pre = pre_commit_check(entries, stage_dir)
-                if extra_pre:
-                    preconditions = list(preconditions or []) + list(
-                        extra_pre
-                    )
-            carried = self.manifest(name, base)
-            self._check_no_concurrent_commit(name, base)
-            self._check_preconditions(name, preconditions)
-            self._write_manifest(
-                name, next_v, carried + entries, commit={
-                    "op": "append", "ts": self._now(),
-                    "n_added": len(entries), "n_kept": len(carried),
-                    "schema": meta.spark_schema.jsonValue(),
-                }, exclusive=True,
-            )
-        except BaseException:
-            self._discard_staged(stage_dir)
-            raise
-        self._publish_staged(name, stage_dir, entries)
-        meta.version = next_v
-        if extra_properties:
-            meta.properties = {**meta.properties, **extra_properties}
-        if extra_meta:
-            # top-level TableMeta bookkeeping (e.g. identity_next)
-            # published in the SAME meta write as the version advance:
-            # a pre-commit update_meta would be last-writer-wins under
-            # concurrency — an OCC loser could clobber the winner's
-            # advanced counter after the winner committed
-            for k, v in extra_meta.items():
-                if not hasattr(meta, k):
-                    raise AttributeError(
-                        f"extra_meta key {k!r} is not a TableMeta field"
-                    )
-                setattr(meta, k, v)
-        self._write_meta(name, meta)
-        self._vacuum(name, keep_before=next_v - self._retention(meta))
+        self._commit(name, df, keep_entries=self.manifest(name, base),
+                     op="append", preconditions=preconditions,
+                     expected_version=base,
+                     extra_properties=extra_properties,
+                     extra_meta=extra_meta,
+                     pre_commit_check=pre_commit_check)
 
     def clone(self, src: str, dst: str) -> TableMeta:
         """Zero-copy table clone (Delta ``SHALLOW CLONE`` analog): the
@@ -1746,14 +1672,7 @@ class TableStore:
         NULL, like Delta's missing-column semantics)."""
         meta = self.meta(name)
         v = int(version)
-        if v > meta.version or not os.path.exists(
-            self._manifest_path(name, v)
-        ):
-            raise ValueError(
-                f"version {v} of table {name!r} is not available "
-                f"(current {meta.version}, retention keeps "
-                f"{self._retention(meta)} prior snapshots)"
-            )
+        self._require_version(name, meta, v)
         carried = self.manifest(name, v)
         declared = set(meta.spark_schema.fieldNames())
         for e in carried:
@@ -1766,16 +1685,9 @@ class TableStore:
                     "declared schema (restore across a column drop/"
                     "rename is not supported)"
                 )
-        next_v = meta.version + 1
-        self._write_manifest(name, next_v, carried, commit={
-            "op": f"restore(v{v})", "ts": self._now(),
-            "n_added": 0, "n_kept": len(carried),
-            "schema": meta.spark_schema.jsonValue(),
-        }, exclusive=True)
-        meta.version = next_v
-        self._write_meta(name, meta)
-        self._vacuum(name, keep_before=next_v - self._retention(meta))
-        return next_v
+        self._commit(name, None, keep_entries=carried, op=f"restore(v{v})",
+                     expected_version=meta.version)
+        return meta.version + 1
 
     #: snapshots retained behind the current version; lazy DataFrames
     #: handed out by ``read()`` stay valid across this many subsequent
@@ -1791,7 +1703,7 @@ class TableStore:
         except (TypeError, ValueError):
             return self.keep_versions
 
-    def overwrite(self, name: str, df: DataFrame,
+    def overwrite(self, name: str, df: Optional[DataFrame],
                   new_schema: Optional[T.StructType] = None,
                   new_column_types: Optional[dict[str, str]] = None,
                   op: str = "overwrite",
@@ -1800,14 +1712,12 @@ class TableStore:
                   extra_properties: Optional[dict] = None,
                   extra_meta: Optional[dict] = None,
                   pre_commit_check: Optional[callable] = None) -> None:
-        """Materialize ``df`` as the next snapshot, then atomically move
-        the table pointer. Readers of the old version are unaffected —
-        old snapshots are vacuumed only once they fall
-        ``keep_versions`` commits behind, so a lazy plan bound to a
-        recent snapshot can still be consumed after later writes. A
-        crash before the meta replace leaves the table unchanged.
-        ``extra_properties`` fold into ``meta.properties`` atomically
-        with the version advance (see replace_files)."""
+        """Materialize ``df`` as the next snapshot (``None``: an empty
+        one), then atomically move the table pointer. Readers of the old
+        version are unaffected — old snapshots are vacuumed only once
+        they fall ``keep_versions`` commits behind, so a lazy plan bound
+        to a recent snapshot can still be consumed after later writes.
+        The commit contract is ``_commit``'s."""
         self._commit(name, df, keep_entries=[], new_schema=new_schema,
                      new_column_types=new_column_types, op=op,
                      preconditions=preconditions,
@@ -1831,31 +1741,11 @@ class TableStore:
         carried over BY REFERENCE — no rewrite, no copy) plus the
         materialized ``df`` (the rewritten touched files). This is the
         Delta ``MERGE INTO`` commit shape: write cost ∝ touched data.
-        ``op`` labels the commit in ``history()`` (merge/update/...).
-
-        ``pre_commit_check(staged_entries, stage_dir)`` — same contract
-        as ``append``'s hook: runs AFTER the staging write and BEFORE
-        the version claim, inside the discard guard; a raise aborts the
-        commit and drops the staged files, and a returned list of
-        ``(table, version)`` pairs merges into ``preconditions``.
-        update/merge/SCD2 run their CHECK/FK/UNIQUE probes here over
-        the staged files so the rewrite plan executes exactly once.
-
-        Callers computed ``keep_entries`` against a specific snapshot;
-        pass that snapshot's version as ``expected_version`` so a
-        concurrent commit landing in between fails this write cleanly
-        instead of being silently dropped from the new manifest.
-
-        ``new_schema``/``new_column_types`` publish a schema evolution
-        (merge auto-evolve) in the SAME meta write that moves the
-        version pointer — an OCC loss discards the evolution with the
-        staged files, never leaving phantom catalog columns behind.
-        ``extra_properties`` likewise fold into ``meta.properties``
-        atomically with the version advance (and are visible to the
-        staging stats harvest — optimize_zorder threads its
-        ``stats_columns`` here so the rewritten files' per-column
-        stats and the property that activates them publish
-        together)."""
+        update/merge/SCD2/delete pass the snapshot ``keep_entries`` were
+        computed from as ``expected_version`` and run their CHECK/FK/
+        UNIQUE probes in ``pre_commit_check`` over the staged files, so
+        the rewrite plan executes exactly once. The commit contract is
+        ``_commit``'s."""
         self._commit(name, df, keep_entries=list(keep_entries), op=op,
                      preconditions=preconditions,
                      expected_version=expected_version,
@@ -1865,7 +1755,8 @@ class TableStore:
                      extra_meta=extra_meta,
                      pre_commit_check=pre_commit_check)
 
-    def _commit(self, name: str, df: DataFrame, keep_entries: list[dict],
+    def _commit(self, name: str, df: Optional[DataFrame],
+                keep_entries: list[dict],
                 new_schema: Optional[T.StructType] = None,
                 new_column_types: Optional[dict[str, str]] = None,
                 op: str = "commit",
@@ -1874,13 +1765,47 @@ class TableStore:
                 extra_properties: Optional[dict] = None,
                 extra_meta: Optional[dict] = None,
                 pre_commit_check: Optional[callable] = None) -> None:
-        """``extra_meta`` sets top-level TableMeta fields (e.g.
-        ``not_nullable``) in the SAME meta write that advances the
-        version pointer — the non-properties sibling of
-        ``extra_properties``, for callers whose key bookkeeping must
-        publish atomically with the data commit (a crash between a
-        data commit and a follow-up ``update_meta`` would otherwise
-        leave enforcement metadata naming ghost columns)."""
+        """The one version-advancing commit body (``append``,
+        ``overwrite``, ``replace_files`` and ``restore`` all reach it):
+        the next snapshot is ``keep_entries`` (carried by reference)
+        plus ``df`` materialized as new files; ``df=None`` stages
+        nothing (a manifest-only commit). ``op`` labels the commit in
+        ``history()``.
+
+        Claim order — stage privately, run the hook, check OCC, claim
+        the version's manifest exclusively, publish files, move the meta
+        pointer — keeps readers and concurrent vacuums safe at every
+        step (the manifest claim makes the files referenced BEFORE they
+        enter the shared pool); a crash before the meta replace leaves
+        the table unchanged.
+
+        ``pre_commit_check(staged_entries, stage_dir)`` runs AFTER
+        staging and BEFORE the version claim, inside the discard guard:
+        a raise aborts the commit and drops the staged files. The staged
+        files are readable at ``stage_dir`` and their entries already
+        carry harvested per-file column stats. The hook may return a
+        list of ``(table, version)`` cross-table OCC preconditions (e.g.
+        the FK probe's parent-version pins), merged into
+        ``preconditions`` before they are checked — probing inside the
+        guard keeps the probe-to-commit race window minimal while the
+        OCC check still covers what remains of it.
+
+        ``expected_version`` is the version the caller planned this
+        write against (default: the version read here): the commit
+        fails cleanly if any other writer advanced the table since, so
+        a plan built on stale state can never erase a concurrent commit.
+
+        ``new_schema``/``new_column_types`` (schema evolution, e.g. merge
+        auto-evolve), ``extra_properties`` (folded into
+        ``meta.properties``) and ``extra_meta`` (top-level TableMeta
+        fields, e.g. ``identity_next`` or ``not_nullable``) publish in
+        the SAME meta write that advances the version pointer: an OCC
+        loss discards them with the staged files, and no separate
+        ``update_meta`` can be lost to a crash or, last-writer-wins,
+        clobber a concurrent winner. ``extra_properties`` are also
+        visible to the staging stats harvest (optimize_zorder threads
+        its ``stats_columns`` here so the rewritten files' stats and the
+        property that activates them publish together)."""
         meta = self.meta(name)
         if extra_properties:
             # folded BEFORE staging (the stats harvest reads
@@ -1893,16 +1818,18 @@ class TableStore:
         )
         next_v = base + 1
         schema = new_schema or meta.spark_schema
-        stats_col = self._stats_col(meta)
-        if new_schema is not None and stats_col not in schema.fieldNames():
-            stats_col = None
-        staged, stage_dir = self._stage_in(
-            name, df, schema, stats_col,
-            cluster=bool(meta.properties.get("cluster_on_write")),
-            extra_stats_cols=self._stats_cols(meta),
-            cluster_cols=self._cluster_cols(meta),
-            bloom_cols=self._bloom_cols(meta, schema=schema),
-        )
+        staged, stage_dir = [], None
+        if df is not None:
+            stats_col = self._stats_col(meta)
+            if new_schema is not None and stats_col not in schema.fieldNames():
+                stats_col = None
+            staged, stage_dir = self._stage_in(
+                name, df, schema, stats_col,
+                cluster=bool(meta.properties.get("cluster_on_write")),
+                extra_stats_cols=self._stats_cols(meta),
+                cluster_cols=self._cluster_cols(meta),
+                bloom_cols=self._bloom_cols(meta, schema=schema),
+            )
         entries = keep_entries + staged
         try:
             if pre_commit_check is not None:

@@ -8,17 +8,15 @@ DataFrames:
 2. upcast to the widest type of each SQL category before range checks
    (reference: conversion.py:214-253) so e.g. 10000 into a tinyint is
    caught instead of silently wrapped,
-3. ALL data-dependent checks in ONE distributed aggregation pass
-   (reference computes client-side min/max — conversion.py:256-326):
-   range / string-length / binary-length bounds, ASCII content of
-   non-unicode char/varchar (conversion.py:329-354), decimal
-   rounding-changed flags (gates the reference's rounding warning,
-   conversion.py:591-608), unconvertible-value flags
-   (``try_cast`` NULL on a non-NULL input -> DataframeColumnInvalidValue,
-   reference custom_errors.py:68), NOT NULL violations, and optional
-   duplicate-match-key detection for update/merge (T-SQL MERGE raises
-   "attempted to UPDATE the same row more than once"). One Spark job
-   per write, regardless of column count.
+3. ALL data-dependent checks as ``observe()`` metrics on the caller's
+   first action (reference computes client-side min/max —
+   conversion.py:256-326): range / string-length / binary-length
+   bounds, ASCII content of non-unicode char/varchar
+   (conversion.py:329-354), decimal rounding-changed flags (gates the
+   reference's rounding warning, conversion.py:591-608),
+   unconvertible-value flags (``try_cast`` NULL on a non-NULL input ->
+   DataframeColumnInvalidValue, reference custom_errors.py:68) and NOT
+   NULL violations. No extra Spark job, regardless of column count.
 4. value preparation: decimal scale rounding, datetime rounding to SQL
    Server grids (conversion.py:448-525), binary(n) zero-padding
    (conversion.py:611-620) — pure transformations, no extra jobs,
@@ -48,12 +46,6 @@ from .errors import (
 logger = logging.getLogger("mssql_dataframe_spark")
 
 
-#: "bounds_col not requested" sentinel — lets callers pass
-#: ``bounds_col=None`` ("prune ineligible, but keep the tuple shape")
-#: distinctly from not asking for bounds at all.
-_NO_BOUNDS = object()
-
-
 def _bq(name: str) -> str:
     """Backtick-quote an identifier for inline SQL text. Unlike
     ``identifiers.escape`` this does NOT enforce the 128-char SYSNAME
@@ -71,50 +63,23 @@ def precheck_dataframe(
     df: DataFrame,
     column_types: dict[str, str],
     not_nullable: Sequence[str] = (),
-    unique_key: Optional[Sequence[str]] = None,
-    bounds_col=_NO_BOUNDS,
 ) -> DataFrame:
     """Validate and convert ``df`` against the declared SQL types of the
-    target table; returns the adjusted DataFrame (the reference returns
-    the possibly precision-adjusted frame so callers can compare
+    target table now; returns the converted DataFrame (the reference
+    returns the possibly precision-adjusted frame so callers can compare
     round-trip equality — conversion.py:898-899).
+
+    Runs the write verbs' pipeline (``precheck_dataframe_deferred``)
+    and forces it with one ``noop``-sink action, so it raises exactly
+    the errors a write of the same frame raises.
 
     ``not_nullable``: columns that must not contain NULL (table NOT NULL
     + primary-key columns); violation raises DataframeColumnInvalidValue.
-    ``unique_key``: match columns that must identify at most one source
-    row each (update/merge); duplicates raise ValueError, matching
-    T-SQL MERGE's "cannot UPDATE the same row more than once" contract.
-    ``bounds_col``: when set, the min/max of that column ride the SAME
-    validation agg job and the return value becomes ``(df, (lo, hi))``
-    — the file-pruning bounds for merge/update/SCD2 without a second
-    pass over the source. A LIST of columns collects per-column bounds
-    in that one agg and returns ``(df, {col: (lo, hi)})`` — the shape
-    ``store.split_by_key_ranges`` consumes for composite-key pruning.
-    Only int/str key columns matter here (the manifest keeps stats for
-    nothing else), and for those the later cast steps are
-    value-preserving, so bounds taken pre-cast are exact. (Like
-    Delta's MERGE, pruned writes assume a deterministic source — a
-    source that yields different rows when recomputed can sidestep any
-    bounds collected beforehand.)
     """
-    specs: dict[str, ColumnSpec] = {}
-    for col in df.columns:
-        if col not in column_types:
-            raise DataframeColumnDoesNotExist(
-                f"dataframe column {col!r} is not a column of the target table"
-            )
-        specs[col] = parse_column_spec(column_types[col])
-
-    df = _upcast_widest(df, specs)
-    bounds = _validate_single_pass(
-        df, specs,
-        not_nullable=[c for c in not_nullable if c in df.columns],
-        unique_key=list(unique_key) if unique_key else None,
-        bounds_col=None if bounds_col is _NO_BOUNDS else bounds_col,
-    )
-    df = _prepare_values(df, specs)
-    out = _cast_to_rules(df, specs)
-    return out if bounds_col is _NO_BOUNDS else (out, bounds)
+    out, finish = precheck_dataframe_deferred(df, column_types, not_nullable)
+    out.write.format("noop").mode("overwrite").save()
+    finish()
+    return out
 
 
 def precheck_dataframe_deferred(
@@ -123,34 +88,38 @@ def precheck_dataframe_deferred(
     not_nullable: Sequence[str] = (),
     bounds_col=None,
 ):
-    """Deferred-validation variant of ``precheck_dataframe`` for
-    APPEND-shaped writes: instead of running the fused validation agg
-    as its own Spark job (one full pass over the source), the SAME
-    aggregate expressions ride the caller's staging write as
-    ``observe()`` metrics, so validating an insert costs zero extra
-    passes (guide §2.4 — remove a source scan per commit).
+    """The validation pipeline: instead of running the fused validation
+    agg as its own Spark job (one full pass over the source), the
+    aggregate expressions ride the caller's first action on the result
+    (the staging write) as ``observe()`` metrics, so validating a write
+    costs zero extra passes (guide §2.4 — remove a source scan per
+    commit).
 
     Returns ``(out_df, finish)``. ``finish()`` must be called after
-    the first action on ``out_df`` (the staging write); it raises
-    exactly the eager path's errors and returns the ``bounds_col``
-    pruning bounds (metric values are identical — same expressions,
-    observed at the same pre-cast point in the plan).
+    the first action on ``out_df``; it raises the validation errors and
+    returns the pruning bounds.
 
-    Two deliberate differences from the eager path, both safe:
+    ``bounds_col``: a list of columns whose per-column min/max ride the
+    same metrics; ``finish()`` then returns ``{col: (lo, hi)}`` — the
+    shape ``store.split_by_key_ranges`` consumes. Only int/str key
+    columns matter here (the manifest keeps stats for nothing else),
+    and for those the later cast steps are value-preserving, so bounds
+    taken pre-cast are exact. (Like Delta's MERGE, pruned writes assume
+    a deterministic source — a source that yields different rows when
+    recomputed can sidestep any bounds collected beforehand.)
 
-    - The eager path's plain ANSI casts would abort the write job on a
-      value no ``__bad`` probe covers (e.g. double NaN into INT); the
-      deferred pipeline uses ``try_cast`` end to end so the staging
-      write always completes, and every silently-NULLed value is
-      caught by a per-column non-null-count invariant observed before
-      and after the cast chain (``try_cast`` yields NULL exactly where
-      ANSI ``CAST`` raises). Violations surface as the same
-      ``DataframeColumnInvalidValue`` BEFORE anything commits — the
-      staged files are discarded by the caller's abort path.
-    - ``unique_key`` batch-duplicate checking is not supported here:
-      ``count(DISTINCT ...)`` is barred from ``observe()`` metrics.
-      Insert folds that check into its post-stage keys job instead
-      (one job over the staged key columns, not the source).
+    The pipeline uses ``try_cast`` end to end so the action always
+    completes: a plain ANSI ``CAST`` would abort it on a value no
+    ``__bad`` probe covers (e.g. double NaN into INT). Every
+    silently-NULLed value is caught by a per-column non-null-count
+    invariant observed before and after the cast chain (``try_cast``
+    yields NULL exactly where ANSI ``CAST`` raises) and surfaces as
+    ``DataframeColumnInvalidValue`` BEFORE anything commits — the
+    staged files are discarded by the caller's abort path.
+
+    Batch-duplicate match keys are not checked here: ``count(DISTINCT
+    ...)`` is barred from ``observe()`` metrics, so the writers check
+    them over the staged key columns (``stage_validated_source``).
     """
     specs: dict[str, ColumnSpec] = {}
     for col in df.columns:
@@ -166,7 +135,7 @@ def precheck_dataframe_deferred(
 
     from pyspark.sql import Observation
 
-    # nn0 BEFORE the widening upcast: the safe upcast try_casts (e.g.
+    # nn0 BEFORE the widening upcast: the upcast try_casts (e.g.
     # double NaN into an integer category), and a value it NULLs must
     # still trip the invariant — counting after it would hide the NULL.
     obs_raw = Observation()
@@ -174,18 +143,16 @@ def precheck_dataframe_deferred(
         obs_raw,
         *[F.expr(f"count({_bq(c)}) AS {_bq(c + '__nn0')}") for c in cols],
     )
-    df = _upcast_widest(df, specs, safe=True)
+    df = _upcast_widest(df, specs)
     aggs, ctx = _build_validation_aggs(
         df, specs,
         not_nullable=[c for c in not_nullable if c in df.columns],
-        unique_key=None,
         bounds_col=bounds_col,
     )
     obs_aggs = Observation() if aggs else None
     if obs_aggs is not None:
         df = df.observe(obs_aggs, *[F.expr(a) for a in aggs])
-    out = _cast_to_rules(_prepare_values(df, specs, safe=True), specs,
-                         safe=True)
+    out = _cast_to_rules(_prepare_values(df, specs), specs)
     obs_post = Observation()
     out = out.observe(
         obs_post,
@@ -441,9 +408,7 @@ def enforce_unique_constraints(
             )
 
 
-def _upcast_widest(
-    df: DataFrame, specs: dict[str, ColumnSpec], safe: bool = False
-) -> DataFrame:
+def _upcast_widest(df: DataFrame, specs: dict[str, ColumnSpec]) -> DataFrame:
     """Upcast numeric columns to their category's widest type before
     range checks (reference: conversion.py:214-253). Exact decimals
     are exempt: their probes try_cast to the DECLARED precision/scale
@@ -451,11 +416,9 @@ def _upcast_widest(
     overflow legal high-precision values (10^21 into NUMERIC(38,0))
     and abort the validation job under ANSI mode.
 
-    ``safe``: try_cast for the deferred path (see _prepare_values) —
-    e.g. double NaN into an integer category throws under ANSI CAST;
-    the deferred path's pre-upcast non-null counts convert the
+    ``try_cast``: e.g. double NaN into an integer category throws under
+    ANSI CAST; the pipeline's pre-upcast non-null counts convert the
     resulting NULL into ``DataframeColumnInvalidValue``."""
-    _C = "try_cast" if safe else "CAST"
     casts = {}
     for col, spec in specs.items():
         if spec.rule.sql_category == "exact_decimal_numeric":
@@ -465,7 +428,7 @@ def _upcast_widest(
             df.schema[col].dataType, (T.StringType,)
         ):
             casts[col] = (
-                f"{_C}({_bq(col)} AS {widest.simpleString()}) AS {_bq(col)}"
+                f"try_cast({_bq(col)} AS {widest.simpleString()}) AS {_bq(col)}"
             )
     return df.selectExpr(*_full_select(df, casts)) if casts else df
 
@@ -502,19 +465,16 @@ def _build_validation_aggs(
     df: DataFrame,
     specs: dict[str, ColumnSpec],
     not_nullable: list[str],
-    unique_key: Optional[list[str]],
-    bounds_col: Optional[str] = None,
+    bounds_col: Optional[list[str]] = None,
 ) -> tuple[list[str], dict]:
     """Build the validation aggregate expressions (SQL text) and the
     context `_apply_validation_row` needs to interpret the resulting
-    row. Split from `_validate_single_pass` so the deferred path can
-    attach the same aggregates as ``observe()`` metrics on the staging
-    write instead of running a separate source pass.
+    row; the pipeline attaches them as ``observe()`` metrics on the
+    staging write instead of running a separate source pass.
 
     Scale note: every term is an algebraic aggregate with a map-side
     partial (min/max/sum-style); at 100 TB this is a single scan +
-    lightweight final reduce. ``count_distinct`` over the match-key
-    struct adds an Expand but stays inside the same job.
+    lightweight final reduce.
 
     The aggregate expressions are built as SQL TEXT and submitted in
     one ``selectExpr`` (guide §1.2 driver-side plan cost): the stacked
@@ -615,28 +575,7 @@ def _build_validation_aggs(
             f"max(CAST(({_bq(col)} IS NULL) AS INT)) AS {_bq(f'{col}__nul')}"
         )
 
-    if unique_key:
-        # only fully-non-NULL keys can match (and therefore double-
-        # apply) a target row — T-SQL MERGE treats a NULL key as
-        # matching nothing, so two NULL-keyed source rows are two
-        # inserts, not duplicates. Count keyed rows and distinct keys
-        # over the same non-NULL predicate.
-        keyed = " AND ".join(f"{_bq(k)} IS NOT NULL" for k in unique_key)
-        key_struct = "named_struct(" + ", ".join(
-            f"{_sq(k)}, {_bq(k)}" for k in unique_key
-        ) + ")"
-        aggs.append(f"count(CASE WHEN {keyed} THEN 1 END) AS `__n_rows`")
-        aggs.append(
-            f"count(DISTINCT CASE WHEN {keyed} THEN {key_struct} END) "
-            "AS `__n_keys`"
-        )
-
-    bound_cols = (
-        [bounds_col] if isinstance(bounds_col, str)
-        else list(bounds_col) if bounds_col is not None
-        else []
-    )
-    for i, c in enumerate(bound_cols):
+    for i, c in enumerate(bounds_col or []):
         bc = _bq(c)
         if c in specs and specs[c].sql_type == "uniqueidentifier":
             # bounds must describe the STORED form: GUIDs are
@@ -657,27 +596,9 @@ def _build_validation_aggs(
         "dchg_cols": dchg_cols,
         "bad_cols": bad_cols,
         "not_nullable": not_nullable,
-        "unique_key": unique_key,
         "bounds_col": bounds_col,
-        "bound_cols": bound_cols,
     }
     return aggs, ctx
-
-
-def _validate_single_pass(
-    df: DataFrame,
-    specs: dict[str, ColumnSpec],
-    not_nullable: list[str],
-    unique_key: Optional[list[str]],
-    bounds_col: Optional[str] = None,
-) -> Optional[tuple]:
-    aggs, ctx = _build_validation_aggs(
-        df, specs, not_nullable, unique_key, bounds_col
-    )
-    if not aggs:
-        return None
-    row = df.selectExpr(*aggs).collect()[0].asDict()
-    return _apply_validation_row(row, ctx)
 
 
 def _apply_validation_row(row: dict, ctx: dict):
@@ -688,9 +609,7 @@ def _apply_validation_row(row: dict, ctx: dict):
     dchg_cols = ctx["dchg_cols"]
     bad_cols = ctx["bad_cols"]
     not_nullable = ctx["not_nullable"]
-    unique_key = ctx["unique_key"]
     bounds_col = ctx["bounds_col"]
-    bound_cols = ctx["bound_cols"]
 
     errors = []
     for col, kind, lo, hi in range_checks:
@@ -737,14 +656,6 @@ def _apply_validation_row(row: dict, ctx: dict):
             f"NULL in NOT NULL column(s): {null_violations}"
         )
 
-    if unique_key and row["__n_rows"] != row["__n_keys"]:
-        raise ValueError(
-            f"source dataframe contains duplicate match-key rows on "
-            f"{unique_key} ({row['__n_rows']} rows, {row['__n_keys']} "
-            f"distinct keys); T-SQL MERGE/UPDATE cannot apply the same "
-            f"target row twice — dedupe the source first"
-        )
-
     for col, ps in dchg_cols:
         if row.get(f"{col}__dchg") == 1:
             # warning contract: reference conversion.py:591-608
@@ -752,19 +663,15 @@ def _apply_validation_row(row: dict, ctx: dict):
                 "Column %r values rounded to precision and scale %s", col, ps
             )
 
-    if bounds_col is not None:
-        if isinstance(bounds_col, str):
-            return (row["__bounds_lo_0"], row["__bounds_hi_0"])
-        return {
-            c: (row[f"__bounds_lo_{i}"], row[f"__bounds_hi_{i}"])
-            for i, c in enumerate(bound_cols)
-        }
-    return None
+    if bounds_col is None:
+        return None
+    return {
+        c: (row[f"__bounds_lo_{i}"], row[f"__bounds_hi_{i}"])
+        for i, c in enumerate(bounds_col)
+    }
 
 
-def _prepare_values(
-    df: DataFrame, specs: dict[str, ColumnSpec], safe: bool = False
-) -> DataFrame:
+def _prepare_values(df: DataFrame, specs: dict[str, ColumnSpec]) -> DataFrame:
     """Precision adjustments (pure transformations — the warning probes
     ran inside the single validation agg). String-typed temporal
     sources are parsed BEFORE the grid rounding so the same logical
@@ -772,21 +679,19 @@ def _prepare_values(
     string (unparseable strings were already rejected by the __bad
     probe). One projection total (withColumns), not one per column.
 
-    ``safe``: use ``try_cast`` where a plain ANSI ``CAST`` could abort
-    the executing job — the deferred-validation path runs BEFORE its
-    violation checks are applied (they ride the write as ``observe()``
-    metrics), so the pipeline itself must never throw; every value a
-    try_cast silently NULLs is caught by the deferred path's
-    non-null-count invariant."""
+    ``try_cast`` where a plain ANSI ``CAST`` could abort the executing
+    job: the violation checks are applied only after it (they ride the
+    write as ``observe()`` metrics), so the pipeline itself must never
+    throw; every value a try_cast silently NULLs is caught by the
+    pipeline's non-null-count invariant."""
     _TS = (T.TimestampType, T.TimestampNTZType)
-    _C = "try_cast" if safe else "CAST"
     casts = {}
     for col, spec in specs.items():
         dt = df.schema[col].dataType
         q = _bq(col)
         if spec.sql_type in _DECIMAL_SQL_TYPES:
             casts[col] = (
-                f"{_C}({q} AS {_decimal_target(spec).simpleString()}) AS {q}"
+                f"try_cast({q} AS {_decimal_target(spec).simpleString()}) AS {q}"
             )
         elif spec.sql_type == "uniqueidentifier":
             # canonical upper-case GUID rendering (SQL Server compares
@@ -860,16 +765,13 @@ def _smalldatetime_grid_sql(src: str) -> str:
     return f"CAST(timestamp_micros({rounded}) AS TIMESTAMP_NTZ)"
 
 
-def _cast_to_rules(
-    df: DataFrame, specs: dict[str, ColumnSpec], safe: bool = False
-) -> DataFrame:
+def _cast_to_rules(df: DataFrame, specs: dict[str, ColumnSpec]) -> DataFrame:
     # one projection for every column — a withColumn loop builds one
     # nested Project per column: O(n²) analyzer work on wide tables.
     # SQL text, one round trip per column (specs covers every column:
-    # precheck_dataframe builds it from df.columns).
-    # ``safe``: try_cast for the deferred path (see _prepare_values).
-    _C = "try_cast" if safe else "CAST"
+    # precheck_dataframe_deferred builds it from df.columns).
+    # try_cast: see _prepare_values.
     return df.selectExpr(*[
-        f"{_C}({_bq(col)} AS {spec.spark_type.simpleString()}) AS {_bq(col)}"
+        f"try_cast({_bq(col)} AS {spec.spark_type.simpleString()}) AS {_bq(col)}"
         for col, spec in specs.items()
     ])

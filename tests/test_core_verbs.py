@@ -395,6 +395,37 @@ def test_get_schema_validate_convert(engine, spark):
     assert engine.get_schema("dbo.gs2").shape[0] == 3
 
 
+def test_get_schema_unconvertible_value_error_matches_insert(engine, spark):
+    """A value the declared type cannot hold (double NaN into an int
+    column) raises the same DataframeColumnInvalidValue from
+    get_schema(dataframe=) as from insert, at call time."""
+    engine.create.table("dbo.gs3", {"id": "bigint", "n": "int"},
+                        primary_key_column="id")
+    cand = spark.createDataFrame([(1, float("nan"))], "id long, n double")
+    with pytest.raises(errors.DataframeColumnInvalidValue):
+        engine.get_schema("dbo.gs3", dataframe=cand)
+    with pytest.raises(errors.DataframeColumnInvalidValue):
+        engine.write.insert("dbo.gs3", cand)
+
+
+def test_get_schema_validation_is_one_job(engine, spark):
+    """get_schema(dataframe=) validates with ONE Spark job: the checks
+    ride a noop-sink pass over the candidate as observe() metrics."""
+    engine.create.table(
+        "dbo.gs4",
+        {"id": "bigint", "price": "decimal(10,2)", "s": "varchar(10)"},
+        primary_key_column="id",
+    )
+    cand = spark.createDataFrame([Row(id=1, price=3.14159, s="ab")])
+    sc = spark.sparkContext
+    sc.setJobGroup("gs4", "get_schema job probe")
+    try:
+        engine.get_schema("dbo.gs4", dataframe=cand)
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup("gs4") or []) == 1
+
+
 def test_single_validation_job(engine, spark):
     """Validation job count is CONSTANT in the number of decimal columns
     (the per-decimal-column rounding probes used to add one Spark job

@@ -387,6 +387,56 @@ def test_pk_change_does_not_prune_on_stale_stats(engine, spark):
     assert out.count() == 1000
 
 
+def test_commit_records_per_verb(engine, spark):
+    """Every version-advancing verb leaves the same commit record in
+    ``history()`` and ``commit_info(v)``: operation label, files added
+    and carried, snapshot row total, and the schema of that version."""
+    eng = engine
+    eng.create.table("dbo.cr", {"k": "bigint", "v": "float"},
+                     primary_key_column="k")
+    meta = eng.store.meta("dbo.cr")
+    eng.store.update_meta(
+        "dbo.cr", properties={**meta.properties, "keep_versions": 20}
+    )
+
+    def rows(a, b, v=1.0):
+        return spark.range(a, b, numPartitions=1).select(
+            F.col("id").alias("k"), F.lit(v).cast("double").alias("v")
+        )
+
+    eng.write.insert("dbo.cr", rows(0, 10))                  # v1
+    eng.write.insert("dbo.cr", rows(10, 20))                 # v2
+    eng.write.update("dbo.cr", rows(3, 4, 2.0))              # v3
+    eng.write.merge("dbo.cr", rows(15, 26, 3.0), upsert=True)  # v4
+    eng.write.delete("dbo.cr", rows(0, 1).select("k"))       # v5
+    eng.restore("dbo.cr", 2)                                 # v6
+    eng.write.truncate("dbo.cr")                             # v7
+
+    expected = [
+        (0, "create", 0, 0, 0),
+        (1, "append", 1, 0, 10),
+        (2, "append", 1, 1, 20),
+        (3, "update", 1, 1, 20),
+        (4, "merge", 1, 1, 26),
+        (5, "delete", 1, 1, 25),
+        (6, "restore(v2)", 0, 2, 20),
+        (7, "truncate", 0, 0, 0),
+    ]
+    hist = sorted(eng.store.history("dbo.cr"), key=lambda h: h["version"])
+    assert [
+        (h["version"], h["operation"], h["n_files_added"],
+         h["n_files_kept"], h["n_rows"])
+        for h in hist
+    ] == expected
+    schema = eng.store.meta("dbo.cr").spark_schema.jsonValue()
+    for v, op, added, kept, _ in expected[1:]:
+        info = eng.store.commit_info("dbo.cr", v)
+        assert (info["op"], info["n_added"], info["n_kept"]) == (
+            op, added, kept
+        )
+        assert info["schema"] == schema
+
+
 def test_append_is_a_versioned_commit(engine, spark):
     """Every insert commits version+1 whose manifest carries the prior
     entries by reference: read(version=N) is a stable snapshot and
