@@ -48,7 +48,8 @@ class modify:
         data_type: Optional[str] = None,
         is_nullable: bool = True,
     ) -> None:
-        meta = self._store.meta(table_name)
+        snap = self._store.snapshot(table_name)
+        meta = snap.meta
         schema = meta.spark_schema
         if modify == "add":
             if column_name in schema.fieldNames():
@@ -65,10 +66,7 @@ class modify:
                 # non-empty table; this engine has no defaults, so the
                 # add is legal only while the table is empty (manifest
                 # row count — no scan)
-                n_rows = sum(
-                    int(e.get("rows") or 0)
-                    for e in self._store.manifest(table_name, meta.version)
-                )
+                n_rows = sum(int(e.get("rows") or 0) for e in snap.entries)
                 if n_rows:
                     raise ValueError(
                         f"cannot add NOT NULL column {column_name!r} to "
@@ -100,7 +98,8 @@ class modify:
                 raise SQLRecastColumnUnchanged(
                     f"column {column_name!r} is already {data_type!r}"
                 )
-            if not is_nullable and self._store.read(table_name).filter(
+            current = self._store.read_files(snap, snap.paths)
+            if not is_nullable and current.filter(
                 F.col(column_name).isNull()
             ).limit(1).count():
                 # SQL Server's ALTER ... NOT NULL fails on existing
@@ -109,7 +108,7 @@ class modify:
                     f"cannot alter {column_name!r} to NOT NULL: "
                     "existing rows hold NULL"
                 )
-            df = self._store.read(table_name).withColumn(
+            df = current.withColumn(
                 column_name, F.col(column_name).cast(spec.spark_type)
             )
             fields = [
@@ -132,8 +131,7 @@ class modify:
             if not is_nullable:
                 nn.append(column_name)
             self._store.overwrite(
-                table_name, df, T.StructType(fields), types,
-                op="alter_column", expected_version=meta.version,
+                snap, df, T.StructType(fields), types, op="alter_column",
                 extra_meta=(
                     {"not_nullable": nn}
                     if nn != list(meta.not_nullable) else None
@@ -157,7 +155,7 @@ class modify:
             self._require_no_column_dependents(
                 table_name, column_name, dict(meta.properties), "drop"
             )
-            df = self._store.read(table_name).drop(column_name)
+            df = self._store.read_files(snap, snap.paths).drop(column_name)
             fields = [f for f in schema.fields if f.name != column_name]
             types = {
                 k: v for k, v in meta.column_types.items() if k != column_name
@@ -186,9 +184,8 @@ class modify:
             # naming a ghost column — the insert/merge missing-NOT-
             # NULL probes would then reject every subsequent write,
             # since the column can never be supplied again
-            self._store.overwrite(table_name, df, T.StructType(fields), types,
+            self._store.overwrite(snap, df, T.StructType(fields), types,
                                   op="drop_column",
-                                  expected_version=meta.version,
                                   extra_properties=extra,
                                   extra_meta=(
                                       {"not_nullable": [
@@ -450,7 +447,8 @@ class modify:
         column (check constraints, computed columns, masks, FKs) block
         the rename with an actionable error, like SQL Server's
         dependency errors."""
-        meta = self._store.meta(table_name)
+        snap = self._store.snapshot(table_name)
+        meta = snap.meta
         schema = meta.spark_schema
         if column_name not in schema.fieldNames():
             raise SQLColumnDoesNotExist(column_name)
@@ -461,7 +459,7 @@ class modify:
             table_name, column_name, props, "rename"
         )
 
-        df = self._store.read(table_name).withColumnRenamed(
+        df = self._store.read_files(snap, snap.paths).withColumnRenamed(
             column_name, new_name
         )
         fields = [
@@ -489,36 +487,23 @@ class modify:
             props["bloom_filter_columns"] = _ren(
                 props["bloom_filter_columns"]
             )
-        # key bookkeeping FIRST so the rewrite's footer-stat harvest
-        # labels bounds with the NEW name (pruning stays live through
-        # the rename instead of degrading until the next rewrite);
-        # restored if the rewrite then fails (OCC loss / crash path),
-        # so meta never keeps naming a column the schema doesn't have
-        self._store.update_meta(
-            table_name,
-            primary_key=_ren(meta.primary_key),
-            not_nullable=_ren(meta.not_nullable),
-            identity_column=(
-                new_name
-                if meta.identity_column == column_name
-                else meta.identity_column
-            ),
-            properties=props,
+        # key bookkeeping rides the commit (extra_meta), which the
+        # rewrite's footer-stat harvest already sees: bounds are
+        # labelled with the NEW name (pruning stays live through the
+        # rename), and an OCC loss or crash leaves meta untouched
+        self._store.overwrite(
+            snap, df, T.StructType(fields), types, op="rename_column",
+            extra_meta={
+                "primary_key": _ren(meta.primary_key),
+                "not_nullable": _ren(meta.not_nullable),
+                "identity_column": (
+                    new_name
+                    if meta.identity_column == column_name
+                    else meta.identity_column
+                ),
+                "properties": props,
+            },
         )
-        try:
-            self._store.overwrite(
-                table_name, df, T.StructType(fields), types,
-                op="rename_column", expected_version=meta.version,
-            )
-        except BaseException:
-            self._store.update_meta(
-                table_name,
-                primary_key=list(meta.primary_key),
-                not_nullable=list(meta.not_nullable),
-                identity_column=meta.identity_column,
-                properties=dict(meta.properties),
-            )
-            raise
 
     def rename_table(self, table_name: str, new_name: str) -> None:
         """``sp_rename 'old', 'new'`` analog: a pure metadata move (the
@@ -566,14 +551,13 @@ class modify:
             meta2.properties = {**meta2.properties, "foreign_keys": fks2}
         self._store._write_meta(new_name, meta2)
         # live spark.sql views registered on the old name must follow
-        # the rename: _refresh_live_views under the old key swallows
-        # table-not-found, so the views would silently stop refreshing
-        # and keep serving the pre-rename frozen file list (stale
-        # reads, then FileNotFound once vacuum reaps those files)
+        # the rename, or they would silently stop refreshing and keep
+        # serving the pre-rename frozen file list (stale reads, then
+        # FileNotFound once vacuum reaps those files)
         views = self._store._live_views.pop(table_name, None)
         if views:
             self._store._live_views[new_name] = views
-            self._store._refresh_live_views(new_name)
+            self._store._refresh_live_views(self._store.snapshot(new_name))
 
     def computed_column(
         self,
@@ -592,7 +576,8 @@ class modify:
         explicit writes into it are rejected (SQL Server error 271)."""
         from . import generated
 
-        meta = self._store.meta(table_name)
+        snap = self._store.snapshot(table_name)
+        meta = snap.meta
         props = dict(meta.properties)
         computed = dict(props.get("computed_columns") or {})
         if modify == "add":
@@ -610,16 +595,14 @@ class modify:
             types = dict(meta.column_types)
             types[column_name] = data_type
             computed[column_name] = expr
-            props["computed_columns"] = computed
-            df = self._store.read(table_name).withColumn(
+            df = self._store.read_files(snap, snap.paths).withColumn(
                 column_name, F.expr(expr).cast(spec.spark_type)
             )
             self._store.overwrite(
-                table_name, df.select(*new_schema.fieldNames()),
+                snap, df.select(*new_schema.fieldNames()),
                 new_schema, types, op="add_computed_column",
-                expected_version=meta.version,
+                extra_properties={"computed_columns": computed},
             )
-            self._store.update_meta(table_name, properties=props)
         elif modify == "drop":
             if column_name not in computed:
                 raise ValueError(f"no computed column {column_name!r}")
@@ -633,7 +616,7 @@ class modify:
                 {**props, "computed_columns": computed}, "drop",
             )
             schema = meta.spark_schema
-            df = self._store.read(table_name).drop(column_name)
+            df = self._store.read_files(snap, snap.paths).drop(column_name)
             fields = [f for f in schema.fields if f.name != column_name]
             types = {
                 k: v for k, v in meta.column_types.items()
@@ -656,9 +639,8 @@ class modify:
                     c for c in bc if c != column_name
                 ]
             self._store.overwrite(
-                table_name, df, T.StructType(fields), types,
-                op="drop_computed_column", expected_version=meta.version,
-                extra_properties=extra,
+                snap, df, T.StructType(fields), types,
+                op="drop_computed_column", extra_properties=extra,
             )
         else:
             raise ValueError("modify must be one of add|drop")

@@ -117,8 +117,8 @@ class read:
         ``optimize`` to rewrite stats). min/max arrive as strings
         (one render for int and date keys alike); n_rows is exact.
         """
-        meta = self._store.meta(table_name)
-        entries = self._store.manifest(table_name, meta.version)
+        snap = self._store.snapshot(table_name)
+        meta, entries = snap.meta, snap.entries
         tracked = self._store._stats_cols(meta)
         cols = list(columns) if columns is not None else list(tracked)
         spark = self._store.spark
@@ -246,7 +246,6 @@ class read:
         Masks otherwise apply LAST — like SQL Server DDM, ``where``
         predicates evaluate on real values, and masking is a pure
         output transform (metadata-driven, zero UDFs)."""
-        meta = self._store.meta(table_name)
         if timestamp_as_of is not None:
             if version is not None:
                 raise ValueError(
@@ -268,6 +267,8 @@ class read:
                     "may have vacuumed it)"
                 )
             version = max(candidates)
+        snap = self._store.snapshot(table_name, version)
+        meta = snap.meta
         df = None
         if where is not None:
             # point-lookup file pruning (Delta bloom-filter-index
@@ -276,31 +277,15 @@ class read:
             # provably-absent files never reach the scan. The filter
             # below still applies — a bloom false positive only costs
             # a read, never a wrong row; files without a sidecar for
-            # the probed column always stay.
-            # probes typed under the SNAPSHOT's recorded schema when
-            # time-traveling: sidecars were hashed under the schema
-            # their files were written with, and a probe typed under a
-            # later retype would prune files whose rows the try_cast
-            # reprojection below surfaces (store.typed_bloom_probes)
-            probes = self._store.typed_bloom_probes(
-                meta, where, version=version
-            )
+            # the probed column always stay. Time travel prunes too:
+            # sidecars live exactly as long as their data file.
+            probes = self._store.typed_bloom_probes(snap, where)
             if probes:
-                # works for time travel too: sidecars live exactly as
-                # long as their data file, and read_files reads a
-                # prior version's files under its RECORDED schema. An
-                # out-of-retention version yields zero entries here
-                # (pruned == 0), so the unpruned path below still
-                # raises its documented error.
-                touched, pruned = self._store.bloom_prune(
-                    table_name, probes, version=version
-                )
+                touched, pruned = self._store.bloom_prune(snap, probes)
                 if pruned:
-                    df = self._store.read_files(
-                        table_name, touched, version=version
-                    )
+                    df = self._store.read_files(snap, touched)
         if df is None:
-            df = self._store.read(table_name, version=version)
+            df = self._store.read_files(snap, snap.paths)
         if version is not None and (
             {(f.name, f.dataType) for f in df.schema.fields}
             != {(f.name, f.dataType) for f in meta.spark_schema.fields}
@@ -446,7 +431,13 @@ class read:
         file). For such tables pass explicit ``match_columns`` to
         force the full-snapshot path.
         """
-        meta = self._store.meta(table_name)
+        # each side reads under ITS OWN version's recorded schema: the
+        # old files predate any later MODIFY COLUMN rewrite, so reading
+        # them with the current schema would yield NULL/mistyped old_
+        # values
+        s_old = self._store.snapshot(table_name, from_version)
+        s_new = self._store.snapshot(table_name, to_version)
+        meta = s_new.meta
         keys = list(match_columns or meta.primary_key)
         if not keys:
             raise ValueError(
@@ -455,23 +446,13 @@ class read:
         for k in keys:
             if k not in meta.spark_schema.fieldNames():
                 raise SQLColumnDoesNotExist(f"match column {k!r} not in table")
+        old_paths, new_paths = s_old.paths, s_new.paths
         if keys == list(meta.primary_key):
-            mf_old, mf_new = self._store.version_file_sets(
-                table_name, from_version, to_version
-            )
-            # each side reads under ITS OWN version's recorded schema:
-            # the old files predate any later MODIFY COLUMN rewrite,
-            # so reading them with the current schema would yield
-            # NULL/mistyped old_ values
-            old = self._store.read_files(
-                table_name, sorted(mf_old - mf_new), version=from_version
-            )
-            new = self._store.read_files(
-                table_name, sorted(mf_new - mf_old), version=to_version
-            )
-        else:
-            old = self._store.read(table_name, version=from_version)
-            new = self._store.read(table_name, version=to_version)
+            mf_old, mf_new = self._store.version_file_sets(s_old, s_new)
+            old_paths = sorted(mf_old - mf_new)
+            new_paths = sorted(mf_new - mf_old)
+        old = self._store.read_files(s_old, old_paths)
+        new = self._store.read_files(s_new, new_paths)
         # compared columns = union of both sides' non-key columns, so
         # schema evolution between the versions is CDC-visible: a
         # column added since from_version compares against old_=NULL

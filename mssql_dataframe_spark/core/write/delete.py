@@ -152,11 +152,11 @@ def _check_restrict_references(
     refs = fk_references(store, table_name)
     if not refs:
         return []
-    # expected[t]: the version every probe verdict on t is valid
+    # expected[t]: the snapshot every probe verdict on t is valid
     # against. Our OWN action commits advance it immediately; any
     # other movement means a foreign writer and the verdicts must be
     # re-established or the delete must fail cleanly.
-    expected: dict[str, int] = {}
+    expected: dict = {}
 
     def _conflict(t):
         raise SQLConcurrentWriteConflict(
@@ -166,30 +166,21 @@ def _check_restrict_references(
             "retry"
         )
 
-    def _referencing(t, fk, parent_keys, bounds, version) -> list:
-        """``t``'s candidate files when one of their rows references a
-        deleted key via ``fk``, else [] — one keys-only semi join over
-        ``existing_candidates``: the key bounds intersect the child
-        manifest's per-file FK-column stats, then the deleted keys
-        probe the candidates' bloom sidecars when the child indexes
-        its FK columns, so probe cost is ∝ files that could reference
-        the keys, not child-table size.
-
-        ``version`` pins every read (the stats split, the bloom
-        candidates, the scan) to one snapshot — the caller passes
-        ``expected[t]``, the version every probe verdict on ``t`` is
-        declared valid against, so re-probes after an own action see
-        the post-action files. Two unpinned reads straddling a foreign
-        commit could each clear a different file set (ADVICE r12), and
-        reading pinned files under a LATER schema (concurrent MODIFY
-        COLUMN on the child) could mistype the FK columns to NULL, so a
-        false no-hit would silently delete a still-referenced parent
-        (ADVICE r13)."""
+    def _referencing(snap, fk, parent_keys, bounds) -> list:
+        """``snap``'s candidate files when one of their rows references
+        a deleted key via ``fk``, else [] — one keys-only semi join
+        over ``existing_candidates``: the key bounds intersect the
+        child manifest's per-file FK-column stats, then the deleted
+        keys probe the candidates' bloom sidecars when the child
+        indexes its FK columns, so probe cost is ∝ files that could
+        reference the keys, not child-table size. The caller passes
+        ``expected[t]``, so re-probes after an own action see the
+        post-action files."""
         touched = existing_candidates(
-            store, t, version, bounds, parent_keys, fk["columns"]
+            store, snap, bounds, parent_keys, fk["columns"]
         )
         if touched and (
-            store.read_files(t, touched, version=version)
+            store.read_files(snap, touched)
             .select(*fk["columns"])
             .na.drop(how="any")
             .join(parent_keys, fk["columns"], "left_semi")
@@ -212,8 +203,9 @@ def _check_restrict_references(
             # commit after this point is caught by the final
             # revalidation pass below or by the parent commit's
             # precondition, never silently absorbed
-            expected.setdefault(t, store.meta(t).version)
-            touched = _referencing(t, fk, parent_keys, bounds, expected[t])
+            if t not in expected:
+                expected[t] = store.snapshot(t)
+            touched = _referencing(expected[t], fk, parent_keys, bounds)
             if not touched:
                 continue
             if action == "cascade":
@@ -232,8 +224,8 @@ def _check_restrict_references(
                 # post-action snapshot — a foreign referencing row
                 # that landed mid-action shows up here and fails
                 # cleanly instead of being orphaned
-                expected[t] = store.meta(t).version
-                if _referencing(t, fk, parent_keys, bounds, expected[t]):
+                expected[t] = store.snapshot(t)
+                if _referencing(expected[t], fk, parent_keys, bounds):
                     _conflict(t)
             elif action == "set_null":
                 key_cols = set(fk["columns"])
@@ -244,15 +236,15 @@ def _check_restrict_references(
                 # scan itself runs over the stats-pruned candidates
                 # the probe already computed, so discovery cost is
                 # ∝ candidate files too.
+                child_snap = expected[t]
                 matched_files = matched_file_names(
-                    store.read_files(t, touched), parent_keys,
+                    store.read_files(child_snap, touched), parent_keys,
                     list(fk["columns"]),
                 )
-                v_child = store.meta(t).version
                 keep_entries, touched = split_entries(
-                    store.manifest(t, v_child), matched_files
+                    child_snap.entries, matched_files
                 )
-                child = store.read_files(t, touched)
+                child = store.read_files(child_snap, touched)
                 # null the FK columns on matching rows; a left-semi
                 # flag via join would lose non-matching rows, so flag
                 # with a left join on the slim key set instead
@@ -270,16 +262,14 @@ def _check_restrict_references(
                             if f.name in key_cols
                             else F.col(f.name)
                         ).alias(f.name)
-                        for f in store.meta(t).spark_schema.fields
+                        for f in child_snap.meta.spark_schema.fields
                     ]
                 )
-                store.replace_files(
-                    t, new_child, keep_entries, op="fk_set_null",
-                    expected_version=v_child,
+                # own commit: its snapshot + re-probe (see cascade)
+                expected[t] = store.replace_files(
+                    child_snap, new_child, keep_entries, op="fk_set_null",
                 )
-                # own commit: capture AFTER + re-probe (see cascade)
-                expected[t] = store.meta(t).version
-                if _referencing(t, fk, parent_keys, bounds, expected[t]):
+                if _referencing(expected[t], fk, parent_keys, bounds):
                     _conflict(t)
             else:
                 raise SQLForeignKeyViolation(
@@ -297,18 +287,17 @@ def _check_restrict_references(
         # conflicts on unrelated commits), a hit fails cleanly.
         # Metadata reads only on the no-race path.
         for t in expected:
-            v_now = store.meta(t).version
-            if v_now == expected[t]:
+            if store.meta(t).version == expected[t].version:
                 continue
+            expected[t] = store.snapshot(t)
             for t2, fk, parent_keys, bounds in probed:
                 if t2 == t and _referencing(
-                    t, fk, parent_keys, bounds, v_now
+                    expected[t], fk, parent_keys, bounds
                 ):
                     _conflict(t)
-            expected[t] = v_now
     finally:
         deleted_rows.unpersist()
-    return list(expected.items())
+    return [(t, snap.version) for t, snap in expected.items()]
 
 
 def delete_op(
@@ -331,15 +320,15 @@ def delete_op(
     within them — one slim scan of the match columns plus
     ``_metadata.file_path`` finds the touched files and a no-match
     delete returns 0 without committing."""
-    meta = store.meta(table_name)
+    snap = store.snapshot(table_name)
+    meta = snap.meta
     match = resolve_match_columns(meta, dataframe, match_columns)
     extra = [c for c in dataframe.columns if c not in match]
     if extra:
         raise ValueError(
             f"delete takes match-key columns only; unexpected {extra}"
         )
-    entries = store.manifest(table_name, meta.version)
-    if not entries:
+    if not snap.entries:
         # empty table: nothing can match — no rewrite, no commit (the
         # same no-match contract delete_where honors; committing here
         # published phantom 'delete' versions)
@@ -361,12 +350,11 @@ def delete_op(
     )
     try:
         keep_entries, touched = discover_touched(
-            store, table_name, meta, bounds, keys, match,
-            stats_final=can_prune,
+            store, snap, bounds, keys, match, stats_final=can_prune,
         )
         if not touched:
             return 0  # nothing matches: no rewrite, no commit
-        target = store.read_files(table_name, touched)
+        target = store.read_files(snap, touched)
 
         # deleted rows live only in the touched files (pruned files are
         # provably match-free), so the referential-action probes read the
@@ -400,12 +388,12 @@ def delete_op(
                     continue
                 probe = survivors.select(*fk["columns"])
                 carried = existing_candidates(
-                    store, table_name, meta.version, kb, parent_keys,
-                    fk["columns"], carried=keep_entries, meta=meta,
+                    store, snap, kb, parent_keys, fk["columns"],
+                    carried=keep_entries,
                 )
                 if carried:
                     probe = probe.unionByName(
-                        store.read_files(table_name, carried)
+                        store.read_files(snap, carried)
                         .select(*fk["columns"])
                     )
                 hit = (
@@ -423,16 +411,13 @@ def delete_op(
                     )
         # CHECK constraints cannot be newly violated by row removal; no
         # enforcement pass is needed on a pure delete.
-        store.replace_files(
-            table_name, survivors, keep_entries, op="delete",
-            preconditions=child_deps, expected_version=meta.version,
+        new = store.replace_files(
+            snap, survivors, keep_entries, op="delete",
+            preconditions=child_deps,
         )
-        # deleted count from manifest row totals — no extra scan or job.
-        # expected_version pins this commit to meta.version + 1; the
-        # CURRENT version may already hold a later writer's rows
-        return _rows(entries) - _rows(
-            store.manifest(table_name, meta.version + 1)
-        )
+        # deleted count from this commit's manifest row totals — no
+        # extra scan or job
+        return _rows(snap.entries) - _rows(new.entries)
     finally:
         shutil.rmtree(src_stage, ignore_errors=True)
 
@@ -461,8 +446,8 @@ def delete_where_op(
     """
     from ...identifiers import compile_where
 
-    meta = store.meta(table_name)
-    entries = store.manifest(table_name, meta.version)
+    snap = store.snapshot(table_name)
+    entries = snap.entries
     if not entries:
         return 0
     cond_sql = compile_where(where)
@@ -472,24 +457,16 @@ def delete_where_op(
     # scan (and everything downstream) reads only the surviving files
     # — point deletes on an indexed column skip the table
     scan_entries = entries
-    probes = store.typed_bloom_probes(meta, where)
+    probes = store.typed_bloom_probes(snap, where)
     if probes:
-        # pin pruning to the SAME snapshot `entries` came from: an
-        # unversioned call re-reads the current manifest, and a
-        # concurrent commit between the two reads would make the
-        # path-set intersection below drop files bloom never tested —
-        # the final commit's expected_version OCC would catch it, but
-        # the early `return 0` path has no such backstop
-        touched_b, pruned_b = store.bloom_prune(
-            table_name, probes, version=meta.version
-        )
+        touched_b, pruned_b = store.bloom_prune(snap, probes)
         if pruned_b:
             if not touched_b:
                 return 0  # provably no matching row anywhere
             bset = set(touched_b)
             scan_entries = [e for e in entries if e["path"] in bset]
     target_all = store.read_files(
-        table_name, [e["path"] for e in scan_entries], version=meta.version
+        snap, [e["path"] for e in scan_entries]
     )
     cond = F.expr(cond_sql)
     matched = file_names(
@@ -502,17 +479,14 @@ def delete_where_op(
     child_deps = _check_restrict_references(
         store, table_name, target_all.filter(cond)
     )
-    survivors = store.read_files(table_name, touched).filter(
+    survivors = store.read_files(snap, touched).filter(
         ~F.coalesce(cond, F.lit(False))
     )
-    store.replace_files(
-        table_name, survivors, keep_entries, op="delete_where",
-        preconditions=child_deps, expected_version=meta.version,
+    new = store.replace_files(
+        snap, survivors, keep_entries, op="delete_where",
+        preconditions=child_deps,
     )
-    # this commit's own version (see delete_op)
-    return _rows(entries) - _rows(
-        store.manifest(table_name, meta.version + 1)
-    )
+    return _rows(entries) - _rows(new.entries)
 
 
 def truncate_op(store: TableStore, table_name: str) -> int:
@@ -528,14 +502,11 @@ def truncate_op(store: TableStore, table_name: str) -> int:
     divergence). Returns the number of rows removed."""
     from ...errors import SQLForeignKeyViolation
 
-    meta = store.meta(table_name)
+    snap = store.snapshot(table_name)
     for t, nm, _fk in fk_references(store, table_name):
         raise SQLForeignKeyViolation(
             f"cannot truncate {table_name!r}: referenced by "
             f"foreign key {nm!r} on {t!r}"
         )
-    n = _rows(store.manifest(table_name, meta.version))
-    store.overwrite(
-        table_name, None, op="truncate", expected_version=meta.version
-    )
-    return n
+    store.overwrite(snap, None, op="truncate")
+    return _rows(snap.entries)

@@ -108,7 +108,8 @@ def ingest_directory(
 ) -> int:
     """Ingest files not seen before; returns how many files were read.
     A call that discovers nothing new writes nothing (no commit)."""
-    meta = store.meta(table_name)
+    snap = store.snapshot(table_name)
+    meta = snap.meta
     suffix = "." + file_format
     listed = _list_data_files(path, suffix)
     seen = set(meta.properties.get("ingested_files") or [])
@@ -150,10 +151,13 @@ def ingest_directory(
         raise ValueError(f"unsupported ingest format {file_format!r}")
     ledger = sorted(seen | {os.path.relpath(f, path) for f in new_files})
     # the ledger rides the SAME meta write as the data commit — a crash
-    # cannot land rows without their files being remembered, so re-
-    # invocation never double-loads (the idempotency contract above)
+    # cannot land rows without their files being remembered — and the
+    # commit lands only on the snapshot the ledger was read from, so a
+    # concurrent ingest of the same files fails this one instead of
+    # loading them twice (the idempotency contract above)
     insert(
         store, table_name, df, include_metadata_timestamps,
         extra_properties={"ingested_files": ledger},
+        expected_version=snap.version,
     )
     return len(new_files)

@@ -34,10 +34,13 @@ logger = logging.getLogger("mssql_dataframe_spark")
 _TIME_COLUMNS = {"_time_insert": "datetime2", "_time_update": "datetime2"}
 
 
-def ensure_time_columns(store: TableStore, table_name: str, needed: list[str]):
+def ensure_time_columns(
+    store: TableStore, table_name: str, needed: list[str]
+) -> None:
     """Auto-add metadata-timestamp columns (ONLY these — the reference
     whitelists exactly ``_time_insert``/``_time_update`` and re-raises
-    for any other missing column; insert.py:117-133)."""
+    for any other missing column; insert.py:117-133). A meta-only
+    change: the caller takes its snapshot after it."""
     meta = store.meta(table_name)
     schema = meta.spark_schema
     changed = False
@@ -57,7 +60,6 @@ def ensure_time_columns(store: TableStore, table_name: str, needed: list[str]):
             spark_schema_json=schema.jsonValue(),
             column_types=types,
         )
-    return store.meta(table_name)
 
 
 def assign_identity(df: DataFrame, col: str, start: int,
@@ -105,24 +107,25 @@ def insert(
     expected_version: int | None = None,
 ) -> DataFrame:
     """``expected_version`` pins the commit to land at exactly that
-    version + 1 (store.append OCC) — callers that RECORD the commit's
-    version window before committing (the stream->MV sink's ledger)
+    version + 1 — callers that RECORD the commit's version window or
+    ledger before committing (the stream->MV sink, ingest_directory)
     pass the version they read, so a foreign writer racing in between
     fails this insert cleanly instead of letting the recorded window
     point at the foreign commit."""
-    meta = store.meta(table_name)
-    if expected_version is not None and meta.version != int(
+    if include_metadata_timestamps:
+        ensure_time_columns(store, table_name, ["_time_insert"])
+    snap = store.snapshot(table_name)
+    meta = snap.meta
+    if expected_version is not None and snap.version != int(
         expected_version
     ):
         from ...errors import SQLConcurrentWriteConflict
 
         raise SQLConcurrentWriteConflict(
-            f"table {table_name!r} is at version {meta.version}, not "
+            f"table {table_name!r} is at version {snap.version}, not "
             f"the expected {expected_version} — another writer "
             "committed since the caller planned this insert"
         )
-    if include_metadata_timestamps:
-        meta = ensure_time_columns(store, table_name, ["_time_insert"])
     generated.reject_explicit_writes(
         dataframe.columns, meta.properties.get("computed_columns") or {}
     )
@@ -205,7 +208,7 @@ def insert(
     # deferred import: update imports this module's ensure_time_columns
     from .update import constraint_probe, existing_candidates
 
-    probe = constraint_probe(store, table_name, meta)
+    probe = constraint_probe(store, snap)
 
     def _pre_commit(stage_entries, stage_dir):
         # Runs inside store.append's discard guard, after the staging
@@ -261,8 +264,7 @@ def insert(
             .select(*pk)
         )
         existing = existing_candidates(
-            store, table_name, meta.version, pk_bounds or {}, staged_keys,
-            pk, meta=meta,
+            store, snap, pk_bounds or {}, staged_keys, pk
         )
         if not existing:
             # batch-internal duplicates only (no standing key overlaps)
@@ -278,14 +280,8 @@ def insert(
         else:
             # batch duplicates AND snapshot collisions in the SAME job:
             # union the staged keys (tagged new) with the pruned
-            # existing keys, one hash aggregate per key. The scan is
-            # pinned to the snapshot the candidate list came from: a
-            # concurrent MODIFY COLUMN would otherwise mistype the PK
-            # columns and a false no-duplicate verdict lands duplicate
-            # keys (ADVICE r13 class)
-            existing_keys = store.read_files(
-                table_name, existing, version=meta.version
-            )
+            # existing keys, one hash aggregate per key
+            existing_keys = store.read_files(snap, existing)
             merged = staged_keys.select(
                 *pk, F.lit(1).alias("__new")
             ).unionByName(
@@ -329,8 +325,7 @@ def insert(
     # them immediately after — the commit fails cleanly if a probed
     # parent changed between the probe and this publish
     store.append(
-        table_name, out, extra_properties=extra_properties,
-        expected_version=meta.version,
+        snap, out, extra_properties=extra_properties,
         extra_meta=identity_meta, pre_commit_check=_pre_commit,
     )
     return df

@@ -100,14 +100,14 @@ def merge_op(
                 ", ".join(f"{nm!r} on {t!r}" for t, nm, _ in refs),
             )
 
-    meta = store.meta(table_name)
     if include_metadata_timestamps:
-        # _time_* columns first: ensure_time_columns re-reads catalog
-        # meta, so it must run BEFORE the (deferred, local-only)
-        # auto_evolve schema extension below
-        meta = ensure_time_columns(
+        # _time_* columns first: the snapshot must see them, and the
+        # (deferred, local-only) auto_evolve extension below builds on it
+        ensure_time_columns(
             store, table_name, ["_time_insert", "_time_update"]
         )
+    snap = store.snapshot(table_name)
+    meta = snap.meta
     evolved_meta_changes = None
     if auto_evolve:
         # Delta mergeSchema/autoMerge analog: source columns the target
@@ -229,19 +229,16 @@ def merge_op(
             # regardless, so no touched file = a pure insert that
             # carries every file
             keep_entries, touched = discover_touched(
-                store, table_name, meta, bounds, src, match,
-                stats_final=can_prune,
+                store, snap, bounds, src, match, stats_final=can_prune,
             )
         else:
-            entries = store.manifest(table_name, meta.version)
-            matched_files = {e["path"] for e in entries}
-            if delete_requires and entries:
+            matched_files = set(snap.paths)
+            if delete_requires and snap.entries:
                 matched_files = _delete_requires_files(
-                    store, table_name, entries, src, match,
-                    delete_requires, dr_val_sets,
+                    store, snap, src, match, delete_requires, dr_val_sets,
                 )
-            keep_entries, touched = split_entries(entries, matched_files)
-        target = store.read_files(table_name, touched)
+            keep_entries, touched = split_entries(snap.entries, matched_files)
+        target = store.read_files(snap, touched)
         if evolved_meta_changes:
             # catalog still has the pre-evolution schema (written only on
             # success below) — surface the new columns as NULL on the
@@ -441,12 +438,11 @@ def merge_op(
         # constraint violation discards the deferred schema publication
         # with the staged files.
         store.replace_files(
-            table_name, result, keep_entries, op="merge",
-            expected_version=meta.version,
+            snap, result, keep_entries, op="merge",
             new_schema=evolved_schema, new_column_types=evolved_types,
             extra_meta=identity_meta, extra_properties=extra_properties,
             pre_commit_check=constraint_probe(
-                store, table_name, meta, carried=keep_entries,
+                store, snap, carried=keep_entries,
                 pk_at_risk=pk_at_risk,
             ),
         )
@@ -455,19 +451,19 @@ def merge_op(
     return plan
 
 
-def _delete_requires_files(store, table_name, entries, src, match,
-                           delete_requires, dr_val_sets) -> set:
+def _delete_requires_files(store, snap, src, match, delete_requires,
+                           dr_val_sets) -> set:
     """Content pruning for the delete_requires shape (the incremental /
     partition-scoped reload): the delete clause is BOUNDED — a
     target-only row deletes only when EVERY delete_requires column's
     value appears in the source. A file with no source-matched row AND
     no row whose delete_requires values are all present is therefore
     bit-identical and carries by reference. One slim scan (match +
-    delete_requires columns + _metadata.file_path) of the snapshot's
-    ``entries`` returns the touched file names — this turns the
-    reference's partition-scoped-delete merge from a full rewrite into
-    cost ∝ the reloaded partition."""
-    probe_src = store.read_files(table_name, [e["path"] for e in entries])
+    delete_requires columns + _metadata.file_path) of ``snap`` returns
+    the touched file names — this turns the reference's
+    partition-scoped-delete merge from a full rewrite into cost ∝ the
+    reloaded partition."""
+    probe_src = store.read_files(snap, snap.paths)
     if not all(c in probe_src.columns for c in match):
         # auto-evolved match column: no stored row can match (NULL never
         # equals) and a membership over an absent (all-NULL) column

@@ -60,7 +60,8 @@ def merge_scd2(
     table. ``as_of`` is the effective timestamp of this load (default:
     ``current_timestamp``); pass a literal for reproducible loads.
     """
-    meta = store.meta(table_name)
+    snap = store.snapshot(table_name)
+    meta = snap.meta
     generated.reject_explicit_writes(
         dataframe.columns, meta.properties.get("computed_columns") or {}
     )
@@ -136,10 +137,10 @@ def merge_scd2(
         # exists, its file is discovered and the close happens there;
         # pruned files hold only non-matching or historical rows.
         keep_entries, touched = discover_touched(
-            store, table_name, meta, bounds, src, match,
+            store, snap, bounds, src, match,
             pre_filter=f"{_bq(current_col)} = true",
         )
-        target = store.read_files(table_name, touched)
+        target = store.read_files(snap, touched)
         tgt = target.selectExpr("*", "true AS `__t`")
 
         cond = reduce(
@@ -228,10 +229,9 @@ def merge_scd2(
         # constraint.
         pk = set(meta.primary_key)
         store.replace_files(
-            table_name, out, keep_entries, op="merge_scd2",
-            expected_version=meta.version,
+            snap, out, keep_entries, op="merge_scd2",
             pre_commit_check=constraint_probe(
-                store, table_name, meta, carried=keep_entries,
+                store, snap, carried=keep_entries,
                 pk_at_risk=(
                     pk < set(match) or bool(pk & set(tracked))
                     or valid_from_col in pk

@@ -178,9 +178,8 @@ def _entry_bytes(e) -> int:
     return int(e.get("rows") or 0) * _EST_BYTES_PER_ROW
 
 
-def bloom_narrow_entries(store, table_name, entries, src_keys, match,
-                         meta=None):
-    """Batch-key bloom narrowing over manifest ``entries``: for each
+def bloom_narrow_entries(store, snap, entries, src_keys, match):
+    """Batch-key bloom narrowing over ``entries`` of ``snap``: for each
     bloom-indexed match column, the source's distinct non-NULL values
     (collected, capped — the source is the small side by design) test
     every entry's sidecar, and a file whose filter excludes EVERY
@@ -193,17 +192,11 @@ def bloom_narrow_entries(store, table_name, entries, src_keys, match,
     own LIMIT — a composite key costs one driver job, not one per
     column).
 
-    ``meta`` is the caller's pinned TableMeta; callers hold one for
-    their OCC commit already, and re-reading it here could see a
-    foreign commit's bloom-column property diverging from the
-    ``entries`` snapshot being probed.
-
     Returns the surviving entries (possibly [] = no file can hold a
     match), or None when blooms never engaged (no indexed match
     column, every column past the cap). NULL source keys are dropped
     before probing — equality never matches NULL."""
-    if meta is None:
-        meta = store.meta(table_name)
+    meta = snap.meta
     bcols = [c for c in match if c in store._bloom_cols(meta)]
     if not bcols:
         return None
@@ -239,7 +232,7 @@ def bloom_narrow_entries(store, table_name, entries, src_keys, match,
             continue  # too many keys to probe driver-side
         engaged = True
         entries = store.bloom_prune_entries_any(
-            table_name, entries, c, vals
+            snap.name, entries, c, vals
         )
         if not entries:
             return []
@@ -247,8 +240,7 @@ def bloom_narrow_entries(store, table_name, entries, src_keys, match,
 
 
 def discover_matched_files(
-    store, table_name, bounds, src_keys, match, pre_filter=None,
-    meta=None,
+    store, snap, bounds, src_keys, match, pre_filter=None,
 ):
     """Tier-2 content discovery shared by update/delete/merge/scd2:
     one slim scan (match columns + ``_metadata.file_path``) finds the
@@ -277,47 +269,23 @@ def discover_matched_files(
     interleaved keys make stats pruning blind). Past the cap the
     column simply doesn't narrow — correctness never depends on the
     blooms (reference merge semantics: mssql_dataframe merge.py's
-    update/delete clauses; this is purely the discovery cost).
-
-    ``meta`` is the caller's pinned TableMeta. Every manifest-shaped
-    read below (the stats split, the entries list, the bloom probe's
-    column set, the discovery scan's file list) is pinned to
-    ``meta.version`` so one consistent snapshot feeds the whole
-    verdict: two unpinned reads straddling a foreign commit would
-    each clear a different file set, and the intersection could drop
-    files neither check examined — unfixable downstream because the
-    no-match early return commits nothing, so the caller's
-    expected_version OCC backstop never fires (ADVICE r12)."""
-    if meta is None:
-        meta = store.meta(table_name)
-    candidates = stats_candidates(
-        store, table_name, bounds, version=meta.version
-    )
+    update/delete clauses; this is purely the discovery cost)."""
+    candidates = stats_candidates(store, snap, bounds)
     if candidates is not None and not candidates:
         return set()
-    entries = store.manifest(table_name, meta.version)
+    entries = snap.entries
     if candidates is not None:
         cset = set(candidates)
         entries = [e for e in entries if e["path"] in cset]
-    surviving = bloom_narrow_entries(
-        store, table_name, entries, src_keys, match, meta=meta
-    )
+    surviving = bloom_narrow_entries(store, snap, entries, src_keys, match)
     if surviving is not None:
         if not surviving:
             return set()  # every file provably holds no match
         if len(surviving) < len(entries):
             candidates = [e["path"] for e in surviving]
     if candidates is None:
-        # full-table discovery still reads the PINNED snapshot's file
-        # list, never store.read's current-manifest view
         candidates = [e["path"] for e in entries]
-    # version=meta.version: the scan must read the PINNED snapshot's
-    # files under that snapshot's RECORDED schema — a concurrent
-    # MODIFY COLUMN between the caller's meta capture and this scan
-    # would otherwise read the pinned files mistyped/NULL, and the
-    # resulting false no-match early return escapes the OCC backstop
-    # (ADVICE r13)
-    scan = store.read_files(table_name, candidates, version=meta.version)
+    scan = store.read_files(snap, candidates)
     if not all(c in scan.columns for c in match):
         return set()
     if pre_filter is not None:
@@ -361,7 +329,7 @@ def _known_bounds(bounds) -> dict:
     }
 
 
-def stats_candidates(store, table_name, bounds, version=None):
+def stats_candidates(store, snap, bounds):
     """Stats pre-narrowing for the content-discovery fallback:
     per-column manifest bounds (composite PKs, FK columns, UNIQUE /
     declared stats columns are all footer-harvested) can prove files
@@ -375,16 +343,14 @@ def stats_candidates(store, table_name, bounds, version=None):
     usable = _known_bounds(bounds) if isinstance(bounds, dict) else None
     if not usable:
         return None
-    touched, kept = store.split_by_key_ranges(
-        table_name, usable, version=version
-    )
+    touched, kept = store.split_by_key_ranges(snap, usable)
     return touched if kept else None
 
 
-def discover_touched(store, table_name, meta, bounds, src, match,
+def discover_touched(store, snap, bounds, src, match,
                      stats_final=False, pre_filter=None):
     """File discovery shared by update/delete/merge/SCD2, against the
-    caller's pinned ``meta.version``. Returns ``(keep_entries,
+    caller's ``snap``. Returns ``(keep_entries,
     touched_paths)``: the entries that provably hold no matching row
     and carry into the next manifest by reference, and the files to
     rewrite. Together they cover the snapshot; ``touched_paths == []``
@@ -402,15 +368,13 @@ def discover_touched(store, table_name, meta, bounds, src, match,
     of ``discover_matched_files`` (itself stats- and bloom-narrowed)
     decides. Empty tables discover nothing: their read is not a
     parquet scan, so ``_metadata`` would not resolve."""
-    entries = store.manifest(table_name, meta.version)
+    entries = snap.entries
     if not entries:
         return [], []
     usable = _known_bounds(bounds)
     stats_final = stats_final and bool(usable)
     if stats_final or (usable and pre_filter is not None):
-        touched, kept = store.split_by_key_ranges(
-            table_name, usable, version=meta.version
-        )
+        touched, kept = store.split_by_key_ranges(snap, usable)
         if kept or not touched:
             return kept, touched
     # the key side, built only now that a probe needs it (delete's
@@ -422,23 +386,19 @@ def discover_touched(store, table_name, meta, bounds, src, match,
         # stats kept nothing — interleaved/high-entropy layouts make
         # min/max blind, but batch-key bloom probes can still isolate
         # the touched files
-        surviving = bloom_narrow_entries(
-            store, table_name, entries, keys, match, meta=meta
-        )
+        surviving = bloom_narrow_entries(store, snap, entries, keys, match)
         return split_entries(entries, {
             e["path"] for e in (entries if surviving is None else surviving)
         })
     return split_entries(entries, discover_matched_files(
-        store, table_name, bounds, keys, match,
-        pre_filter=pre_filter, meta=meta,
+        store, snap, bounds, keys, match, pre_filter=pre_filter,
     ))
 
 
-def existing_candidates(store, table_name, version, bounds, keys, cols,
-                        carried=None, meta=None):
+def existing_candidates(store, snap, bounds, keys, cols, carried=None):
     """The "existing rows" side of a key probe (UNIQUE/PK collisions,
-    FK references): paths of the pinned snapshot ``version``'s files
-    that could hold a row whose ``cols`` equal a key of ``keys``. The
+    FK references): paths of ``snap``'s files that could hold a row
+    whose ``cols`` equal a key of ``keys``. The
     per-column stats split on the batch ``bounds`` comes first,
     restricted to the ``carried`` entries (default: the whole
     snapshot; a rewrite verb passes the files it carries, since its
@@ -448,23 +408,19 @@ def existing_candidates(store, table_name, version, bounds, keys, cols,
     non-NULL batch key) or nothing carried: nothing can match."""
     if not bounds or (carried is not None and not carried):
         return []
-    touched, _ = store.split_by_key_ranges(
-        table_name, bounds, version=version
-    )
+    touched, _ = store.split_by_key_ranges(snap, bounds)
     if not touched:
         return []
-    if carried is None:
-        carried = store.manifest(table_name, version)
     tset = set(touched)
-    cand = [e for e in carried if e["path"] in tset]
+    cand = [e for e in (snap.entries if carried is None else carried)
+            if e["path"] in tset]
     surviving = bloom_narrow_entries(
-        store, table_name, cand, keys, cols, meta=meta
+        store, snap, cand, keys, cols
     ) if cand else None
     return [e["path"] for e in (cand if surviving is None else surviving)]
 
 
-def constraint_probe(store, table_name, meta, carried=None,
-                     pk_at_risk=False):
+def constraint_probe(store, snap, carried=None, pk_at_risk=False):
     """The ``pre_commit_check`` hook of every write verb's commit.
     CHECK, FOREIGN KEY and UNIQUE probes run post-stage over the
     STAGED (written or rewritten) files — a columnar read — so the
@@ -479,6 +435,7 @@ def constraint_probe(store, table_name, meta, carried=None,
     enforces the PK there); ``pk_not_enforced`` tables opt out. Each
     unique probe's existing side is ``existing_candidates`` over the
     ``carried`` entries."""
+    meta = snap.meta
     checks = meta.properties.get("check_constraints") or {}
     fks = meta.properties.get("foreign_keys") or {}
     uniques = dict(meta.properties.get("unique_constraints") or {})
@@ -496,20 +453,15 @@ def constraint_probe(store, table_name, meta, carried=None,
         ])
         enforce_check_constraints(staged, checks)
         fk_deps = enforce_foreign_keys(
-            store, staged, fks, table_name=table_name,
+            store, staged, fks, table_name=snap.name,
         ) if fks else None
 
         def _existing_for(cols, bounds):
             paths = existing_candidates(
-                store, table_name, meta.version, bounds,
-                staged.select(*cols), list(cols), carried=carried,
-                meta=meta,
+                store, snap, bounds, staged.select(*cols), list(cols),
+                carried=carried,
             )
-            if not paths:
-                return None
-            # pinned: a concurrent MODIFY COLUMN must not mistype the
-            # key columns into a false no-collision verdict
-            return store.read_files(table_name, paths, version=meta.version)
+            return store.read_files(snap, paths) if paths else None
 
         enforce_unique_constraints(staged, uniques, existing_for=_existing_for)
         return fk_deps
@@ -546,9 +498,10 @@ def update_op(
     match_columns: Optional[list[str]] = None,
     include_metadata_timestamps: bool = False,
 ) -> DataFrame:
-    meta = store.meta(table_name)
     if include_metadata_timestamps:
-        meta = ensure_time_columns(store, table_name, ["_time_update"])
+        ensure_time_columns(store, table_name, ["_time_update"])
+    snap = store.snapshot(table_name)
+    meta = snap.meta
     generated.reject_explicit_writes(
         dataframe.columns, meta.properties.get("computed_columns") or {}
     )
@@ -591,8 +544,7 @@ def update_op(
         # manifest reference and rewrite only touched files (see
         # store.replace_files; the Delta MERGE INTO commit shape)
         keep_entries, touched = discover_touched(
-            store, table_name, meta, bounds, src, match,
-            stats_final=can_prune,
+            store, snap, bounds, src, match, stats_final=can_prune,
         )
         if not touched:
             # no target row matches the source: UPDATE changes nothing —
@@ -600,7 +552,7 @@ def update_op(
             # be a catastrophic no-op at 100 TB, and committing published
             # phantom versions)
             return plan
-        target = store.read_files(table_name, touched)
+        target = store.read_files(snap, touched)
         # SQL-text projection (guide §1.2 — one py4j round trip per
         # expression instead of one per Column operator; identical trees)
         renamed = src.selectExpr(
@@ -635,10 +587,9 @@ def update_op(
         # PK is still enforced there (match==PK never enters: PK columns
         # are then match columns, no extra jobs)
         store.replace_files(
-            table_name, result, keep_entries, op="update",
-            expected_version=meta.version,
+            snap, result, keep_entries, op="update",
             pre_commit_check=constraint_probe(
-                store, table_name, meta, carried=keep_entries,
+                store, snap, carried=keep_entries,
                 pk_at_risk=bool(set(update_cols) & set(meta.primary_key)),
             ),
         )

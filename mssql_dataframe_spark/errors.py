@@ -101,12 +101,9 @@ class SQLForeignKeyViolation(Exception):
 
 
 class SQLSnapshotUnavailable(Exception):
-    """A pinned snapshot version's manifest no longer exists — the
-    version was vacuumed out of retention (or the manifest was removed
-    externally) between the caller capturing ``meta.version`` and
-    reading the file list. Raised instead of degrading to an empty
-    manifest: an empty file set would make pinned discovery/split
-    reads report a false 'nothing matched', and the no-match early
-    returns commit nothing, so the expected_version OCC backstop never
-    fires (ADVICE r13). Beyond-reference: the Delta-style
+    """A version's manifest no longer exists — the version was
+    vacuumed out of retention (or the manifest was removed externally)
+    between the caller choosing it and reading its file list. Raised
+    instead of degrading to an empty manifest, which would read as a
+    false 'nothing matched'. Beyond-reference: the Delta-style
     VersionNotFoundException analog."""

@@ -22,9 +22,9 @@ so the engine implements the same transaction design those formats use:
   ``_meta.json`` pointer atomically (``os.replace``) — readers always
   see a complete version; a failed or losing writer discards its
   staging directory and leaves the table unchanged. Write verbs
-  thread the version their plan was computed against into the commit
-  (``expected_version``), so a concurrent commit landing mid-plan
-  fails the write cleanly instead of being dropped from the manifest.
+  read one ``Snapshot`` and commit against it, so a concurrent
+  commit or meta change landing mid-plan fails the write cleanly
+  instead of being dropped.
 
 Scale notes (100 TB design):
 - ``append`` moves new files into the pool — no rewrite, O(new data).
@@ -79,6 +79,40 @@ class TableMeta:
     @property
     def spark_schema(self) -> T.StructType:
         return T.StructType.fromJson(self.spark_schema_json)
+
+
+@dataclass(frozen=True)
+class Snapshot:
+    """One version of one table, read once: the catalog entry, the
+    version's manifest entries and the schema its files read with.
+    Built by ``TableStore.snapshot`` (and by ``_commit`` for the
+    version it commits) and never mutated.
+
+    A verb takes ONE snapshot after its own pre-write meta changes and
+    hands it to every consumer — stats splits, bloom probes, discovery
+    scans, constraint probes, and the commit. Every file set and every
+    verdict then describes the same version, so two reads can never
+    straddle a foreign commit (a discovery that cleared one manifest
+    while the probe read another could drop files neither examined,
+    and a no-match early return commits nothing for OCC to catch).
+    Files read under the snapshot's ``schema``: a retained version's
+    files predate any later MODIFY COLUMN rewrite. ``_commit`` checks
+    the table's current meta against ``meta`` on EVERY field, not only
+    the version (Delta's ``MetadataChangedException`` rule), so a
+    concurrent meta-only change — a constraint, a property — fails
+    the write instead of being overwritten by the meta it read."""
+
+    name: str
+    version: int
+    meta: TableMeta
+    entries: tuple
+    #: None for a retained version whose commit recorded no schema:
+    #: its files read with the declared one, and bloom probes are off
+    schema: Optional[T.StructType]
+
+    @property
+    def paths(self) -> list[str]:
+        return [e["path"] for e in self.entries]
 
 
 def _footer_stats(path: str, cols: list[str]):
@@ -688,22 +722,18 @@ class TableStore:
         with open(tmp, "w") as f:
             json.dump(meta.__dict__, f, indent=1, default=str)
         os.replace(tmp, os.path.join(tdir, _META))  # atomic commit point
-        self._refresh_live_views(name)
 
     def register_live_view(self, name: str, view: str) -> None:
         """Expose the table's CURRENT snapshot as a spark.sql temp
-        view and keep it current: every meta publication re-registers
-        it, so the view survives writes and vacuum instead of serving
-        the frozen file list it was first bound to."""
+        view and keep it current: every commit and ``update_meta``
+        re-registers it, so the view survives writes and vacuum instead
+        of serving the frozen file list it was first bound to."""
         self.read(name).createOrReplaceTempView(view)
         self._live_views.setdefault(name, set()).add(view)
 
-    def _refresh_live_views(self, name: str) -> None:
-        for view in self._live_views.get(name, ()):
-            try:
-                self.read(name).createOrReplaceTempView(view)
-            except SQLTableDoesNotExist:  # pragma: no cover - dropped
-                pass
+    def _refresh_live_views(self, snap: Snapshot) -> None:
+        for view in self._live_views.get(snap.name, ()):
+            self.read_files(snap, snap.paths).createOrReplaceTempView(view)
 
     def drop(self, name: str) -> None:
         tdir = self._table_dir(name)
@@ -730,26 +760,17 @@ class TableStore:
     def _manifest_path(self, name: str, version: int) -> str:
         return os.path.join(self._table_dir(name), f"_manifest_v{version}.json")
 
-    def manifest(
-        self, name: str, version: int, missing_ok: bool = False,
-    ) -> list[dict]:
+    def manifest(self, name: str, version: int) -> list[dict]:
         """File entries of ``version``'s manifest. Every version from
         0 (written at CREATE) to the current pointer has a manifest
-        until ``_vacuum`` retires it, so a missing file for a version
-        a caller explicitly pinned means the snapshot fell out of
-        retention mid-operation — raise ``SQLSnapshotUnavailable``
-        rather than degrading to an empty manifest, which would turn
-        pinned discovery/split reads into a false 'nothing matched'
-        verdict that no OCC commit check can catch (the no-match
-        early-return paths commit nothing; ADVICE r13). Callers that
-        deliberately probe possibly-retired versions pass
-        ``missing_ok=True`` (or pre-check the path like history())."""
+        until ``_vacuum`` retires it, so a missing file means the
+        version fell out of retention (or was removed externally):
+        raise ``SQLSnapshotUnavailable`` rather than degrade to an
+        empty manifest, which would read as 'no files'."""
         try:
             with open(self._manifest_path(name, version)) as f:
                 return json.load(f)["files"]
         except FileNotFoundError:
-            if missing_ok:
-                return []
             raise SQLSnapshotUnavailable(
                 f"manifest for version {version} of table {name!r} "
                 "does not exist — the snapshot was vacuumed out of "
@@ -941,10 +962,7 @@ class TableStore:
             if c in fields and isinstance(fields[c], ok)
         ]
 
-    def typed_bloom_probes(
-        self, meta: TableMeta, where: str,
-        version: Optional[int] = None,
-    ) -> list[tuple]:
+    def typed_bloom_probes(self, snap: Snapshot, where: str) -> list[tuple]:
         """``(column, typed value)`` equality probes a where-grammar
         string yields against this table's bloom-indexed columns — []
         whenever pruning cannot engage (no indexed columns, OR /
@@ -953,31 +971,23 @@ class TableStore:
         read verb and DELETE WHERE so both sides type literals
         identically (an int column's '05' and 5 must hash the same).
 
-        ``version`` types probes against that snapshot's RECORDED
-        schema, not today's: a time-travel read probes sidecars that
-        were hashed under the schema the files were written with
-        (ALTER COLUMN is a cast-rewrite, so every file of version v —
-        and its sidecar — conforms to v's schema). After a
-        string->int retype, a pre-retype snapshot probe for
-        ``col = 5`` must hash the STRING rules (and therefore skip,
-        since '5' renders bare) or it would prune files whose '05'
-        rows the documented try_cast reprojection surfaces as 5. A
-        snapshot with no recorded schema disables pruning entirely
-        (conservative: every file is touched)."""
+        Probes are typed under the snapshot's schema, not today's: a
+        time-travel read probes sidecars that were hashed under the
+        schema the files were written with (ALTER COLUMN is a
+        cast-rewrite, so every file of version v — and its sidecar —
+        conforms to v's schema). After a string->int retype, a
+        pre-retype snapshot probe for ``col = 5`` must hash the STRING
+        rules (and therefore skip, since '5' renders bare) or it would
+        prune files whose '05' rows the documented try_cast
+        reprojection surfaces as 5. A snapshot with no recorded schema
+        disables pruning entirely (conservative: every file is
+        touched)."""
         from .identifiers import equality_conjuncts, renders_bare
 
-        bcols = self._bloom_cols(meta)
-        if not bcols:
+        bcols = self._bloom_cols(snap.meta)
+        if not bcols or snap.schema is None:
             return []
-        schema = meta.spark_schema
-        if version is not None and int(version) != meta.version:
-            recorded = self.commit_info(meta.name, int(version)).get(
-                "schema"
-            )
-            if recorded is None:
-                return []
-            schema = T.StructType.fromJson(recorded)
-        fields = {f.name: f.dataType for f in schema.fields}
+        fields = {f.name: f.dataType for f in snap.schema.fields}
         probes: list[tuple] = []
         for c, raw in equality_conjuncts(where):
             if c not in bcols or c not in fields:
@@ -1024,31 +1034,26 @@ class TableStore:
         return probes
 
     def bloom_prune(
-        self, name: str, eqs: list[tuple],
-        version: Optional[int] = None,
+        self, snap: Snapshot, eqs: list[tuple]
     ) -> tuple[list[str], int]:
-        """File paths of a snapshot (current by default, or a retained
-        ``version`` — sidecars live exactly as long as their data
-        file, so time-travel reads prune too) that MAY contain a row
-        matching every ``(column, value)`` equality, by per-file bloom
-        sidecar test. Files without a filter for a probed column
-        always count as touched (older files, non-indexed columns) —
-        pruning is conservative, never incorrect (a bloom has no false
-        negatives). Returns ``(touched paths, n_pruned)``. Driver-side
+        """File paths of ``snap`` that MAY contain a row matching every
+        ``(column, value)`` equality, by per-file bloom sidecar test
+        (sidecars live exactly as long as their data file, so
+        time-travel reads prune too). Files without a filter for a
+        probed column always count as touched (older files, non-indexed
+        columns) — pruning is conservative, never incorrect (a bloom
+        has no false negatives). Returns ``(touched paths, n_pruned)``. Driver-side
         O(files) sidecar reads — the point-lookup analog of
         ``split_by_key_ranges``: range stats prune clustered keys;
         blooms prune EQUALITY probes on any indexed column regardless
         of layout."""
-        meta = self.meta(name)
-        entries = self.manifest(
-            name, meta.version if version is None else int(version)
-        )
+        entries = snap.entries
         probes = []
         for c, v in eqs:
             vb = _bloom_value_bytes(v)
             if vb is not None:
                 probes.append((c, vb))
-        pool = self._pool_dir(name)
+        pool = self._pool_dir(snap.name)
         pcols = {c for c, _ in probes}
         need = [
             e for e in entries
@@ -1339,75 +1344,58 @@ class TableStore:
         self._write_meta(name, meta)
         return meta
 
+    def snapshot(self, name: str, version: Optional[int] = None) -> Snapshot:
+        """The table's current version, or a retained prior
+        ``version``, read once: one ``meta`` and one ``manifest`` read
+        (see ``Snapshot``). A prior version reads with the schema
+        recorded in its own commit, so time travel is faithful across
+        schema evolution."""
+        meta = self.meta(name)
+        v = meta.version if version is None else int(version)
+        schema = meta.spark_schema
+        if version is not None:
+            if v > meta.version or not os.path.exists(
+                self._manifest_path(name, v)
+            ):
+                raise ValueError(
+                    f"version {v} of table {name!r} is not available "
+                    f"(current {meta.version}, retention keeps "
+                    f"{self._retention(meta)} prior snapshots)"
+                )
+            if v != meta.version:
+                recorded = self.commit_info(name, v).get("schema")
+                schema = T.StructType.fromJson(recorded) if recorded else None
+        return Snapshot(
+            name, v, meta, tuple(self.manifest(name, v)), schema
+        )
+
     def read(self, name: str, version: Optional[int] = None) -> DataFrame:
         """Snapshot as a DataFrame — current by default, or a retained
         prior version (time travel, the Delta ``versionAsOf`` analog).
 
-        Always reads with the declared schema so an empty snapshot
+        Always reads with the snapshot's schema so an empty snapshot
         yields a correctly-typed empty DataFrame and schema drift in
-        stray files cannot leak through. A retained version committed
-        BEFORE a later MODIFY COLUMN reads with the schema recorded in
-        its own commit, so time travel is faithful across schema
-        evolution.
+        stray files cannot leak through.
         """
-        meta = self.meta(name)
-        v = meta.version if version is None else int(version)
-        if version is not None:
-            self._require_version(name, meta, v)
-        paths = [
-            os.path.join(self._pool_dir(name), e["path"])
-            for e in self.manifest(name, v)
-        ]
-        return self._read_paths(self._version_schema(name, meta, version),
-                                paths)
+        snap = self.snapshot(name, version)
+        return self.read_files(snap, snap.paths)
 
-    def _require_version(self, name: str, meta: TableMeta, v: int) -> None:
-        """Raise unless version ``v`` of ``name`` is still retained."""
-        if v > meta.version or not os.path.exists(
-            self._manifest_path(name, v)
-        ):
-            raise ValueError(
-                f"version {v} of table {name!r} is not available "
-                f"(current {meta.version}, retention keeps "
-                f"{self._retention(meta)} prior snapshots)"
-            )
-
-    def _version_schema(
-        self, name: str, meta: TableMeta, version: Optional[int]
-    ) -> T.StructType:
-        """Schema ``version``'s files read with: the one recorded in its
-        commit for a retained prior version, else the declared one."""
-        if version is not None and int(version) != meta.version:
-            recorded = self.commit_info(name, int(version)).get("schema")
-            if recorded is not None:
-                return T.StructType.fromJson(recorded)
-        return meta.spark_schema
-
-    def _read_paths(self, schema: T.StructType, paths: list[str]) -> DataFrame:
-        if not paths:
+    def read_files(self, snap: Snapshot, entry_paths: list[str]) -> DataFrame:
+        """DataFrame over a subset of ``snap``'s files (the touched
+        side of a pruned merge/update), read under the snapshot's
+        schema."""
+        schema = snap.meta.spark_schema if snap.schema is None else snap.schema
+        if not entry_paths:
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*paths)
-
-    def read_files(
-        self, name: str, entry_paths: list[str],
-        version: Optional[int] = None,
-    ) -> DataFrame:
-        """DataFrame over a subset of a snapshot's files (the touched
-        side of a pruned merge/update). ``version`` reads the files
-        under that version's RECORDED schema — a retained snapshot's
-        files predate any later MODIFY COLUMN rewrite, so reading them
-        with the current schema would yield NULL/mistyped columns."""
-        pool = self._pool_dir(name)
-        return self._read_paths(
-            self._version_schema(name, self.meta(name), version),
-            [os.path.join(pool, p) for p in entry_paths],
+        pool = self._pool_dir(snap.name)
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(pool, p) for p in entry_paths]
         )
 
     def split_by_key_range(
-        self, name: str, col: str, lo, hi,
-        version: Optional[int] = None,
+        self, snap: Snapshot, col: str, lo, hi
     ) -> tuple[list[str], list[dict]]:
-        """Partition the current manifest into (touched paths, kept
+        """Partition ``snap``'s manifest into (touched paths, kept
         entries) for a source whose ``col`` values span [lo, hi].
         An entry is kept ONLY when it carries bounds RECORDED FOR
         ``col`` (bounds written before a primary-key/stats_column
@@ -1417,13 +1405,10 @@ class TableStore:
         any recorded column can prune) with the legacy single
         stats_col/min/max triple as fallback. Files without usable
         stats for ``col`` are always touched (safe)."""
-        return self.split_by_key_ranges(
-            name, {col: (lo, hi)}, version=version
-        )
+        return self.split_by_key_ranges(snap, {col: (lo, hi)})
 
     def split_by_key_ranges(
-        self, name: str, bounds: dict,
-        version: Optional[int] = None,
+        self, snap: Snapshot, bounds: dict
     ) -> tuple[list[str], list[dict]]:
         """Multi-column generalization of ``split_by_key_range``:
         ``bounds`` maps column -> (lo, hi) of the source batch. An
@@ -1434,27 +1419,16 @@ class TableStore:
         data-skipping rule). Columns whose bounds are not plain
         int/str, or files without usable stats for every still-
         undecided column, count as touched (safe). An all-unusable
-        ``bounds`` touches everything.
-
-        ``version`` pins the split to that snapshot's manifest so a
-        caller composing it with other per-version reads (content
-        discovery, bloom narrowing, the FK probe loop) sees ONE
-        consistent file set — two unpinned reads straddling a foreign
-        commit could each clear a different manifest and their
-        intersection would drop files neither verdict covered."""
+        ``bounds`` touches everything."""
         clean = {}
         for col, (lo, hi) in bounds.items():
             lo, hi = _plain_scalar(lo), _plain_scalar(hi)
             if lo is not None and hi is not None:
                 clean[col] = (lo, hi)
-        ents = self.manifest(
-            name,
-            self.meta(name).version if version is None else int(version),
-        )
         if not clean:
-            return [e["path"] for e in ents], []
+            return snap.paths, []
         touched, kept = [], []
-        for e in ents:
+        for e in snap.entries:
             disjoint = False
             for col, (lo, hi) in clean.items():
                 b = (e.get("stats") or {}).get(col)
@@ -1475,51 +1449,38 @@ class TableStore:
                 touched.append(e["path"])
         return touched, kept
 
-    def version_file_sets(
-        self, name: str, v_old: int, v_new: Optional[int] = None
-    ) -> tuple[set, set]:
-        """Validated manifest path sets for two retained versions —
-        the inputs of manifest-level CDC (core/read.py table_changes):
-        files present in BOTH versions are immutable and bit-identical,
-        so only the symmetric difference can contain changed rows."""
-        meta = self.meta(name)
-        v_new = meta.version if v_new is None else int(v_new)
-        for v in (int(v_old), v_new):
-            self._require_version(name, meta, v)
-        return (
-            {e["path"] for e in self.manifest(name, int(v_old))},
-            {e["path"] for e in self.manifest(name, v_new)},
-        )
+    @staticmethod
+    def version_file_sets(old: Snapshot, new: Snapshot) -> tuple[set, set]:
+        """Manifest path sets of two snapshots — the inputs of
+        manifest-level CDC (core/read.py table_changes): files present
+        in BOTH versions are immutable and bit-identical, so only the
+        symmetric difference can contain changed rows."""
+        return set(old.paths), set(new.paths)
 
     def append(
-        self, name: str, df: DataFrame,
+        self, snap: Snapshot, df: DataFrame,
         extra_properties: Optional[dict] = None,
         preconditions: Optional[list[tuple]] = None,
-        expected_version: Optional[int] = None,
         extra_meta: Optional[dict] = None,
         pre_commit_check: Optional[callable] = None,
-    ) -> None:
-        """Commit the next snapshot as the current manifest's entries
-        (carried by reference — manifest-only cost) plus the new files
-        (Delta AddFile commit) — O(new data), never rewrites existing
-        files. Versioning every insert makes ``read(version=N)`` a
-        stable snapshot (a reader holding version N never sees rows
-        appended after it asked) and lets manifest-diff CDC report
-        plain inserts between consecutive versions. Insert's
-        ``pre_commit_check`` applies its deferred validation and runs
-        its PK/CHECK/FK/UNIQUE probes over the staged files;
-        ``extra_properties`` carry bookkeeping that must land with the
-        data (e.g. ingest_directory's ingested-files ledger). The commit
-        contract is ``_commit``'s."""
-        base = self.meta(name).version if expected_version is None else int(
-            expected_version
-        )
-        self._commit(name, df, keep_entries=self.manifest(name, base),
-                     op="append", preconditions=preconditions,
-                     expected_version=base,
-                     extra_properties=extra_properties,
-                     extra_meta=extra_meta,
-                     pre_commit_check=pre_commit_check)
+    ) -> Snapshot:
+        """Commit the next snapshot as ``snap``'s entries (carried by
+        reference — manifest-only cost) plus the new files (Delta
+        AddFile commit) — O(new data), never rewrites existing files.
+        Versioning every insert makes ``read(version=N)`` a stable
+        snapshot (a reader holding version N never sees rows appended
+        after it asked) and lets manifest-diff CDC report plain inserts
+        between consecutive versions. Insert's ``pre_commit_check``
+        applies its deferred validation and runs its PK/CHECK/FK/UNIQUE
+        probes over the staged files; ``extra_properties`` carry
+        bookkeeping that must land with the data (e.g.
+        ingest_directory's ingested-files ledger). The commit contract
+        is ``_commit``'s."""
+        return self._commit(snap, df, keep_entries=list(snap.entries),
+                            op="append", preconditions=preconditions,
+                            extra_properties=extra_properties,
+                            extra_meta=extra_meta,
+                            pre_commit_check=pre_commit_check)
 
     def clone(self, src: str, dst: str) -> TableMeta:
         """Zero-copy table clone (Delta ``SHALLOW CLONE`` analog): the
@@ -1537,8 +1498,8 @@ class TableStore:
             # VIEW name would otherwise make the path both view and
             # table, and reads would resolve inconsistently
             raise ValueError(f"table or view {dst!r} already exists")
-        meta = self.meta(src)
-        entries = self.manifest(src, meta.version)
+        snap = self.snapshot(src)
+        meta, entries = snap.meta, snap.entries
         src_pool, dst_pool = self._pool_dir(src), self._pool_dir(dst)
         os.makedirs(dst_pool, exist_ok=True)
         for e in entries:
@@ -1589,8 +1550,8 @@ class TableStore:
         across store roots, environments, or machines. O(files) copy
         of immutable parquet; no scan, no rewrite. Returns the file
         count."""
-        meta = self.meta(name)
-        entries = self.manifest(name, meta.version)
+        snap = self.snapshot(name)
+        meta, entries = snap.meta, snap.entries
         os.makedirs(out_dir, exist_ok=False)
         pool = self._pool_dir(name)
         for e in entries:
@@ -1670,12 +1631,11 @@ class TableStore:
         restore across a column DROP/rename is rejected rather than
         misread (columns ADDed after the target version read back as
         NULL, like Delta's missing-column semantics)."""
-        meta = self.meta(name)
         v = int(version)
-        self._require_version(name, meta, v)
-        carried = self.manifest(name, v)
-        declared = set(meta.spark_schema.fieldNames())
-        for e in carried:
+        cur = self.snapshot(name)
+        target = self.snapshot(name, v)
+        declared = set(cur.meta.spark_schema.fieldNames())
+        for e in target.entries:
             cols = e.get("schema_cols")
             if cols is not None and not set(cols) <= declared:
                 raise ValueError(
@@ -1685,9 +1645,10 @@ class TableStore:
                     "declared schema (restore across a column drop/"
                     "rename is not supported)"
                 )
-        self._commit(name, None, keep_entries=carried, op=f"restore(v{v})",
-                     expected_version=meta.version)
-        return meta.version + 1
+        return self._commit(
+            cur, None, keep_entries=list(target.entries),
+            op=f"restore(v{v})",
+        ).version
 
     #: snapshots retained behind the current version; lazy DataFrames
     #: handed out by ``read()`` stay valid across this many subsequent
@@ -1703,74 +1664,68 @@ class TableStore:
         except (TypeError, ValueError):
             return self.keep_versions
 
-    def overwrite(self, name: str, df: Optional[DataFrame],
+    def overwrite(self, snap: Snapshot, df: Optional[DataFrame],
                   new_schema: Optional[T.StructType] = None,
                   new_column_types: Optional[dict[str, str]] = None,
                   op: str = "overwrite",
                   preconditions: Optional[list[tuple]] = None,
-                  expected_version: Optional[int] = None,
                   extra_properties: Optional[dict] = None,
                   extra_meta: Optional[dict] = None,
-                  pre_commit_check: Optional[callable] = None) -> None:
+                  pre_commit_check: Optional[callable] = None) -> Snapshot:
         """Materialize ``df`` as the next snapshot (``None``: an empty
         one), then atomically move the table pointer. Readers of the old
         version are unaffected — old snapshots are vacuumed only once
         they fall ``keep_versions`` commits behind, so a lazy plan bound
         to a recent snapshot can still be consumed after later writes.
         The commit contract is ``_commit``'s."""
-        self._commit(name, df, keep_entries=[], new_schema=new_schema,
-                     new_column_types=new_column_types, op=op,
-                     preconditions=preconditions,
-                     expected_version=expected_version,
-                     extra_properties=extra_properties,
-                     extra_meta=extra_meta,
-                     pre_commit_check=pre_commit_check)
+        return self._commit(snap, df, keep_entries=[], new_schema=new_schema,
+                            new_column_types=new_column_types, op=op,
+                            preconditions=preconditions,
+                            extra_properties=extra_properties,
+                            extra_meta=extra_meta,
+                            pre_commit_check=pre_commit_check)
 
     def replace_files(
-        self, name: str, df: DataFrame, keep_entries: list[dict],
+        self, snap: Snapshot, df: DataFrame, keep_entries: list[dict],
         op: str = "replace_files",
         preconditions: Optional[list[tuple]] = None,
-        expected_version: Optional[int] = None,
         new_schema: Optional[T.StructType] = None,
         new_column_types: Optional[dict[str, str]] = None,
         extra_properties: Optional[dict] = None,
         extra_meta: Optional[dict] = None,
         pre_commit_check: Optional[callable] = None,
-    ) -> None:
+    ) -> Snapshot:
         """Commit the next snapshot as ``keep_entries`` (untouched files
-        carried over BY REFERENCE — no rewrite, no copy) plus the
-        materialized ``df`` (the rewritten touched files). This is the
-        Delta ``MERGE INTO`` commit shape: write cost ∝ touched data.
-        update/merge/SCD2/delete pass the snapshot ``keep_entries`` were
-        computed from as ``expected_version`` and run their CHECK/FK/
-        UNIQUE probes in ``pre_commit_check`` over the staged files, so
-        the rewrite plan executes exactly once. The commit contract is
+        of ``snap`` carried over BY REFERENCE — no rewrite, no copy)
+        plus the materialized ``df`` (the rewritten touched files). This
+        is the Delta ``MERGE INTO`` commit shape: write cost ∝ touched
+        data. update/merge/SCD2/delete run their CHECK/FK/UNIQUE probes
+        in ``pre_commit_check`` over the staged files, so the rewrite
+        plan executes exactly once. The commit contract is
         ``_commit``'s."""
-        self._commit(name, df, keep_entries=list(keep_entries), op=op,
-                     preconditions=preconditions,
-                     expected_version=expected_version,
-                     new_schema=new_schema,
-                     new_column_types=new_column_types,
-                     extra_properties=extra_properties,
-                     extra_meta=extra_meta,
-                     pre_commit_check=pre_commit_check)
+        return self._commit(snap, df, keep_entries=list(keep_entries),
+                            op=op, preconditions=preconditions,
+                            new_schema=new_schema,
+                            new_column_types=new_column_types,
+                            extra_properties=extra_properties,
+                            extra_meta=extra_meta,
+                            pre_commit_check=pre_commit_check)
 
-    def _commit(self, name: str, df: Optional[DataFrame],
+    def _commit(self, snap: Snapshot, df: Optional[DataFrame],
                 keep_entries: list[dict],
                 new_schema: Optional[T.StructType] = None,
                 new_column_types: Optional[dict[str, str]] = None,
                 op: str = "commit",
                 preconditions: Optional[list[tuple]] = None,
-                expected_version: Optional[int] = None,
                 extra_properties: Optional[dict] = None,
                 extra_meta: Optional[dict] = None,
-                pre_commit_check: Optional[callable] = None) -> None:
+                pre_commit_check: Optional[callable] = None) -> Snapshot:
         """The one version-advancing commit body (``append``,
         ``overwrite``, ``replace_files`` and ``restore`` all reach it):
-        the next snapshot is ``keep_entries`` (carried by reference)
-        plus ``df`` materialized as new files; ``df=None`` stages
-        nothing (a manifest-only commit). ``op`` labels the commit in
-        ``history()``.
+        the version after ``snap`` is ``keep_entries`` (carried by
+        reference) plus ``df`` materialized as new files; ``df=None``
+        stages nothing (a manifest-only commit). ``op`` labels the
+        commit in ``history()``. Returns the committed ``Snapshot``.
 
         Claim order — stage privately, run the hook, check OCC, claim
         the version's manifest exclusively, publish files, move the meta
@@ -1790,33 +1745,38 @@ class TableStore:
         guard keeps the probe-to-commit race window minimal while the
         OCC check still covers what remains of it.
 
-        ``expected_version`` is the version the caller planned this
-        write against (default: the version read here): the commit
-        fails cleanly if any other writer advanced the table since, so
-        a plan built on stale state can never erase a concurrent commit.
+        The commit is valid only against ``snap``: it fails cleanly if
+        any other writer advanced the table or changed its meta since
+        (``_check_no_concurrent_commit``), so a plan built on stale
+        state can never erase a concurrent commit or meta change.
 
         ``new_schema``/``new_column_types`` (schema evolution, e.g. merge
         auto-evolve), ``extra_properties`` (folded into
         ``meta.properties``) and ``extra_meta`` (top-level TableMeta
-        fields, e.g. ``identity_next`` or ``not_nullable``) publish in
+        fields, e.g. ``identity_next`` or ``primary_key``) publish in
         the SAME meta write that advances the version pointer: an OCC
         loss discards them with the staged files, and no separate
         ``update_meta`` can be lost to a crash or, last-writer-wins,
-        clobber a concurrent winner. ``extra_properties`` are also
-        visible to the staging stats harvest (optimize_zorder threads
-        its ``stats_columns`` here so the rewritten files' stats and the
-        property that activates them publish together)."""
-        meta = self.meta(name)
+        clobber a concurrent winner. Both are also visible to the
+        staging stats harvest (optimize_zorder threads its
+        ``stats_columns`` here, rename_column its renamed keys, so the
+        rewritten files' stats and the meta that activates them publish
+        together)."""
+        name = snap.name
+        for k in extra_meta or {}:
+            if k not in TableMeta.__dataclass_fields__:
+                raise AttributeError(
+                    f"extra_meta key {k!r} is not a TableMeta field"
+                )
+        # folded BEFORE staging (the stats harvest reads the keys and
+        # properties like stats_columns) but written to the catalog
+        # only with the version advance below
+        meta = dataclasses.replace(snap.meta, **(extra_meta or {}))
         if extra_properties:
-            # folded BEFORE staging (the stats harvest reads
-            # properties like stats_columns) but written to the
-            # catalog only with the version advance below — an OCC
-            # loss leaves the catalog untouched
-            meta.properties = {**meta.properties, **extra_properties}
-        base = meta.version if expected_version is None else int(
-            expected_version
-        )
-        next_v = base + 1
+            meta = dataclasses.replace(
+                meta, properties={**meta.properties, **extra_properties}
+            )
+        next_v = snap.version + 1
         schema = new_schema or meta.spark_schema
         staged, stage_dir = [], None
         if df is not None:
@@ -1838,7 +1798,7 @@ class TableStore:
                     preconditions = list(preconditions or []) + list(
                         extra_pre
                     )
-            self._check_no_concurrent_commit(name, base)
+            self._check_no_concurrent_commit(snap)
             self._check_preconditions(name, preconditions)
             # exclusive claim of next_v: the authoritative OCC point —
             # after it, the staged files are referenced by a live
@@ -1855,44 +1815,48 @@ class TableStore:
             self._discard_staged(stage_dir)
             raise
         self._publish_staged(name, stage_dir, staged)
-        meta.version = next_v
+        changes = {"version": next_v}
         if new_schema is not None:
-            meta.spark_schema_json = new_schema.jsonValue()
+            changes["spark_schema_json"] = new_schema.jsonValue()
         if new_column_types is not None:
-            meta.column_types = dict(new_column_types)
-        if extra_meta:
-            for k, v in extra_meta.items():
-                if not hasattr(meta, k):
-                    raise AttributeError(
-                        f"extra_meta key {k!r} is not a TableMeta field"
-                    )
-                setattr(meta, k, v)
+            changes["column_types"] = dict(new_column_types)
+        meta = dataclasses.replace(meta, **changes)
         self._write_meta(name, meta)
-        self._vacuum(name, keep_before=next_v - self._retention(meta))
+        new = Snapshot(name, next_v, meta, tuple(entries), meta.spark_schema)
+        self._refresh_live_views(new)
+        self._vacuum(name, next_v - self._retention(meta),
+                     {snap.version: snap.entries, next_v: new.entries})
+        return new
 
-    def _check_no_concurrent_commit(
-        self, name: str, expected_version: int
-    ) -> None:
+    def _check_no_concurrent_commit(self, snap: Snapshot) -> None:
         """Optimistic concurrency control (the Delta
-        ``ConcurrentModificationException`` shape): a commit is valid
-        only against the snapshot it read — the version its carried
-        manifest entries were computed against, threaded through as
-        ``expected_version`` by every caller. If another writer
-        advanced the table in between, the write fails CLEANLY (the
-        caller discards its staging directory) — the winner's commit
-        is untouched, the loser re-reads and retries. Single-writer
-        pipelines never hit this; two engines sharing a store root do.
-        The check is advisory (fail fast); the authoritative guard is
-        the exclusive manifest claim in ``_write_manifest``."""
-        current = self.meta(name)
-        if current.version != expected_version:
-            from .errors import SQLConcurrentWriteConflict
+        ``ConcurrentModificationException`` / ``MetadataChangedException``
+        shape): a commit is valid only against the snapshot it read. If
+        another writer advanced the table, or changed its meta on any
+        field (a constraint, a property, a column), the write fails
+        CLEANLY (the caller discards its staging directory) — the
+        winner's change is untouched, the loser re-reads and retries.
+        Single-writer pipelines never hit this; two engines sharing a
+        store root do. The check is advisory for version races (fail
+        fast; the authoritative guard is the exclusive manifest claim
+        in ``_write_manifest``) and the only guard for meta-only
+        changes."""
+        current = self.meta(snap.name)
+        if current == snap.meta:
+            return
+        from .errors import SQLConcurrentWriteConflict
 
+        if current.version != snap.version:
             raise SQLConcurrentWriteConflict(
-                f"table {name!r}: version advanced "
-                f"{expected_version} -> {current.version} during the "
+                f"table {snap.name!r}: version advanced "
+                f"{snap.version} -> {current.version} during the "
                 "write; staged files discarded — re-read and retry"
             )
+        raise SQLConcurrentWriteConflict(
+            f"table {snap.name!r}: metadata changed concurrently at "
+            f"version {snap.version} during the write; staged files "
+            "discarded — re-read and retry"
+        )
 
     def _check_preconditions(
         self, name: str, preconditions: Optional[list[tuple]]
@@ -1955,7 +1919,7 @@ class TableStore:
                         shutil.rmtree(p, ignore_errors=True)
                 except OSError:  # pragma: no cover - raced with writer
                     pass
-        self._vacuum(name, keep_before=meta.version - k)
+        self._vacuum(name, meta.version - k, {})
         readable = 0
         for v in range(meta.version, -1, -1):
             if not os.path.exists(self._manifest_path(name, v)):
@@ -1963,9 +1927,12 @@ class TableStore:
             readable += 1
         return readable
 
-    def _vacuum(self, name: str, keep_before: int) -> None:
+    def _vacuum(self, name: str, keep_before: int, held: dict) -> None:
         """Drop manifests older than ``keep_before`` and pool files no
-        retained manifest references."""
+        retained manifest references. ``held`` maps versions whose
+        entries the caller already holds (a commit's base and new
+        snapshots) to those entries; only the other retained manifests
+        are read."""
         tdir = self._table_dir(name)
         live_versions = []
         for entry in os.listdir(tdir):
@@ -1979,7 +1946,9 @@ class TableStore:
                 else:
                     live_versions.append(v)
         referenced = {
-            e["path"] for v in live_versions for e in self.manifest(name, v)
+            e["path"]
+            for v in live_versions
+            for e in (held[v] if v in held else self.manifest(name, v))
         }
         pool = self._pool_dir(name)
         if os.path.isdir(pool):
@@ -2010,27 +1979,25 @@ class TableStore:
 
         Returns (files_before, files_after).
         """
-        meta = self.meta(name)
-        entries = self.manifest(name, meta.version)
+        snap = self.snapshot(name)
+        entries = snap.entries
         small = [e for e in entries if (e.get("rows") or 0) < small_file_rows]
         small_paths = {e["path"] for e in small}
         keep = [e for e in entries if e["path"] not in small_paths]
         if len(small) <= 1:
             return len(entries), len(entries)
-        df = self.read_files(name, [e["path"] for e in small])
+        df = self.read_files(snap, [e["path"] for e in small])
         total = sum(e.get("rows") or 0 for e in small)
         n_out = max(1, (total + small_file_rows - 1) // small_file_rows)
-        keys = self._cluster_cols(meta)
+        keys = self._cluster_cols(snap.meta)
         if keys:
             df = df.repartitionByRange(n_out, *keys).sortWithinPartitions(
                 *keys
             )
         else:
             df = df.coalesce(n_out)
-        self.replace_files(
-            name, df, keep, op="optimize", expected_version=meta.version
-        )
-        return len(entries), len(self.manifest(name, self.meta(name).version))
+        new = self.replace_files(snap, df, keep, op="optimize")
+        return len(entries), len(new.entries)
 
     def optimize_zorder(
         self, name: str, cols: list[str], n_files: Optional[int] = None
@@ -2053,13 +2020,12 @@ class TableStore:
         rewrite range-partitions + sorts by that key: one shuffle of
         the table, the same cost class as any clustering rewrite.
         Returns (files_before, files_after)."""
-        meta = self.meta(name)
-        v_planned = meta.version
+        snap = self.snapshot(name)
+        meta = snap.meta
         for c in cols:
             if c not in meta.spark_schema.fieldNames():
                 raise ValueError(f"zorder column {c!r} not in table schema")
-        entries = self.manifest(name, meta.version)
-        df = self.read(name)
+        df = self.read_files(snap, snap.paths)
         bounds = df.agg(
             *[F.min(c).cast("double").alias(f"__lo_{c}") for c in cols],
             *[F.max(c).cast("double").alias(f"__hi_{c}") for c in cols],
@@ -2090,7 +2056,7 @@ class TableStore:
                         bit * len(norms) + ci,
                     )
                 )
-        n_out = n_files or max(1, len(entries))
+        n_out = n_files or max(1, len(snap.entries))
         ordered = (
             df.withColumn("__z", z)
             .repartitionByRange(n_out, "__z")
@@ -2104,20 +2070,18 @@ class TableStore:
         # version advance — a concurrent commit landing mid-rewrite
         # fails this commit cleanly with the catalog untouched,
         # instead of a pre-commit property write racing the winner.
-        fresh = self.meta(name)
-        extra = [c for c in cols if c != self._stats_col(fresh)]
-        prior = fresh.properties.get("stats_columns") or []
+        extra = [c for c in cols if c != self._stats_col(meta)]
+        prior = meta.properties.get("stats_columns") or []
         if isinstance(prior, str):
             prior = [s.strip() for s in prior.split(",") if s.strip()]
         merged = list(dict.fromkeys([*prior, *extra]))
-        self.replace_files(
-            name, ordered, [], op=f"zorder({','.join(cols)})",
-            expected_version=v_planned,
+        new = self.replace_files(
+            snap, ordered, [], op=f"zorder({','.join(cols)})",
             extra_properties=(
                 {"stats_columns": merged} if merged != prior else None
             ),
         )
-        return len(entries), len(self.manifest(name, self.meta(name).version))
+        return len(snap.entries), len(new.entries)
 
     def update_meta(self, name: str, **changes) -> TableMeta:
         meta = self.meta(name)
@@ -2133,4 +2097,6 @@ class TableStore:
                 )
             setattr(meta, k, v)
         self._write_meta(name, meta)
+        if name in self._live_views:
+            self._refresh_live_views(self.snapshot(name))
         return meta

@@ -844,8 +844,8 @@ def incremental_mv_sink(
     from ..operators.incremental import apply_agg_delta
 
     sbid = str(batch_id)
-    fmeta = engine.store.meta(fact)
-    props = fmeta.properties
+    fsnap = engine.store.snapshot(fact)
+    props = fsnap.meta.properties
     ledger = dict(props.get("applied_batches") or {})
     applied_through = props.get("applied_through", -1)
     if sbid not in ledger and batch_id <= applied_through:
@@ -855,7 +855,7 @@ def incremental_mv_sink(
         # so the whole batch is a no-op
         return
     if sbid not in ledger:
-        v_pre = fmeta.version
+        v_pre = fsnap.version
         ledger[sbid] = [v_pre, v_pre + 1]
         # bound the ledger: replays only ever arrive near the stream
         # tip (the checkpoint advances), so a 64-batch tail is ample —
@@ -890,8 +890,6 @@ def incremental_mv_sink(
             # state.
             expected_version=v_pre,
         )
-    else:
-        ledger = engine.store.meta(fact).properties["applied_batches"]
     if fail_between_commits:
         raise RuntimeError("injected crash between fact and MV commits")
     last_mv = engine.store.meta(mvt).properties.get("last_stream_batch_id")
@@ -907,11 +905,11 @@ def incremental_mv_sink(
     # same manifest diff fed table_changes). coalesce reproduces
     # agg_delta's NULL-value handling (an all-NULL group sums to 0,
     # not NULL) and count(*) its NULL-inclusive row count.
-    mf_old, mf_new = engine.store.version_file_sets(fact, v_pre, v_post)
-    new_files = sorted(mf_new - mf_old)
-    batch_rows = engine.store.read_files(
-        fact, new_files, version=v_post,
-    ) if new_files else engine.read.table(fact, version=v_post).limit(0)
+    s_post = engine.store.snapshot(fact, v_post)
+    mf_old, mf_new = engine.store.version_file_sets(
+        engine.store.snapshot(fact, v_pre), s_post
+    )
+    batch_rows = engine.store.read_files(s_post, sorted(mf_new - mf_old))
     # pin the (small) delta ONCE: every consumer below — the MV
     # key-slice, apply_agg_delta's two join legs — re-plans it, and
     # the merge re-executes it inside its source staging write;

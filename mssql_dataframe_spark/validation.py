@@ -275,13 +275,13 @@ def enforce_foreign_keys(
     for name in sorted(fks):
         spec = fks[name]
         cols = list(spec["columns"])
-        # ONE version read per parent: the OCC dependency below and
-        # the stats-pruned scan are pinned to the same snapshot, so a
-        # foreign parent commit between them surfaces as an OCC
-        # failure at our commit instead of a mixed-snapshot verdict
-        parent_version = store.meta(spec["ref_table"]).version
+        # ONE snapshot per parent: the OCC dependency below and the
+        # stats-pruned scan describe the same version, so a foreign
+        # parent commit between them surfaces as an OCC failure at our
+        # commit instead of a mixed-snapshot verdict
+        parent_snap = store.snapshot(spec["ref_table"])
         if spec["ref_table"] != table_name:  # self-refs ride table OCC
-            dep = (spec["ref_table"], parent_version)
+            dep = (spec["ref_table"], parent_snap.version)
             if dep not in deps:
                 deps.append(dep)
         ref_bounds = {
@@ -289,15 +289,10 @@ def enforce_foreign_keys(
             for c, rc in zip(cols, spec["ref_columns"])
             if cbounds[c][0] is not None and cbounds[c][1] is not None
         }
-        parent_scan = None
+        touched = parent_snap.paths
         if ref_bounds:
-            touched, kept = store.split_by_key_ranges(
-                spec["ref_table"], ref_bounds, version=parent_version
-            )
-            if kept:
-                parent_scan = store.read_files(spec["ref_table"], touched)
-        if parent_scan is None:
-            parent_scan = store.read(spec["ref_table"])
+            touched, _ = store.split_by_key_ranges(parent_snap, ref_bounds)
+        parent_scan = store.read_files(parent_snap, touched)
         parent = parent_scan.select(
             *[
                 F.col(rc).alias(c)

@@ -73,12 +73,15 @@ def test_time_travel_retype_probes_skip_under_recorded_string_schema(
     engine, spark
 ):
     store, v_pre = _mk_retype(engine, spark)
-    meta = store.meta("dbo.rt")
     # current schema types '5' as int -> a probe WOULD engage today
-    assert store.typed_bloom_probes(meta, "val = 5") == [("val", 5)]
+    assert store.typed_bloom_probes(
+        store.snapshot("dbo.rt"), "val = 5"
+    ) == [("val", 5)]
     # ...but the snapshot's files were hashed under the STRING schema,
     # where a numeric-shaped literal renders bare and must skip
-    assert store.typed_bloom_probes(meta, "val = 5", version=v_pre) == []
+    assert store.typed_bloom_probes(
+        store.snapshot("dbo.rt", v_pre), "val = 5"
+    ) == []
     # end-to-end: the pre-retype snapshot surfaces the '05' row as 5
     # through the documented try_cast reprojection — pruning under the
     # current schema would have silently dropped it
@@ -107,15 +110,13 @@ def test_time_travel_retype_int_to_string_probes_under_recorded_int(
     v_pre = engine.store.meta("dbo.rti").version
     engine.modify.column("dbo.rti", "alter", "val", "nvarchar(10)")
     store = engine.store
-    meta = store.meta("dbo.rti")
+    pre = store.snapshot("dbo.rti", v_pre)
     # recorded schema is INT: '05' normalizes to 5 and probes engage —
     # matching what the sidecars hashed (decimal string of the int)
-    assert store.typed_bloom_probes(meta, "val = 05", version=v_pre) == [
+    assert store.typed_bloom_probes(pre, "val = 05") == [
         ("val", 5)
     ]
-    touched, pruned = store.bloom_prune(
-        "dbo.rti", [("val", 5)], version=v_pre
-    )
+    touched, pruned = store.bloom_prune(pre, [("val", 5)])
     # every file not holding 5 is provably absent; the one holding it
     # survives (an insert may split across several files, so pin the
     # shape, not an exact count)
@@ -138,8 +139,9 @@ def test_unrecorded_snapshot_schema_disables_pruning(engine, spark):
     doc.get("commit", {}).pop("schema", None)
     with open(p, "w") as f:
         json.dump(doc, f)
-    meta = store.meta("dbo.rt")
-    assert store.typed_bloom_probes(meta, "val = 5", version=v_pre) == []
+    assert store.typed_bloom_probes(
+        store.snapshot("dbo.rt", v_pre), "val = 5"
+    ) == []
 
 
 # -- 2. DELETE WHERE pruning pinned to its snapshot --------------------
@@ -163,9 +165,9 @@ def test_delete_where_bloom_prune_pinned_to_snapshot_version(
     seen = []
     orig = store.bloom_prune
 
-    def tap(name, eqs, version=None):
-        seen.append(version)
-        return orig(name, eqs, version=version)
+    def tap(snap, eqs):
+        seen.append(snap.version)
+        return orig(snap, eqs)
 
     store.bloom_prune = tap
     try:
@@ -342,9 +344,9 @@ def test_bloom_prune_sidecar_loads_are_cached(engine, spark):
             ),
         )
     store = engine.store
-    t1, p1 = store.bloom_prune("dbo.ca", [("name", "n_1_2")])
+    t1, p1 = store.bloom_prune(store.snapshot("dbo.ca"), [("name", "n_1_2")])
     before = _load_bloom_sidecar.cache_info()
-    t2, p2 = store.bloom_prune("dbo.ca", [("name", "n_1_2")])
+    t2, p2 = store.bloom_prune(store.snapshot("dbo.ca"), [("name", "n_1_2")])
     after = _load_bloom_sidecar.cache_info()
     assert (t2, p2) == (t1, p1)
     assert after.misses == before.misses  # no file re-opened
@@ -524,10 +526,10 @@ def test_fk_noaction_probe_narrows_child_files_by_blooms(
     reads = []
     orig_rf = store.read_files
 
-    def tap_rf(name, paths, *a, **k):
-        if name == "dbo.chi":
+    def tap_rf(snap, paths, *a, **k):
+        if snap.name == "dbo.chi":
             reads.append(list(paths))
-        return orig_rf(name, paths, *a, **k)
+        return orig_rf(snap, paths, *a, **k)
 
     store.read_files = tap_rf
     try:
@@ -603,26 +605,26 @@ def test_date_column_bloom_read_prunes_and_stays_exact(engine, spark):
             spark.createDataFrame(rows, "id long, d date").coalesce(1),
         )
     store = engine.store
-    meta = store.meta("dbo.dt")
+    snap = store.snapshot("dbo.dt")
     # strict ISO literal probes and prunes
-    assert store.typed_bloom_probes(meta, "d = 2024-02-03") == [
+    assert store.typed_bloom_probes(snap, "d = 2024-02-03") == [
         ("d", dt.date(2024, 2, 3))
     ]
     touched, pruned = store.bloom_prune(
-        "dbo.dt", [("d", dt.date(2024, 2, 3))]
+        snap, [("d", dt.date(2024, 2, 3))]
     )
     assert pruned >= 1
     got = engine.read.table("dbo.dt", where="d = 2024-02-03").collect()
     assert [(r.id, r.d) for r in got] == [(12, dt.date(2024, 2, 3))]
     # non-strict form: Spark casts it, Python must NOT probe it
-    assert store.typed_bloom_probes(meta, "d = 2024-2-3") == []
+    assert store.typed_bloom_probes(snap, "d = 2024-2-3") == []
     got2 = engine.read.table("dbo.dt", where="d = 2024-2-3").collect()
     assert [(r.id, r.d) for r in got2] == [(12, dt.date(2024, 2, 3))]
     # invalid date: no probe — and the filter itself raises under
     # ANSI cast (Spark 4 default), the same loud failure any
     # malformed typed literal gets; pruning must not pre-empt it
     # with a silently-empty result
-    assert store.typed_bloom_probes(meta, "d = 2024-13-01") == []
+    assert store.typed_bloom_probes(snap, "d = 2024-13-01") == []
     with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
         engine.read.table("dbo.dt", where="d = 2024-13-01").count()
 
@@ -683,10 +685,10 @@ def test_distributed_bloom_probe_matches_driver_loop(
     import mssql_dataframe_spark.store as st
 
     store = _mk_interleaved(engine, spark)
-    meta = store.meta("dbo.iv")
-    entries = store.manifest("dbo.iv", meta.version)
+    snap = store.snapshot("dbo.iv")
+    entries = snap.entries
 
-    t_drv, p_drv = store.bloom_prune("dbo.iv", [("id", 5)])
+    t_drv, p_drv = store.bloom_prune(snap, [("id", 5)])
     any_drv = [
         e["path"]
         for e in store.bloom_prune_entries_any(
@@ -694,7 +696,7 @@ def test_distributed_bloom_probe_matches_driver_loop(
         )
     ]
     monkeypatch.setattr(st, "BLOOM_PRUNE_DISTRIBUTED_THRESHOLD", 0)
-    t_dist, p_dist = store.bloom_prune("dbo.iv", [("id", 5)])
+    t_dist, p_dist = store.bloom_prune(snap, [("id", 5)])
     any_dist = [
         e["path"]
         for e in store.bloom_prune_entries_any(

@@ -2,18 +2,17 @@
 
 1. (medium) discover_matched_files reads ONE manifest snapshot: every
    manifest-shaped read inside it (stats split, entries list, bloom
-   candidates, the discovery scan's file list) is pinned to the
-   caller's meta.version, so a foreign commit between the caller's
-   meta read and discovery can neither drop files from the verdict
-   nor leak the foreign commit's files into it. The no-match early
-   return commits nothing, so the expected_version OCC backstop never
-   fires for this path — pinning is the ONLY defense.
-2. (low) split_by_key_ranges accepts a pinned version (the FK probe
-   loop passes expected[t]); pinned splits describe that snapshot's
-   manifest, not whatever is current.
-3. (low) bloom_narrow_entries accepts the caller's pinned meta (no
-   re-read that could see a foreign commit's bloom-column property)
-   and collects ALL match columns' capped distinct key sets in ONE
+   candidates, the discovery scan's file list) comes from the caller's
+   snapshot, so a foreign commit between the caller's snapshot and
+   discovery can neither drop files from the verdict nor leak the
+   foreign commit's files into it. The no-match early return commits
+   nothing, so the commit's OCC backstop never fires for this path —
+   the snapshot is the ONLY defense.
+2. (low) split_by_key_ranges splits the snapshot it is given (the FK
+   probe loop passes expected[t]), not whatever is current.
+3. (low) bloom_narrow_entries uses the snapshot's meta (no re-read
+   that could see a foreign commit's bloom-column property) and
+   collects ALL match columns' capped distinct key sets in ONE
    driver job (union of per-column limited frames), not one job per
    column.
 4. (low) _load_bloom_sidecar validates SEMANTICS, not just parse: a
@@ -77,7 +76,7 @@ def _mk_two_files(engine, spark, name="dbo.pin", bloom=False):
 
 def test_discovery_pinned_meta_ignores_foreign_commit(engine, spark):
     store = _mk_two_files(engine, spark)
-    meta_pinned = store.meta("dbo.pin")
+    meta_pinned = store.snapshot("dbo.pin")
     # foreign commit AFTER the caller captured its meta: new file with
     # tag c_0 — under the pinned snapshot this row does not exist
     engine.write.insert(
@@ -89,7 +88,7 @@ def test_discovery_pinned_meta_ignores_foreign_commit(engine, spark):
     assert store.meta("dbo.pin").version > meta_pinned.version
     src = spark.createDataFrame([("c_0",)], "tag string")
     matched = discover_matched_files(
-        store, "dbo.pin", None, src, ["tag"], meta=meta_pinned
+        store, meta_pinned, None, src, ["tag"]
     )
     # the pinned snapshot holds no c_0 row: the verdict must be empty
     # (an unpinned manifest read would discover the foreign file)
@@ -98,7 +97,7 @@ def test_discovery_pinned_meta_ignores_foreign_commit(engine, spark):
     # discovers exactly its file
     src_a = spark.createDataFrame([("a_3",)], "tag string")
     matched_a = discover_matched_files(
-        store, "dbo.pin", None, src_a, ["tag"], meta=meta_pinned
+        store, meta_pinned, None, src_a, ["tag"]
     )
     pinned_paths = {
         e["path"] for e in store.manifest("dbo.pin", meta_pinned.version)
@@ -106,7 +105,7 @@ def test_discovery_pinned_meta_ignores_foreign_commit(engine, spark):
     assert len(matched_a) == 1 and matched_a <= pinned_paths
 
 
-def test_discovery_unpinned_default_still_sees_current(engine, spark):
+def test_discovery_current_snapshot_sees_foreign_commit(engine, spark):
     store = _mk_two_files(engine, spark)
     engine.write.insert(
         "dbo.pin",
@@ -115,12 +114,14 @@ def test_discovery_unpinned_default_still_sees_current(engine, spark):
         ),
     )
     src = spark.createDataFrame([("c_0",)], "tag string")
-    # no meta passed: discovery is against the current snapshot
-    matched = discover_matched_files(store, "dbo.pin", None, src, ["tag"])
+    # a snapshot taken now: discovery is against the current version
+    matched = discover_matched_files(
+        store, store.snapshot("dbo.pin"), None, src, ["tag"]
+    )
     assert len(matched) == 1
 
 
-# -- 2. split_by_key_ranges honors a pinned version -------------------
+# -- 2. split_by_key_ranges splits the snapshot it is given -----------
 
 def test_split_by_key_ranges_version_pin(engine, spark):
     store = _mk_two_files(engine, spark)
@@ -128,27 +129,25 @@ def test_split_by_key_ranges_version_pin(engine, spark):
     # pinned to the one-file snapshot: the second file's id range
     # cannot appear — everything is provably disjoint from 100..109
     touched, kept = store.split_by_key_ranges(
-        "dbo.pin", {"id": (100, 109)}, version=v_after_first
+        store.snapshot("dbo.pin", v_after_first), {"id": (100, 109)}
     )
     assert touched == [] and len(kept) == 1
-    # unpinned: the current snapshot's second file is touched
+    # current: the current snapshot's second file is touched
     touched_now, kept_now = store.split_by_key_ranges(
-        "dbo.pin", {"id": (100, 109)}
+        store.snapshot("dbo.pin"), {"id": (100, 109)}
     )
     assert len(touched_now) == 1 and len(kept_now) == 1
 
 
-# -- 3. bloom_narrow_entries: caller meta + ONE collect job -----------
+# -- 3. bloom_narrow_entries: snapshot meta + ONE collect job ---------
 
 def test_bloom_narrow_uses_caller_meta_not_a_reread(engine, spark):
     store = _mk_two_files(engine, spark, bloom=True)
-    meta = store.meta("dbo.pin")
-    entries = store.manifest("dbo.pin", meta.version)
+    snap = store.snapshot("dbo.pin")
+    meta, entries = snap.meta, snap.entries
     src = spark.createDataFrame([("a_3",)], "tag string")
     # real meta: narrows to the one file holding a_3
-    surv = bloom_narrow_entries(
-        store, "dbo.pin", entries, src, ["tag"], meta=meta
-    )
+    surv = bloom_narrow_entries(store, snap, entries, src, ["tag"])
     assert surv is not None and len(surv) == 1
     # a pinned meta WITHOUT the bloom property must disable narrowing
     # even though the store's current meta still carries it — proving
@@ -163,7 +162,8 @@ def test_bloom_narrow_uses_caller_meta_not_a_reread(engine, spark):
     )
     assert (
         bloom_narrow_entries(
-            store, "dbo.pin", entries, src, ["tag"], meta=stripped
+            store, dataclasses.replace(snap, meta=stripped), entries, src,
+            ["tag"],
         )
         is None
     )
@@ -188,8 +188,8 @@ def test_bloom_narrow_multi_column_is_one_collect_job(
             ).coalesce(1),
         )
     store = engine.store
-    meta = store.meta("dbo.blm")
-    entries = store.manifest("dbo.blm", meta.version)
+    snap = store.snapshot("dbo.blm")
+    entries = snap.entries
     src = spark.createDataFrame(
         [("t_1_5", 55), ("t_1_7", 57)], "k1 string, k2 long"
     )
@@ -205,15 +205,13 @@ def test_bloom_narrow_multi_column_is_one_collect_job(
         return orig(self)
 
     monkeypatch.setattr(frame_cls, "collect", counting_collect)
-    surv = bloom_narrow_entries(
-        store, "dbo.blm", entries, src, ["k1", "k2"], meta=meta
-    )
+    surv = bloom_narrow_entries(store, snap, entries, src, ["k1", "k2"])
     # one driver job collects BOTH columns' capped distinct key sets
     assert calls["n"] == 1
     monkeypatch.undo()
     # and the composite verdict still isolates the single touched file
     assert surv is not None and len(surv) == 1
-    got = store.read_files("dbo.blm", [e["path"] for e in surv])
+    got = store.read_files(snap, [e["path"] for e in surv])
     assert got.where(F.col("k1") == "t_1_5").count() == 1
 
 
@@ -224,13 +222,10 @@ def test_bloom_narrow_all_null_column_still_excludes_everything(
     # nothing (equality never matches NULL): [] survivors, same
     # contract as before the single-job rewrite
     store = _mk_two_files(engine, spark, bloom=True)
-    meta = store.meta("dbo.pin")
-    entries = store.manifest("dbo.pin", meta.version)
+    snap = store.snapshot("dbo.pin")
     src = spark.createDataFrame([(None,)], "tag string")
     assert (
-        bloom_narrow_entries(
-            store, "dbo.pin", entries, src, ["tag"], meta=meta
-        )
+        bloom_narrow_entries(store, snap, snap.entries, src, ["tag"])
         == []
     )
 
@@ -267,25 +262,23 @@ def test_load_sidecar_drops_semantically_bad_columns(tmp_path):
 
 def test_corrupt_sidecar_degrades_to_keep_everything_read(engine, spark):
     store = _mk_two_files(engine, spark, bloom=True)
-    meta = store.meta("dbo.pin")
+    snap = store.snapshot("dbo.pin")
     pool = store._pool_dir("dbo.pin")
     # hand-corrupt EVERY sidecar to the m=0 shape before any probe has
     # cached it: a parsable-but-senseless filter must degrade to
     # no-pruning, not ZeroDivisionError
-    for e in store.manifest("dbo.pin", meta.version):
+    for e in snap.entries:
         sc = os.path.join(pool, e["path"] + ".bloom.json")
         with open(sc, "w") as f:
             json.dump({"tag": _sidecar_entry(0, 0, b"")}, f)
-    touched, pruned = store.bloom_prune("dbo.pin", [("tag", "a_3")])
+    touched, pruned = store.bloom_prune(snap, [("tag", "a_3")])
     assert pruned == 0 and len(touched) == 2  # keep-everything
     got = engine.read.table("dbo.pin", where="tag = a_3").collect()
     assert len(got) == 1 and got[0]["id"] == 3
     # the batch-key (any-of) probe kernel degrades identically
     src = spark.createDataFrame([("a_3",)], "tag string")
-    entries = store.manifest("dbo.pin", meta.version)
-    surv = bloom_narrow_entries(
-        store, "dbo.pin", entries, src, ["tag"], meta=meta
-    )
+    entries = snap.entries
+    surv = bloom_narrow_entries(store, snap, entries, src, ["tag"])
     assert surv is not None and len(surv) == len(entries)
 
 
@@ -337,8 +330,8 @@ def test_composite_key_missing_sidecar_column_never_false_negative(
     engine, spark
 ):
     store = _mk_interleaved(engine, spark)
-    meta = store.meta("dbo.adv")
-    entries = store.manifest("dbo.adv", meta.version)
+    snap = store.snapshot("dbo.adv")
+    entries = snap.entries
     # drop k2's filter from EVERY sidecar (the dropped/renamed-mid-
     # history shape): the manifest's bloom list still advertises k2,
     # so the probe enters the file and must degrade to KEEP
@@ -349,7 +342,7 @@ def test_composite_key_missing_sidecar_column_never_false_negative(
 
     # key t_12/12 lives in file 2 (f=2, i=1)
     src = spark.createDataFrame([("t_12", 12)], "k1 string, k2 long")
-    surv = bne(store, "dbo.adv", entries, src, ["k1", "k2"], meta=meta)
+    surv = bne(store, snap, entries, src, ["k1", "k2"])
     assert surv is not None  # k1 still engages
     surv_paths = {e["path"] for e in surv}
     holder = {
@@ -368,8 +361,8 @@ def test_composite_key_one_file_stripped_still_updates_its_rows(
     engine, spark
 ):
     store = _mk_interleaved(engine, spark)
-    meta = store.meta("dbo.adv")
-    entries = store.manifest("dbo.adv", meta.version)
+    snap = store.snapshot("dbo.adv")
+    entries = snap.entries
     # strip BOTH columns from one file's sidecar: that file must
     # survive every probe unconditionally
     victim = entries[1]["path"]
@@ -394,15 +387,15 @@ def test_batch_straddling_key_cap_partial_engagement(
     import mssql_dataframe_spark.core.write.update as upd_mod
 
     store = _mk_interleaved(engine, spark)
-    meta = store.meta("dbo.adv")
-    entries = store.manifest("dbo.adv", meta.version)
+    snap = store.snapshot("dbo.adv")
+    entries = snap.entries
     monkeypatch.setattr(upd_mod, "BLOOM_DISCOVERY_KEY_CAP", 4)
     # k1 side: 6 distinct values (over the cap of 4 -> must NOT
     # narrow); k2 side: 2 distinct values (engages)
     rows = [(f"t_{i}", 12) for i in range(6)] + [("t_12", 22)]
     src = spark.createDataFrame(rows, "k1 string, k2 long")
     surv = upd_mod.bloom_narrow_entries(
-        store, "dbo.adv", entries, src, ["k1", "k2"], meta=meta
+        store, snap, entries, src, ["k1", "k2"]
     )
     assert surv is not None  # k2 engaged
     surv_paths = {e["path"] for e in surv}
@@ -422,7 +415,7 @@ def test_batch_straddling_key_cap_partial_engagement(
     src_big = spark.createDataFrame(rows_big, "k1 string, k2 long")
     assert (
         upd_mod.bloom_narrow_entries(
-            store, "dbo.adv", entries, src_big, ["k1", "k2"], meta=meta
+            store, snap, entries, src_big, ["k1", "k2"]
         )
         is None
     )
@@ -434,8 +427,8 @@ def test_cap_boundary_exactly_at_cap_still_engages(
     import mssql_dataframe_spark.core.write.update as upd_mod
 
     store = _mk_interleaved(engine, spark)
-    meta = store.meta("dbo.adv")
-    entries = store.manifest("dbo.adv", meta.version)
+    snap = store.snapshot("dbo.adv")
+    entries = snap.entries
     monkeypatch.setattr(upd_mod, "BLOOM_DISCOVERY_KEY_CAP", 4)
     # exactly cap distinct values: engages (limit collects cap+1 to
     # detect overflow; cap itself is inclusive)
@@ -443,7 +436,7 @@ def test_cap_boundary_exactly_at_cap_still_engages(
         [(f"t_{f}", 0) for f in range(4)], "k1 string, k2 long"
     )
     surv = upd_mod.bloom_narrow_entries(
-        store, "dbo.adv", entries, src, ["k1"], meta=meta
+        store, snap, entries, src, ["k1"]
     )
     assert surv is not None
     holders = {

@@ -5,12 +5,11 @@
    out of retention mid-operation raises SQLSnapshotUnavailable —
    an empty manifest would make pinned discovery/split reads report
    a false 'nothing matched', and the no-match early-return paths
-   commit nothing, so the expected_version OCC backstop never fires.
-   Deliberate probes pass missing_ok=True.
+   commit nothing, so the commit's OCC backstop never fires.
 2. (low, ADVICE r13) discover_matched_files' content scan reads the
    PINNED snapshot's files under that snapshot's RECORDED schema
-   (read_files(version=meta.version)): a concurrent MODIFY COLUMN
-   between the caller's meta capture and the scan previously read the
+   (read_files(snap)): a concurrent MODIFY COLUMN between the
+   caller's snapshot and the scan previously read the
    pinned files under the CURRENT schema — a dropped/retyped match
    column then produced a false no-match early return that escaped
    the OCC backstop.
@@ -23,6 +22,7 @@
 
 from __future__ import annotations
 
+import dataclasses
 import os
 
 import pytest
@@ -60,8 +60,6 @@ def test_manifest_missing_raises(engine, spark):
     os.remove(store._manifest_path("dbo.mfr", v))
     with pytest.raises(SQLSnapshotUnavailable):
         store.manifest("dbo.mfr", v)
-    # deliberate probes keep the old behavior behind an explicit flag
-    assert store.manifest("dbo.mfr", v, missing_ok=True) == []
 
 
 def test_history_tolerates_retired_versions(engine, spark):
@@ -92,14 +90,12 @@ def test_discovery_survives_concurrent_column_drop(engine, spark):
     the CURRENT schema, the match column was absent, and discovery
     early-returned set())."""
     store = _mk_table(engine, spark, "dbo.ddrop")
-    pinned = store.meta("dbo.ddrop")
+    pinned = store.snapshot("dbo.ddrop")
     # foreign writer drops the match column AFTER the caller pinned
     engine.modify.column("dbo.ddrop", "drop", "tag")
     assert store.meta("dbo.ddrop").version > pinned.version
     src = spark.createDataFrame([("a_3",)], "tag string")
-    matched = discover_matched_files(
-        store, "dbo.ddrop", {}, src, ["tag"], meta=pinned,
-    )
+    matched = discover_matched_files(store, pinned, {}, src, ["tag"])
     assert matched, (
         "pinned discovery must find the file holding tag='a_3' under "
         "the pinned snapshot's recorded schema"
@@ -110,14 +106,14 @@ def test_discovery_survives_concurrent_column_drop(engine, spark):
 
 
 def test_read_files_version_pins_recorded_schema(engine, spark):
-    """read_files(version=v) reads under v's RECORDED schema: the
+    """read_files(snap) reads under the snapshot's RECORDED schema: the
     dropped column is still typed and populated for the pinned
     snapshot's files."""
     store = _mk_table(engine, spark, "dbo.rfv")
     pinned = store.meta("dbo.rfv")
     paths = [e["path"] for e in store.manifest("dbo.rfv", pinned.version)]
     engine.modify.column("dbo.rfv", "drop", "tag")
-    df = store.read_files("dbo.rfv", paths, version=pinned.version)
+    df = store.read_files(store.snapshot("dbo.rfv", pinned.version), paths)
     assert "tag" in df.columns
     tags = {r["tag"] for r in df.select("tag").collect()}
     assert tags == {f"a_{i}" for i in range(10)}
@@ -196,21 +192,19 @@ def test_bloom_narrow_cost_guard_engage_skip(engine, spark):
             ).coalesce(1),
         )
     store = engine.store
-    meta = store.meta("dbo.bcg")
-    entries = store.manifest("dbo.bcg", meta.version)
+    snap = store.snapshot("dbo.bcg")
+    meta, entries = snap.meta, snap.entries
     assert all(e.get("bytes") for e in entries)  # sizes now recorded
     src = spark.createDataFrame([("a_3",)], "tag string")
 
     # toy candidate set (a few KB) -> guard skips, probe never runs
     assert upd.bloom_narrow_entries(
-        store, "dbo.bcg", entries, src, ["tag"], meta=meta
+        store, snap, entries, src, ["tag"]
     ) is None
 
     # same candidates claiming production sizes -> engages and narrows
     big = [dict(e, bytes=100 << 20) for e in entries]
-    surv = upd.bloom_narrow_entries(
-        store, "dbo.bcg", big, src, ["tag"], meta=meta
-    )
+    surv = upd.bloom_narrow_entries(store, snap, big, src, ["tag"])
     assert surv is not None and len(surv) == 1
 
     # per-table force (THROUGHPUT scenario's knob): 0 always engages
@@ -218,7 +212,8 @@ def test_bloom_narrow_cost_guard_engage_skip(engine, spark):
         meta, bloom_narrow_min_bytes=0
     )
     surv = upd.bloom_narrow_entries(
-        store, "dbo.bcg", entries, src, ["tag"], meta=forced_meta
+        store, dataclasses.replace(snap, meta=forced_meta), entries, src,
+        ["tag"],
     )
     assert surv is not None and len(surv) == 1
 

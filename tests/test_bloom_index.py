@@ -57,7 +57,9 @@ def test_bloom_prune_points_to_single_file_and_read_is_exact(
     store = _mk(engine, spark)
     meta = store.meta("dbo.bl")
     n_files = len(store.manifest("dbo.bl", meta.version))
-    touched, pruned = store.bloom_prune("dbo.bl", [("name", "name_2_7")])
+    touched, pruned = store.bloom_prune(
+        store.snapshot("dbo.bl"), [("name", "name_2_7")]
+    )
     assert pruned >= n_files - 1 and len(touched) <= 1
     # the read itself: correct rows through the pruned scan
     got = engine.read.table("dbo.bl", where="name = name_2_7").collect()
@@ -228,7 +230,9 @@ def test_modify_bloom_index_backfills_on_rewrite(engine, spark):
     meta = store.meta("dbo.blx")
     ents = store.manifest("dbo.blx", meta.version)
     assert ents and all(e.get("bloom") == ["name"] for e in ents)
-    touched, pruned = store.bloom_prune("dbo.blx", [("name", "zzz")])
+    touched, pruned = store.bloom_prune(
+        store.snapshot("dbo.blx"), [("name", "zzz")]
+    )
     assert not touched and pruned == len(ents)
     # validation: unknown / untypeable columns rejected; [] drops
     with _pytest.raises(SQLColumnDoesNotExist):
@@ -302,7 +306,7 @@ def test_time_travel_reads_prune_with_blooms(engine, spark):
     )
     assert engine.read.table("dbo.bl", where="name = name_1_3").count() == 0
     touched, pruned = store.bloom_prune(
-        "dbo.bl", [("name", "name_1_3")], version=v
+        store.snapshot("dbo.bl", v), [("name", "name_1_3")]
     )
     assert pruned >= 1
     got = engine.read.table(
@@ -373,12 +377,12 @@ def test_numeric_shaped_literal_on_string_column_never_prunes(
         ),
     )
     store = engine.store
-    meta = store.meta("dbo.bln")
+    snap = store.snapshot("dbo.bln")
     # the probe machinery itself must refuse these literals
-    assert store.typed_bloom_probes(meta, "s = 5") == []
-    assert store.typed_bloom_probes(meta, "s = '5'") == []
-    assert store.typed_bloom_probes(meta, "s = TRUE") == []
-    assert store.typed_bloom_probes(meta, "s = xyz") == [("s", "xyz")]
+    assert store.typed_bloom_probes(snap, "s = 5") == []
+    assert store.typed_bloom_probes(snap, "s = '5'") == []
+    assert store.typed_bloom_probes(snap, "s = TRUE") == []
+    assert store.typed_bloom_probes(snap, "s = xyz") == [("s", "xyz")]
     # end to end: the numerically-equal row survives
     got = engine.read.table("dbo.bln", where="s = 5").collect()
     assert [(r.id, r.s) for r in got] == [(1, "05")]

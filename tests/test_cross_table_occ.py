@@ -36,13 +36,15 @@ def test_store_precondition_rejects_stale_dependency(engine, spark):
     with pytest.raises(
         errors.SQLConcurrentWriteConflict, match="referential-integrity"
     ):
-        store.append("dbo.xc", df, preconditions=[("dbo.xp", v - 1)])
+        store.append(
+            store.snapshot("dbo.xc"), df, preconditions=[("dbo.xp", v - 1)]
+        )
     # nothing was published and no staged file leaked
     assert engine.read.table("dbo.xc").count() == 0
     meta = store.meta("dbo.xc")
     assert store.manifest("dbo.xc", meta.version) == []
     # the true version passes
-    store.append("dbo.xc", df, preconditions=[("dbo.xp", v)])
+    store.append(store.snapshot("dbo.xc"), df, preconditions=[("dbo.xp", v)])
     assert engine.read.table("dbo.xc").count() == 1
 
 
@@ -61,15 +63,15 @@ def test_child_insert_fails_if_parent_changes_after_probe(engine, spark):
     orig_check = store._check_no_concurrent_commit
     raced = {"done": False}
 
-    def racing_check(name, base):
-        if name == "dbo.xc" and not raced["done"]:
+    def racing_check(snap):
+        if snap.name == "dbo.xc" and not raced["done"]:
             raced["done"] = True
             # the delete itself commits freely
             store._check_no_concurrent_commit = orig_check
             engine.write.delete(
                 "dbo.xp", spark.createDataFrame([Row(pk=4)], "pk long")
             )
-        return orig_check(name, base)
+        return orig_check(snap)
 
     store._check_no_concurrent_commit = racing_check
     try:
@@ -99,14 +101,14 @@ def test_parent_delete_fails_if_child_changes_after_probe(engine, spark):
     orig_commit = store._commit
     raced = {"done": False}
 
-    def racing_commit(name, *a, **kw):
-        if name == "dbo.xp" and not raced["done"]:
+    def racing_commit(snap, *a, **kw):
+        if snap.name == "dbo.xp" and not raced["done"]:
             raced["done"] = True
             engine.write.insert(
                 "dbo.xc",
                 spark.createDataFrame([Row(id=9, ref=3)], "id long, ref long"),
             )
-        return orig_commit(name, *a, **kw)
+        return orig_commit(snap, *a, **kw)
 
     store._commit = racing_commit
     try:
@@ -131,9 +133,9 @@ def _racing_split(engine, spark, store, ref):
     orig_split = store.split_by_key_ranges
     raced = {"done": False}
 
-    def racing_split(name, bounds, **kw):
-        res = orig_split(name, bounds, **kw)
-        if name == "dbo.xc" and not raced["done"]:
+    def racing_split(snap, bounds):
+        res = orig_split(snap, bounds)
+        if snap.name == "dbo.xc" and not raced["done"]:
             raced["done"] = True
             store.split_by_key_ranges = orig_split
             engine.write.insert(
@@ -252,3 +254,41 @@ def test_concurrent_merge_writers_converge_under_contention(
         for r in got.groupBy("writer").agg(F.count("*").alias("n")).collect()
     }
     assert per_writer == {1: 50, 2: 50}
+
+
+def test_write_fails_on_concurrent_meta_only_change(engine, spark):
+    """A second engine on the same root adds a CHECK constraint — a
+    meta-only change, no new version — while an update is staging.
+    The update's commit compares the whole current meta with its
+    snapshot's, so it fails cleanly instead of writing back the meta
+    it read and silently dropping the constraint."""
+    from mssql_dataframe_spark import SparkEngine
+
+    engine.create.table(
+        "dbo.t", {"k": "bigint", "v": "bigint"}, primary_key_column="k"
+    )
+    engine.write.insert(
+        "dbo.t", spark.createDataFrame([(1, 1), (2, 2)], "k long, v long")
+    )
+    other = SparkEngine(spark=spark, store_root=engine.store.root)
+    store = engine.store
+    orig_stage_in = store._stage_in
+
+    def racing_stage_in(*a, **kw):
+        out = orig_stage_in(*a, **kw)
+        other.modify.check_constraint("dbo.t", "add", "ck_v", "v >= 0")
+        return out
+
+    store._stage_in = racing_stage_in
+    try:
+        with pytest.raises(errors.SQLConcurrentWriteConflict):
+            engine.write.update(
+                "dbo.t", spark.createDataFrame([(1, 5)], "k long, v long")
+            )
+    finally:
+        store._stage_in = orig_stage_in
+    assert store.meta("dbo.t").properties["check_constraints"] == {
+        "ck_v": "v >= 0"
+    }
+    got = {r["k"]: r["v"] for r in engine.read.table("dbo.t").collect()}
+    assert got == {1: 1, 2: 2}

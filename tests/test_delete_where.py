@@ -102,11 +102,12 @@ def test_deleted_count_reads_own_commit(engine, spark, verb):
     commit = store.replace_files
 
     def commit_then_race(*args, **kwargs):
-        commit(*args, **kwargs)
+        committed = commit(*args, **kwargs)
         engine.write.insert(
             "dbo.dw",
             spark.createDataFrame([Row(id=500, v=5)], "id long, v int"),
         )
+        return committed
 
     store.replace_files = commit_then_race
     try:

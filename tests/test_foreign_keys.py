@@ -485,15 +485,15 @@ def test_cascade_partial_failure_contract(engine, spark):
     def _fail_parent(name, *a, **k):
         raise RuntimeError("injected parent-commit failure")
 
-    def replace_files(name, *a, **k):
-        if name == "dbo.cpar":
-            return _fail_parent(name)
-        return orig_replace(name, *a, **k)
+    def replace_files(snap, *a, **k):
+        if snap.name == "dbo.cpar":
+            return _fail_parent(snap.name)
+        return orig_replace(snap, *a, **k)
 
-    def overwrite(name, *a, **k):
-        if name == "dbo.cpar":
-            return _fail_parent(name)
-        return orig_over(name, *a, **k)
+    def overwrite(snap, *a, **k):
+        if snap.name == "dbo.cpar":
+            return _fail_parent(snap.name)
+        return orig_over(snap, *a, **k)
 
     store.replace_files, store.overwrite = replace_files, overwrite
     try:

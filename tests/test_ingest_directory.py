@@ -183,3 +183,44 @@ def test_ingest_ledger_commits_atomically_with_data(engine, spark, tmp_path):
     assert meta.version == v_before + 1  # ONE commit: data + ledger together
     assert len(meta.properties["ingested_files"]) == 1
     assert engine.read.table("dbo.led").count() == 1
+
+
+def test_concurrent_ingest_of_the_same_files_loads_them_once(
+    engine, spark, tmp_path, monkeypatch
+):
+    """Engine A builds its ledger, engine B (same store root) ingests
+    the same landing directory, then A commits. A commits only on the
+    snapshot its ledger came from, so it fails cleanly instead of
+    loading the file a second time."""
+    import pytest as _pytest
+
+    from mssql_dataframe_spark import SparkEngine
+    from mssql_dataframe_spark import errors as E
+    from mssql_dataframe_spark.core.write import ingest as ingest_mod
+
+    engine.create.table("dbo.ingr", {"id": "bigint", "v": "bigint"})
+    land = str(tmp_path / "land")
+    spark.range(10).selectExpr("id", "id AS v").coalesce(1).write.parquet(
+        os.path.join(land, "w1")
+    )
+    other = SparkEngine(spark=spark, store_root=engine.store.root)
+    orig_list = ingest_mod._list_data_files
+    raced = []
+
+    def list_then_race(path, suffix):
+        listed = orig_list(path, suffix)
+        if not raced:
+            raced.append(True)
+            assert other.write.ingest_directory("dbo.ingr", land) == 1
+        return listed
+
+    monkeypatch.setattr(ingest_mod, "_list_data_files", list_then_race)
+    with _pytest.raises(E.SQLConcurrentWriteConflict):
+        engine.write.ingest_directory("dbo.ingr", land)
+    monkeypatch.undo()
+    assert raced
+    assert engine.read.table("dbo.ingr").count() == 10
+    assert len(engine.store.meta("dbo.ingr").properties["ingested_files"]) == 1
+    # a retry sees B's ledger and loads nothing
+    assert engine.write.ingest_directory("dbo.ingr", land) == 0
+    assert engine.read.table("dbo.ingr").count() == 10

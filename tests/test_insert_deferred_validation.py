@@ -537,3 +537,90 @@ def test_write_verb_job_counts_and_file_accounting(engine, spark):
         "merge_delete_requires": 15,
         "scd2": 7,
     }
+
+
+def test_write_verb_snapshot_reads(engine, spark, monkeypatch):
+    """``_meta.json`` and manifest reads per write verb, pinned exactly:
+    each verb reads its table once through ``TableStore.snapshot``
+    (meta + manifest), ``_commit`` re-reads the meta once for its OCC
+    check, and vacuum reads the two older retained manifests the
+    commit does not already hold. One-table store at steady state
+    (``keep_versions`` 3, four commits in), so retention prunes on
+    every commit. The pins may only stay the same or fall."""
+    from mssql_dataframe_spark.store import TableStore
+
+    eng = engine
+    n = [0]
+    orig_meta, orig_manifest = TableStore.meta, TableStore.manifest
+
+    def meta(self, *a, **k):
+        n[0] += 1
+        return orig_meta(self, *a, **k)
+
+    def manifest(self, *a, **k):
+        n[0] += 1
+        return orig_manifest(self, *a, **k)
+
+    monkeypatch.setattr(TableStore, "meta", meta)
+    monkeypatch.setattr(TableStore, "manifest", manifest)
+
+    def reads(verb):
+        n[0] = 0
+        verb()
+        return n[0]
+
+    def batch(lo, hi):
+        return spark.range(lo, hi).selectExpr("id AS k", "id AS v")
+
+    got = {}
+    eng.create.table("dbo.sr", {"k": "bigint", "v": "bigint"},
+                     primary_key_column="k")
+    for i in range(4):
+        eng.write.insert("dbo.sr", batch(i * 50, i * 50 + 50))
+    assert eng.store.keep_versions == 3
+    got["insert"] = reads(lambda: eng.write.insert("dbo.sr", batch(200, 220)))
+    got["update"] = reads(lambda: eng.write.update(
+        "dbo.sr", spark.range(10, 20).selectExpr("id AS k", "-id AS v")
+    ))
+    got["merge"] = reads(lambda: eng.write.merge(
+        "dbo.sr", batch(60, 70), upsert=True
+    ))
+    got["delete"] = reads(lambda: eng.write.delete(
+        "dbo.sr", spark.range(110, 115).selectExpr("id AS k")
+    ))
+    got["delete_where"] = reads(
+        lambda: eng.write.delete_where("dbo.sr", "k = 120")
+    )
+    got["truncate"] = reads(lambda: eng.write.truncate("dbo.sr"))
+    eng.store.drop("dbo.sr")
+
+    eng.create.table(
+        "dbo.srs",
+        {"k": "bigint", "attr": "bigint", "_valid_from": "datetime2",
+         "_valid_to": "datetime2", "_is_current": "bit"},
+        properties={"stats_column": "k"},
+    )
+    for i in range(4):
+        eng.write.insert("dbo.srs", spark.range(i * 50, i * 50 + 50).select(
+            F.col("id").alias("k"), F.col("id").alias("attr"),
+            F.lit("2024-01-01 00:00:00").cast("timestamp_ntz")
+            .alias("_valid_from"),
+            F.lit(None).cast("timestamp_ntz").alias("_valid_to"),
+            F.lit(True).alias("_is_current"),
+        ))
+    got["scd2"] = reads(lambda: eng.write.merge_scd2(
+        "dbo.srs", spark.range(150, 160).selectExpr("id AS k", "-id AS attr"),
+        match_columns=["k"],
+        as_of=F.lit("2024-06-01 00:00:00").cast("timestamp_ntz"),
+    ))
+    # before one snapshot per verb: insert 9, update 10, merge 10,
+    # delete 12, delete_where 11, truncate 8, SCD2 10
+    assert got == {
+        "insert": 5,
+        "update": 5,
+        "merge": 5,
+        "delete": 5,
+        "delete_where": 5,
+        "truncate": 5,
+        "scd2": 5,
+    }

@@ -19,16 +19,19 @@ COLS = ("a", "b")
 
 
 class _StubStore:
-    """Just enough of TableStore for split_by_key_ranges."""
+    """Just enough of TableStore for snapshot + split_by_key_ranges."""
 
     def __init__(self, entries):
         self._entries = entries
 
     def meta(self, name):
-        return SimpleNamespace(version=0)
+        return SimpleNamespace(version=0, spark_schema=None)
 
     def manifest(self, name, version):
         return self._entries
+
+    def snapshot(self):
+        return TableStore.snapshot(self, "t")
 
 
 # values intentionally mix ints and short strings so the exact-type
@@ -103,7 +106,9 @@ def test_split_by_key_ranges_never_prunes_a_matching_file(case):
         if pool:
             bounds[col] = (min(pool), max(pool))
     store = _StubStore(entries)
-    touched, kept = TableStore.split_by_key_ranges(store, "t", bounds)
+    touched, kept = TableStore.split_by_key_ranges(
+        store, store.snapshot(), bounds
+    )
     assert len(touched) + len(kept) == len(entries)
     batch_set = set(batch)
     kept_paths = {e["path"] for e in kept}
@@ -122,7 +127,7 @@ def test_split_by_key_ranges_never_prunes_a_matching_file(case):
 def test_split_by_key_ranges_empty_bounds_touch_everything(case):
     _files, entries, _batch = case
     store = _StubStore(entries)
-    touched, kept = TableStore.split_by_key_ranges(store, "t", {})
+    touched, kept = TableStore.split_by_key_ranges(store, store.snapshot(), {})
     assert kept == [] and len(touched) == len(entries)
 
 
@@ -152,7 +157,7 @@ def test_split_by_key_ranges_prunes_numpy_string_bounds():
         {"path": "f1.parquet", "stats": {"k": ["m", "z"]}},
     ])
     touched, kept = TableStore.split_by_key_ranges(
-        store, "t", {"k": (np.str_("p"), np.str_("q"))}
+        store, store.snapshot(), {"k": (np.str_("p"), np.str_("q"))}
     )
     assert [e["path"] for e in kept] == ["f0.parquet"]
     assert touched == ["f1.parquet"]

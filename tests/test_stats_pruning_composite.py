@@ -29,9 +29,9 @@ def _tap_scans(store):
         calls["read"].append(name)
         return orig_read(name, *a, **k)
 
-    def read_files(name, paths, *a, **k):
-        calls["read_files"].append((name, list(paths)))
-        return orig_rf(name, paths, *a, **k)
+    def read_files(snap, paths, *a, **k):
+        calls["read_files"].append((snap.name, list(paths)))
+        return orig_rf(snap, paths, *a, **k)
 
     store.read, store.read_files = read, read_files
     return calls
@@ -265,14 +265,18 @@ def test_optimize_clusters_composite_pk_for_pruning(engine, spark):
         ).repartition(8),
     )
     # pre-optimize: a narrow first-column probe touches everything
-    t0, k0 = engine.store.split_by_key_ranges("dbo.copt", {"a": (0, 4)})
+    t0, k0 = engine.store.split_by_key_ranges(
+        engine.store.snapshot("dbo.copt"), {"a": (0, 4)}
+    )
     assert not k0
     engine.store.optimize("dbo.copt", small_file_rows=200)
     ents = engine.store.manifest(
         "dbo.copt", engine.store.meta("dbo.copt").version
     )
     assert len(ents) > 1  # really split into multiple clustered files
-    t1, k1 = engine.store.split_by_key_ranges("dbo.copt", {"a": (0, 4)})
+    t1, k1 = engine.store.split_by_key_ranges(
+        engine.store.snapshot("dbo.copt"), {"a": (0, 4)}
+    )
     assert k1  # pruning engages on the clustered layout
     assert len(t1) < len(ents)
     # data survives the rewrite intact

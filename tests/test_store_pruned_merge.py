@@ -303,7 +303,9 @@ def test_split_by_key_range_decision_table(engine, spark, tmp_path):
          "stats_col": "old_k"},  # stats describe a pre-PK-change column
         {"path": "i.parquet", "rows": 10, "min": 0, "max": 5},       # legacy entry
     ])
-    touched, kept = store.split_by_key_range("dbo.sp", "k", 100, 300)
+    touched, kept = store.split_by_key_range(
+        store.snapshot("dbo.sp"), "k", 100, 300
+    )
     assert sorted(touched) == ["b.parquet", "c.parquet", "d.parquet",
                                "f.parquet", "g.parquet", "h.parquet",
                                "i.parquet"]
@@ -312,13 +314,15 @@ def test_split_by_key_range_decision_table(engine, spark, tmp_path):
     # numpy-scalar bounds (Arrow-backed collects) must not disable pruning
     import numpy as np
     touched_np, kept_np = store.split_by_key_range(
-        "dbo.sp", "k", np.int64(100), np.int64(300)
+        store.snapshot("dbo.sp"), "k", np.int64(100), np.int64(300)
     )
     assert sorted(e["path"] for e in kept_np) == ["a.parquet", "e.parquet"]
     assert sorted(touched_np) == sorted(touched)
 
     # asking for a range on a non-stats column: everything touched
-    touched2, kept2 = store.split_by_key_range("dbo.sp", "v", 0.0, 1.0)
+    touched2, kept2 = store.split_by_key_range(
+        store.snapshot("dbo.sp"), "v", 0.0, 1.0
+    )
     assert len(touched2) == 9 and kept2 == []
 
 
@@ -332,7 +336,9 @@ def test_cdc_reads_only_differing_files(engine, spark):
         F.col("id").alias("k"), F.lit(3.5).cast("double").alias("v")
     )
     eng.write.merge("dbo.cdc", src, upsert=True)
-    mf0, mf1 = eng.store.version_file_sets("dbo.cdc", v0)
+    mf0, mf1 = eng.store.version_file_sets(
+        eng.store.snapshot("dbo.cdc", v0), eng.store.snapshot("dbo.cdc")
+    )
     shared = mf0 & mf1
     assert shared, "pruned merge should leave shared files"
 
@@ -457,7 +463,9 @@ def test_append_is_a_versioned_commit(engine, spark):
     eng.write.insert("dbo.vc", batch(100, 200))     # v2
     assert eng.store.meta("dbo.vc").version == 2
     # v2's manifest carries v1's files by reference (no rewrite)
-    mf1, mf2 = eng.store.version_file_sets("dbo.vc", 1, 2)
+    mf1, mf2 = eng.store.version_file_sets(
+        eng.store.snapshot("dbo.vc", 1), eng.store.snapshot("dbo.vc", 2)
+    )
     assert mf1 <= mf2 and len(mf2) > len(mf1)
 
     # snapshot stability: a reader holding v1 must not see the v2 rows
@@ -549,7 +557,7 @@ def test_multi_column_stats_prune_on_secondary_key(engine, spark):
     # pruning decision on the secondary column: narrow v2 range keeps
     # most files
     touched, kept = eng.store.split_by_key_range(
-        "dbo.mstats", "v2", 100_100, 100_150
+        eng.store.snapshot("dbo.mstats"), "v2", 100_100, 100_150
     )
     assert kept, "expected files provably disjoint on v2 to be kept"
     assert len(touched) < len(ents)
@@ -602,7 +610,7 @@ def test_optimize_zorder_prunes_on_both_keys(engine, spark):
     # narrow range on EACH key must keep (prune) at least one file
     for col in ("k", "v2"):
         touched, kept = eng.store.split_by_key_range(
-            "dbo.zord", col, 0, 255
+            eng.store.snapshot("dbo.zord"), col, 0, 255
         )
         assert kept, f"expected pruning on {col} after zorder"
         assert len(touched) < len(ents)
@@ -644,5 +652,7 @@ def test_optimize_zorder_five_columns_stays_in_long_range(engine, spark):
     # dimension's per-file span): a half-range probe on the first key
     # must prune the files living entirely in the other half — under
     # the pre-fix wrapped shifts the key is garbage and nothing prunes
-    touched, kept = eng.store.split_by_key_range("dbo.z5", "a", 0, 1023)
+    touched, kept = eng.store.split_by_key_range(
+        eng.store.snapshot("dbo.z5"), "a", 0, 1023
+    )
     assert kept and len(touched) < len(ents)

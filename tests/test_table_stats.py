@@ -112,12 +112,12 @@ def test_string_stats_bounds_truncated_but_valid(engine, spark):
     assert max(b[1] for b in bs) >= long_z
     # pruning with the widened bounds keeps the containing file
     touched, kept = engine.store.split_by_key_range(
-        "dbo.strst", "k", long_z, long_z
+        engine.store.snapshot("dbo.strst"), "k", long_z, long_z
     )
     assert touched, "file holding the key must stay touched"
     # and a provably-disjoint range still prunes
     touched2, kept2 = engine.store.split_by_key_range(
-        "dbo.strst", "k", "~~~", "~~~~"
+        engine.store.snapshot("dbo.strst"), "k", "~~~", "~~~~"
     )
     assert kept2 and not touched2
 

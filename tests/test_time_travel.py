@@ -251,8 +251,8 @@ def test_concurrent_writer_conflict_detected(engine, spark):
     _mk(engine, spark)
     store = engine.store
     # the loser plans a rewrite against the CURRENT snapshot...
-    stale_v = store.meta("dbo.tt").version
-    kept = store.manifest("dbo.tt", stale_v)
+    stale = store.snapshot("dbo.tt")
+    kept = list(stale.entries)
 
     # ...then another writer advances the table
     eng2 = SparkEngine(spark=spark, store_root=store.root)
@@ -262,10 +262,7 @@ def test_concurrent_writer_conflict_detected(engine, spark):
 
     loser_df = spark.createDataFrame([(8, "y")], "id long, val string")
     with _pytest.raises(SQLConcurrentWriteConflict, match="re-read and retry"):
-        store.replace_files(
-            "dbo.tt", loser_df, kept, op="update",
-            expected_version=stale_v,
-        )
+        store.replace_files(stale, loser_df, kept, op="update")
     # the winner's row survives and the loser left no staging debris
     rows = {
         (r["id"], r["val"]) for r in engine.read.table("dbo.tt").collect()
@@ -274,11 +271,8 @@ def test_concurrent_writer_conflict_detected(engine, spark):
     tdir = store._table_dir("dbo.tt")
     assert not [d for d in _os.listdir(tdir) if d.startswith(".stage_")]
     # a commit planned against the true current version still passes
-    v_now = store.meta("dbo.tt").version
-    store.replace_files(
-        "dbo.tt", loser_df, store.manifest("dbo.tt", v_now), op="update",
-        expected_version=v_now,
-    )
+    now = store.snapshot("dbo.tt")
+    store.replace_files(now, loser_df, list(now.entries), op="update")
     assert engine.read.table("dbo.tt").count() == 4
 
 
@@ -407,8 +401,8 @@ def test_vacuum_ignores_other_writers_staged_files(engine, spark):
 
     _mk(engine, spark)
     store = engine.store
-    meta = store.meta("dbo.tt")
-    base = meta.version
+    base = store.snapshot("dbo.tt")
+    meta = base.meta
     # writer A stages (the slow Spark job) but has not committed yet
     entries, stage_dir = store._stage_in(
         "dbo.tt",
@@ -434,7 +428,7 @@ def test_vacuum_ignores_other_writers_staged_files(engine, spark):
     from mssql_dataframe_spark.errors import SQLConcurrentWriteConflict
 
     with _pytest.raises(SQLConcurrentWriteConflict):
-        store._check_no_concurrent_commit("dbo.tt", base)
+        store._check_no_concurrent_commit(base)
     store._discard_staged(stage_dir)
     assert not _os.path.exists(stage_dir)
     # retried at the current version, the same rows land fine

@@ -529,16 +529,16 @@ def test_merge_auto_evolve_occ_loss_leaves_schema_unchanged(engine, spark):
     raced = {"done": False}
 
     def race(orig):
-        def wrapper(name, df, *a, **kw):
+        def wrapper(snap, df, *a, **kw):
             # fire the concurrent insert at the last pre-commit moment
-            if name == "dbo.vh17" and not raced["done"]:
+            if snap.name == "dbo.vh17" and not raced["done"]:
                 raced["done"] = True
                 store.replace_files, store.overwrite = orig_rf, orig_ow
                 engine.write.insert(
                     "dbo.vh17",
                     spark.createDataFrame([Row(k=9, v=9)], "k long, v long"),
                 )
-            return orig(name, df, *a, **kw)
+            return orig(snap, df, *a, **kw)
 
         return wrapper
 
