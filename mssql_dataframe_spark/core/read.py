@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..errors import SQLColumnDoesNotExist, SQLTableDoesNotExist
 from ..identifiers import compile_where
-from ..store import TableStore
+from ..store import STRING_BOUND_LIMIT, TableStore, entry_bounds
 from . import datetimeoffset as dto
 
 
@@ -135,10 +135,8 @@ class read:
                 )
             bounds = []
             for e in entries:
-                b = (e.get("stats") or {}).get(c)
-                if b is None and e.get("stats_col") == c:
-                    b = [e.get("min"), e.get("max")]
-                if b is None or b[0] is None or b[1] is None:
+                b = entry_bounds(e, c)
+                if b is None:
                     raise ValueError(
                         f"file {e['path']!r} carries no {c!r} bounds "
                         "(written before the column was stats-tracked); "
@@ -152,8 +150,6 @@ class read:
             # length may be widened, so refuse rather than serve a
             # value that might not exist in the data (the same
             # refuses-not-estimates contract as stale stats).
-            from ..store import STRING_BOUND_LIMIT
-
             maybe_truncated = [
                 b for b in bounds
                 if (isinstance(b[0], str)
@@ -279,11 +275,12 @@ class read:
             # a read, never a wrong row; files without a sidecar for
             # the probed column always stay. Time travel prunes too:
             # sidecars live exactly as long as their data file.
-            probes = self._store.typed_bloom_probes(snap, where)
-            if probes:
-                touched, pruned = self._store.bloom_prune(snap, probes)
-                if pruned:
-                    df = self._store.read_files(snap, touched)
+            kept = self._store.bloom_prune(snap, snap.entries, [
+                (c, [v])
+                for c, v in self._store.typed_bloom_probes(snap, where)
+            ])
+            if len(kept) < len(snap.entries):
+                df = self._store.read_files(snap, [e["path"] for e in kept])
         if df is None:
             df = self._store.read_files(snap, snap.paths)
         if version is not None and (

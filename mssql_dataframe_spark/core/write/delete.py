@@ -313,7 +313,7 @@ def delete_op(
 
     Three pruning tiers keep the rewrite ∝ matching files at any
     table size: a single-column-PK match uses zero-scan manifest
-    min/max stats (``split_by_key_range``); any other match key (a
+    min/max stats (``split_by_key_ranges``); any other match key (a
     composite PK, or an ON DELETE CASCADE child delete matching on FK
     columns) first stats-NARROWS candidates by per-column bounds
     intersection (``split_by_key_ranges``), then content-discovers
@@ -456,15 +456,11 @@ def delete_where_op(
     # conjunct's value cannot contain a matching row, so the discovery
     # scan (and everything downstream) reads only the surviving files
     # — point deletes on an indexed column skip the table
-    scan_entries = entries
-    probes = store.typed_bloom_probes(snap, where)
-    if probes:
-        touched_b, pruned_b = store.bloom_prune(snap, probes)
-        if pruned_b:
-            if not touched_b:
-                return 0  # provably no matching row anywhere
-            bset = set(touched_b)
-            scan_entries = [e for e in entries if e["path"] in bset]
+    scan_entries = store.bloom_prune(snap, entries, [
+        (c, [v]) for c, v in store.typed_bloom_probes(snap, where)
+    ])
+    if not scan_entries:
+        return 0  # provably no matching row anywhere
     target_all = store.read_files(
         snap, [e["path"] for e in scan_entries]
     )

@@ -225,18 +225,12 @@ def bloom_narrow_entries(store, snap, entries, src_keys, match):
     for r in unioned.collect():
         i = r["__i"]
         by_col[i].append(r[f"__v_{i}"])
-    engaged = False
-    for i, c in enumerate(bcols):
-        vals = by_col[i]
-        if len(vals) > BLOOM_DISCOVERY_KEY_CAP:
-            continue  # too many keys to probe driver-side
-        engaged = True
-        entries = store.bloom_prune_entries_any(
-            snap.name, entries, c, vals
-        )
-        if not entries:
-            return []
-    return entries if engaged else None
+    # a column past the cap has too many keys to probe driver-side
+    probes = [
+        (c, by_col[i]) for i, c in enumerate(bcols)
+        if len(by_col[i]) <= BLOOM_DISCOVERY_KEY_CAP
+    ]
+    return store.bloom_prune(snap, entries, probes) if probes else None
 
 
 def discover_matched_files(

@@ -215,6 +215,33 @@ def _bloom_hash_pair(value_bytes: bytes) -> tuple[int, int]:
     )
 
 
+def _bloom_hashes(encoded):
+    """(n, 2) uint64 array of the ``_bloom_hash_pair`` of each
+    canonical value in ``encoded`` — one md5 per value, the |1
+    pre-applied. The build and the probe both hash through here."""
+    import hashlib
+
+    import numpy as np
+
+    digests = b"".join(hashlib.md5(e).digest() for e in encoded)
+    h = np.frombuffer(digests, dtype="<u8").reshape(-1, 2).copy()
+    h[:, 1] |= np.uint64(1)
+    return h
+
+
+def _bloom_positions(h, m: int, k: int):
+    """(n, k) bit positions ``(h1 + i*h2) % m`` of the hashed values
+    ``h`` in an m-bit, k-probe filter — bit-identical to the scalar
+    ``_bloom_might_contain`` loop. Reducing each hash mod m FIRST keeps
+    ``((h1%m) + i*(h2%m)) % m`` exact in uint64 (m <= 2^23, so no
+    wraparound), where a naive uint64 h1 + i*h2 would wrap mod 2^64
+    and move bits."""
+    import numpy as np
+
+    a1, a2 = h[:, 0] % m, h[:, 1] % m
+    return (a1[:, None] + np.arange(k, dtype=np.uint64) * a2[:, None]) % m
+
+
 def _bloom_value_bytes(v) -> Optional[bytes]:
     """Canonical hashed representation of one cell: integers as their
     decimal string (so the query literal '05' and the stored 5 agree
@@ -256,11 +283,9 @@ def _bloom_build_for_file(path: str, cols: list[str]) -> dict:
     import zlib
 
     import numpy as np
-    import pyarrow.parquet as pq
-
-    import hashlib
-
+    import pyarrow as pa
     import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
     pf = pq.ParquetFile(path)
     names = set(pf.schema_arrow.names)
@@ -283,8 +308,6 @@ def _bloom_build_for_file(path: str, cols: list[str]) -> dict:
         uniq = pc.unique(
             tbl.column(c).combine_chunks()
         ).drop_null()
-        import pyarrow as pa
-
         typ = uniq.type
         if pa.types.is_integer(typ):
             encoded = set(
@@ -305,25 +328,11 @@ def _bloom_build_for_file(path: str, cols: list[str]) -> dict:
         if not encoded:
             continue
         m = min(BLOOM_MAX_BITS, max(64, len(encoded) * BLOOM_BITS_PER_VALUE))
-        # vectorized bit-set, bit-identical to the scalar
-        # _bloom_hash_pair/_bloom_might_contain contract: one md5 per
-        # unique value yields (h1, h2); reducing each mod m FIRST
-        # keeps (h1 + i*h2) % m == ((h1%m) + i*(h2%m)) % m exact in
-        # uint64 (m <= 2^23, so a1 + 6*a2 < 2^26 — no wraparound),
-        # where naive uint64 h1 + i*h2 would wrap mod 2^64 and move
-        # bits. All 7 probe positions per value land via one fancy-
-        # indexed bitwise_or (duplicates OR idempotently).
-        digests = b"".join(hashlib.md5(e).digest() for e in encoded)
-        h = np.frombuffer(digests, dtype="<u8").reshape(-1, 2)
-        a1 = h[:, 0] % m
-        a2 = (h[:, 1] | 1) % m
-        idx = (
-            a1[:, None] + np.arange(BLOOM_K, dtype=np.uint64) * a2[:, None]
-        ) % m
         # boolean fancy-assign + little-endian packbits: byte[i] bit j
         # == flag[8i+j] == exactly the scalar `bits[idx>>3] |= 1 <<
         # (idx&7)` layout, ~10x faster than np.bitwise_or.at
         flags = np.zeros(((m + 7) // 8) * 8, dtype=bool)
+        idx = _bloom_positions(_bloom_hashes(encoded), m, BLOOM_K)
         flags[idx.ravel()] = True
         bits = np.packbits(flags, bitorder="little")
         out[c] = {
@@ -363,15 +372,19 @@ BLOOM_PRUNE_DISTRIBUTED_THRESHOLD = 4096
 
 
 def _bloom_file_keeps(
-    pool: str, path: str, bcols: list, probes: list
+    pool: str, path: str, bcols: list, hashed: list
 ) -> bool:
-    """Single-file verdict for ``bloom_prune``: False = every probed
-    value provably absent for some probed column (prune the file).
-    Module-level (picklable) so the large-manifest distributed probe
-    can run it on executors; executors share the pool directory the
-    same way the distributed footer harvest does."""
+    """One file's verdict for ``TableStore.bloom_prune``: False when,
+    for some ``(column, _bloom_hashes)`` probe, the file's sidecar
+    proves EVERY hashed value absent (a value may be present iff all k
+    of its bits are set); a column the file has no filter for never
+    prunes. Module-level (picklable) so the large-manifest distributed
+    probe can run it on executors; executors share the pool directory
+    the same way the distributed footer harvest does."""
+    import numpy as np
+
     sidecar = None
-    for c, vb in probes:
+    for c, h in hashed:
         if c not in bcols:
             continue
         if sidecar is None:
@@ -379,36 +392,13 @@ def _bloom_file_keeps(
                 os.path.join(pool, path + ".bloom.json")
             )
         bl = sidecar.get(c)
-        if bl and not _bloom_might_contain(bl, vb):
+        if not bl:
+            continue
+        idx = _bloom_positions(h, bl["m"], bl["k"])
+        bits = np.frombuffer(bl["_bits"], dtype=np.uint8)
+        if not ((bits[idx >> 3] >> (idx & 7)) & 1).all(axis=1).any():
             return False
     return True
-
-
-def _bloom_file_keeps_any(
-    pool: str, path: str, bcols: list, col: str, h_bytes: bytes
-) -> bool:
-    """Single-file verdict for ``bloom_prune_entries_any``: True when
-    ANY of the batch's hashed keys (``h_bytes`` = the packed (h1, h2)
-    uint64 pairs) may be present in ``col``. Module-level/picklable
-    for the distributed form."""
-    import numpy as np
-
-    if col not in bcols:
-        return True
-    bl = _load_bloom_sidecar(
-        os.path.join(pool, path + ".bloom.json")
-    ).get(col)
-    if not bl:
-        return True
-    h = np.frombuffer(h_bytes, dtype="<u8").reshape(-1, 2)
-    m = bl["m"]
-    bits = np.frombuffer(bl["_bits"], dtype=np.uint8)
-    a1, a2 = h[:, 0] % m, h[:, 1] % m
-    idx = (
-        a1[:, None] + np.arange(bl["k"], dtype=np.uint64) * a2[:, None]
-    ) % m
-    present = bits[idx >> 3] & (np.uint64(1) << (idx & 7)).astype(np.uint8)
-    return bool((present != 0).all(axis=1).any())
 
 
 @functools.lru_cache(maxsize=2048)
@@ -474,7 +464,7 @@ def _plain_scalar(v):
     """Normalize a collected bound to a plain Python int/str (the only
     types manifest stats hold). numpy scalars arrive from Arrow-backed
     collects; without unwrapping them the exact-type guard in
-    ``split_by_key_range`` would silently disable pruning. Returns None
+    ``split_by_key_ranges`` would silently disable pruning. Returns None
     for anything else (date/decimal/float bounds — stats-less columns,
     so pruning correctly stays off)."""
     if isinstance(v, bool):
@@ -500,6 +490,21 @@ def _plain_scalar(v):
         if isinstance(v, str):
             return str(v)
     return None
+
+
+def entry_bounds(entry: dict, col: str) -> Optional[tuple]:
+    """``(min, max)`` recorded for ``col`` in one manifest entry, or
+    None when the entry records no bounds for it or either end is
+    unknown. Bounds come from the column-labeled ``stats`` map
+    (multi-column stats), with the legacy single
+    ``stats_col``/``min``/``max`` triple as fallback — and only when
+    its ``stats_col`` names ``col``."""
+    b = (entry.get("stats") or {}).get(col)
+    if b is None and entry.get("stats_col") == col:
+        b = (entry.get("min"), entry.get("max"))
+    if b is None or b[0] is None or b[1] is None:
+        return None
+    return tuple(b)
 
 
 class TableStore:
@@ -1034,126 +1039,57 @@ class TableStore:
         return probes
 
     def bloom_prune(
-        self, snap: Snapshot, eqs: list[tuple]
-    ) -> tuple[list[str], int]:
-        """File paths of ``snap`` that MAY contain a row matching every
-        ``(column, value)`` equality, by per-file bloom sidecar test
-        (sidecars live exactly as long as their data file, so
-        time-travel reads prune too). Files without a filter for a
-        probed column always count as touched (older files, non-indexed
-        columns) — pruning is conservative, never incorrect (a bloom
-        has no false negatives). Returns ``(touched paths, n_pruned)``. Driver-side
-        O(files) sidecar reads — the point-lookup analog of
-        ``split_by_key_ranges``: range stats prune clustered keys;
-        blooms prune EQUALITY probes on any indexed column regardless
-        of layout."""
-        entries = snap.entries
-        probes = []
-        for c, v in eqs:
-            vb = _bloom_value_bytes(v)
-            if vb is not None:
-                probes.append((c, vb))
+        self, snap: Snapshot, entries: list[dict], probes: list[tuple]
+    ) -> list[dict]:
+        """The ``entries`` of ``snap`` that MAY hold, for EVERY
+        ``(column, values)`` probe, at least one of its values — by
+        per-file bloom sidecar test. The one sidecar probe: point
+        reads and DELETE WHERE pass one value per equality conjunct
+        (``typed_bloom_probes``); write-path discovery passes each
+        match column's batch keys (a file whose sidecar excludes every
+        batch key of one column cannot hold a matching tuple, so
+        per-column exclusion is valid for composite keys). The
+        equality analog of ``split_by_key_ranges``: range stats prune
+        clustered keys, blooms prune any indexed column regardless of
+        layout — time-travel reads too (sidecars live exactly as long
+        as their data file).
+
+        Conservative, never incorrect (a bloom has no false
+        negatives): a probe holding a value that cannot canonicalize
+        does not prune (it could live anywhere), and a file without a
+        sidecar for a probed column survives. A probe with no values
+        (callers drop NULLs, which never equal) prunes every file.
+        Values hash once per call; the driver loop reads LRU-cached,
+        pre-decompressed sidecars, so a repeated probe against an
+        unchanged snapshot costs O(probes), not O(files × zlib)."""
+        hashed = []
+        for c, values in probes:
+            if not values:
+                return []
+            encoded = [_bloom_value_bytes(v) for v in values]
+            if None not in encoded:
+                hashed.append((c, _bloom_hashes(encoded)))
         pool = self._pool_dir(snap.name)
-        pcols = {c for c, _ in probes}
+        pcols = {c for c, _ in hashed}
         need = [
-            e for e in entries
+            (e["path"], e.get("bloom") or []) for e in entries
             if pcols.intersection(e.get("bloom") or [])
         ]
         if len(need) > BLOOM_PRUNE_DISTRIBUTED_THRESHOLD:
-            # large manifest: executors open the sidecars (same
-            # dispatch shape as the footer harvest); the driver
-            # collects only (path, keep) booleans
-            pr = list(probes)
             verdicts = dict(
                 self.spark.sparkContext.parallelize(
-                    [(e["path"], e.get("bloom") or []) for e in need],
-                    numSlices=min(512, max(1, len(need) // 64)),
+                    need, numSlices=min(512, max(1, len(need) // 64)),
                 )
                 .map(lambda t: (
-                    t[0], _bloom_file_keeps(pool, t[0], t[1], pr)
-                ))
-                .collect()
-            )
-        else:
-            # LRU-cached, pre-decompressed driver loop: the second
-            # probe against an unchanged snapshot costs O(probes),
-            # not O(files × zlib) (sidecars are immutable)
-            verdicts = {
-                e["path"]: _bloom_file_keeps(
-                    pool, e["path"], e.get("bloom") or [], probes
-                )
-                for e in need
-            }
-        touched, pruned = [], 0
-        for e in entries:
-            if verdicts.get(e["path"], True):
-                touched.append(e["path"])
-            else:
-                pruned += 1
-        return touched, pruned
-
-    def bloom_prune_entries_any(
-        self, name: str, entries: list[dict], col: str, values: list
-    ) -> list[dict]:
-        """Manifest entries that MAY hold ANY of ``values`` in ``col``
-        — the batch-key form of ``bloom_prune`` used by write-path
-        content discovery (merge/update/delete/SCD2): a file whose
-        sidecar excludes EVERY batch key for a match column cannot
-        contain a matching row, regardless of how coarse its min/max
-        stats are (high-entropy or interleaved keys overlap every
-        range). Per-column exclusion stays valid for composite keys:
-        if no source value of one column can be in the file, no source
-        TUPLE can match a row there.
-
-        Unlike the where-grammar path there is no literal rendering —
-        the caller's equality is a typed DataFrame join, so the exact
-        canonical bytes are correct for strings too. A value that
-        cannot canonicalize (non-int/str) disables pruning entirely
-        (it could live anywhere); an empty value list (the caller
-        pre-drops NULLs, which never equal) matches nothing. Files
-        without a sidecar for ``col`` always survive. Vectorized: one
-        md5 per value, then numpy-only per file (k probe positions per
-        value via per-operand-mod arithmetic, exact in uint64)."""
-        import hashlib
-
-        import numpy as np
-
-        if not values:
-            return []
-        probes = []
-        for v in values:
-            vb = _bloom_value_bytes(v)
-            if vb is None:
-                return entries  # uncanonicalizable key: no pruning
-            probes.append(vb)
-        digests = b"".join(hashlib.md5(p).digest() for p in probes)
-        h = np.frombuffer(digests, dtype="<u8").reshape(-1, 2).copy()
-        h[:, 1] |= np.uint64(1)  # the |1 of _bloom_hash_pair, pre-applied
-        h_bytes = h.tobytes()
-        pool = self._pool_dir(name)
-        need = [e for e in entries if col in (e.get("bloom") or [])]
-        if len(need) > BLOOM_PRUNE_DISTRIBUTED_THRESHOLD:
-            verdicts = dict(
-                self.spark.sparkContext.parallelize(
-                    [(e["path"], e.get("bloom") or []) for e in need],
-                    numSlices=min(512, max(1, len(need) // 64)),
-                )
-                .map(lambda t: (
-                    t[0],
-                    _bloom_file_keeps_any(pool, t[0], t[1], col, h_bytes),
+                    t[0], _bloom_file_keeps(pool, t[0], t[1], hashed)
                 ))
                 .collect()
             )
         else:
             verdicts = {
-                e["path"]: _bloom_file_keeps_any(
-                    pool, e["path"], e.get("bloom") or [], col, h_bytes
-                )
-                for e in need
+                p: _bloom_file_keeps(pool, p, bcols, hashed)
+                for p, bcols in need
             }
-        # a value is maybe-present iff all k bits are set; the file
-        # survives iff any value is maybe-present (files without a
-        # sidecar for the column never entered `need` and survive)
         return [e for e in entries if verdicts.get(e["path"], True)]
 
     def _stage_in(self, name: str, df: DataFrame, schema: T.StructType,
@@ -1254,7 +1190,7 @@ class TableStore:
             lo, hi = bounds.get(stats_col, (None, None))
             # stats are recorded PER ENTRY, column-labeled: after a
             # primary-key or stats_column change, old entries' bounds
-            # describe the OLD column — split_by_key_range must not
+            # describe the OLD column — split_by_key_ranges must not
             # compare them against the new key (silent lost updates
             # otherwise). The legacy stats_col/min/max triple stays for
             # the primary column; "stats" carries every harvested one.
@@ -1392,34 +1328,22 @@ class TableStore:
             *[os.path.join(pool, p) for p in entry_paths]
         )
 
-    def split_by_key_range(
-        self, snap: Snapshot, col: str, lo, hi
-    ) -> tuple[list[str], list[dict]]:
-        """Partition ``snap``'s manifest into (touched paths, kept
-        entries) for a source whose ``col`` values span [lo, hi].
-        An entry is kept ONLY when it carries bounds RECORDED FOR
-        ``col`` (bounds written before a primary-key/stats_column
-        change describe a different column and must count as touched)
-        and its range is provably disjoint. Bounds come from the
-        column-labeled ``stats`` map when present (multi-column stats:
-        any recorded column can prune) with the legacy single
-        stats_col/min/max triple as fallback. Files without usable
-        stats for ``col`` are always touched (safe)."""
-        return self.split_by_key_ranges(snap, {col: (lo, hi)})
-
     def split_by_key_ranges(
         self, snap: Snapshot, bounds: dict
     ) -> tuple[list[str], list[dict]]:
-        """Multi-column generalization of ``split_by_key_range``:
-        ``bounds`` maps column -> (lo, hi) of the source batch. An
-        entry is kept (provably untouched) when ANY bounded column has
-        usable recorded stats whose range is disjoint from the batch's
-        — a file can be skipped if even one key column's range excludes
-        every batch value (per-column min/max intersection, the Delta
-        data-skipping rule). Columns whose bounds are not plain
-        int/str, or files without usable stats for every still-
-        undecided column, count as touched (safe). An all-unusable
-        ``bounds`` touches everything."""
+        """Partition ``snap``'s manifest into (touched paths, kept
+        entries) for a source batch whose values span ``bounds``
+        (column -> (lo, hi)). An entry is kept (provably untouched)
+        when ANY bounded column has usable recorded stats whose range
+        is disjoint from the batch's — a file can be skipped if even
+        one key column's range excludes every batch value (per-column
+        min/max intersection, the Delta data-skipping rule). Bounds
+        are read by ``entry_bounds``: only bounds RECORDED FOR the
+        column count (bounds written before a primary-key/stats_column
+        change describe a different column). Columns whose bounds are
+        not plain int/str, or files without usable stats for every
+        still-undecided column, count as touched (safe). An
+        all-unusable ``bounds`` touches everything."""
         clean = {}
         for col, (lo, hi) in bounds.items():
             lo, hi = _plain_scalar(lo), _plain_scalar(hi)
@@ -1431,13 +1355,9 @@ class TableStore:
         for e in snap.entries:
             disjoint = False
             for col, (lo, hi) in clean.items():
-                b = (e.get("stats") or {}).get(col)
-                if b is None and e.get("stats_col") == col:
-                    b = (e.get("min"), e.get("max"))
+                b = entry_bounds(e, col)
                 if (
                     b is not None
-                    and b[0] is not None
-                    and b[1] is not None
                     and type(b[0]) is type(lo)
                     and (b[1] < lo or b[0] > hi)
                 ):
@@ -1971,7 +1891,7 @@ class TableStore:
         clustered by the primary key (``repartitionByRange`` + sort)
         when the table has a single-column PK, so each compacted file
         covers a disjoint key range and later pruned merges/updates
-        (see ``split_by_key_range``) skip precisely. Files already at
+        (see ``split_by_key_ranges``) skip precisely. Files already at
         target size carry over by reference. Small-file accumulation is
         the natural by-product of streaming ``foreachBatch`` upserts
         and micro-batch appends; at 100 TB compaction is what keeps
@@ -2006,7 +1926,7 @@ class TableStore:
         ZORDER BY`` analog): rewrite the WHOLE table ordered along a
         Morton curve over ``cols``, so every file covers a tight range
         in EVERY listed column at once — with the column-labeled stats
-        map, ``split_by_key_range`` then prunes sharply on whichever
+        map, ``split_by_key_ranges`` then prunes sharply on whichever
         of the keys a mutation or scan filters by (1-D clustering
         sharpens one key and scrambles the others).
 

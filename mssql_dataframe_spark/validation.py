@@ -251,6 +251,8 @@ def enforce_foreign_keys(
     """
     if not fks:
         return []
+    from .core.write.update import existing_candidates
+
     # ONE keys-only agg over the outgoing rows collects per-column
     # min/max for every FK column, so each parent probe below can
     # stats-prune its parent scan: a parent file whose recorded range
@@ -284,33 +286,30 @@ def enforce_foreign_keys(
             dep = (spec["ref_table"], parent_snap.version)
             if dep not in deps:
                 deps.append(dep)
+        pairs = list(zip(cols, spec["ref_columns"]))
         ref_bounds = {
-            rc: cbounds[c]
-            for c, rc in zip(cols, spec["ref_columns"])
+            rc: cbounds[c] for c, rc in pairs
             if cbounds[c][0] is not None and cbounds[c][1] is not None
         }
-        touched = parent_snap.paths
-        if ref_bounds:
-            touched, _ = store.split_by_key_ranges(parent_snap, ref_bounds)
-        parent_scan = store.read_files(parent_snap, touched)
-        parent = parent_scan.select(
-            *[
-                F.col(rc).alias(c)
-                for c, rc in zip(cols, spec["ref_columns"])
-            ]
-        )
+        # the parent's stats, then its bloom sidecars, narrow the scan
+        # (the existing side of every key probe); a sidecar is probed
+        # only where the child column has the parent column's type: a
+        # child '05' equals a parent 5 under Spark's comparison but
+        # hashes differently
+        ptypes = {f.name: f.dataType for f in parent_snap.meta.spark_schema}
+        parent_scan = store.read_files(parent_snap, existing_candidates(
+            store, parent_snap, ref_bounds,
+            df.select(*[F.col(c).alias(rc) for c, rc in pairs]),
+            [rc for c, rc in pairs if df.schema[c].dataType == ptypes[rc]],
+        ))
+        parent = parent_scan.select(*[F.col(rc).alias(c) for c, rc in pairs])
         if table_name is not None and spec["ref_table"] == table_name:
             ref_in_batch = [
                 rc for rc in spec["ref_columns"] if rc in df.columns
             ]
             if len(ref_in_batch) == len(spec["ref_columns"]):
                 parent = parent.unionByName(
-                    df.select(
-                        *[
-                            F.col(rc).alias(c)
-                            for c, rc in zip(cols, spec["ref_columns"])
-                        ]
-                    )
+                    df.select(*[F.col(rc).alias(c) for c, rc in pairs])
                 )
         orphans = (
             df.select(*cols)

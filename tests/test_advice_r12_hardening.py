@@ -116,7 +116,8 @@ def test_time_travel_retype_int_to_string_probes_under_recorded_int(
     assert store.typed_bloom_probes(pre, "val = 05") == [
         ("val", 5)
     ]
-    touched, pruned = store.bloom_prune(pre, [("val", 5)])
+    kept = store.bloom_prune(pre, pre.entries, [("val", [5])])
+    touched, pruned = [e["path"] for e in kept], len(pre.entries) - len(kept)
     # every file not holding 5 is provably absent; the one holding it
     # survives (an insert may split across several files, so pin the
     # shape, not an exact count)
@@ -165,9 +166,9 @@ def test_delete_where_bloom_prune_pinned_to_snapshot_version(
     seen = []
     orig = store.bloom_prune
 
-    def tap(snap, eqs):
+    def tap(snap, entries, probes):
         seen.append(snap.version)
-        return orig(snap, eqs)
+        return orig(snap, entries, probes)
 
     store.bloom_prune = tap
     try:
@@ -344,9 +345,13 @@ def test_bloom_prune_sidecar_loads_are_cached(engine, spark):
             ),
         )
     store = engine.store
-    t1, p1 = store.bloom_prune(store.snapshot("dbo.ca"), [("name", "n_1_2")])
+    snap1 = store.snapshot("dbo.ca")
+    t1 = store.bloom_prune(snap1, snap1.entries, [("name", ["n_1_2"])])
+    p1 = len(snap1.entries) - len(t1)
     before = _load_bloom_sidecar.cache_info()
-    t2, p2 = store.bloom_prune(store.snapshot("dbo.ca"), [("name", "n_1_2")])
+    snap2 = store.snapshot("dbo.ca")
+    t2 = store.bloom_prune(snap2, snap2.entries, [("name", ["n_1_2"])])
+    p2 = len(snap2.entries) - len(t2)
     after = _load_bloom_sidecar.cache_info()
     assert (t2, p2) == (t1, p1)
     assert after.misses == before.misses  # no file re-opened
@@ -360,7 +365,7 @@ def test_bloom_prune_sidecar_loads_are_cached(engine, spark):
 
 def _mk_interleaved(engine, spark, n_files=4, per=40):
     """Every file's key range spans the whole domain (file f holds
-    keys f, f+n, f+2n, ...), so split_by_key_range keeps everything —
+    keys f, f+n, f+2n, ...), so split_by_key_ranges keeps everything —
     only sidecars can tell the files apart."""
     engine.create.table(
         "dbo.iv",
@@ -610,9 +615,10 @@ def test_date_column_bloom_read_prunes_and_stays_exact(engine, spark):
     assert store.typed_bloom_probes(snap, "d = 2024-02-03") == [
         ("d", dt.date(2024, 2, 3))
     ]
-    touched, pruned = store.bloom_prune(
-        snap, [("d", dt.date(2024, 2, 3))]
+    kept = store.bloom_prune(
+        snap, snap.entries, [("d", [dt.date(2024, 2, 3)])]
     )
+    pruned = len(snap.entries) - len(kept)
     assert pruned >= 1
     got = engine.read.table("dbo.dt", where="d = 2024-02-03").collect()
     assert [(r.id, r.d) for r in got] == [(12, dt.date(2024, 2, 3))]
@@ -688,20 +694,18 @@ def test_distributed_bloom_probe_matches_driver_loop(
     snap = store.snapshot("dbo.iv")
     entries = snap.entries
 
-    t_drv, p_drv = store.bloom_prune(snap, [("id", 5)])
-    any_drv = [
-        e["path"]
-        for e in store.bloom_prune_entries_any(
-            "dbo.iv", entries, "id", [1, 5, 9]
-        )
-    ]
+    def point():
+        kept = store.bloom_prune(snap, entries, [("id", [5])])
+        return [e["path"] for e in kept], len(entries) - len(kept)
+
+    def batch():
+        kept = store.bloom_prune(snap, entries, [("id", [1, 5, 9])])
+        return [e["path"] for e in kept]
+
+    t_drv, p_drv = point()
+    any_drv = batch()
     monkeypatch.setattr(st, "BLOOM_PRUNE_DISTRIBUTED_THRESHOLD", 0)
-    t_dist, p_dist = store.bloom_prune(snap, [("id", 5)])
-    any_dist = [
-        e["path"]
-        for e in store.bloom_prune_entries_any(
-            "dbo.iv", entries, "id", [1, 5, 9]
-        )
-    ]
+    t_dist, p_dist = point()
+    any_dist = batch()
     assert (t_dist, p_dist) == (t_drv, p_drv) and p_drv >= 1
     assert any_dist == any_drv and len(any_drv) < len(entries)

@@ -271,7 +271,8 @@ def test_corrupt_sidecar_degrades_to_keep_everything_read(engine, spark):
         sc = os.path.join(pool, e["path"] + ".bloom.json")
         with open(sc, "w") as f:
             json.dump({"tag": _sidecar_entry(0, 0, b"")}, f)
-    touched, pruned = store.bloom_prune(snap, [("tag", "a_3")])
+    touched = store.bloom_prune(snap, snap.entries, [("tag", ["a_3"])])
+    pruned = len(snap.entries) - len(touched)
     assert pruned == 0 and len(touched) == 2  # keep-everything
     got = engine.read.table("dbo.pin", where="tag = a_3").collect()
     assert len(got) == 1 and got[0]["id"] == 3

@@ -90,12 +90,14 @@ def test_serialization_roundtrip_json():
     assert not _bloom_might_contain(again, _bloom_value_bytes("zz"))
 
 
-def test_batch_probe_never_false_negative_property(tmp_path):
-    """Property (hypothesis): a file containing ANY batch key is NEVER
-    pruned by the batch-key kernel — for int, string, and date values,
-    through the real vectorized build."""
+def test_batch_probe_never_false_negative_property(tmp_path, monkeypatch):
+    """Property (hypothesis): the one per-file probe kernel's verdict
+    EQUALS the scalar reference (``_bloom_might_contain``) for a
+    single-value probe, for a multi-value probe (any value may be
+    present) and for a two-column AND — so a file containing ANY probed
+    key is NEVER pruned — for int, string, and date values, through the
+    real vectorized build."""
     import datetime as dt
-    import hashlib
     import os
 
     import pyarrow as pa
@@ -103,18 +105,15 @@ def test_batch_probe_never_false_negative_property(tmp_path):
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
+    import mssql_dataframe_spark.store as stmod
     from mssql_dataframe_spark.store import (
         _bloom_build_for_file,
-        _bloom_file_keeps_any,
+        _bloom_file_keeps,
+        _bloom_hashes,
     )
 
-    def pack(values):
-        probes = [_bloom_value_bytes(v) for v in values]
-        probes = [p for p in probes if p is not None]
-        digests = b"".join(hashlib.md5(p).digest() for p in probes)
-        h = np.frombuffer(digests, dtype="<u8").reshape(-1, 2).copy()
-        h[:, 1] |= np.uint64(1)
-        return h.tobytes()
+    def hashes(values):
+        return _bloom_hashes([_bloom_value_bytes(v) for v in values])
 
     ints = st.integers(min_value=-(10**12), max_value=10**12)
     texts = st.text(min_size=0, max_size=12)
@@ -122,45 +121,51 @@ def test_batch_probe_never_false_negative_property(tmp_path):
         min_value=dt.date(1, 1, 1), max_value=dt.date(9999, 12, 31)
     )
     counter = [0]
+    sidecar = {}
+    monkeypatch.setattr(stmod, "_load_bloom_sidecar", lambda path: sidecar)
+
+    def build(col, stored):
+        p = os.path.join(tmp_path, f"p_{counter[0]}_{col}.parquet")
+        pq.write_table(pa.table({col: list(stored)}), p)
+        built = _bloom_build_for_file(p, [col])[col]
+        sidecar[col] = {
+            "m": built["m"],
+            "k": built["k"],
+            "_bits": zlib.decompress(base64.b64decode(built["b64"])),
+        }
+
+    def keeps(probes):
+        return _bloom_file_keeps(
+            "", "x", sorted(sidecar), [(c, hashes(v)) for c, v in probes]
+        )
+
+    def ref(col, values):
+        return any(
+            _bloom_might_contain(sidecar[col], _bloom_value_bytes(v))
+            for v in values
+        )
+
+    def sets(elem):
+        return st.tuples(*[st.sets(elem, min_size=1, max_size=30)] * 4)
 
     @settings(max_examples=40, deadline=None)
-    @given(
-        st.one_of(
-            st.tuples(st.sets(ints, min_size=1, max_size=30),
-                      st.sets(ints, min_size=1, max_size=30)),
-            st.tuples(st.sets(texts, min_size=1, max_size=30),
-                      st.sets(texts, min_size=1, max_size=30)),
-            st.tuples(st.sets(dates, min_size=1, max_size=30),
-                      st.sets(dates, min_size=1, max_size=30)),
-        )
-    )
-    def prop(ab):
-        stored, batch = ab
+    @given(st.one_of(sets(ints), sets(texts), sets(dates)))
+    def prop(sets4):
+        stored_c, batch_c, stored_d, batch_d = sets4
         # force overlap half the time so the interesting branch runs
         if counter[0] % 2 == 0:
-            batch = set(batch) | {next(iter(stored))}
+            batch_c = set(batch_c) | {next(iter(stored_c))}
         counter[0] += 1
-        p = os.path.join(tmp_path, f"p_{counter[0]}.parquet")
-        pq.write_table(pa.table({"c": list(stored)}), p)
-        built = _bloom_build_for_file(p, ["c"])
-        sidecar = {
-            "c": {
-                "m": built["c"]["m"],
-                "k": built["c"]["k"],
-                "_bits": __import__("zlib").decompress(
-                    __import__("base64").b64decode(built["c"]["b64"])
-                ),
-            }
-        }
-        import mssql_dataframe_spark.store as stmod
-
-        orig = stmod._load_bloom_sidecar
-        stmod._load_bloom_sidecar = lambda path: sidecar
-        try:
-            keeps = _bloom_file_keeps_any("", "x", ["c"], "c", pack(batch))
-        finally:
-            stmod._load_bloom_sidecar = orig
-        if stored & batch:
-            assert keeps  # no false negatives, ever
+        build("c", stored_c)
+        build("d", stored_d)
+        for v in batch_c:
+            assert keeps([("c", [v])]) == ref("c", [v])
+        both = keeps([("c", batch_c), ("d", batch_d)])
+        assert keeps([("c", batch_c)]) == ref("c", batch_c)
+        assert both == (ref("c", batch_c) and ref("d", batch_d))
+        if stored_c & batch_c:
+            assert keeps([("c", batch_c)])  # no false negatives, ever
+        if stored_c & batch_c and stored_d & batch_d:
+            assert both
 
     prop()

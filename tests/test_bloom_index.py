@@ -57,9 +57,9 @@ def test_bloom_prune_points_to_single_file_and_read_is_exact(
     store = _mk(engine, spark)
     meta = store.meta("dbo.bl")
     n_files = len(store.manifest("dbo.bl", meta.version))
-    touched, pruned = store.bloom_prune(
-        store.snapshot("dbo.bl"), [("name", "name_2_7")]
-    )
+    snap = store.snapshot("dbo.bl")
+    kept = store.bloom_prune(snap, snap.entries, [("name", ["name_2_7"])])
+    touched, pruned = [e["path"] for e in kept], n_files - len(kept)
     assert pruned >= n_files - 1 and len(touched) <= 1
     # the read itself: correct rows through the pruned scan
     got = engine.read.table("dbo.bl", where="name = name_2_7").collect()
@@ -230,9 +230,9 @@ def test_modify_bloom_index_backfills_on_rewrite(engine, spark):
     meta = store.meta("dbo.blx")
     ents = store.manifest("dbo.blx", meta.version)
     assert ents and all(e.get("bloom") == ["name"] for e in ents)
-    touched, pruned = store.bloom_prune(
-        store.snapshot("dbo.blx"), [("name", "zzz")]
-    )
+    snap = store.snapshot("dbo.blx")
+    touched = store.bloom_prune(snap, snap.entries, [("name", ["zzz"])])
+    pruned = len(snap.entries) - len(touched)
     assert not touched and pruned == len(ents)
     # validation: unknown / untypeable columns rejected; [] drops
     with _pytest.raises(SQLColumnDoesNotExist):
@@ -305,9 +305,9 @@ def test_time_travel_reads_prune_with_blooms(engine, spark):
         spark.createDataFrame([(103,)], "id long"),
     )
     assert engine.read.table("dbo.bl", where="name = name_1_3").count() == 0
-    touched, pruned = store.bloom_prune(
-        store.snapshot("dbo.bl", v), [("name", "name_1_3")]
-    )
+    snap = store.snapshot("dbo.bl", v)
+    kept = store.bloom_prune(snap, snap.entries, [("name", ["name_1_3"])])
+    pruned = len(snap.entries) - len(kept)
     assert pruned >= 1
     got = engine.read.table(
         "dbo.bl", version=v, where="name = name_1_3"

@@ -562,3 +562,64 @@ def test_merge_delete_clause_warns_when_target_fk_referenced(
     assert not any(
         "bypasses ON DELETE" in r.getMessage() for r in caplog.records
     )
+
+
+def test_fk_parent_probe_narrows_by_bloom_sidecars(engine, spark):
+    """The FK parent probe is stats- then bloom-narrowed like every
+    other existing-rows probe: interleaved parent files (file f holds
+    keys f, f+n, ...) make min/max blind, but the child batch's keys
+    test each parent file's sidecar, so only files holding a
+    referenced key are read — and an orphan is still caught. A child
+    column of another type (a string '05' equals the parent's 5 under
+    Spark's comparison but hashes differently) never bloom-prunes."""
+    n, per = 6, 40
+    engine.create.table(
+        "dbo.par", {"pk": "bigint", "name": "varchar(20)"},
+        primary_key_column="pk",
+        properties={"bloom_filter_columns": ["pk"],
+                    "bloom_narrow_min_bytes": 0},
+    )
+    for f in range(n):
+        engine.write.insert("dbo.par", spark.createDataFrame(
+            [Row(pk=f + i * n, name=f"p{f}") for i in range(per)],
+            "pk long, name string",
+        ).coalesce(1))
+    engine.create.table(
+        "dbo.chi", {"id": "bigint", "ref": "bigint"}, primary_key_column="id"
+    )
+    engine.create.table(
+        "dbo.chs", {"id": "bigint", "ref": "nvarchar(10)"},
+        primary_key_column="id",
+    )
+    for t in ("dbo.chi", "dbo.chs"):
+        engine.modify.foreign_key(
+            t, "add", "fk_par",
+            columns="ref", ref_table="dbo.par", ref_columns="pk",
+        )
+    store = engine.store
+    reads = []
+    orig = store.read_files
+
+    def tap(snap, paths):
+        if snap.name == "dbo.par":
+            reads.append(len(paths))
+        return orig(snap, paths)
+
+    store.read_files = tap
+    try:
+        # keys 0 and n*per-1 live in files 0 and n-1
+        engine.write.insert(
+            "dbo.chi", _child(spark, [(1, 0), (2, n * per - 1)])
+        )
+        with pytest.raises(errors.SQLForeignKeyViolation, match="fk_par"):
+            engine.write.insert(
+                "dbo.chi", _child(spark, [(3, 1), (4, 10**6)])
+            )
+        engine.write.insert("dbo.chs", spark.createDataFrame(
+            [Row(id=1, ref="05")], "id long, ref string"
+        ))
+    finally:
+        store.read_files = orig
+    assert reads == [2, 1, n]
+    assert engine.read.table("dbo.chi").count() == 2
+    assert engine.read.table("dbo.chs").count() == 1

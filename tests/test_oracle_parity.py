@@ -25,14 +25,17 @@ QUERIES = entry_mod.queries()
 ORACLES = entry_mod.oracle_sql()
 
 
-def _duck():
+@pytest.fixture(scope="module")
+def duck():
+    """One DuckDB connection with the TABLES views for every entry."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{SF_DIR}/{t}.parquet')"
         )
-    return con
+    yield con
+    con.close()
 
 
 def _norm(v):
@@ -62,14 +65,13 @@ def _rowset(cols, rows):
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
-def test_oracle_parity(spark, name):
+def test_oracle_parity(spark, duck, name):
     fn = QUERIES[name]
     sdf = fn(spark, SF_DIR)
     s_cols = sdf.columns
     s_rows = [tuple(r) for r in sdf.collect()]
 
-    con = _duck()
-    res = con.execute(ORACLES[name])
+    res = duck.execute(ORACLES[name])
     d_cols = [d[0] for d in res.description]
     d_rows = res.fetchall()
 

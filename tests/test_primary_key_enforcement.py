@@ -94,8 +94,8 @@ def test_out_of_range_append_prunes_existing_scan(engine, spark):
         spark.createDataFrame([Row(k=i, v=i) for i in range(100)],
                               "k long, v long"),
     )
-    touched, kept = engine.store.split_by_key_range(
-        engine.store.snapshot("dbo.pk5"), "k", 1000, 1100
+    touched, kept = engine.store.split_by_key_ranges(
+        engine.store.snapshot("dbo.pk5"), {"k": (1000, 1100)}
     )
     assert touched == [] and kept, "stats split must exclude all files"
     engine.write.insert(

@@ -303,8 +303,8 @@ def test_split_by_key_range_decision_table(engine, spark, tmp_path):
          "stats_col": "old_k"},  # stats describe a pre-PK-change column
         {"path": "i.parquet", "rows": 10, "min": 0, "max": 5},       # legacy entry
     ])
-    touched, kept = store.split_by_key_range(
-        store.snapshot("dbo.sp"), "k", 100, 300
+    touched, kept = store.split_by_key_ranges(
+        store.snapshot("dbo.sp"), {"k": (100, 300)}
     )
     assert sorted(touched) == ["b.parquet", "c.parquet", "d.parquet",
                                "f.parquet", "g.parquet", "h.parquet",
@@ -313,15 +313,15 @@ def test_split_by_key_range_decision_table(engine, spark, tmp_path):
 
     # numpy-scalar bounds (Arrow-backed collects) must not disable pruning
     import numpy as np
-    touched_np, kept_np = store.split_by_key_range(
-        store.snapshot("dbo.sp"), "k", np.int64(100), np.int64(300)
+    touched_np, kept_np = store.split_by_key_ranges(
+        store.snapshot("dbo.sp"), {"k": (np.int64(100), np.int64(300))}
     )
     assert sorted(e["path"] for e in kept_np) == ["a.parquet", "e.parquet"]
     assert sorted(touched_np) == sorted(touched)
 
     # asking for a range on a non-stats column: everything touched
-    touched2, kept2 = store.split_by_key_range(
-        store.snapshot("dbo.sp"), "v", 0.0, 1.0
+    touched2, kept2 = store.split_by_key_ranges(
+        store.snapshot("dbo.sp"), {"v": (0.0, 1.0)}
     )
     assert len(touched2) == 9 and kept2 == []
 
@@ -556,8 +556,8 @@ def test_multi_column_stats_prune_on_secondary_key(engine, spark):
 
     # pruning decision on the secondary column: narrow v2 range keeps
     # most files
-    touched, kept = eng.store.split_by_key_range(
-        eng.store.snapshot("dbo.mstats"), "v2", 100_100, 100_150
+    touched, kept = eng.store.split_by_key_ranges(
+        eng.store.snapshot("dbo.mstats"), {"v2": (100_100, 100_150)}
     )
     assert kept, "expected files provably disjoint on v2 to be kept"
     assert len(touched) < len(ents)
@@ -580,7 +580,7 @@ def test_multi_column_stats_prune_on_secondary_key(engine, spark):
 
 def test_optimize_zorder_prunes_on_both_keys(engine, spark):
     """ZORDER rewrite: data identical, every file tight in BOTH keys,
-    so split_by_key_range prunes on either column afterwards."""
+    so split_by_key_ranges prunes on either column afterwards."""
     eng = engine
     # two independent uniform keys: 1-D clustering on k would leave v2
     # ranges full-width in every file
@@ -609,8 +609,8 @@ def test_optimize_zorder_prunes_on_both_keys(engine, spark):
     assert all({"k", "v2"} <= set(e["stats"]) for e in ents)
     # narrow range on EACH key must keep (prune) at least one file
     for col in ("k", "v2"):
-        touched, kept = eng.store.split_by_key_range(
-            eng.store.snapshot("dbo.zord"), col, 0, 255
+        touched, kept = eng.store.split_by_key_ranges(
+            eng.store.snapshot("dbo.zord"), {col: (0, 255)}
         )
         assert kept, f"expected pruning on {col} after zorder"
         assert len(touched) < len(ents)
@@ -652,7 +652,7 @@ def test_optimize_zorder_five_columns_stays_in_long_range(engine, spark):
     # dimension's per-file span): a half-range probe on the first key
     # must prune the files living entirely in the other half — under
     # the pre-fix wrapped shifts the key is garbage and nothing prunes
-    touched, kept = eng.store.split_by_key_range(
-        eng.store.snapshot("dbo.z5"), "a", 0, 1023
+    touched, kept = eng.store.split_by_key_ranges(
+        eng.store.snapshot("dbo.z5"), {"a": (0, 1023)}
     )
     assert kept and len(touched) < len(ents)

@@ -111,13 +111,13 @@ def test_string_stats_bounds_truncated_but_valid(engine, spark):
     assert min(b[0] for b in bs) <= long_a
     assert max(b[1] for b in bs) >= long_z
     # pruning with the widened bounds keeps the containing file
-    touched, kept = engine.store.split_by_key_range(
-        engine.store.snapshot("dbo.strst"), "k", long_z, long_z
+    touched, kept = engine.store.split_by_key_ranges(
+        engine.store.snapshot("dbo.strst"), {"k": (long_z, long_z)}
     )
     assert touched, "file holding the key must stay touched"
     # and a provably-disjoint range still prunes
-    touched2, kept2 = engine.store.split_by_key_range(
-        engine.store.snapshot("dbo.strst"), "k", "~~~", "~~~~"
+    touched2, kept2 = engine.store.split_by_key_ranges(
+        engine.store.snapshot("dbo.strst"), {"k": ("~~~", "~~~~")}
     )
     assert kept2 and not touched2
 

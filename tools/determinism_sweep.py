@@ -34,7 +34,6 @@ volume), full registry minus streaming. --out writes DETERMINISM.md.
 from __future__ import annotations
 
 import argparse
-import math
 import os
 import sys
 import time
@@ -44,6 +43,7 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
+from gate_sim import _canon  # noqa: E402  (the one result comparator)
 
 LAYOUT_A = {
     # AQE disabled in layout A: runtime re-planning (partition
@@ -59,36 +59,6 @@ LAYOUT_B = {
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     "spark.sql.adaptive.enabled": "true",
 }
-
-
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    """Sorted columns, rows ordered by stringified tuple, floats rounded
-    to 12 significant digits (absorbs final-ulp noise, keeps real
-    accumulation-order drift visible)."""
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        dt = str(df[c].dtype)
-        if dt.startswith("datetime64") and "UTC" in dt:
-            df[c] = df[c].dt.tz_localize(None)
-            dt = str(df[c].dtype)
-        if dt.startswith("datetime64"):
-            df[c] = df[c].astype("datetime64[us]")
-        elif dt in ("string", "large_string[pyarrow]"):
-            df[c] = df[c].astype(object)
-        elif dt.startswith("float"):
-            df[c] = df[c].map(
-                lambda v: None
-                if v is None or (isinstance(v, float) and math.isnan(v))
-                else float(f"{v + 0.0:.12g}")
-            ).astype("float64")
-    key = [
-        df[c].map(lambda v: "<null>" if v is None else str(v))
-        for c in df.columns
-    ]
-    order = sorted(
-        range(len(df)), key=lambda i: tuple(k.iloc[i] for k in key)
-    )
-    return df.iloc[order].reset_index(drop=True)
 
 
 def _run_layout(spark, fn, sf_dir: str, layout: dict) -> pd.DataFrame:
@@ -117,8 +87,8 @@ def run(sf_dir: str, names: list[str], write_out: bool) -> int:
     for name in names:
         t0 = time.time()
         try:
-            a = _canon(_run_layout(spark, queries[name], sf_dir, LAYOUT_A))
-            b = _canon(_run_layout(spark, queries[name], sf_dir, LAYOUT_B))
+            a = _canon(_run_layout(spark, queries[name], sf_dir, LAYOUT_A))[0]
+            b = _canon(_run_layout(spark, queries[name], sf_dir, LAYOUT_B))[0]
         except Exception as e:  # noqa: BLE001
             n_fail += 1
             msg = " ".join(str(e).split())[:140]
