@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import tokens
+from .text import _quality_flag_sql, _sql_over, _tokens_sql, tokens
 
 __all__ = [
     "word_ngrams",
@@ -39,6 +39,19 @@ __all__ = [
 ]
 
 
+def _ngrams_sql(toks: str, n: int) -> str:
+    """Space-joined word ``n``-grams of the SQL token array ``toks``:
+    the ``zip_with`` of the array against its own shifted slices."""
+    m = f"(size({toks}) - {n - 1})"
+    acc = f"slice({toks}, 1, {m})"
+    for k in range(1, n):
+        acc = (
+            f"zip_with({acc}, slice({toks}, {k + 1}, {m}), "
+            "(a, b) -> concat(a, ' ', b))"
+        )
+    return f"CASE WHEN {m} <= 0 THEN CAST(array() AS array<string>) ELSE {acc} END"
+
+
 def word_ngrams(col: str | Column, n: int) -> Column:
     """Array of space-joined word ``n``-grams of a text column.
 
@@ -51,73 +64,80 @@ def word_ngrams(col: str | Column, n: int) -> Column:
     over the tokenizer inside the lambda, re-splitting the whole text
     once per gram position — quadratic per document; measured ~30x
     slower at sf0.1.) Embarrassingly parallel either way: a single
-    projection per row, no join or window.
+    projection per row, no join or window. The same n-gram SQL runs
+    over :func:`quality_filter`'s once-tokenized column.
     """
-    toks = tokens(col)
-    m = F.size(toks) - F.lit(n - 1)
-    acc = F.slice(toks, 1, m)
-    for k in range(1, n):
-        acc = F.zip_with(
-            acc,
-            F.slice(toks, k + 1, m),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-    return F.when(m <= 0, F.array().cast("array<string>")).otherwise(acc)
+    return _sql_over(lambda t: _ngrams_sql(_tokens_sql(t), n), col)
 
 
-def _repetition_base_cols(text_col: str) -> list[Column]:
-    """The row-local metrics :func:`repetition_features` needs —
-    exposed separately so :func:`quality_filter` can fold them into
-    ONE document scan together with the quality signals instead of
-    scanning (and tokenizing) the corpus a second time."""
-    return [
-        F.length(F.col(text_col)).cast("bigint").alias("n_chars"),
-        F.size(tokens(text_col)).cast("bigint").alias("n_words"),
-        F.size(F.array_distinct(tokens(text_col)))
-        .cast("bigint")
-        .alias("n_distinct_words"),
-    ]
+#: the row-local repetition base metrics over ``__t`` (text) and
+#: ``__toks`` (its tokens) — shared by :func:`repetition_features` and
+#: :func:`quality_filter`, which folds them into its one document scan
+_REPETITION_BASE_SQL = (
+    "CAST(length(__t) AS BIGINT) AS n_chars",
+    "CAST(size(__toks) AS BIGINT) AS n_words",
+    "CAST(size(array_distinct(__toks)) AS BIGINT) AS n_distinct_words",
+)
 
 
-def _gram_repeat_metrics(
-    df: DataFrame, text_col: str, id_col: str
-) -> DataFrame:
+def _tokenized(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """``(doc_id, __t, __toks)``: the ONE tokenization every metric of
+    :func:`repetition_features` and :func:`quality_filter` derives
+    from."""
+    return df.selectExpr(
+        f"`{id_col}` AS doc_id",
+        f"`{text_col}` AS __t",
+        f"{_tokens_sql(f'`{text_col}`')} AS __toks",
+    )
+
+
+def _gram_repeat_metrics(tok: DataFrame) -> DataFrame:
     """(doc_id, top_bigram_chars, dup_trigram_chars) — the shuffling
-    half of :func:`repetition_features`: 2- and 3-grams tagged and
-    exploded together, counted per (doc, n, gram), re-aggregated per
-    doc. Shared by :func:`repetition_features` and
+    half of :func:`repetition_features`: 2- and 3-grams of the token
+    column tagged and exploded together, counted per (doc, n, gram),
+    re-aggregated per doc. Shared by :func:`repetition_features` and
     :func:`quality_filter` so the composed gate runs the gram pass
     once."""
-
-    def _tagged(n: int) -> Column:
-        return F.transform(
-            word_ngrams(text_col, n),
-            lambda g: F.struct(F.lit(n).alias("n"), g.alias("gram")),
-        )
-
-    counts = (
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.concat(_tagged(2), _tagged(3))).alias("g"),
-        )
-        .select("doc_id", F.col("g.n").alias("n"), F.col("g.gram").alias("gram"))
-        .groupBy("doc_id", "n", "gram")
-        .agg(F.count("*").alias("cnt"))
+    tagged = ", ".join(
+        f"transform({_ngrams_sql('__toks', n)}, "
+        f"g -> named_struct('n', {n}, 'gram', g))"
+        for n in (2, 3)
     )
-    return counts.groupBy("doc_id").agg(
-        F.max(
-            F.when(
-                (F.col("n") == 2) & (F.col("cnt") >= 2),
-                F.col("cnt") * F.length("gram"),
-            ).otherwise(F.lit(0))
-        ).alias("top_bigram_chars"),
-        F.sum(
-            F.when(
-                (F.col("n") == 3) & (F.col("cnt") >= 2),
-                F.col("cnt") * F.length("gram"),
-            ).otherwise(F.lit(0))
-        ).alias("dup_trigram_chars"),
+    grams = tok.selectExpr("doc_id", f"inline(concat({tagged}))")
+    counts = grams.groupBy(grams["doc_id"], grams["n"], grams["gram"]).agg(
+        F.expr("count(1) AS cnt")
     )
+    return counts.groupBy(counts["doc_id"]).agg(
+        F.expr(
+            "max(CASE WHEN n = 2 AND cnt >= 2 THEN cnt * length(gram) "
+            "ELSE 0 END) AS top_bigram_chars"
+        ),
+        F.expr(
+            "sum(CASE WHEN n = 3 AND cnt >= 2 THEN cnt * length(gram) "
+            "ELSE 0 END) AS dup_trigram_chars"
+        ),
+    )
+
+
+#: the three rounded repetition metrics (name -> SQL) over a frame
+#: carrying the base (n_chars/n_words/n_distinct_words) and gram
+#: (top_bigram_chars/dup_trigram_chars) columns
+_REPETITION_METRICS = {
+    "dup_word_frac": "round(CAST(CASE WHEN n_words > 0 "
+    "THEN 1.0D - n_distinct_words / n_words ELSE 0.0D END AS DOUBLE), 6)",
+    "top_bigram_char_frac": "round(CAST(coalesce(top_bigram_chars, 0) "
+    "/ greatest(n_chars, 1) AS DOUBLE), 6)",
+    "dup_trigram_char_frac": "round(CAST(coalesce(dup_trigram_chars, 0) "
+    "/ greatest(n_chars, 1) AS DOUBLE), 6)",
+}
+
+#: Gopher-threshold verdict over the three metrics, inlined so the
+#: verdict rides the same projection as (or replaces) the metric
+#: columns; subexpression elimination evaluates each metric once
+_REPETITION_FLAG_SQL = (
+    "CAST(({dup_word_frac}) > 0.9D OR ({top_bigram_char_frac}) > 0.2D "
+    "OR ({dup_trigram_char_frac}) > 0.6D AS BOOLEAN)"
+).format(**_REPETITION_METRICS)
 
 
 def repetition_features(
@@ -151,59 +171,20 @@ def repetition_features(
     aggregation — the text column itself never shuffles. (The
     earlier two-subtree form re-ran gram generation once per
     metric plus once for the spine — measured 3x the scan cost at
-    sf0.1.)
+    sf0.1.) Every projection is a SQL string over one token column,
+    so plan construction is a few py4j round trips, not one per
+    Column operator.
     """
-    base = df.select(
-        F.col(id_col).alias("doc_id"),
-        *_repetition_base_cols(text_col),
-    )
-    out = (
-        base.join(_gram_repeat_metrics(df, text_col, id_col), "doc_id", "left")
-        .select(F.col("doc_id").alias(id_col), *_repetition_metric_cols())
-        .withColumn("repetition_flag", _repetition_flag_col())
-    )
-    return out
-
-
-def _repetition_metric_cols() -> list[Column]:
-    """The three rounded repetition metrics, as expressions over a
-    frame carrying the base (n_chars/n_words/n_distinct_words) and
-    gram (top_bigram_chars/dup_trigram_chars) columns."""
-    return [
-        F.round(
-            F.when(
-                F.col("n_words") > 0,
-                1.0 - F.col("n_distinct_words") / F.col("n_words"),
-            )
-            .otherwise(F.lit(0.0))
-            .cast("double"),
-            6,
-        ).alias("dup_word_frac"),
-        F.round(
-            (
-                F.coalesce(F.col("top_bigram_chars"), F.lit(0))
-                / F.greatest(F.col("n_chars"), F.lit(1))
-            ).cast("double"),
-            6,
-        ).alias("top_bigram_char_frac"),
-        F.round(
-            (
-                F.coalesce(F.col("dup_trigram_chars"), F.lit(0))
-                / F.greatest(F.col("n_chars"), F.lit(1))
-            ).cast("double"),
-            6,
-        ).alias("dup_trigram_char_frac"),
-    ]
-
-
-def _repetition_flag_col() -> Column:
-    """Gopher-threshold verdict over the three (already computed)
-    metric columns."""
+    tok = _tokenized(df, text_col, id_col)
     return (
-        (F.col("dup_word_frac") > 0.9)
-        | (F.col("top_bigram_char_frac") > 0.2)
-        | (F.col("dup_trigram_char_frac") > 0.6)
-    ).cast("boolean")
+        tok.selectExpr("doc_id", *_REPETITION_BASE_SQL)
+        .join(_gram_repeat_metrics(tok), "doc_id", "left")
+        .selectExpr(
+            f"doc_id AS `{id_col}`",
+            *[f"{sql} AS {name}" for name, sql in _REPETITION_METRICS.items()],
+            f"{_REPETITION_FLAG_SQL} AS repetition_flag",
+        )
+    )
 
 
 def quality_filter(
@@ -214,39 +195,33 @@ def quality_filter(
     (:func:`mssql_dataframe_spark.operators.text.quality_features`)
     AND NOT the repetition flag (:func:`repetition_features`).
 
-    FUSED plan: every quality signal and the repetition base metrics
-    are row-local, so they ride ONE document scan/projection (the
-    spine); only the gram-repetition half needs its own scan + two
-    gram-keyed shuffles, and it joins back to the spine on doc_id.
-    At 100 TB that is one full corpus scan and one per-doc-metrics
-    shuffle FEWER than composing ``quality_features ⋈
+    FUSED plan: the text is tokenized ONCE, in one projection, and
+    every quality signal, the repetition base metrics and both n-gram
+    passes derive from that token column. The row-local metrics ride
+    one document projection (the spine); only the gram-repetition half
+    needs two gram-keyed shuffles, and it joins back to the spine on
+    doc_id. At 100 TB that is one full corpus scan and one
+    per-doc-metrics shuffle FEWER than composing ``quality_features ⋈
     repetition_features`` as separate frames. The downstream corpus
     is ``filter(keep)`` — this frame IS the manifest of what survives
-    curation, so it is what you audit before a training run.
+    curation, so it is what you audit before a training run. The
+    projections are SQL strings: building the plan costs a few dozen
+    py4j round trips and runs no Spark job.
 
     Returns (doc_id, n_words, quality_flag, repetition_flag, keep).
     """
-    from .text import quality_flag_col
-
-    spine = df.select(
-        F.col(id_col).alias("doc_id"),
-        *_repetition_base_cols(text_col),
-        quality_flag_col(text_col).alias("quality_flag"),
+    tok = _tokenized(df, text_col, id_col)
+    spine = tok.selectExpr(
+        "doc_id",
+        *_REPETITION_BASE_SQL,
+        f"{_quality_flag_sql('__t', '__toks')} AS quality_flag",
     )
-    out = spine.join(
-        _gram_repeat_metrics(df, text_col, id_col), "doc_id", "left"
-    )
-    metrics = out.select(
-        "doc_id", "n_words", "quality_flag", *_repetition_metric_cols()
-    ).withColumn("repetition_flag", _repetition_flag_col())
-    return metrics.select(
-        F.col("doc_id").alias(id_col),
+    return spine.join(_gram_repeat_metrics(tok), "doc_id", "left").selectExpr(
+        f"doc_id AS `{id_col}`",
         "n_words",
         "quality_flag",
-        "repetition_flag",
-        (F.col("quality_flag") & ~F.col("repetition_flag"))
-        .cast("boolean")
-        .alias("keep"),
+        f"{_REPETITION_FLAG_SQL} AS repetition_flag",
+        f"CAST(quality_flag AND NOT {_REPETITION_FLAG_SQL} AS BOOLEAN) AS keep",
     )
 
 

@@ -16,10 +16,23 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType, DataType, IntegralType, LongType, StructField, StructType,
+)
 
 from .text import shingles
+
+#: default edge-count cutover of :func:`connected_components` between
+#: the driver-side union-find and the distributed loop
+SMALL_GRAPH_EDGES = 1_000_000
+#: the distributed loop's default round cap and checkpoint period,
+#: shared by :func:`connected_components` and
+#: :func:`dedup_cluster_survivors`
+CC_MAX_ITER = 20
+CC_CHECKPOINT_EVERY = 5
 
 # persisted intermediates (signature bases, shingle rows) registered
 # here so long-lived sessions can release them — same discipline as
@@ -103,19 +116,12 @@ def shingle_rows(
     scan to a handful of tasks. Shuffling the compact pre-explode rows
     is far cheaper than shuffling the exploded relation."""
     par = df.sparkSession.sparkContext.defaultParallelism
+    i, t = f"`{id_col}`", f"`{text_col}`"
     return (
-        df.repartition(par, id_col)
-        .filter(F.length(F.col(text_col)) >= k)
-        .select(
-            F.col(id_col),
-            F.col(text_col),
-            F.explode(
-                F.sequence(F.lit(1), F.length(F.col(text_col)) - (k - 1))
-            ).alias("__i"),
-        )
-        .select(
-            id_col, F.substring(F.col(text_col), F.col("__i"), k).alias("sh")
-        )
+        df.repartition(par, df[id_col])
+        .where(f"length({t}) >= {k}")
+        .selectExpr(i, t, f"explode(sequence(1, length({t}) - {k - 1})) AS __i")
+        .selectExpr(i, f"substring({t}, __i, {k}) AS sh")
         .dropDuplicates([id_col, "sh"])
     )
 
@@ -129,7 +135,8 @@ def _signature_base(
     rows_per_band: int = 2,
     rows: DataFrame | None = None,
 ) -> DataFrame:
-    """(id, sig_0..sig_{n-1}) — PERSISTED.
+    """(id, mh_0.., sig_0..sig_{n-1}) — PERSISTED (lazily in local
+    mode, eagerly on a cluster; see the end of the body).
 
     Classic banded MinHash: n_bands * rows_per_band independent hash
     functions (salted md5); band b's signature is the md5 of the
@@ -159,12 +166,15 @@ def _signature_base(
     # chatter here at 16 hash functions. Arithmetic is identical —
     # integer literals are pinned to BIGINT with the L suffix, matching
     # lit(int)'s Long typing.
-    h_sql = "CAST(conv(substring(md5(sh), 1, 10), 16, 10) AS BIGINT)"
-    mins = rows.groupBy(id_col).agg(
+    # The 40-bit shingle hash is projected once, below the aggregate,
+    # so the plan carries one md5 instead of n_hashes copies.
+    hashed = rows.selectExpr(
+        f"`{id_col}`", "CAST(conv(substring(md5(sh), 1, 10), 16, 10) AS BIGINT) AS h"
+    )
+    mins = hashed.groupBy(id_col).agg(
         *[
             F.expr(
-                f"min(({_mh_a(i)}L * {h_sql} + {_mh_b(i)}L) % "
-                f"{1 << 40}L) AS mh_{i}"
+                f"min(({_mh_a(i)}L * h + {_mh_b(i)}L) % {1 << 40}L) AS mh_{i}"
             )
             for i in range(n_hashes)
         ]
@@ -186,12 +196,20 @@ def _signature_base(
             for b in range(n_bands)
         ],
     )
-    # materialize NOW (via _pin): the LSH self-join and the estimate
-    # join consume this 3+ times concurrently in one action; without
-    # an eager barrier each consumer races to recompute the signature
-    # scan before the cache fills (the cluster-scale analog is writing
-    # the signatures to an interim table before the join stage)
-    return _pin(base)
+    # The LSH self-join and the estimate join read this 3+ times in
+    # one action. In local mode a LAZY persist suffices: the first
+    # task to reach a partition fills it and the other readers wait on
+    # its block lock, so the signature scan runs once per action
+    # (event log of the survivors pass: one shingle stage and one
+    # min-hash stage), and the pair query does not wait for a job of
+    # its own (an eager count cost about 2 s of a cold pass). Readers
+    # on different executors share no lock and would each recompute
+    # the scan, so a cluster session materializes it first (_pin).
+    if not base.sparkSession.sparkContext.master.startswith("local"):
+        return _pin(base)
+    base = base.persist()
+    _SESSION_PINS.append(base)
+    return base
 
 
 def minhash_signatures(
@@ -206,22 +224,15 @@ def minhash_signatures(
     """(id, band, signature) — one row per band per document."""
     if base is None:
         base = _signature_base(df, id_col, text_col, n_bands, k, rows_per_band)
-    stacked = base.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"), F.col(f"sig_{b}").alias("signature")
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bs"),
+    # one SQL-string projection: about 20 py4j round trips to build,
+    # where a Column struct per band costs about 60 each
+    bands = ", ".join(
+        f"named_struct('band', {b}, 'signature', sig_{b})"
+        for b in range(n_bands)
     )
-    return stacked.select(
-        id_col, F.col("bs.band").alias("band"), F.col("bs.signature").alias("signature")
-    ).filter(F.col("signature").isNotNull())
+    return base.selectExpr(f"`{id_col}`", f"inline(array({bands}))").where(
+        "signature IS NOT NULL"
+    )
 
 
 def lsh_candidate_pairs(
@@ -240,22 +251,18 @@ def lsh_candidate_pairs(
     sig = minhash_signatures(
         df, id_col, text_col, n_bands, k, base=base, rows_per_band=rows_per_band
     )
-    a = sig.alias("a")
-    b = sig.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.signature") == F.col("b.signature"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+    return (
+        sig.alias("a")
+        .join(
+            sig.alias("b"),
+            F.expr(
+                "a.band = b.band AND a.signature = b.signature"
+                f" AND a.`{id_col}` < b.`{id_col}`"
+            ),
         )
-        .select(
-            F.col(f"a.{id_col}").alias("id1"),
-            F.col(f"b.{id_col}").alias("id2"),
-        )
+        .selectExpr(f"a.`{id_col}` AS id1", f"b.`{id_col}` AS id2")
         .distinct()
     )
-    return pairs
 
 
 def _estimate_prune(
@@ -298,13 +305,10 @@ def _estimate_prune(
     return (
         raw_cands.join(m1, key1)
         .join(m2, key2)
-        .withColumn(
-            "__est",
-            F.expr(
-                f"({agree_sql}) / CAST({n_hashes} AS DOUBLE)"
-            ),
+        .where(
+            f"({agree_sql}) / CAST({n_hashes} AS DOUBLE)"
+            f" >= {float(threshold - margin)!r}D"
         )
-        .filter(F.col("__est") >= threshold - margin)
         .select(key1, key2)
     )
 
@@ -325,34 +329,26 @@ def _verify_jaccard(
     ``|union| = n1 + n2 - |inter|`` needs no union materialization.
     Returns ``(key1, key2, jaccard)`` for pairs >= threshold, jaccard
     rounded to 6 (the oracle-stable render)."""
-    sizes1 = rows1.groupBy(id_col).agg(F.count("*").alias("n1"))
-    sizes2 = rows2.groupBy(id_col).agg(F.count("*").alias("n2"))
+    sizes1 = rows1.groupBy(id_col).agg(F.expr("count(1) AS n1"))
+    sizes2 = rows2.groupBy(id_col).agg(F.expr("count(1) AS n2"))
     inter = (
-        cands.join(
-            rows1.select(F.col(id_col).alias(key1), gram_col), key1
-        )
+        cands.join(rows1.selectExpr(f"`{id_col}` AS `{key1}`", gram_col), key1)
         .join(
-            rows2.select(F.col(id_col).alias(key2), gram_col),
+            rows2.selectExpr(f"`{id_col}` AS `{key2}`", gram_col),
             [key2, gram_col],
         )
         .groupBy(key1, key2)
-        .agg(F.count("*").alias("n_inter"))
+        .agg(F.expr("count(1) AS n_inter"))
     )
     return (
-        inter.join(sizes1.select(F.col(id_col).alias(key1), "n1"), key1)
-        .join(sizes2.select(F.col(id_col).alias(key2), "n2"), key2)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter")
-                / (F.col("n1") + F.col("n2") - F.col("n_inter")).cast(
-                    "double"
-                ),
-                6,
-            ),
+        inter.join(sizes1.selectExpr(f"`{id_col}` AS `{key1}`", "n1"), key1)
+        .join(sizes2.selectExpr(f"`{id_col}` AS `{key2}`", "n2"), key2)
+        .selectExpr(
+            key1,
+            key2,
+            "round(n_inter / CAST(n1 + n2 - n_inter AS DOUBLE), 6) AS jaccard",
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select(key1, key2, "jaccard")
+        .where(f"jaccard >= {float(threshold)!r}D")
     )
 
 
@@ -393,12 +389,9 @@ def minhash_dedup_pairs(
     n_hashes = n_bands * rows_per_band
     # ONE shingle-explode scan feeds both the signatures and the exact
     # verifier (it used to run twice). The shingle cache is LAZY: the
-    # signature base is built FROM it and eagerly pinned, so the one
-    # materialization job below fills both caches in a single chain —
-    # a separate eager rows count was one extra full job (r14 opt,
-    # ~0.5-1 s at sf0.1). By the time the verifier's stages run, the
-    # shingle cache is already warm, so no consumer races to
-    # recompute it.
+    # signature base is built FROM it, so whichever job first fills
+    # the signature cache fills both in one chain — a separate eager
+    # rows count was one extra full job (r14 opt, ~0.5-1 s at sf0.1).
     rows = shingle_rows(df, id_col, text_col, k).persist()
     _SESSION_PINS.append(rows)
     base = _signature_base(
@@ -441,8 +434,8 @@ def minhash_dedup_incremental(
     """
     margin = 0.2
     n_hashes = n_bands * rows_per_band
-    # lazy shingle caches, materialized by their signature bases' pin
-    # jobs — same single-chain reasoning as minhash_dedup_pairs
+    # lazy shingle caches, filled together with their signature bases
+    # — same single-chain reasoning as minhash_dedup_pairs
     new_rows = shingle_rows(new_df, id_col, text_col, k).persist()
     _SESSION_PINS.append(new_rows)
     cor_rows = shingle_rows(corpus_df, id_col, text_col, k).persist()
@@ -488,8 +481,7 @@ def word_ngrams(col: str | Column, n: int = 3) -> Column:
     """Word n-gram array (space-joined); < n tokens -> empty array."""
     from .text import tokens
 
-    c = F.col(col) if isinstance(col, str) else col
-    toks = tokens(c)
+    toks = tokens(col)
     count = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
     return F.when(count == 0, F.array().cast("array<string>")).otherwise(
         F.transform(
@@ -572,7 +564,7 @@ def ngram_jaccard_pairs(
         df.repartition(par, id_col)
         .select(
             F.col(id_col),
-            F.explode(F.array_distinct(word_ngrams(F.col(text_col), n))).alias("g"),
+            F.explode(F.array_distinct(word_ngrams(text_col, n))).alias("g"),
         )
     )
     rows = _pin(rows)
@@ -582,64 +574,82 @@ def ngram_jaccard_pairs(
     )
 
 
-def _cc_union_find(
-    sym: DataFrame, nodes: DataFrame | None, id_col: str
-) -> DataFrame:
-    """Exact components of a small (checkpointed, symmetric) edge list
-    via one single-task union-find: union-by-min-root + path halving,
-    so the root of every set IS the min node id — identical labels to
-    the min-propagation loop. ``coalesce(1)`` funnels the edges into
-    one ``mapInPandas`` task; the caller guarantees they fit."""
-    import pandas as pd  # noqa: F401 (mapInPandas batch type)
+def _union_find(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``(ids, labels)`` for the edge list ``a[i] -- b[i]``: the sorted
+    distinct node ids and, per id, the min id of its component.
+    Union-by-min-root + path halving, so the root of every set IS the
+    min node id — identical labels to the min-propagation loop."""
+    # densify ids; np.unique also sorts, so dense index order == id
+    # order and "min root" stays meaningful on dense indices
+    ids = np.unique(np.concatenate([a, b]))
+    parent = np.arange(len(ids))
 
-    id_type = sym.schema["a"].dataType.simpleString()
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
 
-    def uf(batches):
-        import numpy as np
-        import pandas as pd
+    ai = np.searchsorted(ids, a).tolist()
+    bi = np.searchsorted(ids, b).tolist()
+    for x, y in zip(ai, bi):
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            if ry < rx:
+                rx, ry = ry, rx
+            parent[ry] = rx  # min root wins -> label = min id
+    roots = np.array([find(i) for i in range(len(ids))], dtype=np.int64)
+    return ids, ids[roots]
 
-        chunks = [b for b in batches]
-        if not chunks:
-            return
-        a = pd.concat([c["a"] for c in chunks]).to_numpy()
-        b = pd.concat([c["b"] for c in chunks]).to_numpy()
-        # densify ids; np.unique also sorts, so dense index order ==
-        # id order and "min root" stays meaningful on dense indices
-        ids = np.unique(np.concatenate([a, b]))
-        ai = np.searchsorted(ids, a)
-        bi = np.searchsorted(ids, b)
-        parent = np.arange(len(ids))
 
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]  # path halving
-                x = parent[x]
-            return x
+def _components(
+    edges: DataFrame,
+    nodes: DataFrame | None,
+    id_col: str,
+    src_col: str,
+    dst_col: str,
+    max_iter: int,
+    checkpoint_every: int,
+    small_graph_edges: int,
+) -> tuple[DataType, np.ndarray, np.ndarray] | DataFrame:
+    """The small-versus-big dispatch of :func:`connected_components`
+    and :func:`dedup_cluster_survivors`: for a graph of at most
+    ``small_graph_edges`` edges, the id type and the driver
+    union-find's ``(ids, labels)`` arrays; above that, the distributed
+    loop's ``(id, component)`` frame.
 
-        for x, y in zip(ai.tolist(), bi.tolist()):
-            rx, ry = find(x), find(y)
-            if rx != ry:
-                if ry < rx:
-                    rx, ry = ry, rx
-                parent[ry] = rx  # min root wins -> label = min id
-        roots = np.array([find(i) for i in range(len(ids))])
-        yield pd.DataFrame({"node": ids, "label": ids[roots]})
+    The decision and the edges are ONE bounded collect of at most
+    ``small_graph_edges + 1`` rows, and the union-find runs on the
+    driver: no count job and no Python worker (a ``mapInPandas`` task
+    pays a cold worker start per consumer). The collect reads a LAZY
+    ``localCheckpoint`` of the edges: it fills every partition of the
+    checkpoint in the same job, so a big graph's loop starts from
+    that leaf and the edge lineage runs once on either path."""
+    fwd = edges.selectExpr(f"`{src_col}` AS a", f"`{dst_col}` AS b")
+    fwd = fwd.localCheckpoint(eager=False)
+    # RDD collect of the limited plan: it runs the limit's final stage
+    # as one job, where DataFrame.collect's incremental take runs it as
+    # two (the first partition, then the rest); both stay in the JVM
+    rows = fwd.limit(small_graph_edges + 1).rdd.collect()
+    if len(rows) > small_graph_edges:
+        return _propagate_labels(fwd, nodes, id_col, max_iter, checkpoint_every)
+    # object arrays keep any id type (string ids included); np.unique
+    # sorts Python str by code point, which is Spark's UTF-8 order
+    id_type = fwd.schema["a"].dataType
+    dtype = np.int64 if isinstance(id_type, IntegralType) else object
+    a = np.array([r[0] for r in rows], dtype=dtype)
+    b = np.array([r[1] for r in rows], dtype=dtype)
+    return (id_type, *_union_find(a, b))
 
-    labels = sym.coalesce(1).mapInPandas(
-        uf, schema=f"node {id_type}, label {id_type}"
-    )
-    if nodes is not None:
-        return (
-            nodes.select(F.col(id_col))
-            .join(labels, F.col(id_col) == F.col("node"), "left")
-            .select(
-                id_col,
-                F.coalesce("label", F.col(id_col)).alias("component"),
-            )
-        )
-    return labels.select(
-        F.col("node").alias(id_col), F.col("label").alias("component")
-    )
+
+def _local_frame(spark, columns: dict, schema: StructType) -> DataFrame:
+    """Driver-built result columns as a DataFrame through Spark's
+    Arrow reader: the JVM decodes the batches, so no Python worker
+    starts (``createDataFrame`` of a Python list needs one)."""
+    import pyarrow as pa
+
+    table = pa.table({name: pa.array(col) for name, col in columns.items()})
+    return spark.createDataFrame(table, schema=schema)
 
 
 def connected_components(
@@ -648,23 +658,25 @@ def connected_components(
     id_col: str = "id",
     src_col: str = "id1",
     dst_col: str = "id2",
-    max_iter: int = 20,
-    checkpoint_every: int = 5,
-    small_graph_edges: int = 1_000_000,
+    max_iter: int = CC_MAX_ITER,
+    checkpoint_every: int = CC_CHECKPOINT_EVERY,
+    small_graph_edges: int = SMALL_GRAPH_EDGES,
 ) -> DataFrame:
-    """Connected components by iterative min-label propagation, with a
-    single-task union-find fast path for small edge sets.
+    """Connected components: a driver-side union-find for small edge
+    sets, iterative min-label propagation for big ones.
 
-    The edge count is known for free once the symmetric edge list is
-    checkpointed; when it is at most ``small_graph_edges`` the whole
-    graph fits one task and a path-halving union-find computes exact
-    components in one pass — near-dup graphs are tiny relative to
-    their corpus (pairs surviving exact-Jaccard verification), so this
-    is the common case even at 100 TB corpus scale, and it replaces
-    O(diameter) Spark rounds (each a scheduled multi-stage job) with
-    one ``mapInPandas`` call. Graphs above the threshold take the
-    distributed min-label-propagation loop below, which never needs
-    the edges to fit anywhere.
+    One collect of at most ``small_graph_edges + 1`` edges decides the
+    path. When the graph has at most ``small_graph_edges``
+    edges, a path-halving union-find on the driver computes exact
+    components in one pass and the result is a small local frame —
+    near-dup graphs are tiny relative to their corpus (pairs surviving
+    exact-Jaccard verification), so this is the common case even at
+    100 TB corpus scale, and it replaces O(diameter) Spark rounds (each
+    a scheduled multi-stage job) with one collect and no Python worker.
+    Graphs above the threshold take the distributed loop below, which
+    never needs the edges to fit anywhere; it starts from the edge
+    checkpoint the bounded collect filled, so the edge lineage (the
+    MinHash pipeline, for near-dup pairs) runs once either way.
 
     Each node starts labeled with its own id; every round each node
     takes the min of its label and its neighbors' labels; converged
@@ -681,33 +693,59 @@ def connected_components(
 
     Returns (id, component) where component = min node id reachable.
     """
+    graph = _components(
+        edges, nodes, id_col, src_col, dst_col, max_iter, checkpoint_every,
+        small_graph_edges,
+    )
+    if isinstance(graph, DataFrame):
+        return graph
+    id_type, ids, labels = graph
+    local = _local_frame(
+        edges.sparkSession, {id_col: ids, "component": labels},
+        StructType([
+            StructField(id_col, id_type), StructField("component", id_type),
+        ]),
+    )
+    if nodes is None:
+        return local
+    return (
+        nodes.select(F.col(id_col))
+        .join(
+            local.withColumnRenamed(id_col, "__node"),
+            F.col(id_col) == F.col("__node"), "left",
+        )
+        .select(
+            id_col, F.coalesce("component", F.col(id_col)).alias("component")
+        )
+    )
+
+
+def _propagate_labels(
+    fwd: DataFrame,
+    nodes: DataFrame | None,
+    id_col: str,
+    max_iter: int,
+    checkpoint_every: int,
+) -> DataFrame:
+    """The distributed min-label-propagation loop over the
+    checkpointed ``(a, b)`` edge frame; see
+    :func:`connected_components`."""
     import logging
 
-    # EAGER localCheckpoint of the FORWARD edges, not of sym: sym is
-    # referenced by every round's plan, and with a deep edge lineage
-    # (typically a MinHash DAG) Catalyst re-analyzes that whole
-    # subtree each round — the re-planning cost dominates the actual
-    # sub-second iteration work (measured 40% of wall-clock at sf0.1).
-    # Checkpointing collapses the edges to a leaf: one materialization
-    # job, then every round plans against a scan. Checkpointing BEFORE
-    # the symmetrizing union matters: a union of the raw edge plan
-    # with its own reversal executes the upstream DAG TWICE inside the
-    # materialization job (both branches contain it), so the old
-    # sym-side checkpoint paid the entire MinHash verify pipeline
-    # twice (r14 opt). The reversal of a checkpointed scan is free.
-    fwd = edges.select(
-        F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-    ).localCheckpoint(eager=True)
+    # fwd arrives as a localCheckpoint of the FORWARD edges, not of
+    # sym: sym is referenced by every round's plan, and with a deep
+    # edge lineage (typically a MinHash DAG) Catalyst re-analyzes that
+    # whole subtree each round — the re-planning cost dominates the
+    # actual sub-second iteration work (measured 40% of wall-clock at
+    # sf0.1). Checkpointing BEFORE the symmetrizing union matters: a
+    # union of the raw edge plan with its own reversal executes the
+    # upstream DAG TWICE inside the materialization job (both branches
+    # contain it). sym is then re-collapsed to a leaf so each
+    # propagation round scans one checkpointed relation (two scans of
+    # the materialized fwd, never the upstream DAG).
     sym = fwd.unionByName(
         fwd.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    if fwd.count() <= small_graph_edges:
-        return _cc_union_find(sym, nodes, id_col)
-    # big-graph path: re-collapse sym itself to a leaf so each
-    # propagation round scans one checkpointed relation instead of
-    # two branches of the fwd scan (cheap — two scans of the already
-    # materialized fwd, never the upstream DAG)
-    sym = sym.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     if nodes is None:
         # default: iterate only edge-incident nodes (every other node
         # is trivially its own component). Near-dup graphs are sparse,
@@ -780,26 +818,56 @@ def dedup_cluster_survivors(
     """Near-dup survivorship: MinHash pairs -> connected components ->
     keep the lowest-id document per cluster. Returns
     (doc_id, component, is_survivor, cluster_size) for every document
-    that belongs to a near-dup cluster of size >= 2, plus singletons
-    marked survivors implicitly excluded (cluster_size filter keeps the
-    output small; flip the filter to emit the full keep-list).
+    that belongs to a near-dup cluster of size >= 2 (singletons are
+    implicitly survivors and left out, which keeps the output small).
+
+    A small pair graph (the common case, see
+    :func:`connected_components`) is labeled on the driver, and the
+    cluster sizes and survivor flags come from the same arrays: the
+    result is one local frame, with no Python worker and no
+    component-size join. A big graph takes the distributed loop and
+    joins its labels with their per-component counts.
     """
     pairs = minhash_dedup_pairs(
         df, id_col, text_col, n_bands, k, threshold, rows_per_band
     )
-    # nodes=None: CC iterates only edge-incident nodes — singletons
-    # (cluster_size 1) are filtered below anyway
-    cc = connected_components(pairs, None, id_col)
-    sizes = cc.groupBy("component").agg(F.count("*").alias("cluster_size"))
-    return (
-        cc.join(sizes, "component")
-        .filter(F.col("cluster_size") >= 2)
-        .select(
-            id_col,
-            "component",
-            (F.col(id_col) == F.col("component")).alias("is_survivor"),
-            "cluster_size",
+    # nodes=None: only edge-incident nodes are labeled — singletons
+    # (cluster_size 1) are left out anyway
+    graph = _components(
+        pairs, None, id_col, "id1", "id2", CC_MAX_ITER, CC_CHECKPOINT_EVERY,
+        SMALL_GRAPH_EDGES,
+    )
+    if isinstance(graph, DataFrame):
+        cc = graph
+        sizes = cc.groupBy("component").agg(F.count("*").alias("cluster_size"))
+        return (
+            cc.join(sizes, "component")
+            .filter(F.col("cluster_size") >= 2)
+            .select(
+                id_col,
+                "component",
+                (F.col(id_col) == F.col("component")).alias("is_survivor"),
+                "cluster_size",
+            )
         )
+    id_type, ids, labels = graph
+    _, inverse, counts = np.unique(labels, return_inverse=True, return_counts=True)
+    size = counts[inverse].astype(np.int64)
+    keep = size >= 2  # a self-pair alone is no cluster
+    return _local_frame(
+        df.sparkSession,
+        {
+            id_col: ids[keep],
+            "component": labels[keep],
+            "is_survivor": ids[keep] == labels[keep],
+            "cluster_size": size[keep],
+        },
+        StructType([
+            StructField(id_col, id_type),
+            StructField("component", id_type),
+            StructField("is_survivor", BooleanType()),
+            StructField("cluster_size", LongType(), False),
+        ]),
     )
 
 
@@ -812,8 +880,7 @@ def simhash(text: str | Column, bits: int = 64) -> Column:
     """
     from .text import tokens
 
-    c = F.col(text) if isinstance(text, str) else text
-    toks = tokens(c)
+    toks = tokens(text)
     zero = F.array_repeat(F.lit(0).cast("long"), bits)
 
     def step(acc, tok):
@@ -887,7 +954,7 @@ def simhash_table(
 
     par = df.sparkSession.sparkContext.defaultParallelism
     toks = df.repartition(par, id_col).select(
-        F.col(id_col).alias("id"), F.explode(tokens(F.col(text_col))).alias("tok")
+        F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("tok")
     )
     h_sql, bits = _token_hash_sql("tok", token_hash)
     # per-bit aggregates and the 64-term bit-pack are built as SQL

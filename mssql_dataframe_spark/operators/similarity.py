@@ -81,15 +81,21 @@ def _as_double(col: str | Column) -> Column:
     return c.cast("array<double>")
 
 
-def _quantize_col(vec_col: str | Column, quant: int) -> Column:
+def _quantize_sql(vec_sql: str, quant: int) -> str:
     """``floor(v*quant + 0.5)`` int64 quantizer — the ONE expression
     every integer-exact path (semantic_dedup, k-means, PQ, ADC query
     tables) must share: cross-path and cross-engine bit-agreement
-    rests on all of them quantizing identically."""
-    return F.transform(
-        _as_double(vec_col),
-        lambda x: F.floor(x * quant + F.lit(0.5)).cast("long"),
+    rests on all of them quantizing identically. ``0.5D`` is a DOUBLE
+    literal (a bare ``0.5`` would be DECIMAL)."""
+    return (
+        f"transform(CAST({vec_sql} AS array<double>), "
+        f"x -> CAST(floor(x * {int(quant)} + 0.5D) AS BIGINT))"
     )
+
+
+def _quantize_col(vec_col: str, quant: int) -> Column:
+    """:func:`_quantize_sql` over a column name, as a Column."""
+    return F.expr(_quantize_sql(f"`{vec_col}`", quant))
 
 
 def _round8_away(x: "np.ndarray") -> "np.ndarray":
@@ -553,26 +559,22 @@ def semantic_dedup(
     ivf_topk mapInPandas matmul assignment — the cluster/represent/
     flag pipeline downstream is unchanged.
     """
-    qcol = _quantize_col(vec_col, quant)
-
-    def sqnorm(c):
-        return F.aggregate(
-            F.transform(c, lambda x: x * x),
-            F.lit(0).cast("long"), lambda a, x: a + x,
+    def dot(x: str, y: str) -> str:
+        return (
+            f"aggregate(zip_with({x}, {y}, (u, v) -> u * v), "
+            "CAST(0 AS BIGINT), (acc, w) -> acc + w)"
         )
 
-    qe = embeddings.select(
-        F.col(id_col).alias("vec_id"), qcol.alias("q")
-    ).withColumn("nv", sqnorm(F.col("q")))
+    # every frame below is ONE SQL-string projection: plan construction
+    # is a few py4j round trips instead of one per Column operator
+    qe = embeddings.selectExpr(
+        f"`{id_col}` AS vec_id", f"{_quantize_sql(f'`{vec_col}`', quant)} AS q"
+    ).selectExpr("vec_id", "q", f"{dot('q', 'q')} AS nv")
 
-    cent = (
-        qe.orderBy("vec_id").limit(k)
-        .select(
-            (F.row_number().over(Window.orderBy("vec_id")) - 1)
-            .cast("int").alias("cid"),
-            F.col("q").alias("cq"),
-            F.col("nv").alias("nc"),
-        )
+    cent = qe.orderBy(qe["vec_id"]).limit(k).selectExpr(
+        "CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cid",
+        "q AS cq",
+        "nv AS nc",
     )
 
     # NOTE (r14 optimization pass): a map-side argmin here (the
@@ -583,42 +585,16 @@ def semantic_dedup(
     # scan (0.85 s -> 1.41 s; persisting the grid still measured
     # 1.27 s with +4 cache jobs). The combiner aggregation below keeps
     # ONE corpus pass whose exchange both downstream consumers reuse.
-    fanned = qe.crossJoin(F.broadcast(cent)).select(
-        "vec_id", "q", "nv", "cid", "nc",
-        F.aggregate(
-            F.zip_with(F.col("q"), F.col("cq"), lambda x, y: x * y),
-            F.lit(0).cast("long"), lambda a, x: a + x,
-        ).alias("cdot"),
+    # assign carries the winning (dist, cid, q, nv) struct as m; the
+    # consumers read its fields instead of an unpacking projection
+    fanned = qe.crossJoin(F.broadcast(cent)).selectExpr(
+        "vec_id", f"struct(nv + nc - 2 * {dot('q', 'cq')} AS dist, cid, q, nv) AS s"
     )
-    assign = (
-        fanned
-        .withColumn("dist", F.col("nv") + F.col("nc") - 2 * F.col("cdot"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("dist", "cid", "q", "nv")).alias("m"))
-        .select(
-            "vec_id",
-            F.col("m.cid").alias("cid"),
-            F.col("m.q").alias("q"),
-            F.col("m.nv").alias("nv"),
-        )
+    assign = fanned.groupBy(fanned["vec_id"]).agg(F.expr("min(s) AS m"))
+    rep = assign.groupBy(F.expr("m.cid AS cid")).agg(
+        F.expr("min(struct(vec_id AS rep_id, m.q AS rq, m.nv AS nr)) AS r")
     )
 
-    rep = (
-        assign.groupBy("cid")
-        .agg(F.min(F.struct("vec_id", "q", "nv")).alias("r"))
-        .select(
-            "cid",
-            F.col("r.vec_id").alias("rep_id"),
-            F.col("r.q").alias("rq"),
-            F.col("r.nv").alias("nr"),
-        )
-    )
-
-    joined = assign.join(F.broadcast(rep), "cid")
-    rdot = F.aggregate(
-        F.zip_with(F.col("q"), F.col("rq"), lambda x, y: x * y),
-        F.lit(0).cast("long"), lambda a, x: a + x,
-    )
     # the squared-cosine cross-multiplication runs in DECIMAL(38,0):
     # in int64 it overflows once 10000*rdot^2 ~ 2^63 — an L2 norm of
     # only ~5.7 at quant=1024 (any unnormalized corpus), where ANSI
@@ -626,19 +602,15 @@ def semantic_dedup(
     # verdicts. Decimal38 matches the DuckDB oracle's HUGEINT
     # exactness envelope (|v| up to ~3000 at quant=1024); both sides
     # are integers, so the verdict still cannot straddle an ulp.
-    d38 = "decimal(38,0)"
-    return joined.select(
+    rdot = dot("m.q", "r.rq")
+    d38 = "DECIMAL(38,0)"
+    return assign.join(F.broadcast(rep), F.expr("m.cid = cid")).selectExpr(
         "vec_id",
-        F.col("cid").alias("cluster_id"),
-        (
-            (F.col("vec_id") != F.col("rep_id"))
-            & (rdot > 0)
-            & (
-                F.lit(10000).cast(d38) * rdot.cast(d38) * rdot.cast(d38)
-                >= F.lit(tau_sq_bp).cast(d38)
-                * F.col("nv").cast(d38) * F.col("nr").cast(d38)
-            )
-        ).alias("is_dup"),
+        "cid AS cluster_id",
+        f"vec_id != r.rep_id AND {rdot} > 0"
+        f" AND CAST(10000 AS {d38}) * CAST({rdot} AS {d38}) * CAST({rdot} AS {d38})"
+        f" >= CAST({int(tau_sq_bp)} AS {d38})"
+        f" * CAST(m.nv AS {d38}) * CAST(r.nr AS {d38}) AS is_dup",
     )
 
 

@@ -12,6 +12,8 @@ verification phase, stays codegen. Designed for the
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -25,13 +27,32 @@ STOPWORDS = {
 }
 
 
+def _sql_over(build: Callable[[str], str], col: str | Column) -> Column:
+    """The SQL expression ``build(input_sql)`` over a column name or a
+    Column, so each text rule is written once, as SQL. A name is
+    quoted into the SQL text (one ``expr``: a few py4j round trips,
+    where a Column operator tree costs one or more per operator).
+    Spark cannot splice a Column into SQL text, so a Column enters as
+    the variable of a one-element ``transform`` lambda."""
+    if isinstance(col, str):
+        return F.expr(build(f"`{col}`"))
+    lam = F.expr(f"__in -> {build('__in')}")
+    return F.call_function("transform", F.array(col), lam)[0]
+
+
+def _tokens_sql(text: str) -> str:
+    """Whitespace tokens of the SQL expression ``text``: empty/blank
+    text -> empty array, NULL -> NULL."""
+    t = f"trim({text})"
+    return (
+        f"CASE WHEN length({t}) = 0 THEN CAST(array() AS array<string>) "
+        f"ELSE split({t}, '\\\\s+') END"
+    )
+
+
 def tokens(col: str | Column) -> Column:
     """Whitespace tokenization; empty/blank text -> empty array."""
-    c = F.col(col) if isinstance(col, str) else col
-    trimmed = F.trim(c)
-    return F.when(F.length(trimmed) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(trimmed, r"\s+")
-    )
+    return _sql_over(_tokens_sql, col)
 
 
 def token_count(col: str | Column) -> Column:
@@ -60,34 +81,36 @@ def stopword_ratio(col: str | Column, lang: str = "en") -> Column:
     return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
 
 
+def _quality_flag_sql(text: str, toks: str) -> str:
+    """The :func:`quality_features` verdict over the SQL expressions
+    ``text`` and ``toks`` (its :func:`tokens`): thresholds the same
+    ROUNDED intermediates the feature frame publishes, rounding first
+    and then comparing. ``D`` literals are DOUBLE, as ``lit(float)``
+    is; a bare ``0.2`` would be DECIMAL."""
+    n = f"size({toks})"
+    avg_wl = (
+        f"CASE WHEN {n} > 0 THEN (length(trim({text})) - ({n} - 1)) / {n} "
+        "ELSE 0.0D END"
+    )
+    punct = f"length(regexp_replace({text}, '[^\\\\.,;:!\\\\?]', ''))"
+    return (
+        f"CAST({n} >= 5"
+        f" AND round(CAST({avg_wl} AS DOUBLE), 6) BETWEEN 2 AND 12"
+        f" AND round(CAST({punct} / greatest(length({text}), 1) AS DOUBLE), 6)"
+        " <= 0.2D AS BOOLEAN)"
+    )
+
+
 def quality_flag_col(text_col: str = "text") -> Column:
     """The :func:`quality_features` verdict as a standalone ROW-LOCAL
-    expression, so composed gates (``curation.quality_filter``) can
-    fold it into an existing document scan instead of materializing
-    and joining a second feature frame. Value-identical to the
-    ``quality_flag`` column: it thresholds the same ROUNDED
-    intermediates ``quality_features`` publishes (rounding first, then
-    comparing, exactly as the feature frame does — pinned by
-    tests against the feature-frame flag)."""
-    toks = tokens(text_col)
-    c = F.col(text_col)
-    n_chars = F.length(c)
-    n_words = F.size(toks)
-    punct = F.length(F.regexp_replace(c, r"[^\.,;:!\?]", ""))
-    avg_wl = F.when(
-        n_words > 0,
-        (F.length(F.trim(c)) - (n_words - 1)) / n_words,
-    ).otherwise(F.lit(0.0))
-    avg_r = F.round(avg_wl.cast("double"), 6)
-    punct_r = F.round(
-        (punct / F.greatest(n_chars, F.lit(1))).cast("double"), 6
-    )
-    return (
-        (n_words >= 5)
-        & (avg_r >= 2)
-        & (avg_r <= 12)
-        & (punct_r <= 0.2)
-    ).cast("boolean")
+    expression, so composed gates can fold it into an existing
+    document scan instead of materializing and joining a second
+    feature frame. Value-identical to the ``quality_flag`` column
+    (pinned by tests against the feature-frame flag);
+    ``curation.quality_filter`` evaluates the same SQL over its
+    once-tokenized column."""
+    t = f"`{text_col}`"
+    return F.expr(_quality_flag_sql(t, _tokens_sql(t)))
 
 
 def quality_features(
@@ -193,7 +216,7 @@ def tfidf_top_terms(
     )
     toks = df.select(
         F.col(id_col),
-        F.explode(F.transform(tokens(F.col(text_col)), F.lower)).alias("term"),
+        F.explode(F.transform(tokens(text_col), F.lower)).alias("term"),
     )
     tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.countDistinct(id_col).alias("df"))
@@ -443,7 +466,7 @@ def bigram_pmi(
     shuffle otherwise — Catalyst/AQE picks). Nothing holds more than
     the vocabulary in any single task.
     """
-    toks = F.transform(tokens(F.col(text_col)), lambda t: F.lower(t))
+    toks = F.transform(tokens(text_col), lambda t: F.lower(t))
     base = df.select(toks.alias("tk")).filter(F.size("tk") >= 2)
     pairs = _bigram_pairs(base)
 
@@ -588,7 +611,7 @@ def bigram_logprob(
     everything built-in expressions, no UDFs, same cost class as the
     unigram scorer plus one join.
     """
-    toks = F.transform(tokens(F.col(text_col)), lambda t: F.lower(t))
+    toks = F.transform(tokens(text_col), lambda t: F.lower(t))
     base = df.select(F.col(id_col), toks.alias("tk")).filter(
         F.size("tk") >= 2
     )
@@ -687,7 +710,7 @@ def apply_token_merges(
     what proves the semantics).
     """
     stream = F.concat_ws(
-        " ", F.transform(tokens(F.col(text_col)), lambda t: F.lower(t))
+        " ", F.transform(tokens(text_col), lambda t: F.lower(t))
     )
     out = _pad_stream(stream)
     for a, b in merges:
@@ -698,7 +721,7 @@ def apply_token_merges(
     # NULL text -> NULL token array; count must read 0 (and guard the
     # legacy -1 size-of-null convention)
     n_before = F.greatest(
-        F.lit(0), F.coalesce(F.size(tokens(F.col(text_col))), F.lit(0))
+        F.lit(0), F.coalesce(F.size(tokens(text_col)), F.lit(0))
     ).cast("bigint")
     n_after = F.when(F.length(out) == 0, F.lit(0).cast("bigint")).otherwise(
         (F.length(out) - F.length(F.replace(out, F.lit(" "), F.lit("")))
@@ -744,7 +767,7 @@ def learn_token_merges(
     proves the semantics.
     """
     stream = F.concat_ws(
-        " ", F.transform(tokens(F.col(text_col)), lambda t: F.lower(t))
+        " ", F.transform(tokens(text_col), lambda t: F.lower(t))
     )
     base = (
         df.select(stream.alias("seg"))

@@ -2755,7 +2755,7 @@ def doc_rolling_hash(spark, sf_dir):
     md5 fingerprint this is incrementally updatable and detects token
     reordering."""
     d = _t(spark, sf_dir, "documents")
-    toks = X.tokens(F.col("text"))
+    toks = X.tokens("text")
     hashes = F.transform(toks, lambda t: F.conv(
         F.substring(F.md5(t), 1, 10), 16, 10).cast("long"))
     rolling = F.aggregate(
@@ -3160,7 +3160,7 @@ def heavy_hitters_tokens(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     toks = d.filter(
         F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    ).select(F.explode(X.tokens(F.col("text"))).alias("t")).select(
+    ).select(F.explode(X.tokens("text")).alias("t")).select(
         F.lower("t").alias("v")
     )
     return X.heavy_hitters(toks, col="v", k_track=64, top_n=20)

@@ -31,6 +31,19 @@ __version__ = "0.1.0"
 DEFAULT_STORE = os.path.join(os.path.dirname(__file__), "..", ".spark_tables")
 
 
+def _default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset:
+    8g, capped at a quarter of the host's physical memory so one local
+    session leaves room for the rest of a shared machine."""
+    try:
+        quarter_mb = (
+            os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 4 >> 20
+        )
+    except (AttributeError, ValueError, OSError):  # no sysconf (Windows)
+        return "8g"
+    return f"{min(8 << 10, quarter_mb)}m"
+
+
 def connect(
     app_name: str = "mssql_dataframe_spark",
     master: str | None = None,
@@ -63,7 +76,10 @@ def connect(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

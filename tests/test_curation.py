@@ -25,6 +25,30 @@ def test_word_ngrams_short_and_empty(spark):
     assert out[1] == [] and out[2] == [] and out[3] == []
 
 
+def test_text_rules_take_names_and_columns(spark):
+    """tokens and word_ngrams are one SQL rule each: a column name is
+    quoted into it, any other Column enters through a lambda — both
+    give the same values, NULL text included."""
+    from mssql_dataframe_spark.operators.text import tokens
+
+    df = _docs(spark, [(0, " a  b c "), (1, None), (2, ""), (3, "x y")])
+    got = {
+        r["doc_id"]: tuple(r)[1:]
+        for r in df.select(
+            "doc_id",
+            tokens("text"),
+            tokens(F.col("text")),
+            tokens(F.lower(F.upper("text"))),
+            C.word_ngrams("text", 2),
+            C.word_ngrams(F.trim("text"), 2),
+        ).collect()
+    }
+    assert got[0] == (["a", "b", "c"],) * 3 + (["a b", "b c"],) * 2
+    assert got[1] == (None,) * 5
+    assert got[2] == ([],) * 5
+    assert got[3] == (["x", "y"],) * 3 + (["x y"],) * 2
+
+
 def test_repetition_flags_repetitive_doc(spark):
     df = _docs(
         spark,
@@ -231,6 +255,9 @@ def test_quality_flag_col_matches_feature_frame(spark):
         (5, "aa bb cc dd ee"),               # avg exactly 2.0 -> True
         (6, "...... words here today maybe"),# punct heavy
         (7, "x" * 13 + " " + "y" * 13 + " z q w"),  # long words
+        (8, " ".join(["abcdefghijkl"] * 5)),  # avg exactly 12.0 -> True
+        (9, "aa. bb. cc. dd. ee. fffff"),   # punct exactly 0.2 -> True
+        (10, "aa. bb. cc. dd. ee. ffff"),   # punct 5/24 -> False
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     q = quality_features(df).select(
@@ -261,6 +288,13 @@ def test_quality_filter_fused_equals_composition(spark):
         (3, "unique words compose this entirely normal document today"),
         (4, ""),
         (5, "a b a b a b a b a b a b"),
+        # the quality flag's NULL and boundary rows
+        (6, None),
+        (7, "aa bb cc dd ee"),                # avg word length exactly 2.0
+        (8, " ".join(["abcdefghijkl"] * 5)),  # avg exactly 12.0
+        (9, "aa. bb. cc. dd. ee. fffff"),     # punct ratio exactly 0.2
+        (10, "aa. bb. cc. dd. ee. ffff"),     # punct ratio 5/24
+        (11, "  padded   text with enough words  "),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     old = (

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import logging
 
+import pytest
 from pyspark.sql import functions as F
 
 from mssql_dataframe_spark.operators import dedup as D
@@ -259,18 +260,83 @@ def test_cc_small_graph_cutover_counts_input_edges(spark, monkeypatch):
     import mssql_dataframe_spark.operators.dedup as dd
 
     calls = []
-    real = dd._cc_union_find
+    real = dd._union_find
 
     def spy(*a, **k):
         calls.append(1)
         return real(*a, **k)
 
-    monkeypatch.setattr(dd, "_cc_union_find", spy)
+    monkeypatch.setattr(dd, "_union_find", spy)
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3)], "id1 long, id2 long"
     )
     dd.connected_components(edges, small_graph_edges=3).collect()
     assert calls  # 3 edges <= 3: fast path (sym rows = 6 must not veto)
+
+
+def test_cc_big_graph_runs_edge_lineage_once(spark):
+    """Above the cutover the loop starts from the edge checkpoint the
+    bounded collect filled: the edge lineage (a row-counting UDF here)
+    runs once, not once for the collect and again for the loop."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        acc.add(1)
+        return x
+
+    count_rows = F.udf(tick, "long").asNondeterministic()
+    raw = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "id1 long, id2 long"
+    )
+    edges = raw.select(count_rows("id1").alias("id1"), "id2")
+    out = D.connected_components(edges, small_graph_edges=5)
+    assert out.filter(F.col("component") == 0).count() == 13
+    assert acc.value == 12
+
+
+def _random_graph(seed, n_nodes, n_edges, key):
+    import random
+
+    rng = random.Random(seed)
+    return [
+        (key(rng.randrange(n_nodes)), key(rng.randrange(n_nodes)))
+        for _ in range(n_edges)
+    ]
+
+
+# string ids mix ASCII with accented, CJK and astral-plane characters:
+# the driver sorts Python str by code point, Spark compares UTF-8
+# bytes, and the two orders must pick the same min label
+_STR_KEYS = ["n", "N", "é", "中", "\U0001F600", "z"]
+
+
+@pytest.mark.parametrize("kind", ["int", "string", "int_nodes"])
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_cc_driver_union_find_matches_distributed_loop(spark, kind, seed):
+    """The driver-side union-find (default for a small graph) and the
+    distributed min-label loop (``small_graph_edges=0``) label every
+    node identically on seeded random graphs — int ids, string ids,
+    and with an explicit ``nodes=`` frame holding isolated nodes."""
+    if kind == "string":
+        def key(i):
+            return f"{_STR_KEYS[i % len(_STR_KEYS)]}{i:03d}"
+        schema, id_type = "id1 string, id2 string", "string"
+    else:
+        def key(i):
+            return i
+        schema, id_type = "id1 long, id2 long", "bigint"
+    edges = spark.createDataFrame(_random_graph(seed, 60, 45, key), schema)
+    nodes = None
+    if kind == "int_nodes":
+        nodes = spark.createDataFrame([(i,) for i in range(70)], "id long")
+    driver = connected_components(edges, nodes, max_iter=60)
+    loop = connected_components(edges, nodes, max_iter=60, small_graph_edges=0)
+    assert driver.schema == loop.schema
+    assert driver.schema["id"].dataType.simpleString() == id_type
+    got = sorted(tuple(r) for r in driver.collect())
+    assert got == sorted(tuple(r) for r in loop.collect())
+    if kind == "int_nodes":
+        assert len(got) == 70  # every node, isolated ones included
 
 
 def test_ngram_jaccard_pairs_works_with_string_ids(spark):
