@@ -19,7 +19,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import _quality_flag_sql, _sql_over, _tokens_sql, tokens
+from .text import (
+    _ngrams_sql, _quality_flag_sql, _tokens_sql, tokens, word_ngrams,
+)
 
 __all__ = [
     "word_ngrams",
@@ -37,37 +39,6 @@ __all__ = [
     "remove_frequent_lines",
     "perplexity_buckets",
 ]
-
-
-def _ngrams_sql(toks: str, n: int) -> str:
-    """Space-joined word ``n``-grams of the SQL token array ``toks``:
-    the ``zip_with`` of the array against its own shifted slices."""
-    m = f"(size({toks}) - {n - 1})"
-    acc = f"slice({toks}, 1, {m})"
-    for k in range(1, n):
-        acc = (
-            f"zip_with({acc}, slice({toks}, {k + 1}, {m}), "
-            "(a, b) -> concat(a, ' ', b))"
-        )
-    return f"CASE WHEN {m} <= 0 THEN CAST(array() AS array<string>) ELSE {acc} END"
-
-
-def word_ngrams(col: str | Column, n: int) -> Column:
-    """Array of space-joined word ``n``-grams of a text column.
-
-    Documents with fewer than ``n`` tokens yield an empty array.
-    Generated by ``zip_with``-ing the token array against its own
-    shifted slices — the expensive tokenization and the slices are
-    evaluated ONCE per row (function arguments), with only a cheap
-    string concat per gram inside the lambda. (The earlier
-    ``transform(sequence(...), i -> slice(toks, i, n))`` form closed
-    over the tokenizer inside the lambda, re-splitting the whole text
-    once per gram position — quadratic per document; measured ~30x
-    slower at sf0.1.) Embarrassingly parallel either way: a single
-    projection per row, no join or window. The same n-gram SQL runs
-    over :func:`quality_filter`'s once-tokenized column.
-    """
-    return _sql_over(lambda t: _ngrams_sql(_tokens_sql(t), n), col)
 
 
 #: the row-local repetition base metrics over ``__t`` (text) and

@@ -17,13 +17,13 @@ Design for 100 TB:
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType, DataType, IntegralType, LongType, StructField, StructType,
 )
 
-from .text import shingles
+from .text import tokens, word_ngrams
 
 #: default edge-count cutover of :func:`connected_components` between
 #: the driver-side union-find and the distributed loop
@@ -352,15 +352,6 @@ def _verify_jaccard(
     )
 
 
-def jaccard_similarity(text1: Column, text2: Column, k: int = 8) -> Column:
-    """Exact k-shingle Jaccard similarity between two text columns."""
-    s1 = F.array_distinct(shingles(text1, k))
-    s2 = F.array_distinct(shingles(text2, k))
-    inter = F.size(F.array_intersect(s1, s2))
-    union = F.size(F.array_union(s1, s2))
-    return F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
-
-
 def minhash_dedup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -474,22 +465,6 @@ def minhash_dedup_incremental(
     return _verify_jaccard(
         cands, new_rows, cor_rows, "new_id", "corpus_id", id_col,
         threshold,
-    )
-
-
-def word_ngrams(col: str | Column, n: int = 3) -> Column:
-    """Word n-gram array (space-joined); < n tokens -> empty array."""
-    from .text import tokens
-
-    toks = tokens(col)
-    count = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
-    return F.when(count == 0, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), count),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j) for j in range(n)]
-            ),
-        )
     )
 
 
@@ -871,64 +846,12 @@ def dedup_cluster_survivors(
     )
 
 
-def simhash(text: str | Column, bits: int = 64) -> Column:
-    """SimHash: per-token xxhash64, sign-sum each bit, pack to a long.
-
-    Pure built-in expressions: aggregate over the token array with a
-    64-slot accumulator (zip_with add), then bit-pack. Stays inside
-    whole-stage codegen.
-    """
-    from .text import tokens
-
-    toks = tokens(text)
-    zero = F.array_repeat(F.lit(0).cast("long"), bits)
-
-    def step(acc, tok):
-        h = F.xxhash64(tok)
-        # bit positions are compile-time constants: build the ±1
-        # contribution array with a Python loop (shiftright needs an
-        # int shift amount, not a Column)
-        contrib = F.array(
-            *[
-                F.when(
-                    F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-                )
-                .otherwise(F.lit(-1))
-                .cast("long")
-                for j in range(bits)
-            ]
-        )
-        return F.zip_with(acc, contrib, lambda a, b: a + b)
-
-    sums = F.aggregate(toks, zero, step)
-    packed = F.lit(0).cast("long")
-    for j in range(bits):
-        packed = packed.bitwiseOR(
-            F.when(
-                F.element_at(sums, j + 1) > 0,
-                F.shiftleft(F.lit(1).cast("long"), j),
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    return packed
-
-
-def _token_hash(tok: Column, token_hash: str) -> tuple[Column, int]:
-    """(hash column, usable bits). ``xxhash64`` is the production
-    default (fastest, JVM intrinsic); ``md5_60`` takes the first 15 hex
-    chars of md5 as a 60-bit long — slower, but reproducible in any
-    engine with md5 (used by the correctness oracle)."""
-    if token_hash == "xxhash64":
-        return F.xxhash64(tok), 64
-    if token_hash == "md5_60":
-        return F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long"), 60
-    raise ValueError(f"unknown token_hash {token_hash!r}")
-
-
 def _token_hash_sql(tok_sql: str, token_hash: str) -> tuple[str, int]:
-    """SQL-string twin of :func:`_token_hash` (same expressions, same
-    usable-bit counts) for the string-built aggregates in
-    :func:`simhash_table` — one py4j round trip per expression instead
-    of one per Column operator."""
+    """(SQL hash of the token expression ``tok_sql``, usable bits).
+    ``xxhash64`` is the production default (fastest, JVM intrinsic);
+    ``md5_60`` takes the first 15 hex chars of md5 as a 60-bit long —
+    slower, but reproducible in any engine with md5 (used by the
+    correctness oracle)."""
     if token_hash == "xxhash64":
         return f"xxhash64({tok_sql})", 64
     if token_hash == "md5_60":
@@ -947,11 +870,8 @@ def simhash_table(
     """(id, h) — SimHash per document, computed scalably:
     explode tokens -> row-wise token hash (codegen) -> one hash
     aggregation with per-bit ±1 sums (map-side partial agg) -> bit-pack.
-    Zero-token documents hash to 0. ~20x faster than evaluating the
-    per-row higher-order ``simhash`` expression, and one shuffle total.
+    Zero-token documents hash to 0. One shuffle total.
     """
-    from .text import tokens
-
     par = df.sparkSession.sparkContext.defaultParallelism
     toks = df.repartition(par, id_col).select(
         F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("tok")
@@ -1084,7 +1004,7 @@ def simhash_near_dup_pairs(
             "blocking); raise n_blocks for full recall",
             max_hamming, n_blocks - 1, n_blocks - 1, max_hamming,
         )
-    _, bits = _token_hash(F.lit(""), token_hash)
+    _, bits = _token_hash_sql("", token_hash)
     h = simhash_table(df, id_col, text_col, token_hash=token_hash).filter(
         F.col("h") != 0
     )

@@ -1,4 +1,21 @@
-"""Text-analysis operators for large-scale training-data pipelines.
+"""Text-analysis operators for large-scale training-data pipelines,
+and the text rules every Spark-side operator shares.
+
+The four text rules are each written once, here, as a SQL string
+(``_*_sql``) with a Column wrapper that takes a column name or any
+Column:
+
+- :func:`tokens` (``_tokens_sql``): whitespace tokens;
+- :func:`lower_tokens` (``_lower_tokens_sql``): the tokens of the
+  lowercased text;
+- :func:`word_ngrams` (``_ngrams_sql``): space-joined word n-grams of
+  a token array;
+- :func:`shingles` (``_shingles_sql``): character k-grams.
+
+NULL text gives NULL under every rule; blank text, or text with fewer
+than n tokens or k characters, gives an empty array. ``curation``,
+``dedup`` and the registry import these rules; this module imports no
+other operator module.
 
 All operators are pure built-in-function column expressions (JVM-side,
 whole-stage codegen) — no row-at-a-time Python UDFs — so they scan at
@@ -55,6 +72,50 @@ def tokens(col: str | Column) -> Column:
     return _sql_over(_tokens_sql, col)
 
 
+def _lower_tokens_sql(text: str) -> str:
+    """:func:`_tokens_sql` of the lowercased ``text``: one ``lower``
+    per row rather than one per token (lowercasing neither makes nor
+    removes the whitespace the split keys on, so the tokens are the
+    lowercased tokens)."""
+    return _tokens_sql(f"lower({text})")
+
+
+def lower_tokens(col: str | Column) -> Column:
+    """Lowercased whitespace tokens; empty/blank text -> empty array."""
+    return _sql_over(_lower_tokens_sql, col)
+
+
+def _ngrams_sql(toks: str, n: int) -> str:
+    """Space-joined word ``n``-grams of the SQL token array ``toks``:
+    the ``zip_with`` of the array against its own shifted slices."""
+    m = f"(size({toks}) - {n - 1})"
+    acc = f"slice({toks}, 1, {m})"
+    for k in range(1, n):
+        acc = (
+            f"zip_with({acc}, slice({toks}, {k + 1}, {m}), "
+            "(a, b) -> concat(a, ' ', b))"
+        )
+    return f"CASE WHEN {m} <= 0 THEN CAST(array() AS array<string>) ELSE {acc} END"
+
+
+def word_ngrams(col: str | Column, n: int) -> Column:
+    """Array of space-joined word ``n``-grams of a text column.
+
+    Documents with fewer than ``n`` tokens yield an empty array.
+    Generated by ``zip_with``-ing the token array against its own
+    shifted slices — the expensive tokenization and the slices are
+    evaluated ONCE per row (function arguments), with only a cheap
+    string concat per gram inside the lambda. (A
+    ``transform(sequence(...), i -> slice(toks, i, n))`` form closes
+    over the tokenizer inside the lambda, re-splitting the whole text
+    once per gram position — quadratic per document; measured ~30x
+    slower at sf0.1.) Embarrassingly parallel either way: a single
+    projection per row, no join or window. The same n-gram SQL runs
+    over ``curation.quality_filter``'s once-tokenized column.
+    """
+    return _sql_over(lambda t: _ngrams_sql(_tokens_sql(t), n), col)
+
+
 def token_count(col: str | Column) -> Column:
     """Whitespace token count; NULL text counts 0 (guarded against
     both ANSI size(NULL)=NULL and the legacy sizeOfNull=-1
@@ -74,10 +135,10 @@ def bpe_ish_token_count(col: str | Column) -> Column:
 
 def stopword_ratio(col: str | Column, lang: str = "en") -> Column:
     """Fraction of tokens that are stopwords of ``lang``."""
-    toks = tokens(col)
+    toks = lower_tokens(col)
     sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
     # count every occurrence (not just distinct hits)
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
+    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
     return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
 
 
@@ -167,7 +228,7 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Deterministic tie-break: language name ascending.
     """
-    toks = F.transform(tokens(text_col), lambda t: F.lower(t))
+    toks = lower_tokens(text_col)
     scores = []
     for lang_name in sorted(STOPWORDS):
         sw = F.array(*[F.lit(w) for w in STOPWORDS[lang_name]])
@@ -216,7 +277,7 @@ def tfidf_top_terms(
     )
     toks = df.select(
         F.col(id_col),
-        F.explode(F.transform(tokens(text_col), F.lower)).alias("term"),
+        F.explode(lower_tokens(text_col)).alias("term"),
     )
     tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.countDistinct(id_col).alias("df"))
@@ -265,8 +326,8 @@ def unigram_logprob(
     join. Everything is built-in expressions — full codegen, no UDFs.
     """
     toks = df.select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("__t")
-    ).select(id_col, F.lower(F.col("__t")).alias("tok"))
+        F.col(id_col), F.explode(lower_tokens(text_col)).alias("tok")
+    )
     freq = toks.groupBy("tok").agg(F.count("*").alias("tf"))
     total = freq.agg(F.sum("tf").cast("double").alias("__corpus_n"))
     qlp = _qln(F.col("tf"))
@@ -310,14 +371,22 @@ def fingerprint(col: str | Column) -> Column:
     return F.md5(normalized)
 
 
-def shingles(col: str | Column, k: int = 8) -> Column:
-    """Character k-gram shingle array (positions 1..len-k+1), built with
-    ``sequence`` + ``transform`` — pure JVM expressions."""
-    c = F.col(col) if isinstance(col, str) else col
-    n = F.greatest(F.length(c) - F.lit(k - 1), F.lit(0))
-    return F.when(n == 0, F.array().cast("array<string>")).otherwise(
-        F.transform(F.sequence(F.lit(1), n), lambda i: F.substring(c, i, F.lit(k)))
+def _shingles_sql(text: str, k: int) -> str:
+    """Character ``k``-grams of the SQL expression ``text`` at
+    positions 1..len-k+1; text shorter than ``k`` -> empty array (the
+    guard also keeps ``sequence`` ascending: Spark's sequence(1, 0)
+    would DESCEND)."""
+    return (
+        f"CASE WHEN length({text}) < {k} THEN CAST(array() AS array<string>) "
+        f"ELSE transform(sequence(1, length({text}) - {k - 1}), "
+        f"__i -> substring({text}, __i, {k})) END"
     )
+
+
+def shingles(col: str | Column, k: int = 8) -> Column:
+    """Character k-gram shingle array; text shorter than ``k`` -> empty
+    array."""
+    return _sql_over(lambda t: _shingles_sql(t, k), col)
 
 
 def chunk_documents(
@@ -466,7 +535,7 @@ def bigram_pmi(
     shuffle otherwise — Catalyst/AQE picks). Nothing holds more than
     the vocabulary in any single task.
     """
-    toks = F.transform(tokens(text_col), lambda t: F.lower(t))
+    toks = lower_tokens(text_col)
     base = df.select(toks.alias("tk")).filter(F.size("tk") >= 2)
     pairs = _bigram_pairs(base)
 
@@ -611,7 +680,7 @@ def bigram_logprob(
     everything built-in expressions, no UDFs, same cost class as the
     unigram scorer plus one join.
     """
-    toks = F.transform(tokens(text_col), lambda t: F.lower(t))
+    toks = lower_tokens(text_col)
     base = df.select(F.col(id_col), toks.alias("tk")).filter(
         F.size("tk") >= 2
     )
@@ -709,20 +778,14 @@ def apply_token_merges(
     apply compiles the table into a trie, but the relational form is
     what proves the semantics).
     """
-    stream = F.concat_ws(
-        " ", F.transform(tokens(text_col), lambda t: F.lower(t))
-    )
+    stream = F.concat_ws(" ", lower_tokens(text_col))
     out = _pad_stream(stream)
     for a, b in merges:
         out = F.replace(
             out, F.lit(f" {a}  {b} "), F.lit(f" {a}{joiner}{b} ")
         )
     out = _unpad_stream(out)
-    # NULL text -> NULL token array; count must read 0 (and guard the
-    # legacy -1 size-of-null convention)
-    n_before = F.greatest(
-        F.lit(0), F.coalesce(F.size(tokens(text_col)), F.lit(0))
-    ).cast("bigint")
+    n_before = token_count(text_col)
     n_after = F.when(F.length(out) == 0, F.lit(0).cast("bigint")).otherwise(
         (F.length(out) - F.length(F.replace(out, F.lit(" "), F.lit("")))
          + 1).cast("bigint")
@@ -766,9 +829,7 @@ def learn_token_merges(
     accumulated table into a trie — the relational form here is what
     proves the semantics.
     """
-    stream = F.concat_ws(
-        " ", F.transform(tokens(text_col), lambda t: F.lower(t))
-    )
+    stream = F.concat_ws(" ", lower_tokens(text_col))
     base = (
         df.select(stream.alias("seg"))
         .filter(F.length("seg") > 0)

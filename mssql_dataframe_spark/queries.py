@@ -3158,11 +3158,7 @@ def heavy_hitters_tokens(spark, sf_dir):
     superset of every value with count > N/(k+1), so the exact top-20
     match regardless of partitioning."""
     d = _t(spark, sf_dir, "documents")
-    toks = d.filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    ).select(F.explode(X.tokens("text")).alias("t")).select(
-        F.lower("t").alias("v")
-    )
+    toks = d.select(F.explode(X.lower_tokens("text")).alias("v"))
     return X.heavy_hitters(toks, col="v", k_track=64, top_n=20)
 
 
@@ -3340,22 +3336,15 @@ def trigram_search_parts(spark, sf_dir):
     at query time."""
     needle = "smal ringg"  # a typo of the corpus's "small ring"
     p = _t(spark, sf_dir, "part")
-
-    # trigram arrays via sequence+transform (substring by position),
-    # identical semantics to the oracle's list comprehension
-    def grams(col):
-        return F.transform(
-            F.sequence(F.lit(1), F.length(col) - 2),
-            lambda i: col.substr(i, F.lit(3)),
-        )
-
-    q_grams = (
-        spark.createDataFrame([(needle,)], "s string")
-        .select(F.explode(F.array_distinct(grams(F.col("s")))).alias("g"))
+    # trigrams are the shared char-gram rule (operators/text.py
+    # shingles): positions 1..len-2, none for names under 3 chars —
+    # the oracle's list comprehension
+    q_grams = spark.range(1).select(
+        F.explode(F.array_distinct(X.shingles(F.lit(needle), 3))).alias("g")
     )
     postings = p.select(
         "p_partkey", "p_name",
-        F.explode(F.array_distinct(grams(F.lower(F.col("p_name"))))).alias("g"),
+        F.explode(F.array_distinct(X.shingles(F.lower("p_name"), 3))).alias("g"),
     )
     return (
         postings.join(F.broadcast(q_grams), "g")
@@ -3441,22 +3430,9 @@ def doc_ngram_novelty(spark, sf_dir):
     first-owner agg over the exploded distinct-gram frame, then a
     per-doc conditional count; both shuffles ride the slim
     (doc, gram) projection."""
-    d = _t(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
-    )
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    grams_arr = F.array_distinct(
-        F.when(
-            F.size(toks) < 3, F.array().cast("array<string>")
-        ).otherwise(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - 3),
-                lambda i: F.concat_ws(
-                    " ", F.slice(toks, i + 1, 3)
-                ),
-            )
-        )
-    )
+    d = _t(spark, sf_dir, "documents")
+    # word trigrams of the lowercased text; NULL and blank text have none
+    grams_arr = F.array_distinct(X.word_ngrams(F.lower("text"), 3))
     g = d.select("doc_id", F.explode(grams_arr).alias("gram"))
     owners = g.groupBy("gram").agg(F.min("doc_id").alias("first_owner"))
     novel = F.count_if(F.col("first_owner") == F.col("doc_id"))
@@ -3525,15 +3501,9 @@ def source_token_drift(spark, sf_dir):
     TVD needs the miss-mass of tokens a source never emits; that term
     comes from one slim (source x token-present) anti-join, never a
     dense |sources| x |vocab| matrix of data rows."""
-    d = _t(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
-    )
-    toks = d.select(
-        "source",
-        F.explode(
-            F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-        ).alias("tok"),
-    )
+    d = _t(spark, sf_dir, "documents")
+    # NULL and blank text have no tokens
+    toks = d.select("source", F.explode(X.lower_tokens("text")).alias("tok"))
     st = toks.groupBy("source", "tok").agg(
         F.count("*").cast("bigint").alias("c_st")
     ).persist()

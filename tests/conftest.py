@@ -4,6 +4,8 @@ and the host's load at the start and end of the run in the output."""
 
 from __future__ import annotations
 
+import contextlib
+import gc
 import os
 import shutil
 import uuid
@@ -91,3 +93,37 @@ def engine_ts(spark):
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@contextlib.contextmanager
+def _round_trips():
+    """py4j commands sent while the block runs, counted by wrapping
+    ``GatewayClient.send_command`` (as perfbench's tracer does).
+    Memory commands are left out: they detach objects of EARLIER calls
+    whenever Python frees them, so they land in whichever call runs
+    next."""
+    import py4j.java_gateway as jg
+
+    orig = jg.GatewayClient.send_command
+    sent = []
+
+    def counting(client, command, *a, **kw):
+        if not command.startswith("m"):
+            sent.append(command)
+        return orig(client, command, *a, **kw)
+
+    gc.collect()
+    gc.disable()
+    jg.GatewayClient.send_command = counting
+    try:
+        yield sent
+    finally:
+        jg.GatewayClient.send_command = orig
+        gc.enable()
+
+
+@pytest.fixture()
+def round_trips():
+    """``with round_trips() as sent:`` collects the py4j commands the
+    block sends (memory commands left out)."""
+    return _round_trips

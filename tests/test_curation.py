@@ -3,6 +3,9 @@ PII redaction, mixture audit (operators/curation.py)."""
 
 from __future__ import annotations
 
+import pathlib
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -26,27 +29,83 @@ def test_word_ngrams_short_and_empty(spark):
 
 
 def test_text_rules_take_names_and_columns(spark):
-    """tokens and word_ngrams are one SQL rule each: a column name is
-    quoted into it, any other Column enters through a lambda — both
-    give the same values, NULL text included."""
-    from mssql_dataframe_spark.operators.text import tokens
+    """The four text rules of operators/text.py (tokens, lowercased
+    tokens, word n-grams, char k-grams) are one SQL rule each: a column
+    name is quoted into it, any other Column enters through a lambda —
+    both give the same values. NULL text gives NULL; blank text, or
+    text shorter than n tokens or k characters, an empty array."""
+    from mssql_dataframe_spark.operators import text as X
 
-    df = _docs(spark, [(0, " a  b c "), (1, None), (2, ""), (3, "x y")])
+    assert C.word_ngrams is X.word_ngrams
+    df = _docs(spark, [(0, " A  b C "), (1, None), (2, ""), (3, "  "),
+                       (4, "Xy"), (5, "x Y")])
     got = {
         r["doc_id"]: tuple(r)[1:]
         for r in df.select(
             "doc_id",
-            tokens("text"),
-            tokens(F.col("text")),
-            tokens(F.lower(F.upper("text"))),
-            C.word_ngrams("text", 2),
-            C.word_ngrams(F.trim("text"), 2),
+            X.tokens("text"),
+            X.tokens(F.col("text")),
+            X.lower_tokens("text"),
+            X.lower_tokens(F.upper("text")),
+            X.word_ngrams("text", 2),
+            X.word_ngrams(F.trim("text"), 2),
+            X.shingles("text", 3),
+            X.shingles(F.col("text"), 3),
         ).collect()
     }
-    assert got[0] == (["a", "b", "c"],) * 3 + (["a b", "b c"],) * 2
-    assert got[1] == (None,) * 5
-    assert got[2] == ([],) * 5
-    assert got[3] == (["x", "y"],) * 3 + (["x y"],) * 2
+    assert got[0] == (
+        (["A", "b", "C"],) * 2
+        + (["a", "b", "c"],) * 2
+        + (["A b", "b C"],) * 2
+        + ([" A ", "A  ", "  b", " b ", "b C", " C "],) * 2
+    )
+    assert got[1] == (None,) * 8
+    assert got[2] == ([],) * 8
+    assert got[3] == ([],) * 8
+    # fewer than n tokens and fewer than k characters
+    assert got[4] == (["Xy"],) * 2 + (["xy"],) * 2 + ([],) * 4
+    assert got[5] == (
+        (["x", "Y"],) * 2 + (["x", "y"],) * 2 + (["x Y"],) * 2 + (["x Y"],) * 2
+    )
+
+
+def _call_args(src: str, open_paren: int) -> str:
+    """The source text between the parenthesis at ``open_paren`` and
+    its match."""
+    depth = 0
+    for i in range(open_paren, len(src)):
+        depth += {"(": 1, ")": -1}.get(src[i], 0)
+        if depth == 0:
+            return src[open_paren + 1:i]
+    return src[open_paren + 1:]
+
+
+def _tokenizer_copies(package: pathlib.Path) -> list[str]:
+    """``file: form`` for each Spark-side tokenizer written outside
+    ``operators/text.py``: a ``split`` on ``\\s+`` or a
+    ``transform`` over ``tokens(...)``. DuckDB's
+    ``regexp_split_to_array`` (the oracles' engine) is not a match."""
+    found = []
+    for path in sorted(package.rglob("*.py")):
+        rel = path.relative_to(package).as_posix()
+        if rel == "operators/text.py":
+            continue
+        src = path.read_text()
+        for m in re.finditer(r"(?<!\w)split\(", src):
+            if re.search(r"\\+s\+", _call_args(src, m.end() - 1)):
+                found.append(f"{rel}: split on \\s+")
+        if re.search(r"transform\(\s*(?:\w+\.)*tokens\(", src):
+            found.append(f"{rel}: transform(tokens(...))")
+    return found
+
+
+def test_one_tokenizer_form():
+    """Whitespace tokenizing and lowercasing tokens happen only through
+    the rules of operators/text.py."""
+    import mssql_dataframe_spark
+
+    package = pathlib.Path(mssql_dataframe_spark.__file__).parent
+    assert _tokenizer_copies(package) == []
 
 
 def test_repetition_flags_repetitive_doc(spark):

@@ -3,13 +3,15 @@ gate, semantic dedup): no Python worker in the survivors plan, no Spark
 job while the quality and semantic plans are built, and a bounded
 number of py4j round trips for building them. The bounds are the
 figures measured when the SQL-string plans and the driver-side
-union-find landed; they may only go down.
+union-find landed; they may only go down. The text operators' build
+costs are pinned the same way, at the figures measured when every
+operator took its text rules from ``operators/text.py``.
 """
 
 from __future__ import annotations
 
 import contextlib
-import gc
+import os
 import random
 
 import pytest
@@ -17,6 +19,7 @@ import pytest
 from mssql_dataframe_spark.operators import curation as C
 from mssql_dataframe_spark.operators import dedup as D
 from mssql_dataframe_spark.operators import similarity as S
+from mssql_dataframe_spark.operators import text as X
 
 _WORDS = (
     "spark parquet manifest shuffle stage task driver executor join "
@@ -29,6 +32,18 @@ _WORDS = (
 SURVIVOR_JOBS = 14
 #: py4j round trips (GC detaches excluded) for building each frame
 BUILD_ROUND_TRIPS = 100
+#: py4j round trips for building each text operator over the documents
+#: table, once the session has built it before (ngram_jaccard_pairs
+#: includes the count job that pins its gram rows)
+TEXT_BUILD_ROUND_TRIPS = {
+    "lang_id": 596,
+    "tfidf_top_terms": 469,
+    "bigram_pmi": 912,
+    "bigram_logprob": 650,
+    "apply_token_merges": 298,
+    "simhash_table": 418,
+    "ngram_jaccard_pairs": 553,
+}
 
 
 @pytest.fixture(scope="module")
@@ -60,33 +75,6 @@ def _job_group(spark, name):
         sc.setLocalProperty("spark.job.description", None)
 
 
-@contextlib.contextmanager
-def _round_trips():
-    """py4j commands sent while the block runs, counted by wrapping
-    ``GatewayClient.send_command`` (as perfbench's tracer does).
-    Memory commands are left out: they detach objects of EARLIER calls
-    whenever Python frees them, so they land in whichever call runs
-    next."""
-    import py4j.java_gateway as jg
-
-    orig = jg.GatewayClient.send_command
-    sent = []
-
-    def counting(client, command, *a, **kw):
-        if not command.startswith("m"):
-            sent.append(command)
-        return orig(client, command, *a, **kw)
-
-    gc.collect()
-    gc.disable()
-    jg.GatewayClient.send_command = counting
-    try:
-        yield sent
-    finally:
-        jg.GatewayClient.send_command = orig
-        gc.enable()
-
-
 def test_survivors_run_no_python_worker_and_bounded_jobs(spark, corpus):
     docs, _ = corpus
     with _job_group(spark, "cold-survivors") as jobs:
@@ -101,7 +89,9 @@ def test_survivors_run_no_python_worker_and_bounded_jobs(spark, corpus):
 
 
 @pytest.mark.parametrize("stage", ["quality_filter", "semantic_dedup"])
-def test_building_quality_and_semantic_runs_no_job(spark, corpus, stage):
+def test_building_quality_and_semantic_runs_no_job(
+    spark, corpus, stage, round_trips
+):
     docs, vecs = corpus
 
     def build():
@@ -110,9 +100,32 @@ def test_building_quality_and_semantic_runs_no_job(spark, corpus, stage):
         return S.semantic_dedup(vecs, k=4, tau_sq_bp=1200)
 
     with _job_group(spark, f"cold-{stage}") as jobs:
-        with _round_trips() as sent:
+        with round_trips() as sent:
             df = build()
         n_jobs = jobs()
     assert n_jobs == 0
     assert len(sent) <= BUILD_ROUND_TRIPS, len(sent)
     assert df.count() == (45 if stage == "quality_filter" else 60)
+
+
+@pytest.mark.parametrize("op", sorted(TEXT_BUILD_ROUND_TRIPS))
+def test_text_operator_build_round_trips(spark, sf_dir, round_trips, op):
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    merges = [("table", "hash"), ("part", "filter"),
+              ("customer", "join"), ("merge", "group")]
+    build = {
+        "lang_id": lambda: X.lang_id(docs),
+        "tfidf_top_terms": lambda: X.tfidf_top_terms(docs),
+        "bigram_pmi": lambda: X.bigram_pmi(docs),
+        "bigram_logprob": lambda: X.bigram_logprob(docs),
+        "apply_token_merges": lambda: X.apply_token_merges(docs, merges),
+        "simhash_table": lambda: D.simhash_table(docs, "doc_id", "text"),
+        "ngram_jaccard_pairs": lambda: D.ngram_jaccard_pairs(docs),
+    }[op]
+    # the first build in a session also pays one-time lookups; pin the
+    # steady-state cost of a later build
+    build()
+    with round_trips() as sent:
+        build()
+    D.release_pins()
+    assert len(sent) <= TEXT_BUILD_ROUND_TRIPS[op], len(sent)
