@@ -22,6 +22,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ... import cache
 from ...store import TableStore
 from ...validation import precheck_dataframe_deferred
 from .update import (
@@ -190,10 +191,10 @@ def _check_restrict_references(
             return touched
         return []
 
-    deleted_rows = deleted_rows.persist()
     # (t, fk, parent_keys, bounds) per FK, for the final revalidation
     probed: list[tuple] = []
-    try:
+    with cache.scope():
+        deleted_rows = cache.keep(deleted_rows)
         for t, nm, fk in refs:
             action = fk.get("on_delete", "no_action")
             parent_keys = _parent_keys(deleted_rows, fk)
@@ -295,8 +296,6 @@ def _check_restrict_references(
                     expected[t], fk, parent_keys, bounds
                 ):
                     _conflict(t)
-    finally:
-        deleted_rows.unpersist()
     return [(t, snap.version) for t, snap in expected.items()]
 
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import cache
 from .text import (
     _ngrams_sql, _quality_flag_sql, _tokens_sql, tokens, word_ngrams,
 )
@@ -585,14 +586,12 @@ def dedup_lines_df(
     if id_col is not None:
         giants = df.filter(is_giant).withColumn("__did", F.col(id_col))
     else:
-        from .dedup import _pin
-
-        # pinned (dedup._SESSION_PINS): the MID-tagged frame must stay
-        # cached for the rebuild self-join AND be releasable — a bare
-        # persist would hold a corpus-sized cache for the session
-        giants = _pin(df.filter(is_giant).withColumn(
+        # filled now, so the monotonically_increasing_id values the
+        # rebuild self-join matches on are fixed once; the session
+        # owns the cache (cache.release() frees it)
+        giants = cache.keep(df.filter(is_giant).withColumn(
             "__did", F.monotonically_increasing_id()
-        ))
+        ), fill=True)
     ex = giants.select(
         "__did", F.posexplode(lines_arr).alias("__pos", "__line")
     )
@@ -767,12 +766,10 @@ def remove_frequent_lines(
     if id_col is not None:
         with_id = df.withColumn("__did", F.col(id_col))
     else:
-        from .dedup import _pin
-
-        # pinned for the same reason as dedup_lines_df's giants frame
-        with_id = _pin(df.withColumn(
+        # kept for the same reason as dedup_lines_df's giants frame
+        with_id = cache.keep(df.withColumn(
             "__did", F.monotonically_increasing_id()
-        ))
+        ), fill=True)
     ex = with_id.select(
         "__did", F.posexplode_outer(lines_arr).alias("__pos", "__line")
     )
@@ -799,7 +796,6 @@ def perplexity_buckets(
     text_col: str = "text",
     lang_col: str = "lang",
     buckets: int = 3,
-    pins: list | None = None,
 ) -> DataFrame:
     """CCNet-style per-language perplexity bucketing: score every
     document with the corpus-self-trained unigram LM
@@ -820,9 +816,9 @@ def perplexity_buckets(
     (distributed_window.global_row_number: range shuffle + a
     per-partition-count broadcast), per-language rank = global rank
     minus the language's broadcast start offset, and the tile is pure
-    integer arithmetic (ntile_from_rank_col). Caller finalizes with
-    ``distributed_window.finalize(out, pins)`` after the last action
-    to release the rank's pinned caches.
+    integer arithmetic (ntile_from_rank_col). The returned plan reads
+    the rank's cache (see :mod:`.distributed_window`): a caller that
+    materializes the result inside ``cache.scope()`` frees it.
     """
     from . import distributed_window as DW
     from .text import unigram_logprob
@@ -836,9 +832,7 @@ def perplexity_buckets(
         F.col("mean_logprob").desc(),
         F.col(id_col).asc(),
     ]
-    ranked, _total = DW.global_row_number(
-        scored, order, out="__grn", pins=pins
-    )
+    ranked, _total = DW.global_row_number(scored, order, out="__grn")
     # per-language size + start offset: one tiny agg over the ranked
     # frame (O(languages) rows), broadcast back
     per_lang = ranked.groupBy(lang_col).agg(

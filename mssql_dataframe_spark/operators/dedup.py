@@ -23,7 +23,8 @@ from pyspark.sql.types import (
     BooleanType, DataType, IntegralType, LongType, StructField, StructType,
 )
 
-from .text import tokens, word_ngrams
+from .. import cache
+from .text import _gram_starts_sql, _tokens_sql, word_ngrams
 
 #: default edge-count cutover of :func:`connected_components` between
 #: the driver-side union-find and the distributed loop
@@ -33,33 +34,6 @@ SMALL_GRAPH_EDGES = 1_000_000
 #: :func:`dedup_cluster_survivors`
 CC_MAX_ITER = 20
 CC_CHECKPOINT_EVERY = 5
-
-# persisted intermediates (signature bases, shingle rows) registered
-# here so long-lived sessions can release them — same discipline as
-# operators/distributed_window. Short-lived harnesses instead call
-# ``spark.catalog.clearCache()`` between queries (bench.py, gate_sim).
-_SESSION_PINS: list = []
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Persist + eagerly materialize + register for release_pins()."""
-    df = df.persist()
-    df.count()
-    _SESSION_PINS.append(df)
-    return df
-
-
-def release_pins() -> int:
-    """Unpersist every intermediate this module cached; returns how
-    many were held. Safe anytime — consumers that already collected
-    are unaffected; lazy plans recompute."""
-    n = 0
-    for p in _SESSION_PINS:
-        p.unpersist(blocking=False)
-        n += 1
-    _SESSION_PINS.clear()
-    return n
-
 
 def exact_dedup(
     df: DataFrame, key_cols: list[str], id_col: str = "doc_id"
@@ -117,10 +91,11 @@ def shingle_rows(
     is far cheaper than shuffling the exploded relation."""
     par = df.sparkSession.sparkContext.defaultParallelism
     i, t = f"`{id_col}`", f"`{text_col}`"
+    guard, starts = _gram_starts_sql(t, k)
     return (
         df.repartition(par, df[id_col])
-        .where(f"length({t}) >= {k}")
-        .selectExpr(i, t, f"explode(sequence(1, length({t}) - {k - 1})) AS __i")
+        .where(guard)
+        .selectExpr(i, t, f"explode({starts}) AS __i")
         .selectExpr(i, f"substring({t}, __i, {k}) AS sh")
         .dropDuplicates([id_col, "sh"])
     )
@@ -204,12 +179,10 @@ def _signature_base(
     # min-hash stage), and the pair query does not wait for a job of
     # its own (an eager count cost about 2 s of a cold pass). Readers
     # on different executors share no lock and would each recompute
-    # the scan, so a cluster session materializes it first (_pin).
-    if not base.sparkSession.sparkContext.master.startswith("local"):
-        return _pin(base)
-    base = base.persist()
-    _SESSION_PINS.append(base)
-    return base
+    # the scan, so a cluster session materializes it first.
+    return cache.keep(
+        base, fill=not base.sparkSession.sparkContext.master.startswith("local")
+    )
 
 
 def minhash_signatures(
@@ -383,8 +356,7 @@ def minhash_dedup_pairs(
     # signature base is built FROM it, so whichever job first fills
     # the signature cache fills both in one chain — a separate eager
     # rows count was one extra full job (r14 opt, ~0.5-1 s at sf0.1).
-    rows = shingle_rows(df, id_col, text_col, k).persist()
-    _SESSION_PINS.append(rows)
+    rows = cache.keep(shingle_rows(df, id_col, text_col, k))
     base = _signature_base(
         df, id_col, text_col, n_bands, k, rows_per_band, rows=rows
     )
@@ -427,10 +399,8 @@ def minhash_dedup_incremental(
     n_hashes = n_bands * rows_per_band
     # lazy shingle caches, filled together with their signature bases
     # — same single-chain reasoning as minhash_dedup_pairs
-    new_rows = shingle_rows(new_df, id_col, text_col, k).persist()
-    _SESSION_PINS.append(new_rows)
-    cor_rows = shingle_rows(corpus_df, id_col, text_col, k).persist()
-    _SESSION_PINS.append(cor_rows)
+    new_rows = cache.keep(shingle_rows(new_df, id_col, text_col, k))
+    cor_rows = cache.keep(shingle_rows(corpus_df, id_col, text_col, k))
     nb = _signature_base(
         new_df, id_col, text_col, n_bands, k, rows_per_band, rows=new_rows
     )
@@ -542,7 +512,7 @@ def ngram_jaccard_pairs(
             F.explode(F.array_distinct(word_ngrams(text_col, n))).alias("g"),
         )
     )
-    rows = _pin(rows)
+    rows = cache.keep(rows, fill=True)
     return _verify_jaccard(
         cands, rows, rows, "id1", "id2", id_col, threshold,
         gram_col="g",
@@ -756,7 +726,7 @@ def _propagate_labels(
             new_labels = new_labels.localCheckpoint(eager=False)
             cached = None
         else:
-            new_labels = new_labels.persist()
+            new_labels = cache.keep(new_labels)
             cached = new_labels
         changed = new_labels.agg(
             F.max(F.col("__changed").cast("int"))
@@ -764,9 +734,11 @@ def _propagate_labels(
         # release the PRE-drop cached handle from the previous round:
         # unpersist only uncaches exact-plan matches, so calling it on
         # the post-drop projection (as this loop once did) silently
-        # leaked every round's O(nodes) label frame for the session
+        # leaked every round's O(nodes) label frame for the session.
+        # The last round's cache, which the returned plan reads, stays
+        # with the session until cache.release().
         if prev_cached is not None:
-            prev_cached.unpersist()
+            cache.release(prev_cached)
         prev_cached = cached
         labels = new_labels.drop("__changed")
         if not changed:
@@ -873,35 +845,33 @@ def simhash_table(
     Zero-token documents hash to 0. One shuffle total.
     """
     par = df.sparkSession.sparkContext.defaultParallelism
-    toks = df.repartition(par, id_col).select(
-        F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("tok")
+    i = f"`{id_col}` AS id"
+    toks = df.repartition(par, id_col).selectExpr(
+        i, f"explode({_tokens_sql(f'`{text_col}`')}) AS tok"
     )
     h_sql, bits = _token_hash_sql("tok", token_hash)
-    # per-bit aggregates and the 64-term bit-pack are built as SQL
-    # strings: the stacked-Column form cost ~1000 py4j round trips of
-    # plan construction per call (~2 s of driver wall clock under
-    # load) for the identical expression tree. Same arithmetic: the
-    # CASE sums are the same ±1 integer sums, shiftleft operates on a
-    # pinned BIGINT 1, and the OR chain matches the bitwiseOR fold.
-    sums = toks.groupBy("id").agg(
-        *[
-            F.expr(
-                f"sum(CASE WHEN (shiftright({h_sql}, {j}) & 1) = 1 "
-                f"THEN 1 ELSE -1 END) AS s{j}"
-            )
-            for j in range(bits)
-        ]
+    # every projection, the per-bit sums and the bit-pack are SQL
+    # strings: an ``array`` of the per-bit sums is ONE aggregate
+    # expression, where one ``expr`` per bit cost about 6 py4j round
+    # trips each, an aliased Column about 12, and the stacked-Column
+    # form about 1000 per call. Same arithmetic: the CASE sums are the
+    # same ±1 integer sums, shiftleft operates on a pinned BIGINT 1,
+    # and the OR chain matches the bitwiseOR fold.
+    sums_sql = ", ".join(
+        f"sum(CASE WHEN (shiftright({h_sql}, {j}) & 1) = 1 THEN 1 ELSE -1 END)"
+        for j in range(bits)
     )
+    sums = toks.groupBy("id").agg(F.expr(f"array({sums_sql}) AS s"))
     packed_sql = " | ".join(
-        f"(CASE WHEN s{j} > 0 THEN shiftleft(CAST(1 AS BIGINT), {j}) "
+        f"(CASE WHEN s[{j}] > 0 THEN shiftleft(CAST(1 AS BIGINT), {j}) "
         "ELSE CAST(0 AS BIGINT) END)"
         for j in range(bits)
     )
     hashed = sums.selectExpr("id", f"({packed_sql}) AS h")
     return (
-        df.select(F.col(id_col).alias("id"))
+        df.selectExpr(i)
         .join(hashed, "id", "left")
-        .select("id", F.coalesce("h", F.lit(0).cast("long")).alias("h"))
+        .selectExpr("id", "coalesce(h, CAST(0 AS BIGINT)) AS h")
     )
 
 
@@ -1122,18 +1092,14 @@ def exact_substring_pairs(
     skew note as fuzzy_join_dist1 applies to pathological hot windows
     (boilerplate headers): cap or salt oversized window buckets.
     """
-    base = df.filter(
-        F.col(text_col).isNotNull() & (F.length(text_col) >= window)
-    ).select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
+    guard, starts = _gram_starts_sql("t", window)
+    base = df.select(
+        F.col(id_col).alias("id"), F.col(text_col).alias("t")
+    ).where(guard)
     par = df.sparkSession.sparkContext.defaultParallelism
     if base.rdd.getNumPartitions() < par:
         base = base.repartition(par)
-    pos = base.select(
-        "id", "t",
-        F.explode(
-            F.sequence(F.lit(1), F.length("t") - F.lit(window - 1))
-        ).alias("p"),
-    )
+    pos = base.selectExpr("id", "t", f"explode({starts}) AS p")
     khash = F.conv(
         F.substring(F.md5(F.col("t").substr(F.col("p"), F.lit(kgram))), 1, 10),
         16, 10,

@@ -18,6 +18,12 @@ The orderings passed in must be total (callers tie-break on a unique
 key), so results are deterministic and bit-identical to the global
 window they replace. Decimal running sums stay exact: offsets are
 accumulated as ``decimal.Decimal`` on the driver.
+
+Step 1's frame is cached (``cache.keep``) so both jobs see the same
+partition ids, and the returned frame reads it. A caller that
+materializes its result inside ``cache.scope()`` frees it there
+(``return out.localCheckpoint(eager=True)`` in the block); otherwise
+the session owns it until ``cache.release()``.
 """
 
 from __future__ import annotations
@@ -27,17 +33,13 @@ import decimal
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from .. import cache
+
 _PID = "__dw_pid"
 _LOCAL = "__dw_local"
 
-# Frames pinned for pid stability when the caller did not thread its
-# own ``pins`` list. Release with :func:`release_all` once downstream
-# consumption is done (callers that want scoped cleanup should pass
-# ``pins`` and call :func:`finalize` instead).
-_SESSION_PINS: list[DataFrame] = []
 
-
-def _range_partitioned(df: DataFrame, order_cols, pins=None) -> DataFrame:
+def _range_partitioned(df: DataFrame, order_cols) -> DataFrame:
     try:
         n_part = int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -50,44 +52,14 @@ def _range_partitioned(df: DataFrame, order_cols, pins=None) -> DataFrame:
         df.repartitionByRange(n_part, *order_cols)
         .withColumn(_PID, F.spark_partition_id())
     )
-    # Pin the partition assignment: the offsets job and the main plan
+    # Keep the partition assignment: the offsets job and the main plan
     # must see identical pids (range-boundary sampling must run once,
-    # not once per job). The pin is recorded so finalize()/release_all()
-    # can unpersist it once the result no longer depends on it.
-    out = out.persist()
-    (pins if pins is not None else _SESSION_PINS).append(out)
-    return out
-
-
-def finalize(df: DataFrame, pins: list) -> DataFrame:
-    """Materialize *df* and release every pinned intermediate.
-
-    ``localCheckpoint(eager=True)`` computes the result once into
-    executor-local blocks, severing the plan's dependence on the
-    pinned caches (safe to unpersist them immediately) — and unlike a
-    plain ``persist``, checkpoint blocks are reference-tracked by the
-    ContextCleaner, so they are freed automatically when the returned
-    frame is garbage-collected on the driver. Net: zero cached frames
-    outlive the computation.
-    """
-    out = df.localCheckpoint(eager=True)
-    for p in pins:
-        p.unpersist(blocking=False)
-    pins.clear()
-    return out
-
-
-def release_all() -> int:
-    """Unpersist every session-level pin; returns how many were held."""
-    n = len(_SESSION_PINS)
-    for p in _SESSION_PINS:
-        p.unpersist(blocking=False)
-    _SESSION_PINS.clear()
-    return n
+    # not once per job).
+    return cache.keep(out)
 
 
 def global_row_number(
-    df: DataFrame, order_cols, out: str = "rn", pins=None
+    df: DataFrame, order_cols, out: str = "rn"
 ) -> tuple[DataFrame, int]:
     """Exact global ``row_number`` over a total order, no global window.
 
@@ -97,7 +69,7 @@ def global_row_number(
     no single-partition stage.
     """
     spark = df.sparkSession
-    d = _range_partitioned(df, order_cols, pins)
+    d = _range_partitioned(df, order_cols)
     local = F.row_number().over(Window.partitionBy(_PID).orderBy(*order_cols))
     d = d.withColumn(_LOCAL, local.cast("bigint"))
 
@@ -173,7 +145,7 @@ def ntile_from_rank_col(rn, total, buckets: int = 5):
 
 
 def global_cumsum(
-    df: DataFrame, order_cols, value_col: str, out: str = "cum", pins=None
+    df: DataFrame, order_cols, value_col: str, out: str = "cum"
 ):
     """Exact global running sum over a total order, no global window.
 
@@ -183,7 +155,7 @@ def global_cumsum(
     a Python number (``Decimal`` for decimal columns).
     """
     spark = df.sparkSession
-    d = _range_partitioned(df, order_cols, pins)
+    d = _range_partitioned(df, order_cols)
     w_local = (
         Window.partitionBy(_PID)
         .orderBy(*order_cols)

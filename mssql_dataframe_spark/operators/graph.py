@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import cache
+
 
 def pagerank_quantized(
     edges: DataFrame,
@@ -95,74 +97,72 @@ def pagerank_quantized(
     # plans keep their partitioning under AQE
     # (canChangeCachedPlanOutputPartitioning=false), so the
     # per-iteration join now exchanges only the |V|-sized rank frame.
-    edges_w = e.join(outdeg, "src").repartition(F.col("src")).persist()
-    # materialize the cache EAGERLY, before any iteration is planned:
-    # every iteration's physical plan is constructed up front (the
-    # lazy checkpoints chain), and an UNmaterialized InMemoryRelation
-    # reports UnknownPartitioning at that moment — EnsureRequirements
-    # then puts an Exchange hashpartitioning(src) ON TOP of the cache
-    # scan in every iteration (the r14 plan capture showed exactly
-    # that), re-shuffling the unchanging edge list per pass. With the
-    # cache hot at planning time, InMemoryTableScan reports the pinned
-    # hashpartitioning(src, N) and every loop-body join plans with NO
-    # edge-side exchange: iterations move only the |V|-sized rank
-    # frame (verified in plans/r15/pagerank_iteration_after.txt). The
-    # count() is not extra work — it IS the cache-fill job iteration 1
-    # used to pay lazily.
-    edges_w.count()
-    nodes = (
-        e.select(F.col("src").alias("node_id"))
-        .union(e.select(F.col("dst").alias("node_id")))
-        .distinct()
-    )
-    if not assume_all_nodes_have_in_edges:
-        # consumed once per iteration by the left join — cache it
-        nodes = nodes.persist()
-    base = ((d_den - d_num) * unit) // d_den
-    ranks = nodes.withColumn("rank_q", F.lit(unit).cast("bigint"))
-    rank_expr = (
-        F.lit(base)
-        + F.expr(f"({d_num} * coalesce(in_sum, 0L)) div {d_den}")
-    ).cast("bigint").alias("rank_q")
-    for _ in range(iters):
-        # hint the rank side into a shuffled-hash build: the checkpoint
-        # leaf has no stats, so the planner would fall back to
-        # sort-merge and re-SORT the (unchanging) cached edge
-        # partitions every iteration; hashing the |V|-sized rank side
-        # instead does per-partition work ∝ ranks, not ∝ edges
-        contribs = (
-            edges_w.join(
-                ranks.hint("shuffle_hash"),
-                edges_w.src == ranks.node_id,
-            )
-            .select(
-                F.col("dst").alias("node_id"),
-                F.expr("rank_q div outdeg").alias("contrib"),
-            )
-            .groupBy("node_id")
-            .agg(F.sum("contrib").alias("in_sum"))
+    with cache.scope():
+        # fill the cache EAGERLY, before any iteration is planned: every
+        # iteration's physical plan is constructed up front (the lazy
+        # checkpoints chain), and an UNmaterialized InMemoryRelation
+        # reports UnknownPartitioning at that moment — EnsureRequirements
+        # then puts an Exchange hashpartitioning(src) ON TOP of the cache
+        # scan in every iteration (the r14 plan capture showed exactly
+        # that), re-shuffling the unchanging edge list per pass. With the
+        # cache hot at planning time, InMemoryTableScan reports the pinned
+        # hashpartitioning(src, N) and every loop-body join plans with NO
+        # edge-side exchange: iterations move only the |V|-sized rank
+        # frame (verified in plans/r15/pagerank_iteration_after.txt). The
+        # fill's count is not extra work — it IS the cache-fill job
+        # iteration 1 used to pay lazily.
+        edges_w = cache.keep(
+            e.join(outdeg, "src").repartition(F.col("src")), fill=True
         )
-        if assume_all_nodes_have_in_edges:
-            # the aggregate's key set IS the node set (caller contract)
-            ranks = contribs.select("node_id", rank_expr).localCheckpoint(
-                eager=False
+        nodes = (
+            e.select(F.col("src").alias("node_id"))
+            .union(e.select(F.col("dst").alias("node_id")))
+            .distinct()
+        )
+        if not assume_all_nodes_have_in_edges:
+            # consumed once per iteration by the left join — cache it
+            nodes = cache.keep(nodes)
+        base = ((d_den - d_num) * unit) // d_den
+        ranks = nodes.withColumn("rank_q", F.lit(unit).cast("bigint"))
+        rank_expr = (
+            F.lit(base)
+            + F.expr(f"({d_num} * coalesce(in_sum, 0L)) div {d_den}")
+        ).cast("bigint").alias("rank_q")
+        for _ in range(iters):
+            # hint the rank side into a shuffled-hash build: the checkpoint
+            # leaf has no stats, so the planner would fall back to
+            # sort-merge and re-SORT the (unchanging) cached edge
+            # partitions every iteration; hashing the |V|-sized rank side
+            # instead does per-partition work ∝ ranks, not ∝ edges
+            contribs = (
+                edges_w.join(
+                    ranks.hint("shuffle_hash"),
+                    edges_w.src == ranks.node_id,
+                )
+                .select(
+                    F.col("dst").alias("node_id"),
+                    F.expr("rank_q div outdeg").alias("contrib"),
+                )
+                .groupBy("node_id")
+                .agg(F.sum("contrib").alias("in_sum"))
             )
-        else:
-            ranks = (
-                nodes.join(contribs, "node_id", "left")
-                .select("node_id", rank_expr)
-                .localCheckpoint(eager=False)
-            )
-    # materialize BEFORE releasing the caches: persist() is lazy, so
-    # unpersisting here without an action would deregister the caches
-    # while still empty and every iteration would recompute the edge
-    # dedup + degree join when the caller finally runs an action (the
-    # same no-op-unpersist trap the connected-components loop hit).
-    # The eager localCheckpoint runs the whole iteration chain once
-    # with the caches live, pins the result as a plan-stable snapshot,
-    # and then the frames are safe to free.
-    out = ranks.select("node_id", "rank_q").localCheckpoint(eager=True)
-    edges_w.unpersist()
-    if not assume_all_nodes_have_in_edges:
-        nodes.unpersist()
-    return out
+            if assume_all_nodes_have_in_edges:
+                # the aggregate's key set IS the node set (caller contract)
+                ranks = contribs.select("node_id", rank_expr).localCheckpoint(
+                    eager=False
+                )
+            else:
+                ranks = (
+                    nodes.join(contribs, "node_id", "left")
+                    .select("node_id", rank_expr)
+                    .localCheckpoint(eager=False)
+                )
+        # materialize BEFORE the scope releases the caches: persist() is
+        # lazy, so releasing them without an action would deregister the
+        # caches while still empty and every iteration would recompute
+        # the edge dedup + degree join when the caller finally runs an
+        # action (the same no-op-unpersist trap the connected-components
+        # loop hit). The eager localCheckpoint runs the whole iteration
+        # chain once with the caches live and pins the result as a
+        # plan-stable snapshot.
+        return ranks.select("node_id", "rank_q").localCheckpoint(eager=True)

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import cache
+
 
 def dot_sql(a: str, b: str, dim: int) -> str:
     """Unrolled dot product as ONE SQL string — parsed in a single
@@ -614,37 +616,6 @@ def semantic_dedup(
     )
 
 
-#: quantized-corpus caches created by kmeans_quantized /
-#: pq_train_encode. The returned plans READ these caches (unpersisting
-#: before return would re-scan and re-quantize the corpus at action
-#: time), so the functions cannot release them — but repeated calls
-#: over large corpora would otherwise accumulate executor cache until
-#: LRU pressure evicts unrelated data. Callers done consuming the
-#: returned frames call :func:`release_caches`.
-_TRACKED_CACHES: list = []
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    _TRACKED_CACHES.append(df.persist())
-    return df
-
-
-def release_caches() -> int:
-    """Unpersist every quantized-corpus cache this module created
-    (kmeans_quantized / pq_train_encode persist their grids for the
-    returned plan's benefit). Safe any time — a released frame
-    recomputes on next action. Returns the number released."""
-    n = 0
-    while _TRACKED_CACHES:
-        df = _TRACKED_CACHES.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:  # session already stopped — nothing to free
-            pass
-    return n
-
-
 def _q_sqsum(c: Column) -> Column:
     """Exact int64 squared norm of a quantized vector column."""
     return F.aggregate(
@@ -795,11 +766,11 @@ def kmeans_quantized(
     """
     qcol = _quantize_col(vec_col, quant)
     spark = embeddings.sparkSession
-    # persisted for the training collects AND the returned plan —
-    # unpersisting before return would force the final assignment to
-    # re-scan and re-quantize the corpus; Spark evicts LRU, so the
-    # cache's lifetime needs no manual management in normal use
-    qe = _persist_tracked(
+    # kept for the training collects AND the returned plan, so the
+    # session owns it (cache.release() frees it): releasing it before
+    # return would force the final assignment to re-scan and
+    # re-quantize the corpus
+    qe = cache.keep(
         embeddings.select(F.col(id_col).alias("vec_id"), qcol.alias("q"))
         .withColumn("nv", _q_sqsum(F.col("q")))
     )
@@ -856,11 +827,11 @@ def pq_train_encode(
     sub = dim // m
     spark = embeddings.sparkSession
     qcol = _quantize_col(vec_col, quant)
-    # persisted for the m training loops AND the returned plan's m
-    # assignment branches (unpersisting before return would re-scan
-    # and re-quantize the corpus once per subspace at action time);
-    # Spark evicts LRU, so no manual lifetime management is needed
-    qe = _persist_tracked(embeddings.select(
+    # kept for the m training loops AND the returned plan's m
+    # assignment branches, so the session owns it (releasing it before
+    # return would re-scan and re-quantize the corpus once per subspace
+    # at action time)
+    qe = cache.keep(embeddings.select(
         F.col(id_col).alias("vec_id"),
         *[
             F.slice(qcol, s * sub + 1, sub).alias(f"q{s}")

@@ -34,6 +34,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import cache
+
 # Compact multi-language stopword lists for the n-gram/stopword
 # language-ID heuristic. Deliberately small and deterministic.
 STOPWORDS = {
@@ -371,15 +373,20 @@ def fingerprint(col: str | Column) -> Column:
     return F.md5(normalized)
 
 
+def _gram_starts_sql(text: str, k: int) -> tuple[str, str]:
+    """``(guard, starts)``: SQL for the start positions 1..len-k+1 of
+    the character ``k``-grams of ``text``, valid only where ``guard``
+    holds (Spark's sequence(1, 0) would DESCEND)."""
+    return f"length({text}) >= {k}", f"sequence(1, length({text}) - {k - 1})"
+
+
 def _shingles_sql(text: str, k: int) -> str:
-    """Character ``k``-grams of the SQL expression ``text`` at
-    positions 1..len-k+1; text shorter than ``k`` -> empty array (the
-    guard also keeps ``sequence`` ascending: Spark's sequence(1, 0)
-    would DESCEND)."""
+    """Character ``k``-grams of the SQL expression ``text``; text
+    shorter than ``k`` -> empty array, NULL -> NULL."""
+    guard, starts = _gram_starts_sql(text, k)
     return (
-        f"CASE WHEN length({text}) < {k} THEN CAST(array() AS array<string>) "
-        f"ELSE transform(sequence(1, length({text}) - {k - 1}), "
-        f"__i -> substring({text}, __i, {k})) END"
+        f"CASE WHEN NOT ({guard}) THEN CAST(array() AS array<string>) "
+        f"ELSE transform({starts}, __i -> substring({text}, __i, {k})) END"
     )
 
 
@@ -830,14 +837,11 @@ def learn_token_merges(
     proves the semantics.
     """
     stream = F.concat_ws(" ", lower_tokens(text_col))
-    base = (
-        df.select(stream.alias("seg"))
-        .filter(F.length("seg") > 0)
-        .persist()
-    )
-    seg = base
     merges: list[tuple[int, str, str, int]] = []
-    try:
+    with cache.scope():
+        seg = cache.keep(
+            df.select(stream.alias("seg")).filter(F.length("seg") > 0)
+        )
         for k in range(rounds):
             toks = F.split(F.col("seg"), " ")
             pairs = F.zip_with(
@@ -870,6 +874,4 @@ def learn_token_merges(
                     )
                 ),
             )
-    finally:
-        base.unpersist()
     return merges

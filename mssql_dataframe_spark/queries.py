@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from . import cache
 from .core import datetimeoffset as DTO
 from .core import timetype as TT
 from .operators import dedup as D
@@ -511,8 +512,11 @@ def q11(spark, sf_dir):
     decimal-accumulated for order-insensitive bits; the /count and
     *1.5 double ops are IEEE-deterministic in both engines."""
     l = _t(spark, sf_dir, "lineitem")
-    val = l.groupBy("l_partkey").agg(_dsum(_exact_rev(), "part_value")).persist()
-    val.count()  # persist() is lazy; materialize before the two consumers race
+    # filled now: a lazy cache would race its two consumers
+    val = cache.keep(
+        l.groupBy("l_partkey").agg(_dsum(_exact_rev(), "part_value")),
+        fill=True,
+    )
     total = val.agg(
         (
             F.sum(F.col("part_value").cast("decimal(18,4)")).cast("double")
@@ -891,13 +895,13 @@ def q21(spark, sf_dir):
         "o_orderkey", "o_orderdate"
     )
     late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
-    per_os = (
+    # filled now: a lazy cache would race its two consumers
+    per_os = cache.keep(
         l.join(o, l.l_orderkey == o.o_orderkey)
         .groupBy("l_orderkey", "l_suppkey")
-        .agg(F.sum(F.when(late, 1).otherwise(0)).alias("__late_lines"))
-        .persist()
+        .agg(F.sum(F.when(late, 1).otherwise(0)).alias("__late_lines")),
+        fill=True,
     )
-    per_os.count()  # persist() is lazy; materialize before the two consumers race
     per_order = (
         per_os.groupBy("l_orderkey")
         .agg(
@@ -3200,11 +3204,10 @@ def basket_brand_lift(spark, sf_dir):
     brand-count joins broadcast."""
     l = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part")
-    ob = (
+    ob = cache.keep(
         l.join(p, l.l_partkey == p.p_partkey)
         .select("l_orderkey", "p_brand")
         .distinct()
-        .persist()
     )
     n_orders = ob.select(
         F.count_distinct("l_orderkey").cast("bigint").alias("n")
@@ -3504,9 +3507,9 @@ def source_token_drift(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     # NULL and blank text have no tokens
     toks = d.select("source", F.explode(X.lower_tokens("text")).alias("tok"))
-    st = toks.groupBy("source", "tok").agg(
+    st = cache.keep(toks.groupBy("source", "tok").agg(
         F.count("*").cast("bigint").alias("c_st")
-    ).persist()
+    ))
     s_tot = st.groupBy("source").agg(
         F.sum("c_st").cast("bigint").alias("n_s")
     )
@@ -3661,25 +3664,6 @@ def customer_rfm_segments(spark, sf_dir):
     # window.global_row_number), then NTILE is derived arithmetically
     # from (rank, N). Bit-identical to NTILE(5) OVER (ORDER BY ...)
     # with the key tie-break, but every WindowExec stays partitioned.
-    pins = []
-    d, n = DW.global_row_number(
-        base, [F.col("last_order").desc(), F.col("o_custkey")],
-        out="__rn_r", pins=pins,
-    )
-    d, _ = DW.global_row_number(
-        d, [F.col("frequency").desc(), F.col("o_custkey")],
-        out="__rn_f", pins=pins,
-    )
-    d, _ = DW.global_row_number(
-        d, [F.col("monetary").desc(), F.col("o_custkey")],
-        out="__rn_m", pins=pins,
-    )
-    scored = d.select(
-        "o_custkey", "frequency", "monetary",
-        DW.ntile_from_rank(F.col("__rn_r"), n).alias("r_score"),
-        DW.ntile_from_rank(F.col("__rn_f"), n).alias("f_score"),
-        DW.ntile_from_rank(F.col("__rn_m"), n).alias("m_score"),
-    )
     seg = (
         F.when((F.col("r_score") <= 2) & (F.col("f_score") <= 2), "champion")
         .when(F.col("r_score") <= 2, "recent")
@@ -3687,10 +3671,29 @@ def customer_rfm_segments(spark, sf_dir):
         .when((F.col("r_score") >= 4) & (F.col("f_score") >= 4), "at_risk")
         .otherwise("regular")
     )
-    # finalize() materializes the (small, per-customer) result and
-    # releases the three nested range-partition caches — no pinned
-    # frame outlives the query.
-    return DW.finalize(scored.withColumn("segment", seg), pins)
+    with cache.scope():
+        d, n = DW.global_row_number(
+            base, [F.col("last_order").desc(), F.col("o_custkey")],
+            out="__rn_r",
+        )
+        d, _ = DW.global_row_number(
+            d, [F.col("frequency").desc(), F.col("o_custkey")],
+            out="__rn_f",
+        )
+        d, _ = DW.global_row_number(
+            d, [F.col("monetary").desc(), F.col("o_custkey")],
+            out="__rn_m",
+        )
+        scored = d.select(
+            "o_custkey", "frequency", "monetary",
+            DW.ntile_from_rank(F.col("__rn_r"), n).alias("r_score"),
+            DW.ntile_from_rank(F.col("__rn_f"), n).alias("f_score"),
+            DW.ntile_from_rank(F.col("__rn_m"), n).alias("m_score"),
+        )
+        # the checkpoint materializes the (small, per-customer) result,
+        # then the scope releases the three nested range-partition caches
+        # — no cached frame outlives the query.
+        return scored.withColumn("segment", seg).localCheckpoint(eager=True)
 
 
 @register(
@@ -3741,34 +3744,33 @@ def parts_abc_pareto(spark, sf_dir):
     # offsets broadcast back (distributed_window.global_cumsum). The
     # grand total comes out of the same pass as a driver scalar, so
     # SUM() OVER () disappears too — zero unpartitioned WindowExec.
-    pins = []
-    ranked, total_rev = DW.global_cumsum(
-        rev,
-        [F.col("revenue").desc(), F.col("l_partkey")],
-        "revenue",
-        out="cum_rev",
-        pins=pins,
-    )
-    # total_rev is a driver-side decimal.Decimal, so the class
-    # thresholds are computed EXACTLY on the driver and land in the
-    # plan as decimal literals — the boundary compare is
-    # decimal-vs-decimal end to end, matching the oracle's
-    # decimal arithmetic bit-for-bit.
-    import decimal as _dec
+    with cache.scope():
+        ranked, total_rev = DW.global_cumsum(
+            rev,
+            [F.col("revenue").desc(), F.col("l_partkey")],
+            "revenue",
+            out="cum_rev",
+        )
+        # total_rev is a driver-side decimal.Decimal, so the class
+        # thresholds are computed EXACTLY on the driver and land in the
+        # plan as decimal literals — the boundary compare is
+        # decimal-vs-decimal end to end, matching the oracle's
+        # decimal arithmetic bit-for-bit.
+        import decimal as _dec
 
-    t_a = F.lit(total_rev * _dec.Decimal("0.5"))
-    t_b = F.lit(total_rev * _dec.Decimal("0.8"))
-    cls = (
-        F.when(F.col("cum_rev") <= t_a, "A")
-        .when(F.col("cum_rev") <= t_b, "B")
-        .otherwise("C")
-    )
-    out = ranked.select(
-        "l_partkey",
-        F.col("revenue").cast("double").alias("revenue"),
-        cls.alias("abc_class"),
-    )
-    return DW.finalize(out, pins)
+        t_a = F.lit(total_rev * _dec.Decimal("0.5"))
+        t_b = F.lit(total_rev * _dec.Decimal("0.8"))
+        cls = (
+            F.when(F.col("cum_rev") <= t_a, "A")
+            .when(F.col("cum_rev") <= t_b, "B")
+            .otherwise("C")
+        )
+        out = ranked.select(
+            "l_partkey",
+            F.col("revenue").cast("double").alias("revenue"),
+            cls.alias("abc_class"),
+        )
+        return out.localCheckpoint(eager=True)
 
 
 @register(
@@ -3990,9 +3992,9 @@ def events_dau_wau_stickiness(spark, sf_dir):
     joined against the day spine — |days| x |active users/day| pairs,
     never raw events."""
     e = load_events(spark, sf_dir)
-    ud = e.select(
+    ud = cache.keep(e.select(
         "user_id", F.date_trunc("day", "ts").alias("d")
-    ).distinct().persist()
+    ).distinct())
     days = ud.select("d").distinct()
     dau = ud.groupBy("d").agg(F.count("*").cast("bigint").alias("dau"))
     wau = (
@@ -9371,7 +9373,7 @@ def pipeline_training_mixture(spark, sf_dir):
     # Catalyst from inlining the gate's expression trees (tokenize +
     # n-gram metrics) into the consumer — measured 1.3x slower here
     # without it (6x in the old filter-pushdown shape) at sf0.1.
-    qual = C.quality_filter(d).persist().select("doc_id", "keep")
+    qual = cache.keep(C.quality_filter(d)).select("doc_id", "keep")
     contaminated = C.decontaminate(
         d.filter(F.col("doc_id") % 97 != 0), bench, n=3
     ).select("doc_id", F.lit(True).alias("__contam"))
@@ -10069,15 +10071,12 @@ def corpus_perplexity_buckets(spark, sf_dir):
     (lang, score desc, id) with broadcast per-language offsets and
     arithmetic NTILE (distributed_window.ntile_from_rank_col). The
     oracle is the windowed NTILE over the same scores."""
-    from .operators import distributed_window as DW
-
     d = _t(spark, sf_dir, "documents")
-    pins = []
-    out = C.perplexity_buckets(
-        d, id_col="doc_id", text_col="text", lang_col="lang",
-        buckets=3, pins=pins,
-    )
-    return DW.finalize(out, pins)
+    with cache.scope():
+        out = C.perplexity_buckets(
+            d, id_col="doc_id", text_col="text", lang_col="lang", buckets=3
+        )
+        return out.localCheckpoint(eager=True)
 
 
 @register(
@@ -11143,27 +11142,27 @@ def customer_revenue_gini(spark, sf_dir):
             F.round(F.col("o_totalprice") * 100).cast("bigint")
         ).alias("cents")
     )
-    pins = []
-    ranked, n = DW.global_row_number(
-        rev, [F.col("cents").asc(), F.col("o_custkey").asc()],
-        out="rn", pins=pins,
-    )
-    out = ranked.agg(
-        F.count("*").cast("bigint").alias("n_customers"),
-        (F.sum("cents").cast("double") / F.lit(100.0)).alias(
-            "total_revenue"
-        ),
-        F.round(
-            F.lit(2.0)
-            * F.sum(
-                (F.col("rn") * F.col("cents")).cast("decimal(38,0)")
-            ).cast("double")
-            / (F.count("*") * F.sum("cents").cast("double"))
-            - (F.count("*") + F.lit(1.0)) / F.count("*"),
-            6,
-        ).alias("gini"),
-    )
-    return DW.finalize(out, pins)
+    with cache.scope():
+        ranked, n = DW.global_row_number(
+            rev, [F.col("cents").asc(), F.col("o_custkey").asc()],
+            out="rn",
+        )
+        out = ranked.agg(
+            F.count("*").cast("bigint").alias("n_customers"),
+            (F.sum("cents").cast("double") / F.lit(100.0)).alias(
+                "total_revenue"
+            ),
+            F.round(
+                F.lit(2.0)
+                * F.sum(
+                    (F.col("rn") * F.col("cents")).cast("decimal(38,0)")
+                ).cast("double")
+                / (F.count("*") * F.sum("cents").cast("double"))
+                - (F.count("*") + F.lit(1.0)) / F.count("*"),
+                6,
+            ).alias("gini"),
+        )
+        return out.localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------

@@ -81,9 +81,10 @@ def _call_args(src: str, open_paren: int) -> str:
 
 
 def _tokenizer_copies(package: pathlib.Path) -> list[str]:
-    """``file: form`` for each Spark-side tokenizer written outside
-    ``operators/text.py``: a ``split`` on ``\\s+`` or a
-    ``transform`` over ``tokens(...)``. DuckDB's
+    """``file: form`` for each Spark-side tokenizer or character-gram
+    start rule written outside ``operators/text.py``: a ``split`` on
+    ``\\s+``, a ``transform`` over ``tokens(...)``, or a
+    ``sequence(1, length(...`` in SQL or Column form. DuckDB's
     ``regexp_split_to_array`` (the oracles' engine) is not a match."""
     found = []
     for path in sorted(package.rglob("*.py")):
@@ -96,12 +97,17 @@ def _tokenizer_copies(package: pathlib.Path) -> list[str]:
                 found.append(f"{rel}: split on \\s+")
         if re.search(r"transform\(\s*(?:\w+\.)*tokens\(", src):
             found.append(f"{rel}: transform(tokens(...))")
+        if re.search(
+            r"sequence\(\s*(?:F\.lit\(\s*1\s*\)|1)\s*,\s*(?:F\.)?length\(", src
+        ):
+            found.append(f"{rel}: sequence(1, length(...))")
     return found
 
 
 def test_one_tokenizer_form():
-    """Whitespace tokenizing and lowercasing tokens happen only through
-    the rules of operators/text.py."""
+    """Whitespace tokenizing, lowercasing tokens and character-gram
+    start positions happen only through the rules of
+    operators/text.py."""
     import mssql_dataframe_spark
 
     package = pathlib.Path(mssql_dataframe_spark.__file__).parent
@@ -280,14 +286,14 @@ def test_stratified_sample_empty_config_drops_all(spark):
 
 
 def test_perplexity_buckets_keeps_null_lang_group(spark):
-    from mssql_dataframe_spark.operators import distributed_window as DW
+    from mssql_dataframe_spark import cache
     from mssql_dataframe_spark.operators.curation import perplexity_buckets
 
     rows = [(i, "common words here always", "en" if i < 6 else None)
             for i in range(9)]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    pins = []
-    out = DW.finalize(perplexity_buckets(df, pins=pins), pins).collect()
+    with cache.scope():
+        out = perplexity_buckets(df).localCheckpoint(eager=True).collect()
     assert {r.doc_id for r in out} == set(range(9))
     nulls = [r for r in out if r.lang is None]
     assert len(nulls) == 3 and {r.ppl_bucket for r in nulls} == {1, 2, 3}

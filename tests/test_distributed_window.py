@@ -1,8 +1,8 @@
 """distributed_window: the two-pass range-partitioned replacements for
 unpartitioned global windows must be bit-identical to the global
-window they replace, and finalize() must release every pinned cache
-(the caches exist only to keep spark_partition_id stable between the
-offsets job and the main job)."""
+window they replace, and a cache scope must release every range-
+partition cache (the caches exist only to keep spark_partition_id
+stable between the offsets job and the main job)."""
 
 from __future__ import annotations
 
@@ -11,6 +11,7 @@ import decimal
 from pyspark.sql import Row, functions as F
 from pyspark.sql.window import Window
 
+from mssql_dataframe_spark import cache
 from mssql_dataframe_spark.operators import distributed_window as DW
 
 
@@ -21,11 +22,11 @@ def _frame(spark):
 
 def test_global_row_number_matches_global_window(spark):
     df = _frame(spark)
-    pins = []
-    got, total = DW.global_row_number(
-        df, [F.col("v").desc(), F.col("k")], out="rn", pins=pins
-    )
-    got = DW.finalize(got, pins)
+    with cache.scope():
+        got, total = DW.global_row_number(
+            df, [F.col("v").desc(), F.col("k")], out="rn"
+        )
+        got = got.localCheckpoint(eager=True)
     assert total == 500
     want = df.withColumn(
         "rn",
@@ -38,11 +39,11 @@ def test_global_row_number_matches_global_window(spark):
 
 def test_global_cumsum_matches_global_window_decimal_exact(spark):
     df = _frame(spark)
-    pins = []
-    got, grand = DW.global_cumsum(
-        df, [F.col("v").desc(), F.col("k")], "v", out="cum", pins=pins
-    )
-    got = DW.finalize(got, pins)
+    with cache.scope():
+        got, grand = DW.global_cumsum(
+            df, [F.col("v").desc(), F.col("k")], "v", out="cum"
+        )
+        got = got.localCheckpoint(eager=True)
     w = (
         Window.orderBy(F.col("v").desc(), F.col("k"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -53,26 +54,18 @@ def test_global_cumsum_matches_global_window_decimal_exact(spark):
     assert grand == sum((r.v for r in df.collect()), decimal.Decimal(0))
 
 
-def test_finalize_releases_all_pins(spark):
+def test_scope_releases_all_range_partition_caches(spark):
     df = _frame(spark)
-    pins = []
-    got, _ = DW.global_row_number(df, [F.col("k")], out="rn", pins=pins)
-    got, _ = DW.global_row_number(got, [F.col("v"), F.col("k")], out="rn2", pins=pins)
-    held = list(pins)
-    assert len(held) == 2
-    assert all(p.storageLevel.useMemory for p in held)  # pinned while building
-    out = DW.finalize(got, pins)
-    assert pins == []  # scoped list drained
+    with cache.scope() as owned:
+        got, _ = DW.global_row_number(df, [F.col("k")], out="rn")
+        got, _ = DW.global_row_number(got, [F.col("v"), F.col("k")], out="rn2")
+        held = list(owned)
+        assert len(held) == 2
+        assert all(p.storageLevel.useMemory for p in held)  # kept while building
+        out = got.localCheckpoint(eager=True)
+    assert owned == []  # the scope's frames are drained
     assert all(not p.storageLevel.useMemory for p in held)  # caches released
     assert out.count() == 500  # result survives the release
-
-
-def test_release_all_drains_session_pins(spark):
-    df = _frame(spark)
-    got, _ = DW.global_row_number(df, [F.col("k")], out="rn")  # no pins arg
-    assert got.count() == 500
-    assert DW.release_all() >= 1
-    assert DW.release_all() == 0
 
 
 def test_ntile_from_rank_col_matches_partitioned_ntile(spark):
@@ -112,8 +105,8 @@ def test_perplexity_buckets_labels_and_coverage(spark):
         for i in range(12)
     ] + [(50, None, "en"), (51, "", "fr")]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    pins = []
-    out = DW.finalize(C.perplexity_buckets(df, pins=pins), pins).collect()
+    with cache.scope():
+        out = C.perplexity_buckets(df).localCheckpoint(eager=True).collect()
     assert {r.doc_id for r in out} == set(range(12))  # no-token docs drop
     by_lang = {}
     for r in out:
@@ -136,9 +129,10 @@ def test_global_cumsum_null_prefix_matches_global_window(spark):
     # partitioning splits them across several partitions
     rows = [(i, None if i < 5 or i % 7 == 3 else i * 10) for i in range(200)]
     df = spark.createDataFrame(rows, "k long, v long").repartition(8)
-    pins = []
-    got_df, total = DW.global_cumsum(df, ["k"], "v", out="cum", pins=pins)
-    got = {r["k"]: r["cum"] for r in DW.finalize(got_df, pins).collect()}
+    with cache.scope():
+        got_df, total = DW.global_cumsum(df, ["k"], "v", out="cum")
+        got_df = got_df.localCheckpoint(eager=True)
+    got = {r["k"]: r["cum"] for r in got_df.collect()}
     want, run, seen = {}, 0, False
     for i in range(200):
         v = None if i < 5 or i % 7 == 3 else i * 10
@@ -154,9 +148,10 @@ def test_global_cumsum_all_null_column(spark):
     df = spark.createDataFrame(
         [(i, None) for i in range(10)], "k long, v long"
     )
-    pins = []
-    got_df, _ = DW.global_cumsum(df, ["k"], "v", out="cum", pins=pins)
-    got = [r["cum"] for r in DW.finalize(got_df, pins).collect()]
+    with cache.scope():
+        got_df, _ = DW.global_cumsum(df, ["k"], "v", out="cum")
+        got_df = got_df.localCheckpoint(eager=True)
+    got = [r["cum"] for r in got_df.collect()]
     assert got == [None] * 10
 
 
@@ -179,10 +174,11 @@ def test_range_partitioned_tolerates_auto_shuffle_conf(spark, monkeypatch):
         return real_get(self, key, *args, **kwargs)
 
     monkeypatch.setattr(type(spark.conf), "get", fake_get)
-    pins = []
     df = spark.createDataFrame([(i,) for i in range(10)], "k long")
-    out, total = DW.global_row_number(df, ["k"], pins=pins)
-    monkeypatch.undo()
+    with cache.scope():
+        out, total = DW.global_row_number(df, ["k"])
+        monkeypatch.undo()
+        out = out.localCheckpoint(eager=True)
     assert total == 10
-    got = {r["k"]: r["rn"] for r in DW.finalize(out, pins).collect()}
+    got = {r["k"]: r["rn"] for r in out.collect()}
     assert got == {i: i + 1 for i in range(10)}

@@ -35,7 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from mssql_dataframe_spark import connect  # noqa: E402
+from mssql_dataframe_spark import cache, connect  # noqa: E402
 from mssql_dataframe_spark.operators import dedup as D  # noqa: E402
 from mssql_dataframe_spark.operators import similarity as S  # noqa: E402
 
@@ -48,8 +48,7 @@ def _timed(make, reps):
     frame ``make()`` returns, each from empty caches."""
     best, rows = float("inf"), None
     for _ in range(reps):
-        D.release_pins()
-        S.release_caches()
+        cache.release()
         SparkSession.getActiveSession().catalog.clearCache()
         t0 = time.perf_counter()
         rows = make().collect()
