@@ -224,6 +224,28 @@ def test_exact_topk_scalable_agrees_with_brute_force_neighbors(spark):
     assert hits >= 0.8 * sum(len(v) for v in brute.values())
 
 
+def test_release_caches_frees_tracked_persists(spark):
+    """kmeans_quantized / pq_train_encode persist their quantized
+    grids for the returned plan's benefit; cache.release() frees them
+    so repeated calls over large corpora don't accumulate executor
+    cache for the session."""
+    from mssql_dataframe_spark import cache
+    from mssql_dataframe_spark.operators import similarity
+
+    df = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5), 1.0, 0.5]) for i in range(24)],
+        "vec_id long, embedding array<double>",
+    )
+    cache.release()  # start clean
+    out = similarity.kmeans_quantized(df, k=2, iters=1)
+    assert out.count() > 0
+    assert len(cache._SESSION) == 1
+    assert cache.release() >= 1
+    assert not cache._SESSION
+    # released caches recompute transparently on the next action
+    assert out.count() > 0
+
+
 def test_ivfpq_scores_agree_with_flat_adc(spark):
     """IVF-PQ is flat ADC restricted to probed lists: every
     (query, vec) it returns must carry the SAME exact int score the

@@ -207,6 +207,31 @@ class TestExactSubstringPairs:
         assert pairs == [(1, 2)]
 
 
+def test_release_pins_drains_dedup_caches(spark):
+    """The MinHash pipeline keeps its signature/shingle intermediates
+    with the session; cache.release() must unpersist every one
+    (long-session hygiene)."""
+    from pyspark.sql import Row
+
+    from mssql_dataframe_spark import cache
+    from mssql_dataframe_spark.operators import dedup as D
+
+    df = spark.createDataFrame(
+        [Row(doc_id=i, text=f"document number {i} lorem ipsum dolor")
+         for i in range(20)],
+        "doc_id long, text string",
+    )
+    cache.release()  # start clean
+    D.minhash_dedup_pairs(df, threshold=0.5).count()
+    held = list(cache._SESSION)
+    assert held, "pipeline must register its persisted intermediates"
+    assert all(p.storageLevel.useMemory for p in held)
+    n = cache.release()
+    assert n == len(held)
+    assert all(not p.storageLevel.useMemory for p in held)
+    assert cache.release() == 0
+
+
 def test_cc_loop_releases_superseded_label_caches(spark):
     """Each distributed round's persisted label frame must be released
     once superseded — unpersist on the post-drop projection was a

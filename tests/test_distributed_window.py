@@ -68,6 +68,15 @@ def test_scope_releases_all_range_partition_caches(spark):
     assert out.count() == 500  # result survives the release
 
 
+def test_release_all_drains_session_pins(spark):
+    df = _frame(spark)
+    cache.release()  # start clean
+    got, _ = DW.global_row_number(df, [F.col("k")], out="rn")  # no scope
+    assert got.count() == 500
+    assert cache.release() >= 1
+    assert cache.release() == 0
+
+
 def test_ntile_from_rank_col_matches_partitioned_ntile(spark):
     """Per-group arithmetic NTILE (column total) must equal
     NTILE() OVER (PARTITION BY g ORDER BY ...) for uneven group
