@@ -23,8 +23,10 @@ from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..errors import SQLColumnDoesNotExist, SQLTableDoesNotExist
+from ..frames import local_frame
 from ..identifiers import compile_where
 from ..store import STRING_BOUND_LIMIT, TableStore, entry_bounds
 from . import datetimeoffset as dto
@@ -39,22 +41,15 @@ class read:
         ``DESCRIBE HISTORY`` analog): (version, operation,
         n_files_added, n_files_kept, n_rows, timestamp). Driver-side
         metadata only — O(retained versions), no data scan."""
-        spark = self._store.spark
-        rows = self._store.history(table_name)
-        return spark.createDataFrame(
-            [
-                (
-                    int(r["version"]),
-                    str(r["operation"]),
-                    None if r["n_files_added"] is None else int(r["n_files_added"]),
-                    None if r["n_files_kept"] is None else int(r["n_files_kept"]),
-                    int(r["n_rows"]),
-                    None if r["timestamp"] is None else float(r["timestamp"]),
-                )
-                for r in rows
-            ],
+        schema = StructType.fromDDL(
             "version int, operation string, n_files_added int, "
-            "n_files_kept int, n_rows bigint, timestamp double",
+            "n_files_kept int, n_rows bigint, timestamp double"
+        )
+        rows = self._store.history(table_name)
+        return local_frame(
+            self._store.spark,
+            [tuple(r[c] for c in schema.names) for r in rows],
+            schema,
         )
 
     def information_schema(self) -> DataFrame:
@@ -90,8 +85,8 @@ class read:
                     vname, "VIEW", col, i,
                     src_meta.column_types.get(col), False,
                 ))
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "object_name string, object_type string, column_name string, "
             "ordinal int, sql_type string, in_primary_key boolean",
         )
@@ -174,8 +169,8 @@ class read:
                     None if hi is None else str(hi),
                 )
             )
-        return spark.createDataFrame(
-            out, "column string, n_rows bigint, min string, max string"
+        return local_frame(
+            spark, out, "column string, n_rows bigint, min string, max string"
         )
 
     def view(

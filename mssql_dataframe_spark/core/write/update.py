@@ -31,6 +31,7 @@ from ...errors import (
     SQLColumnDoesNotExist,
     SQLUndefinedPrimaryKey,
 )
+from ...frames import local_frame
 from ...store import TableStore
 from .. import generated
 from ...validation import (
@@ -91,7 +92,7 @@ def stage_validated_source(store, table_name, plan, finish,
         if parts:
             leaf = spark.read.schema(plan.schema).parquet(*parts)
         else:  # empty source: nothing was written
-            leaf = spark.createDataFrame([], plan.schema)
+            leaf = local_frame(spark, [], plan.schema)
         if unique_key:
             keyed = " AND ".join(
                 f"{_bq(k)} IS NOT NULL" for k in unique_key

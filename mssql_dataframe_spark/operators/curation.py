@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import cache
+from ..frames import local_frame
 from .text import (
     _ngrams_sql, _quality_flag_sql, _tokens_sql, tokens, word_ngrams,
 )
@@ -760,8 +761,8 @@ def remove_frequent_lines(
         return cleaned, counts
     # large-set pass 2: broadcast anti-join + rebuild — no literals
     _guard_work_cols(df, ("__did", "__pos", "__line", "__clean"))
-    freq_keys = df.sparkSession.createDataFrame(
-        [(r["line"],) for r in head], "__line string"
+    freq_keys = local_frame(
+        df.sparkSession, [(r["line"],) for r in head], "__line string"
     )
     if id_col is not None:
         with_id = df.withColumn("__did", F.col(id_col))

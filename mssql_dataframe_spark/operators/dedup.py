@@ -24,6 +24,7 @@ from pyspark.sql.types import (
 )
 
 from .. import cache
+from ..frames import local_frame
 from .text import _gram_starts_sql, _tokens_sql, word_ngrams
 
 #: default edge-count cutover of :func:`connected_components` between
@@ -587,16 +588,6 @@ def _components(
     return (id_type, *_union_find(a, b))
 
 
-def _local_frame(spark, columns: dict, schema: StructType) -> DataFrame:
-    """Driver-built result columns as a DataFrame through Spark's
-    Arrow reader: the JVM decodes the batches, so no Python worker
-    starts (``createDataFrame`` of a Python list needs one)."""
-    import pyarrow as pa
-
-    table = pa.table({name: pa.array(col) for name, col in columns.items()})
-    return spark.createDataFrame(table, schema=schema)
-
-
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
@@ -645,7 +636,7 @@ def connected_components(
     if isinstance(graph, DataFrame):
         return graph
     id_type, ids, labels = graph
-    local = _local_frame(
+    local = local_frame(
         edges.sparkSession, {id_col: ids, "component": labels},
         StructType([
             StructField(id_col, id_type), StructField("component", id_type),
@@ -801,7 +792,7 @@ def dedup_cluster_survivors(
     _, inverse, counts = np.unique(labels, return_inverse=True, return_counts=True)
     size = counts[inverse].astype(np.int64)
     keep = size >= 2  # a self-pair alone is no cluster
-    return _local_frame(
+    return local_frame(
         df.sparkSession,
         {
             id_col: ids[keep],

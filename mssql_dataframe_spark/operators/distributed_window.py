@@ -28,12 +28,12 @@ the session owns it until ``cache.release()``.
 
 from __future__ import annotations
 
-import decimal
-
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from .. import cache
+from ..frames import local_frame
 
 _PID = "__dw_pid"
 _LOCAL = "__dw_local"
@@ -82,7 +82,7 @@ def global_row_number(
     for pid in sorted(counts):
         offsets.append((pid, acc))
         acc += int(counts[pid])
-    off = spark.createDataFrame(offsets, schema=f"{_PID} int, __dw_off bigint")
+    off = local_frame(spark, offsets, f"{_PID} int, __dw_off bigint")
     result = (
         d.join(F.broadcast(off), _PID)
         .withColumn(out, (F.col(_LOCAL) + F.col("__dw_off")).cast("bigint"))
@@ -175,24 +175,19 @@ def global_cumsum(
         .agg(F.sum(value_col).alias("s"), F.count(value_col).alias("c"))
         .collect()
     }
-    zero = decimal.Decimal(0) if any(
-        isinstance(s, decimal.Decimal) for s, _ in stats.values()
-    ) else 0
-    offsets, acc, cnt = [], zero, 0
+    offsets, acc, cnt = [], 0, 0
     for pid in sorted(stats):
         offsets.append((pid, acc, cnt))
         s, c = stats[pid]
-        acc = acc + (s if s is not None else zero)
+        if s is not None:
+            acc += s
         cnt += int(c)
-    local_type = dict(d.dtypes)[_LOCAL]
-    off = spark.createDataFrame(
-        [(int(p), str(v), int(c)) for p, v, c in offsets],
-        schema=f"{_PID} int, __dw_off string, __dw_cnt_off bigint",
-    ).select(
-        _PID,
-        F.col("__dw_off").cast(local_type).alias("__dw_off"),
-        "__dw_cnt_off",
-    )
+    local_type = d.schema[_LOCAL].dataType
+    off = local_frame(spark, offsets, StructType([
+        StructField(_PID, IntegerType()),
+        StructField("__dw_off", local_type),
+        StructField("__dw_cnt_off", LongType()),
+    ]))
     result = (
         d.join(F.broadcast(off), _PID)
         .withColumn(

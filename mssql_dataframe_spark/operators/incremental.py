@@ -28,6 +28,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _keycond(keys, left: DataFrame, right_prefix: str, right: DataFrame):
+    """``left[k] <=> right[right_prefix + k]`` for every key, ANDed:
+    null-safe, because a NULL group key is a real MV group."""
+    cond = None
+    for k in keys:
+        e = left[k].eqNullSafe(right[f"{right_prefix}{k}"])
+        cond = e if cond is None else (cond & e)
+    return cond
+
+
 def agg_delta(
     changes: DataFrame,
     keys: list[str],
@@ -258,12 +268,7 @@ def apply_minmax_delta(
         *[F.col(k).alias(f"__d_{k}") for k in keys],
         "__dn", "__ins_min", "__ins_max", "__del_min", "__del_max",
     )
-    cond = None
-    for k in keys:
-        # null-safe: a NULL group key is a real MV group
-        c = mv[k].eqNullSafe(d[f"__d_{k}"])
-        cond = c if cond is None else (cond & c)
-    j = mv.join(F.broadcast(d), cond, "left")
+    j = mv.join(F.broadcast(d), _keycond(keys, mv, "__d_", d), "left")
     new_n = F.coalesce(mv[count_col], F.lit(0)) + F.coalesce(
         d["__dn"], F.lit(0)
     )
@@ -289,12 +294,12 @@ def apply_minmax_delta(
     bcols = base.select(
         *[F.col(k) for k in keys], F.col(value_col).alias("__v")
     )
-    rcond = None
-    for k in keys:
-        c = bcols[k].eqNullSafe(danger_keys[f"__e_{k}"])
-        rcond = c if rcond is None else (rcond & c)
     rescanned = (
-        bcols.join(F.broadcast(danger_keys), rcond, "left_semi")
+        bcols.join(
+            F.broadcast(danger_keys),
+            _keycond(keys, bcols, "__e_", danger_keys),
+            "left_semi",
+        )
         .groupBy(*keys)
         .agg(
             F.count(F.lit(1)).cast("bigint").alias(count_col),
@@ -303,12 +308,8 @@ def apply_minmax_delta(
         )
     )
     mvk = mv.select(*[F.col(k).alias(f"__m_{k}") for k in keys])
-    acond = None
-    for k in keys:
-        c = delta[k].eqNullSafe(mvk[f"__m_{k}"])
-        acond = c if acond is None else (acond & c)
     fresh = (
-        delta.join(mvk, acond, "left_anti")
+        delta.join(mvk, _keycond(keys, delta, "__m_", mvk), "left_anti")
         .filter(F.col("__dn") > 0)
         .select(
             *keys,
@@ -378,20 +379,16 @@ def apply_distinct_delta(
     )
     changed = delta.select(*keys).distinct()
     ck = changed.select(*[F.col(k).alias(f"__c_{k}") for k in keys])
-    scond = None
-    for k in keys:
-        c = new_aux[k].eqNullSafe(ck[f"__c_{k}"])
-        scond = c if scond is None else (scond & c)
     recount = (
-        new_aux.join(F.broadcast(ck), scond, "left_semi")
+        new_aux.join(
+            F.broadcast(ck), _keycond(keys, new_aux, "__c_", ck), "left_semi"
+        )
         .groupBy(*keys)
         .agg(F.count(F.lit(1)).cast("bigint").alias(count_col))
     )
-    acond = None
-    for k in keys:
-        c = mv[k].eqNullSafe(ck[f"__c_{k}"])
-        acond = c if acond is None else (acond & c)
-    untouched = mv.join(F.broadcast(ck), acond, "left_anti")
+    untouched = mv.join(
+        F.broadcast(ck), _keycond(keys, mv, "__c_", ck), "left_anti"
+    )
     return untouched.unionByName(recount), new_aux
 
 
@@ -462,19 +459,12 @@ def apply_topk_delta(
         *[F.col(c).alias(f"__o_{c}") for c in keys], "__out_max"
     )
 
-    def _keycond(left, right_prefix, right):
-        cond = None
-        for c in keys:
-            e = left[c].eqNullSafe(right[f"{right_prefix}{c}"])
-            cond = e if cond is None else (cond & e)
-        return cond
-
     # INNER join (a key absent from the MV has no members — nothing to
     # rescan), with the BATCH-sized outgoing stats broadcast: the MV
     # boundary frame is O(all keys) and must never ship to every
     # executor at 100 TB scale
     rescan_keys = (
-        stats.join(F.broadcast(os_), _keycond(stats, "__o_", os_))
+        stats.join(F.broadcast(os_), _keycond(keys, stats, "__o_", os_))
         .filter(F.col("__out_max") >= F.col("__boundary"))
         .select(*[stats[c] for c in keys])
         .distinct()
@@ -490,7 +480,7 @@ def apply_topk_delta(
         *[F.col(c).alias(f"__r_{c}") for c in keys]
     )
     merge_keys = changed_keys.join(
-        F.broadcast(rk), _keycond(changed_keys, "__r_", rk), "left_anti"
+        F.broadcast(rk), _keycond(keys, changed_keys, "__r_", rk), "left_anti"
     )
     mk = merge_keys.select(*[F.col(c).alias(f"__k_{c}") for c in keys])
 
@@ -498,11 +488,13 @@ def apply_topk_delta(
         F.col(value_col).desc(), F.col(id_col).desc()
     )
     merged = (
-        mv.join(F.broadcast(mk), _keycond(mv, "__k_", mk), "left_semi")
+        mv.join(F.broadcast(mk), _keycond(keys, mv, "__k_", mk), "left_semi")
         .select(*keys, id_col, value_col)
         .unionByName(
             incoming.join(
-                F.broadcast(mk), _keycond(incoming, "__k_", mk), "left_semi"
+                F.broadcast(mk),
+                _keycond(keys, incoming, "__k_", mk),
+                "left_semi",
             )
         )
         .withColumn("__rn", F.row_number().over(w))
@@ -513,7 +505,7 @@ def apply_topk_delta(
         F.col(value_col).isNotNull()
     )
     rescanned = (
-        bb.join(F.broadcast(rk), _keycond(bb, "__r_", rk), "left_semi")
+        bb.join(F.broadcast(rk), _keycond(keys, bb, "__r_", rk), "left_semi")
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= k)
         .drop("__rn")
@@ -522,6 +514,6 @@ def apply_topk_delta(
         *[F.col(c).alias(f"__c_{c}") for c in keys]
     )
     untouched = mv.join(
-        F.broadcast(ck), _keycond(mv, "__c_", ck), "left_anti"
+        F.broadcast(ck), _keycond(keys, mv, "__c_", ck), "left_anti"
     ).select(*keys, id_col, value_col)
     return untouched.unionByName(merged).unionByName(rescanned)

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import cache
+from ..frames import local_frame
 
 
 def dot_sql(a: str, b: str, dim: int) -> str:
@@ -411,9 +412,8 @@ def ivf_topk(
     # rebuild the (tiny) codebook frame from the rows already
     # collected — reusing the lazy cents_plan here would re-run the
     # full corpus scan + norm a second time for the probe cross join
-    cents = spark.createDataFrame(
-        [(r["cid"], r["__cvec"], r["__cnorm"]) for r in cent_rows],
-        schema="cid long, __cvec array<double>, __cnorm double",
+    cents = local_frame(
+        spark, cent_rows, "cid long, __cvec array<double>, __cnorm double"
     )
     probes = (
         q.crossJoin(F.broadcast(cents))
@@ -994,15 +994,12 @@ def _adc_tables(spark, qrows, codebooks, m, sub, query_id_type):
             for cid, cq in codebooks[s]:
                 d = sum((a - b) * (a - b) for a, b in zip(u, cq))
                 table_rows.append((r["query_id"], s, cid, d))
-    return spark.createDataFrame(
-        table_rows,
-        T.StructType([
-            T.StructField("query_id", query_id_type),
-            T.StructField("s", T.IntegerType()),
-            T.StructField("cid", T.IntegerType()),
-            T.StructField("d", T.LongType()),
-        ]),
-    )
+    return local_frame(spark, table_rows, T.StructType([
+        T.StructField("query_id", query_id_type),
+        T.StructField("s", T.IntegerType()),
+        T.StructField("cid", T.IntegerType()),
+        T.StructField("d", T.LongType()),
+    ]))
 
 
 def _adc_score_topk(scored, tables, m, topk, query_id_type, vec_id_type):
@@ -1211,13 +1208,10 @@ def ivfpq_topk(
         order = np.lexsort((cid_arr, d))
         for ci in order[:nprobe]:
             probe_rows.append((r["query_id"], int(cid_arr[ci])))
-    probes = spark.createDataFrame(
-        probe_rows,
-        _T.StructType([
-            _T.StructField("query_id", id_type),
-            _T.StructField("ccid", _T.LongType()),
-        ]),
-    )
+    probes = local_frame(spark, probe_rows, _T.StructType([
+        _T.StructField("query_id", id_type),
+        _T.StructField("ccid", _T.LongType()),
+    ]))
 
     cand = assigned.join(F.broadcast(probes), "ccid").drop("ccid")
     tables = _adc_tables(spark, qrows, codebooks, m, sub, id_type)

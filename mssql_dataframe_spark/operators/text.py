@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import cache
+from ..frames import local_frame
 
 # Compact multi-language stopword lists for the n-gram/stopword
 # language-ID heuristic. Deliberately small and deterministic.
@@ -659,9 +660,7 @@ def heavy_hitters(
                 "of the ranking is unproven; raise k_track to at "
                 f"least {n_total // max(nth, 1)}"
             )
-        return df.sparkSession.createDataFrame(
-            rows, "value string, cnt bigint"
-        )
+        return local_frame(df.sparkSession, rows, "value string, cnt bigint")
     return result
 
 

@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..frames import local_frame
 from .text import token_count
 
 
@@ -251,13 +252,10 @@ def temperature_resample(
     ]
     from pyspark.sql import types as _T
 
-    rates = df.sparkSession.createDataFrame(
-        rate_rows,
-        _T.StructType([
-            _T.StructField(strata_col, df.schema[strata_col].dataType),
-            _T.StructField("rate_bp", _T.LongType()),
-        ]),
-    )
+    rates = local_frame(df.sparkSession, rate_rows, _T.StructType([
+        _T.StructField(strata_col, df.schema[strata_col].dataType),
+        _T.StructField("rate_bp", _T.LongType()),
+    ]))
     keyed = df.select(
         F.col(id_col), F.col(strata_col),
         (_content_key(id_col, text_col) % 10000).alias("__bp"),

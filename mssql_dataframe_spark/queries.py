@@ -23,6 +23,7 @@ from pyspark.sql.window import Window
 from . import cache
 from .core import datetimeoffset as DTO
 from .core import timetype as TT
+from .frames import local_frame
 from .operators import dedup as D
 from .operators import joins as J
 from .operators import multimodal as M
@@ -1533,6 +1534,27 @@ def source_json_roundtrip(spark, sf_dir):
     )
 
 
+def _collect_under(spark, confs: dict, build) -> DataFrame:
+    """Collect the frame ``build()`` returns with the session confs
+    ``confs`` set, then restore the session's own values, on success
+    or on error. The rows come back as a local frame, so its later
+    actions do not depend on the confs."""
+    # None: not set in this session, so unset restores the default
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        df = build()
+        rows = df.collect()
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    return local_frame(spark, rows, df.schema)
+
+
 _AGG_PUSHDOWN_CONFS = {
     # v2 parquet scan + footer-statistics aggregate pushdown
     "spark.sql.parquet.aggregatePushdown": "true",
@@ -1557,30 +1579,15 @@ def source_parquet_agg_pushdown(spark, sf_dir):
     here for raw parquet directories outside the managed store.
     Session confs are saved/restored around an in-entry
     materialization (results are conf-independent)."""
-    old = {}
-    for k in _AGG_PUSHDOWN_CONFS:
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-    for k, v in _AGG_PUSHDOWN_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        o = _t(spark, sf_dir, "orders")
-        df = o.agg(
+
+    def build():
+        return _t(spark, sf_dir, "orders").agg(
             F.min("o_orderkey").alias("min_key"),
             F.max("o_orderkey").alias("max_key"),
             F.count("*").cast("bigint").alias("n_rows"),
         )
-        rows = df.collect()
-        schema = df.schema
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return spark.createDataFrame(rows, schema)
+
+    return _collect_under(spark, _AGG_PUSHDOWN_CONFS, build)
 
 
 @register(
@@ -2296,14 +2303,15 @@ def approx_percentile_sketch(spark, sf_dir):
 )
 def range_join_bands(spark, sf_dir):
     p = _t(spark, sf_dir, "part")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [
             ("budget", 0.0, 500.0),
             ("mid", 500.0, 1200.0),
             ("premium", 1200.0, 1800.0),
             ("luxury", 1800.0, 100000.0),
         ],
-        ["band_name", "lo", "hi"],
+        "band_name string, lo double, hi double",
     )
     joined = J.range_join_banded(p, bands, "p_retailprice", "lo", "hi", 500.0)
     return joined.groupBy("band_name").agg(
@@ -2346,18 +2354,11 @@ def bloom_filter_join_prune(spark, sf_dir):
     lineitem scan filter. The entry materializes under the forced
     confs, then restores session state (results are conf-independent —
     a bloom filter only removes rows the join would drop anyway)."""
-    old = {}
-    for k in _BLOOM_CONFS:
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None  # no value and no default -> unset to restore
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+
+    def build():
         l = _t(spark, sf_dir, "lineitem")
         p = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#13")
-        df = (
+        return (
             l.join(p, F.col("l_partkey") == F.col("p_partkey"))
             .groupBy("l_returnflag")
             .agg(
@@ -2365,15 +2366,8 @@ def bloom_filter_join_prune(spark, sf_dir):
                 _dsum(F.col("l_extendedprice"), "revenue"),
             )
         )
-        rows = df.collect()
-        schema = df.schema
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return spark.createDataFrame(rows, schema)
+
+    return _collect_under(spark, _BLOOM_CONFS, build)
 
 
 @register(
@@ -4398,8 +4392,8 @@ def tokenizer_learn_merges(spark, sf_dir):
     produces through tokenizer_apply_merges) is engine-exact."""
     d = _t(spark, sf_dir, "documents")
     rows = X.learn_token_merges(d, rounds=5)
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "merge_rank int, left_sym string, right_sym string, "
         "pair_count bigint",
     )
@@ -7239,8 +7233,8 @@ def verb_merge_composite_key(spark, sf_dir):
         lines.filter(F.col("l_orderkey") <= 100)
         .withColumn("qty", F.col("qty") + F.lit(1.0))
         .unionByName(
-            spark.createDataFrame(
-                [(999991, 1, 5.0)],
+            local_frame(
+                spark, [(999991, 1, 5.0)],
                 "l_orderkey long, l_linenumber long, qty double",
             )
         )
@@ -7466,8 +7460,8 @@ def verb_unique_constraint(spark, sf_dir):
     eng.write.insert("dbo.sup_uq", sup)
     eng.modify.unique_constraint("dbo.sup_uq", "add", "uq_sname", "s_name")
     taken = sup.orderBy("s_suppkey").limit(1).collect()[0]["s_name"]
-    dup = spark.createDataFrame(
-        [(990000, taken)], "s_suppkey long, s_name string"
+    dup = local_frame(
+        spark, [(990000, taken)], "s_suppkey long, s_name string"
     )
     try:
         eng.write.insert("dbo.sup_uq", dup)
@@ -7478,8 +7472,9 @@ def verb_unique_constraint(spark, sf_dir):
         pass
     eng.write.insert(
         "dbo.sup_uq",
-        spark.createDataFrame(
-            [(990001, "Supplier#990001")], "s_suppkey long, s_name string"
+        local_frame(
+            spark, [(990001, "Supplier#990001")],
+            "s_suppkey long, s_name string",
         ),
     )
     return eng.read.table("dbo.sup_uq").select("s_suppkey", "s_name")
@@ -7670,8 +7665,8 @@ def verb_sequence_numbering(spark, sf_dir):
     rows = [("nation", k, v) for k, v in zip(n_keys, n_vals)] + [
         ("region", k, v) for k, v in zip(r_keys, r_vals)
     ]
-    return spark.createDataFrame(
-        rows, "entity string, entity_key bigint, seq_no bigint"
+    return local_frame(
+        spark, rows, "entity string, entity_key bigint, seq_no bigint"
     )
 
 

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .errors import SQLSnapshotUnavailable, SQLTableDoesNotExist
+from .frames import local_frame
 
 _META = "_meta.json"
 
@@ -1322,7 +1323,7 @@ class TableStore:
         schema."""
         schema = snap.meta.spark_schema if snap.schema is None else snap.schema
         if not entry_paths:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         pool = self._pool_dir(snap.name)
         return self.spark.read.schema(schema).parquet(
             *[os.path.join(pool, p) for p in entry_paths]

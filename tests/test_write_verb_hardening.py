@@ -113,3 +113,62 @@ def test_create_view_fails_fast_on_bad_order_spec(engine, spark):
         engine.create.view("v_bad3", "dbo.vsrc", order_column="id")
     with pytest.raises(ValueError, match="integer"):
         engine.create.view("v_bad4", "dbo.vsrc", limit="10")
+
+
+#: each rewrite verb run with a zero-row source against a 20-row,
+#: 4-file table: (versions it commits, rows after, newest history
+#: record as (operation, n_files_added, n_files_kept, n_rows))
+_EMPTY_SOURCE = {
+    "update": (0, 20, ("append", 4, 0, 20)),
+    "delete": (0, 20, ("append", 4, 0, 20)),
+    "merge_upsert": (1, 20, ("merge", 0, 4, 20)),
+    "merge": (1, 0, ("merge", 0, 0, 0)),
+    "merge_scd2": (1, 20, ("merge_scd2", 0, 4, 20)),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(_EMPTY_SOURCE))
+def test_rewrite_verbs_with_an_empty_source(engine, spark, verb):
+    """Update and delete commit nothing; an upsert merge and SCD2
+    commit a version that carries every file; a plain merge, whose
+    not-matched-by-source delete is active, empties the table."""
+    eng = engine
+    base = spark.range(20).selectExpr("id AS k", "id AS v")
+    if verb == "merge_scd2":
+        eng.create.table(
+            "dbo.es",
+            {"k": "bigint", "v": "bigint", "_valid_from": "datetime2",
+             "_valid_to": "datetime2", "_is_current": "bit"},
+        )
+        base = base.select(
+            "k", "v",
+            F.lit("2024-01-01 00:00:00").cast("timestamp_ntz")
+            .alias("_valid_from"),
+            F.lit(None).cast("timestamp_ntz").alias("_valid_to"),
+            F.lit(True).alias("_is_current"),
+        )
+    else:
+        eng.create.table("dbo.es", {"k": "bigint", "v": "bigint"},
+                         primary_key_column="k")
+    eng.write.insert("dbo.es", base.repartitionByRange(4, "k"))
+    v0 = eng.store.meta("dbo.es").version
+    src = spark.range(0).selectExpr("id AS k", "-id AS v")
+    out = {
+        "update": lambda: eng.write.update("dbo.es", src),
+        "delete": lambda: eng.write.delete("dbo.es", src.select("k")),
+        "merge_upsert": lambda: eng.write.merge("dbo.es", src, upsert=True),
+        "merge": lambda: eng.write.merge("dbo.es", src),
+        "merge_scd2": lambda: eng.write.merge_scd2(
+            "dbo.es", src, match_columns=["k"],
+            as_of=F.lit("2024-06-01 00:00:00").cast("timestamp_ntz"),
+        ),
+    }[verb]()
+    if verb == "delete":
+        assert out == 0
+    steps, n_rows, record = _EMPTY_SOURCE[verb]
+    assert eng.store.meta("dbo.es").version == v0 + steps
+    assert eng.read.table("dbo.es").count() == n_rows
+    top = eng.store.history("dbo.es")[0]
+    assert top["version"] == v0 + steps
+    assert (top["operation"], top["n_files_added"], top["n_files_kept"],
+            top["n_rows"]) == record
