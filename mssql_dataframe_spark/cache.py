@@ -1,7 +1,8 @@
 """One owner for every cache the package makes.
 
-Every ``persist`` in the package goes through :func:`keep`. Inside
-:func:`scope`, the innermost open scope owns the kept frame and frees
+Every ``persist`` in the package goes through :func:`keep`, and a
+write verb's staged source through :func:`checkpoint`. Inside
+:func:`scope`, the innermost open scope owns the frame and frees
 it when the block exits, on success or on error, so an operator that
 materializes its result before it returns leaves no cache behind.
 Outside a scope the session owns it. That is for caches the returned
@@ -34,22 +35,35 @@ def keep(df: DataFrame, *, fill: bool = False) -> DataFrame:
     which readers and :func:`release` must use: ``unpersist`` matches
     only the exact plan. ``fill`` materializes it now, by one count
     job, instead of on the first action that reads it."""
-    df = df.persist()
+    df = _own(df.persist())
+    if fill:
+        df.count()
+    return df
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now, by one job, into the executors' block
+    stores (``localCheckpoint``) and return the checkpointed frame: a
+    leaf whose readers never re-execute ``df``'s plan. It is owned as
+    :func:`keep` owns a frame."""
+    return _own(df.localCheckpoint(eager=True))
+
+
+def _own(df: DataFrame) -> DataFrame:
     scopes = _SCOPES.get()
     if scopes:
         scopes[-1].append(df)
     else:
         with _SESSION_LOCK:
             _SESSION.append(df)
-    if fill:
-        df.count()
     return df
 
 
 @contextlib.contextmanager
 def scope() -> Iterator[list[DataFrame]]:
-    """Own the frames kept in the block (outside inner scopes) and
-    release them on exit, on success or on error. Yields that list."""
+    """Own the frames kept or checkpointed in the block (outside inner
+    scopes) and release them on exit, on success or on error. Yields
+    that list."""
     owned: list[DataFrame] = []
     token = _SCOPES.set(_SCOPES.get() + (owned,))
     try:
@@ -77,6 +91,9 @@ def release(*frames: DataFrame) -> int:
 def _unpersist(frames: Iterable[DataFrame]) -> None:
     for df in frames:
         try:
-            df.unpersist()
+            if df.is_cached:
+                df.unpersist()
+            else:  # a checkpoint: unpersist() leaves its blocks behind
+                df._jdf.queryExecution().analyzed().rdd().unpersist(False)
         except Py4JError:  # the session already stopped: nothing to free
             pass

@@ -26,6 +26,13 @@ from ..errors import (
     SQLUndefinedPrimaryKey,
 )
 from ..store import TableStore
+from ..validation import (
+    duplicate_key,
+    enforce_check_constraints,
+    enforce_foreign_keys,
+    enforce_unique_constraints,
+    first_row,
+)
 
 
 def _implied_uq_name(child_table: str, fk_name: str) -> str:
@@ -99,9 +106,9 @@ class modify:
                     f"column {column_name!r} is already {data_type!r}"
                 )
             current = self._store.read_files(snap, snap.paths)
-            if not is_nullable and current.filter(
-                F.col(column_name).isNull()
-            ).limit(1).count():
+            if not is_nullable and first_row(
+                current.filter(F.col(column_name).isNull())
+            ) is not None:
                 # SQL Server's ALTER ... NOT NULL fails on existing
                 # NULLs — tightening must audit, not silently declare
                 raise ValueError(
@@ -212,8 +219,6 @@ class modify:
         a table in violation cannot acquire the constraint — then
         every subsequent insert/update/merge/SCD2 enforces it on the
         rows it writes."""
-        from ..validation import enforce_check_constraints
-
         meta = self._store.meta(table_name)
         props = dict(meta.properties)
         checks = dict(props.get("check_constraints") or {})
@@ -314,8 +319,6 @@ class modify:
             for c in cols:
                 if c not in meta.spark_schema.fieldNames():
                     raise SQLColumnDoesNotExist(c)
-            from ..validation import enforce_unique_constraints
-
             enforce_unique_constraints(
                 self._store.read(table_name), {name: cols}
             )
@@ -739,8 +742,6 @@ class modify:
         rows are deleted first, recursively), or ``set_null``
         (matching child rows get the FK columns nulled — requires
         every FK column nullable, checked here)."""
-        from ..validation import enforce_foreign_keys
-
         meta = self._store.meta(table_name)
         props = dict(meta.properties)
         fks = dict(props.get("foreign_keys") or {})
@@ -793,17 +794,11 @@ class modify:
             # one distributed agg over the parent's keys.
             needs_implied_uq = sorted(rcols) != sorted(ref_meta.primary_key)
             if needs_implied_uq:
-                dup = (
-                    self._store.read(ref_table)
-                    .select(*rcols)
-                    .na.drop()
-                    .groupBy(*rcols)
-                    .count()
-                    .filter(F.col("count") > 1)
-                    .limit(1)
-                    .count()
+                dup = duplicate_key(
+                    self._store.read(ref_table).select(*rcols).na.drop(),
+                    rcols,
                 )
-                if dup:
+                if dup is not None:
                     raise ValueError(
                         f"foreign_key add: referenced column(s) {rcols} "
                         f"of {ref_table!r} are neither its primary key "
@@ -890,15 +885,8 @@ class modify:
                 if c not in meta.spark_schema.fieldNames():
                     raise SQLColumnDoesNotExist(c)
             # uniqueness audit: one distributed agg (SURVEY.md §2.1 #5)
-            dupes = (
-                self._store.read(table_name)
-                .groupBy(*cols)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .count()
-            )
-            if dupes:
+            dupes = duplicate_key(self._store.read(table_name), cols)
+            if dupes is not None:
                 raise ValueError(
                     f"cannot add primary key {cols}: duplicate key values exist"
                 )

@@ -15,8 +15,6 @@ Cost ∝ touched data, not table size.
 
 from __future__ import annotations
 
-import shutil
-
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -24,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ... import cache
 from ...store import TableStore
-from ...validation import precheck_dataframe_deferred
+from ...validation import first_row, precheck_dataframe_deferred
 from .update import (
     discover_touched,
     existing_candidates,
@@ -180,14 +178,12 @@ def _check_restrict_references(
         touched = existing_candidates(
             store, snap, bounds, parent_keys, fk["columns"]
         )
-        if touched and (
+        if touched and first_row(
             store.read_files(snap, touched)
             .select(*fk["columns"])
             .na.drop(how="any")
             .join(parent_keys, fk["columns"], "left_semi")
-            .limit(1)
-            .count()
-        ):
+        ) is not None:
             return touched
         return []
 
@@ -334,7 +330,7 @@ def delete_op(
         return 0
     can_prune = match == list(meta.primary_key) and len(match) == 1
     # stage the distinct key set ONCE (guide §2.4): the pruning bounds
-    # ride the staging write as observe() metrics, and every consumer
+    # ride the staging checkpoint as observe() metrics, and every consumer
     # below — bloom/content discovery, the per-child referential-action
     # probes, the survivors anti-join, the self-FK check — reads the
     # staged LEAF instead of re-executing the caller's key pipeline
@@ -344,10 +340,8 @@ def delete_op(
         {c: meta.column_types[c] for c in match},
         bounds_col=match,
     )
-    keys, bounds, src_stage = stage_validated_source(
-        store, table_name, plan, finish
-    )
-    try:
+    with cache.scope():
+        keys, bounds = stage_validated_source(plan, finish)
         keep_entries, touched = discover_touched(
             store, snap, bounds, keys, match, stats_final=can_prune,
         )
@@ -395,13 +389,11 @@ def delete_op(
                         store.read_files(snap, carried)
                         .select(*fk["columns"])
                     )
-                hit = (
+                hit = first_row(
                     probe.na.drop(how="any")
                     .join(parent_keys, fk["columns"], "left_semi")
-                    .limit(1)
-                    .count()
                 )
-                if hit:
+                if hit is not None:
                     raise SQLForeignKeyViolation(
                         f"DELETE from {table_name!r} violates "
                         f"self-referencing FOREIGN KEY {nm!r}: surviving "
@@ -417,8 +409,6 @@ def delete_op(
         # deleted count from this commit's manifest row totals — no
         # extra scan or job
         return _rows(snap.entries) - _rows(new.entries)
-    finally:
-        shutil.rmtree(src_stage, ignore_errors=True)
 
 
 def delete_where_op(

@@ -26,7 +26,7 @@ from pyspark.sql.window import Window
 from ...errors import DataframeColumnInvalidValue, SQLUniqueConstraintViolation
 from ...store import TableStore
 from .. import generated
-from ...validation import precheck_dataframe_deferred
+from ...validation import duplicate_key, first_row, precheck_dataframe_deferred
 from .. import datetimeoffset as dto
 
 logger = logging.getLogger("mssql_dataframe_spark")
@@ -238,7 +238,7 @@ def insert(
         fk_deps = probe(stage_entries, stage_dir)
         if not (pk and stage_entries):
             return fk_deps
-        # 3) PK enforcement, one keys-only job over the STAGED files.
+        # 3) PK enforcement, one keys-only take over the STAGED files.
         #    Collision discovery vs the standing snapshot is
         #    stats-PRUNED to just the files whose key range intersects
         #    the batch. Single AND composite PKs prune: every PK
@@ -268,56 +268,37 @@ def insert(
         )
         if not existing:
             # batch-internal duplicates only (no standing key overlaps)
-            dup = (
-                staged_keys.groupBy(*pk).count()
-                .where(F.col("count") > 1).limit(1).count()
-            )
-            if dup:
-                raise SQLUniqueConstraintViolation(
-                    f"Violation of PRIMARY KEY constraint on {pk}: the "
-                    "insert batch contains duplicate key values"
-                )
+            bad = duplicate_key(staged_keys, pk)
         else:
-            # batch duplicates AND snapshot collisions in the SAME job:
-            # union the staged keys (tagged new) with the pruned
-            # existing keys, one hash aggregate per key
-            existing_keys = store.read_files(snap, existing)
+            # batch duplicates AND snapshot collisions in the SAME take:
+            # union the staged keys (tagged new) with the pruned existing
+            # keys, one hash aggregate per key; ``__n`` counts a key's
+            # new rows, and the key with the most comes first, so a batch
+            # duplicate wins over a collision
             merged = staged_keys.select(
                 *pk, F.lit(1).alias("__new")
             ).unionByName(
-                existing_keys.select(*pk, F.lit(0).alias("__new"))
+                store.read_files(snap, existing).select(
+                    *pk, F.lit(0).alias("__new")
+                )
             )
-            flags = (
+            bad = first_row(
                 merged.groupBy(*pk)
                 .agg(
-                    F.sum("__new").alias("__n_new"),
-                    F.count("*").alias("__n_all"),
+                    F.expr("sum(`__new`) AS `__n`"),
+                    F.expr("count(1) AS `__n_all`"),
                 )
-                .agg(
-                    F.max(
-                        F.when(F.col("__n_new") > 1, 1).otherwise(0)
-                    ).alias("dup"),
-                    F.max(
-                        F.when(
-                            (F.col("__n_new") >= 1)
-                            & (F.col("__n_all") > F.col("__n_new")),
-                            1,
-                        ).otherwise(0)
-                    ).alias("hit"),
-                )
-                .first()
+                .where("`__n` > 0 AND `__n_all` > 1")
+                .orderBy(F.col("__n").desc())
             )
-            if flags["dup"]:
-                raise SQLUniqueConstraintViolation(
-                    f"Violation of PRIMARY KEY constraint on {pk}: the "
-                    "insert batch contains duplicate key values"
+        if bad is not None:
+            raise SQLUniqueConstraintViolation(
+                f"Violation of PRIMARY KEY constraint on {pk}: the insert "
+                "batch " + (
+                    "contains duplicate key values" if bad["__n"] > 1
+                    else f"repeats key values already in {table_name!r}"
                 )
-            if flags["hit"]:
-                raise SQLUniqueConstraintViolation(
-                    f"Violation of PRIMARY KEY constraint on {pk}: the "
-                    "insert batch repeats key values already in "
-                    f"{table_name!r}"
-                )
+            )
         return fk_deps
 
     # cross-table OCC: the FK probe inside _pre_commit returns its

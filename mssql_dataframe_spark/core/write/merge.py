@@ -23,17 +23,17 @@ distinct source key values (the scale-safe version of the reference's
 from __future__ import annotations
 
 import logging
-import shutil
 
 from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ... import cache
 from ...errors import DataframeColumnDoesNotExist, SQLColumnDoesNotExist
 from ...store import TableStore
 from .. import generated
-from ...validation import _bq, precheck_dataframe_deferred
+from ...validation import _bq, first_row, precheck_dataframe_deferred
 from .. import datetimeoffset as dto
 from .insert import assign_identity, ensure_time_columns
 from .update import (
@@ -193,12 +193,12 @@ def merge_op(
 
     # stage the source ONCE (guide §2.4): validation aggregates — the
     # NOT NULL surface and (when structurally prunable) the pruning
-    # bounds — ride the staging write as observe() metrics, and every
-    # downstream consumer (discovery, identity assignment, the
+    # bounds — ride the staging checkpoint as observe() metrics, and
+    # every downstream consumer (discovery, identity assignment, the
     # full-outer rewrite) reads the staged LEAF, so the source plan
     # executes exactly once per merge. The unique_key duplicate check
     # (T-SQL MERGE's "cannot UPDATE the same row twice") is one
-    # keys-only columnar job over the staged files.
+    # bounded take over the leaf. The scope frees the leaf on exit.
     dataframe = dto.derive(dataframe, meta)
     plan, finish = precheck_dataframe_deferred(
         dataframe,
@@ -209,10 +209,8 @@ def merge_op(
         ],
         bounds_col=match if structurally_prunable else None,
     )
-    src, bounds, src_stage = stage_validated_source(
-        store, table_name, plan, finish, unique_key=match
-    )
-    try:
+    with cache.scope():
+        src, bounds = stage_validated_source(plan, finish, unique_key=match)
         update_cols = [c for c in src.columns if c not in match]
         # distinct source value sets per delete_requires column — shared by
         # the file-discovery probe below and the keep-rule flags later
@@ -351,7 +349,7 @@ def merge_op(
         # RESULT's nullability — `SET c = NULL` (or any expression that
         # evaluates NULL on some row) against a NOT NULL / PK column must
         # raise like SQL Server's error 515, not commit unchecked. One
-        # limit(1) probe over the target-only rows, and only on the rare
+        # bounded take over the target-only rows, and only on the rare
         # path where a constrained column is being set.
         nmbs_nn = [
             c
@@ -362,9 +360,9 @@ def merge_op(
             null_hit = " OR ".join(
                 f"(({nmbs_set[c]}) IS NULL)" for c in nmbs_nn
             )
-            if joined.filter(
-                f"{is_tgt_only} AND ({null_hit})"
-            ).limit(1).count():
+            if first_row(
+                joined.filter(f"{is_tgt_only} AND ({null_hit})")
+            ) is not None:
                 from ...errors import DataframeColumnInvalidValue
 
                 raise DataframeColumnInvalidValue(
@@ -446,8 +444,6 @@ def merge_op(
                 pk_at_risk=pk_at_risk,
             ),
         )
-    finally:
-        shutil.rmtree(src_stage, ignore_errors=True)
     return plan
 
 

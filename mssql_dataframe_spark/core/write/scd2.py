@@ -20,8 +20,6 @@ one shuffle any MERGE pays; nothing else.
 
 from __future__ import annotations
 
-import shutil
-
 from functools import reduce
 from operator import and_
 from typing import Optional
@@ -29,6 +27,7 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ... import cache
 from ...errors import DataframeColumnDoesNotExist, SQLColumnDoesNotExist
 from ...store import TableStore
 from .. import datetimeoffset as dto
@@ -95,20 +94,17 @@ def merge_scd2(
         raise ValueError("SCD2 merge needs at least one tracked attribute")
 
     # stage the source ONCE (guide §2.4): the per-match-column pruning
-    # bounds ride the staging write as observe() metrics, and the
+    # bounds ride the staging checkpoint as observe() metrics, and the
     # discovery scan + the full-outer rewrite read the staged LEAF —
     # the source plan executes exactly once per SCD2 merge. The
-    # unique_key duplicate check is one keys-only columnar job over
-    # the staged files.
+    # unique_key duplicate check is one bounded take over the leaf.
     plan, finish = precheck_dataframe_deferred(
         dataframe,
         {c: meta.column_types[c] for c in dataframe.columns},
         bounds_col=match,
     )
-    src, bounds, src_stage = stage_validated_source(
-        store, table_name, plan, finish, unique_key=match
-    )
-    try:
+    with cache.scope():
+        src, bounds = stage_validated_source(plan, finish, unique_key=match)
         if as_of is None:
             as_of = F.current_timestamp()
         ts_type = meta.spark_schema[valid_from_col].dataType
@@ -238,6 +234,4 @@ def merge_scd2(
                 ),
             ),
         )
-    finally:
-        shutil.rmtree(src_stage, ignore_errors=True)
     return plan

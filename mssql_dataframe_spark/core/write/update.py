@@ -18,109 +18,69 @@ broadcast join, i.e. no shuffle of the big side.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ... import cache
 from ...errors import (
     DataframeColumnInvalidValue,
     SQLColumnDoesNotExist,
     SQLUndefinedPrimaryKey,
 )
-from ...frames import local_frame
 from ...store import TableStore
 from .. import generated
 from ...validation import (
     _bq,
-    _sq,
+    duplicate_key,
     enforce_check_constraints,
     enforce_foreign_keys,
     enforce_unique_constraints,
+    first_row,
     precheck_dataframe_deferred,
 )
 from .. import datetimeoffset as dto
 from .insert import ensure_time_columns
 
 
-def stage_validated_source(store, table_name, plan, finish,
-                           unique_key=None):
+def stage_validated_source(plan, finish, unique_key=None):
     """Execute a rewrite verb's SOURCE plan exactly ONCE (guide §2.4):
-    write the deferred-validated plan to a private ``.stage_src_*``
-    directory — the validation aggregates ride that write as
-    ``observe()`` metrics — then apply them and hand back a LEAF read
-    of the staged files. Every later consumer (pruning-bounds use,
+    checkpoint the deferred-validated plan into the executors' block
+    stores (``cache.checkpoint``) — the validation aggregates ride that
+    action as ``observe()`` metrics — then apply them and hand back the
+    checkpointed LEAF. Every later consumer (pruning-bounds use,
     bloom/content discovery, the rewrite join, identity assignment)
-    scans the staged parquet instead of re-executing the source
-    pipeline, so update/merge/SCD2 become source-single-pass like
-    insert (the eager shape paid one validation-agg pass PLUS a full
-    re-execution inside the staged rewrite, and partial re-executions
-    in discovery). A side benefit: the rewrite and the pruning bounds
-    now provably see the SAME rows even for a non-deterministic
-    source (the eager path documented that hazard and hoped).
+    reads the leaf instead of re-executing the source pipeline, so
+    update/merge/SCD2/delete are source-single-pass like insert, and
+    the rewrite and the pruning bounds provably see the SAME rows even
+    for a non-deterministic source.
 
     The duplicate-match-key check (T-SQL MERGE's "cannot UPDATE the
-    same row more than once") cannot ride ``observe()`` —
-    ``count(DISTINCT ...)`` is barred there — so it becomes one
-    keys-only COLUMNAR job over the staged files (same error, same
-    message, still before anything commits).
+    same row more than once") cannot ride ``observe()``, which bars
+    distinct aggregates, so it is one bounded take over the leaf's rows
+    whose ``unique_key`` is all non-NULL (NULL keys never match, so they
+    cannot apply a target row twice).
 
-    Returns ``(leaf_df, bounds, stage_dir)``. The caller must remove
-    ``stage_dir`` when the verb finishes (try/finally); the
-    ``.stage_`` prefix keeps crash litter under vacuum's age-gated
-    reaper. Raises the validation errors before returning.
+    Returns ``(leaf, bounds)``; raises the validation errors first. The
+    caller's ``cache.scope()`` owns the leaf and frees its blocks when
+    the verb ends, on success or on error.
     """
-    tdir = store._table_dir(table_name)
-    os.makedirs(tdir, exist_ok=True)
-    stage = os.path.join(tdir, f".stage_src_{uuid.uuid4().hex}")
-    try:
-        plan.write.mode("overwrite").parquet(stage)
-        bounds = finish()
-        # read the part FILES by explicit path (the pre-commit hooks'
-        # idiom): the dot-prefixed stage dir is hidden to Spark's path
-        # resolution when passed as a directory root, which logs a
-        # spurious "All paths were ignored" per verb
-        parts = sorted(
-            os.path.join(stage, fn)
-            for fn in os.listdir(stage)
-            if fn.endswith(".parquet")
-        )
-        spark = plan.sparkSession
-        if parts:
-            leaf = spark.read.schema(plan.schema).parquet(*parts)
-        else:  # empty source: nothing was written
-            leaf = local_frame(spark, [], plan.schema)
-        if unique_key:
-            keyed = " AND ".join(
-                f"{_bq(k)} IS NOT NULL" for k in unique_key
+    leaf = cache.checkpoint(plan)
+    bounds = finish()
+    if unique_key:
+        keyed = " AND ".join(f"{_bq(k)} IS NOT NULL" for k in unique_key)
+        dup = duplicate_key(leaf.where(keyed), unique_key)
+        if dup is not None:
+            key = {k: dup[k] for k in unique_key}
+            raise ValueError(
+                f"source dataframe contains duplicate match-key rows "
+                f"on {list(unique_key)} ({key} occurs {dup['__n']} "
+                f"times); T-SQL MERGE/UPDATE cannot apply the same "
+                f"target row twice — dedupe the source first"
             )
-            key_struct = "named_struct(" + ", ".join(
-                f"{_sq(k)}, {_bq(k)}" for k in unique_key
-            ) + ")"
-            row = (
-                leaf.select(*unique_key)
-                .selectExpr(
-                    f"count(CASE WHEN {keyed} THEN 1 END) AS `__n_rows`",
-                    f"count(DISTINCT CASE WHEN {keyed} THEN {key_struct} "
-                    "END) AS `__n_keys`",
-                )
-                .collect()[0]
-            )
-            if row["__n_rows"] != row["__n_keys"]:
-                raise ValueError(
-                    f"source dataframe contains duplicate match-key rows "
-                    f"on {list(unique_key)} ({row['__n_rows']} rows, "
-                    f"{row['__n_keys']} distinct keys); T-SQL "
-                    f"MERGE/UPDATE cannot apply the same target row "
-                    f"twice — dedupe the source first"
-                )
-    except BaseException:
-        shutil.rmtree(stage, ignore_errors=True)
-        raise
-    return leaf, bounds, stage
+    return leaf, bounds
 
 
 def resolve_match_columns(meta, dataframe, match_columns) -> list[str]:
@@ -468,7 +428,7 @@ def reject_missing_not_null(meta, src_columns, exempt, joined, new_rows,
                             cannot, rows):
     """A NOT NULL or PRIMARY KEY column absent from a merge source makes
     every row the merge synthesizes (``joined.filter(new_rows)``) store
-    NULL there — SQL Server MERGE raises error 515. One limit(1) probe,
+    NULL there — SQL Server MERGE raises error 515. One bounded take,
     and only on the rare missing-column path; computed columns (engine
     materialized) and the caller's ``exempt`` engine-filled columns do
     not count."""
@@ -478,7 +438,7 @@ def reject_missing_not_null(meta, src_columns, exempt, joined, new_rows,
         for c in dict.fromkeys((*meta.not_nullable, *meta.primary_key))
         if c not in src_columns and c not in computed and c not in exempt
     ]
-    if missing and joined.filter(new_rows).limit(1).count():
+    if missing and first_row(joined.filter(new_rows)) is not None:
         raise DataframeColumnInvalidValue(
             f"{cannot}: NOT NULL / PRIMARY KEY column(s) {missing} are "
             f"absent from the source dataframe, so {rows} would store "
@@ -504,8 +464,8 @@ def update_op(
 
     # unique_key=match: duplicate match keys in the source would fan out
     # target rows through the join; T-SQL raises "attempted to UPDATE
-    # the same row more than once" — so do we (inside the same
-    # single-job validation pass).
+    # the same row more than once" — so do we, before anything
+    # commits (stage_validated_source).
     can_prune = match == list(meta.primary_key) and len(match) == 1
     dataframe = dto.derive(dataframe, meta)
     update_cols = [c for c in dataframe.columns if c not in match]
@@ -513,7 +473,7 @@ def update_op(
         raise ValueError("dataframe has no non-match columns to update")
     # stage the source ONCE (guide §2.4): the validation aggregates —
     # including the per-match-column pruning bounds ({col: (lo, hi)})
-    # — ride the staging write as observe() metrics, and everything
+    # — ride the staging checkpoint as observe() metrics, and everything
     # downstream (bloom/content discovery, the rewrite join) reads the
     # staged LEAF, so the source plan executes exactly once per update
     plan, finish = precheck_dataframe_deferred(
@@ -530,10 +490,8 @@ def update_op(
         ],
         bounds_col=match,
     )
-    src, bounds, src_stage = stage_validated_source(
-        store, table_name, plan, finish, unique_key=match
-    )
-    try:
+    with cache.scope():
+        src, bounds = stage_validated_source(plan, finish, unique_key=match)
         # file pruning: UPDATE never inserts or deletes, so rows in files
         # holding no matching key are bit-identical — carry them over by
         # manifest reference and rewrite only touched files (see
@@ -588,6 +546,4 @@ def update_op(
                 pk_at_risk=bool(set(update_cols) & set(meta.primary_key)),
             ),
         )
-    finally:
-        shutil.rmtree(src_stage, ignore_errors=True)
     return plan

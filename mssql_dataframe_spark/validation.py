@@ -118,8 +118,8 @@ def precheck_dataframe_deferred(
     staged files are discarded by the caller's abort path.
 
     Batch-duplicate match keys are not checked here: ``count(DISTINCT
-    ...)`` is barred from ``observe()`` metrics, so the writers check
-    them over the staged key columns (``stage_validated_source``).
+    ...)`` is barred from ``observe()`` metrics, so the writers probe
+    the staged source for them (``stage_validated_source``).
     """
     specs: dict[str, ColumnSpec] = {}
     for col in df.columns:
@@ -178,6 +178,24 @@ def precheck_dataframe_deferred(
         return bounds
 
     return out, finish
+
+
+def first_row(df: DataFrame):
+    """The first row of ``df``, or None: one bounded take, so a probe
+    that only asks whether a row exists runs one job and stops at the
+    first hit (``limit(1).count()`` adds an aggregate, and AQE runs it
+    as a second job)."""
+    rows = df.limit(1).collect()
+    return rows[0] if rows else None
+
+
+def duplicate_key(df: DataFrame, cols):
+    """A value of ``df``'s ``cols`` that occurs more than once, as a row
+    of ``cols`` plus its count ``__n``, or None. NULL keys group
+    together; callers that exempt them drop them first."""
+    return first_row(
+        df.groupBy(*cols).agg(F.expr("count(1) AS `__n`")).where("`__n` > 1")
+    )
 
 
 def enforce_check_constraints(df: DataFrame, checks: dict) -> None:
@@ -311,15 +329,13 @@ def enforce_foreign_keys(
                 parent = parent.unionByName(
                     df.select(*[F.col(rc).alias(c) for c, rc in pairs])
                 )
-        orphans = (
+        orphan = first_row(
             df.select(*cols)
             .na.drop(how="any")
             .distinct()
             .join(parent, cols, "left_anti")
-            .limit(1)
-            .count()
         )
-        if orphans:
+        if orphan is not None:
             from .errors import SQLForeignKeyViolation
 
             raise SQLForeignKeyViolation(
@@ -385,15 +401,9 @@ def enforce_unique_constraints(
                 }
                 ex = existing_for(cols, bounds)
             if ex is not None:
-                dup = (
-                    keys.join(
-                        ex.select(*cols).na.drop(how="any"),
-                        cols,
-                        "left_semi",
-                    )
-                    .limit(1)
-                    .count()
-                )
+                dup = first_row(keys.join(
+                    ex.select(*cols).na.drop(how="any"), cols, "left_semi",
+                )) is not None
         if dup:
             raise SQLUniqueConstraintViolation(
                 f"unique constraint {name!r} on {cols} violated: the "

@@ -139,3 +139,77 @@ def test_cache_is_the_only_persist():
     place knows what to release."""
     package = pathlib.Path(mssql_dataframe_spark.__file__).parent
     assert _persist_calls(package) == []
+
+
+def _stored_rdds(spark) -> set[int]:
+    """Ids of the RDDs holding blocks in the block store."""
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_scope_frees_its_checkpoints_on_exit_and_on_error(spark):
+    """A checkpoint holds its blocks until the owning scope exits, on
+    success or on error (``unpersist()`` alone leaves them behind)."""
+    before = _stored_rdds(spark)
+    with cache.scope() as owned:
+        ck = cache.checkpoint(spark.range(10))
+        assert len(owned) == 1 and owned[0] is ck
+        held = _stored_rdds(spark) - before
+        assert held
+        assert ck.count() == 10
+    assert not _stored_rdds(spark) & held
+    with pytest.raises(RuntimeError, match="boom"):
+        with cache.scope():
+            cache.checkpoint(spark.range(10))
+            held = _stored_rdds(spark) - before
+            assert held
+            raise RuntimeError("boom")
+    assert not _stored_rdds(spark) & held
+
+
+def _scd2_table(eng, spark, name):
+    eng.create.table(
+        name,
+        {"k": "bigint", "attr": "bigint", "_valid_from": "datetime2",
+         "_valid_to": "datetime2", "_is_current": "bit"},
+    )
+    eng.write.insert(name, spark.range(20).select(
+        F.col("id").alias("k"), F.col("id").alias("attr"),
+        F.lit("2024-01-01 00:00:00").cast("timestamp_ntz")
+        .alias("_valid_from"),
+        F.lit(None).cast("timestamp_ntz").alias("_valid_to"),
+        F.lit(True).alias("_is_current"),
+    ))
+
+
+@pytest.mark.parametrize(
+    "verb", ["update", "merge", "delete", "merge_scd2", "merge_duplicate_key"]
+)
+def test_write_verbs_free_their_staged_source(engine, spark, verb):
+    """A rewrite verb stages its source in the block store and frees it
+    when the verb ends: afterwards no RDD the verb created holds
+    blocks, also when the verb raises."""
+    eng = engine
+    if verb == "merge_scd2":
+        _scd2_table(eng, spark, "dbo.rel")
+    else:
+        eng.create.table("dbo.rel", {"k": "bigint", "v": "bigint"},
+                         primary_key_column="k")
+        eng.write.insert(
+            "dbo.rel", spark.range(20).selectExpr("id AS k", "id AS v")
+        )
+    src = spark.range(10, 30).selectExpr("id AS k", "-id AS v")
+    before = _stored_rdds(spark)
+    if verb == "update":
+        eng.write.update("dbo.rel", src)
+    elif verb == "merge":
+        eng.write.merge("dbo.rel", src)
+    elif verb == "delete":
+        assert eng.write.delete("dbo.rel", src.select("k")) == 10
+    elif verb == "merge_scd2":
+        eng.write.merge_scd2(
+            "dbo.rel", src.withColumnRenamed("v", "attr"), match_columns=["k"]
+        )
+    else:
+        with pytest.raises(ValueError, match="duplicate match-key"):
+            eng.write.merge("dbo.rel", src.unionAll(src), upsert=True)
+    assert _stored_rdds(spark) - before == set()

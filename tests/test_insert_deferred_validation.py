@@ -19,11 +19,14 @@ STAGED files. These tests pin the internals the fusion changed:
 from __future__ import annotations
 
 import os
+import pathlib
+import re
 
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+import mssql_dataframe_spark
 from mssql_dataframe_spark import errors
 
 
@@ -528,15 +531,96 @@ def test_write_verb_job_counts_and_file_accounting(engine, spark):
     assert top["n_files_kept"] > 0
     assert eng.read.table("dbo.jcs").count() == 210
 
+    # before the staged source moved to the block store and the key
+    # probes to bounded takes: insert 4, update 6, merge 7/11/15,
+    # delete 3, SCD2 7
     assert got == {
-        "insert": 4,
-        "update": 6,
-        "merge_upsert": 7,
+        "insert": 3,
+        "update": 5,
+        "merge_upsert": 6,
         "delete": 3,
-        "merge_composite": 11,
-        "merge_delete_requires": 15,
-        "scd2": 7,
+        "merge_composite": 10,
+        "merge_delete_requires": 14,
+        "scd2": 6,
     }
+
+
+def test_constraint_laden_write_job_counts(engine, spark):
+    """Job counts for an insert and an upsert merge into a table with a
+    CHECK constraint, a FOREIGN KEY and a PRIMARY KEY (the table of
+    ``test_constraint_laden_merge_executes_source_once``), pinned
+    exactly like the per-verb pins above: they may only stay the same
+    or fall. The insert's keys interleave the standing ones, so its PK
+    probe takes the batch-duplicate-and-collision branch."""
+    eng = engine
+    eng.create.table("dbo.cjpar", {"pk": "bigint"}, primary_key_column="pk")
+    eng.write.insert("dbo.cjpar", spark.range(1, 3).selectExpr("id AS pk"))
+    eng.create.table(
+        "dbo.cjc", {"k": "bigint", "ref": "bigint", "qty": "int"},
+        primary_key_column="k",
+    )
+    eng.modify.check_constraint("dbo.cjc", "add", "qty_pos", "qty > 0")
+    eng.modify.foreign_key(
+        "dbo.cjc", "add", "fk_cj",
+        columns="ref", ref_table="dbo.cjpar", ref_columns="pk",
+    )
+    eng.write.insert(
+        "dbo.cjc",
+        spark.range(50).selectExpr(
+            "id * 2 AS k", "1 + id % 2 AS ref", "CAST(1 AS INT) AS qty"
+        ),
+    )
+    got = {}
+    got["insert"], *_ = _commit_in_group(
+        eng, spark, "dbo.cjc", "cj_insert",
+        lambda: eng.write.insert(
+            "dbo.cjc",
+            spark.range(25).selectExpr(
+                "id * 2 + 1 AS k", "1 + id % 2 AS ref", "CAST(1 AS INT) AS qty"
+            ),
+        ),
+    )
+    got["merge"], *_ = _commit_in_group(
+        eng, spark, "dbo.cjc", "cj_merge",
+        lambda: eng.write.merge(
+            "dbo.cjc",
+            spark.range(90, 110).selectExpr(
+                "id AS k", "1 + id % 2 AS ref", "CAST(2 AS INT) AS qty"
+            ),
+            match_columns=["k"], upsert=True,
+        ),
+    )
+    assert eng.read.table("dbo.cjc").count() == 75 + 15
+    # before the staged source moved to the block store and the key
+    # probes to bounded takes: insert 11, merge 14
+    assert got == {"insert": 10, "merge": 12}
+
+
+def _count_after_limit(package: pathlib.Path) -> list[str]:
+    """``file:line`` of each ``.limit(1)`` chained into ``.count()`` in
+    the write path: ``core/``, ``validation.py``, ``store.py`` and
+    ``streaming/``."""
+    paths = [
+        *sorted((package / "core").rglob("*.py")),
+        package / "validation.py",
+        package / "store.py",
+        *sorted((package / "streaming").rglob("*.py")),
+    ]
+    found = []
+    for path in paths:
+        text = path.read_text()
+        for m in re.finditer(r"\.limit\(1\)\s*\.count\(\)", text):
+            line = text.count("\n", 0, m.start()) + 1
+            found.append(f"{path.relative_to(package).as_posix()}:{line}")
+    return found
+
+
+def test_existence_probes_are_one_take():
+    """An existence probe is ``validation.first_row`` (one bounded take,
+    one job), never ``limit(1).count()``, which adds an aggregate that
+    AQE runs as a second job."""
+    package = pathlib.Path(mssql_dataframe_spark.__file__).parent
+    assert _count_after_limit(package) == []
 
 
 def test_write_verb_snapshot_reads(engine, spark, monkeypatch):
