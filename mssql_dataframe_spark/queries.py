@@ -1,6 +1,17 @@
 """Query registry: every operator exposed as a (spark, sf_dir) callable
 plus a DuckDB-oracle SQL twin for the correctness gate.
 
+An entry takes one of two forms:
+
+- a DataFrame body plus its twin: ``@register(name, sql=...)`` on a
+  ``(spark, sf_dir)`` function. Entries that call this package's
+  operators, build tables or set confs take this form, and so do those
+  whose twin uses DuckDB-only syntax or plans differently on Spark;
+- SQL-only: ``register(name, sql=...)`` with no body. Spark runs the
+  twin itself, so the query has one definition. An entry takes this
+  form only when Spark plans its twin as it planned the body: same
+  schema, plan facts, scan order, join build sides and job count.
+
 Column-name contract: every computed column is aliased identically in
 the Spark plan and the oracle SQL. Float determinism: aggregates over
 doubles are summed as DECIMAL(18,4) and cast back to DOUBLE in BOTH
@@ -11,6 +22,7 @@ engines so accumulation order cannot change the result bits
 from __future__ import annotations
 
 import os
+import re
 import uuid
 
 import pandas as pd  # module-global so pandas_udf type hints resolve
@@ -38,12 +50,45 @@ _SCRATCH = os.path.join(os.path.dirname(__file__), "..", ".spark_tables", "queri
 REGISTRY: dict[str, dict] = {}
 
 
+#: the parquet tables under ``sf_dir`` (``<name>.parquet``)
+_SOURCES = (
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+)
+_SOURCE_REF = re.compile(
+    r"\b(FROM|JOIN)(\s+)(" + "|".join(_SOURCES) + r")\b", re.IGNORECASE
+)
+
+
 def register(name: str, sql: str | None = None):
+    """Register entry ``name`` with its DuckDB twin ``sql``.
+
+    Used as a decorator, the decorated ``(spark, sf_dir)`` body is the
+    entry. Called alone, the entry is SQL-only: Spark runs the twin
+    itself (see :func:`_sql_entry`).
+    """
+    REGISTRY[name] = {"fn": _sql_entry(sql) if sql else None, "sql": sql}
+
     def deco(fn):
-        REGISTRY[name] = {"fn": fn, "sql": sql}
+        REGISTRY[name]["fn"] = fn
         return fn
 
     return deco
+
+
+def _sql_entry(sql: str):
+    """The ``(spark, sf_dir)`` callable of a SQL-only entry: ``sql``
+    through ``spark.sql``, each source table it reads bound to its
+    ``_t`` frame as a DataFrame argument. Spark binds those under
+    private view names it drops again, so a caller's own temp view
+    named like a source table is neither read nor touched."""
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        text = _SOURCE_REF.sub(lambda m: f"{m[1]}{m[2]}{{{m[3].lower()}}}", sql)
+        tables = sorted({m[3].lower() for m in _SOURCE_REF.finditer(sql)})
+        return spark.sql(text, **{t: _t(spark, sf_dir, t) for t in tables})
+
+    return run
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -79,7 +124,7 @@ def _exact_rev(prefix="l_"):
 # TPC-H-ish read path
 # ---------------------------------------------------------------------------
 
-@register(
+register(
     "q1_pricing_summary",
     sql="""
     SELECT l_returnflag, l_linestatus,
@@ -96,31 +141,6 @@ def _exact_rev(prefix="l_"):
     GROUP BY l_returnflag, l_linestatus
     """,
 )
-def q1(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp_ntz")
-    )
-    disc_price = _exact_rev()
-    charge = disc_price * (1 + F.col("l_tax")).cast("decimal(4,2)")
-    return l.groupBy("l_returnflag", "l_linestatus").agg(
-        _dsum(F.col("l_quantity"), "sum_qty"),
-        _dsum(F.col("l_extendedprice"), "sum_base_price"),
-        _dsum(disc_price, "sum_disc_price"),
-        F.sum(charge.cast("decimal(24,6)")).cast("double").alias("sum_charge"),
-        (
-            F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double")
-            / F.count("*")
-        ).alias("avg_qty"),
-        (
-            F.sum(F.col("l_extendedprice").cast("decimal(18,4)")).cast("double")
-            / F.count("*")
-        ).alias("avg_price"),
-        (
-            F.sum(F.col("l_discount").cast("decimal(18,4)")).cast("double")
-            / F.count("*")
-        ).alias("avg_disc"),
-        F.count("*").alias("count_order"),
-    )
 
 
 @register(
@@ -200,7 +220,7 @@ def q5(spark, sf_dir):
     )
 
 
-@register(
+register(
     "q6_forecast_revenue",
     sql="""
     SELECT CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(4,2)) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
@@ -212,21 +232,6 @@ def q5(spark, sf_dir):
       AND l_quantity < 24
     """,
 )
-def q6(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
-    return (
-        l.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
-            & (F.col("l_discount") >= 0.03)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            _dsum(F.col("l_extendedprice").cast("decimal(12,2)") * F.col("l_discount").cast("decimal(4,2)"), "revenue"),
-            F.count("*").alias("n_rows"),
-        )
-    )
 
 
 @register(
@@ -267,7 +272,7 @@ def q10(spark, sf_dir):
     )
 
 
-@register(
+register(
     "q2_min_price_parts",
     sql="""
     SELECT p.p_brand, p.p_partkey, p.p_name, p.p_retailprice
@@ -277,24 +282,6 @@ def q10(spark, sf_dir):
       ON p.p_brand = m.p_brand AND p.p_retailprice = m.min_price
     """,
 )
-def q2(spark, sf_dir):
-    """Cheapest part(s) per brand — the reference pattern is TPC-H Q2's
-    correlated-min subquery; expressed as a min-aggregate self-join so
-    Catalyst plans one shuffle + broadcast of the tiny min table."""
-    p = _t(spark, sf_dir, "part")
-    m = (
-        p.groupBy("p_brand")
-        .agg(F.min("p_retailprice").alias("min_price"))
-        .withColumnRenamed("p_brand", "__brand")
-    )
-    return (
-        p.join(
-            F.broadcast(m),
-            (F.col("p_brand") == F.col("__brand"))
-            & (F.col("p_retailprice") == F.col("min_price")),
-        )
-        .select("p_brand", "p_partkey", "p_name", "p_retailprice")
-    )
 
 
 @register(
@@ -436,7 +423,7 @@ def q8(spark, sf_dir):
     )
 
 
-@register(
+register(
     "q9_product_profit",
     sql="""
     SELECT n.n_name AS nation,
@@ -454,34 +441,6 @@ def q8(spark, sf_dir):
     GROUP BY nation, o_year
     """,
 )
-def q9(spark, sf_dir):
-    """TPC-H Q9 (product-type profit) adapted to the available columns:
-    no partsupp table, so supply cost is modeled as half the part's
-    retail price. All arithmetic stays in decimal until the final cast
-    so accumulation order cannot change the bits. The part filter is
-    broadcast; lineitem shuffles once on the orders join key."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%bolt%"))
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    o = _t(spark, sf_dir, "orders")
-    cost = (
-        F.lit(0.5).cast("decimal(3,1)")
-        * F.col("p_retailprice").cast("decimal(12,2)")
-        * F.col("l_quantity").cast("decimal(4,0)")
-    )
-    amount = (_exact_rev() - cost).cast("decimal(24,4)")
-    return (
-        l.join(F.broadcast(p), p.p_partkey == l.l_partkey)
-        .join(F.broadcast(s), s.s_suppkey == l.l_suppkey)
-        .join(F.broadcast(n), n.n_nationkey == s.s_nationkey)
-        .join(o, o.o_orderkey == l.l_orderkey)
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").cast("int").alias("o_year"),
-        )
-        .agg(F.sum(amount).cast("double").alias("sum_profit"))
-    )
 
 
 @register(
@@ -531,7 +490,7 @@ def q11(spark, sf_dir):
     )
 
 
-@register(
+register(
     "q12_late_shipments",
     sql="""
     SELECT o.o_orderpriority,
@@ -544,30 +503,9 @@ def q11(spark, sf_dir):
     GROUP BY o.o_orderpriority
     """,
 )
-def q12(spark, sf_dir):
-    """TPC-H Q12's shipmode CASE-aggregation pattern adapted to the
-    available columns: lines shipped >90 days after order date, counted
-    per priority."""
-    l = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
-    )
-    o = _t(spark, sf_dir, "orders")
-    late = F.when(
-        F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS"),
-        1,
-    ).otherwise(0)
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.sum(late).alias("late_count"),
-            F.count("*").alias("line_count"),
-        )
-    )
 
 
-@register(
+register(
     "q13_customer_order_distribution",
     sql="""
     SELECT c_count, COUNT(*) AS custdist
@@ -581,21 +519,9 @@ def q12(spark, sf_dir):
     GROUP BY c_count
     """,
 )
-def q13(spark, sf_dir):
-    """TPC-H Q13: LEFT OUTER join (customers with zero orders count 0)
-    then a histogram over the per-customer counts — two aggregations,
-    the second over the first's output."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "1-URGENT")
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left_outer")
-        .groupBy(c.c_custkey)
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count("*").alias("custdist"))
 
 
-@register(
+register(
     "q14_promo_revenue",
     sql="""
     SELECT ROUND(100.0 * CAST(SUM(CASE WHEN p.p_type = 'PROMO'
@@ -608,28 +534,6 @@ def q13(spark, sf_dir):
       AND l.l_shipdate <  TIMESTAMP '1997-04-01 00:00:00'
     """,
 )
-def q14(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-03-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp_ntz"))
-    )
-    p = _t(spark, sf_dir, "part")
-    rev = (_exact_rev()).cast("decimal(18,4)")
-    return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        .agg(
-            F.round(
-                F.lit(100.0)
-                * F.sum(
-                    F.when(F.col("p_type") == "PROMO", rev).otherwise(
-                        F.lit(0).cast("decimal(18,4)")
-                    )
-                ).cast("double")
-                / F.sum(rev).cast("double"),
-                8,
-            ).alias("promo_revenue_pct")
-        )
-    )
 
 
 @register(
@@ -670,7 +574,7 @@ def q15(spark, sf_dir):
     )
 
 
-@register(
+register(
     "q17_small_quantity_revenue",
     sql="""
     SELECT CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
@@ -684,30 +588,9 @@ def q15(spark, sf_dir):
     WHERE p.p_brand = 'Brand#23' AND l.l_quantity < t.qty_limit
     """,
 )
-def q17(spark, sf_dir):
-    """Small-quantity-order revenue: TPC-H Q17's correlated AVG
-    subquery decorrelated into a per-part aggregate join — one shuffle
-    on partkey instead of a per-row subquery."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23")
-    limits = l.groupBy(F.col("l_partkey").alias("__pk")).agg(
-        (F.avg("l_quantity") * 0.2).alias("qty_limit")
-    )
-    return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        .join(limits, l.l_partkey == F.col("__pk"))
-        .filter(F.col("l_quantity") < F.col("qty_limit"))
-        .agg(
-            (
-                F.sum(F.col("l_extendedprice").cast("decimal(18,4)")).cast("double")
-                / 7.0
-            ).alias("avg_yearly"),
-            F.count("*").alias("n_rows"),
-        )
-    )
 
 
-@register(
+register(
     "q16_supplier_count",
     sql="""
     SELECT p.p_brand, p.p_size,
@@ -717,16 +600,6 @@ def q17(spark, sf_dir):
     GROUP BY p.p_brand, p.p_size
     """,
 )
-def q16(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#1") & F.col("p_size").isin(5, 10, 15, 20, 25, 30)
-    )
-    return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
 
 
 @register(
@@ -763,7 +636,7 @@ def q18(spark, sf_dir):
     )
 
 
-@register(
+register(
     "q19_disjunctive_filter",
     sql="""
     SELECT CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(12,2)) * CAST(1 - l.l_discount AS DECIMAL(4,2)) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
@@ -777,34 +650,6 @@ def q18(spark, sf_dir):
            AND l.l_quantity >= 20 AND l.l_quantity <= 40)
     """,
 )
-def q19(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
-    cond = (
-        (
-            (F.col("p_brand") == "Brand#12")
-            & F.col("p_size").between(1, 15)
-            & F.col("l_quantity").between(1, 21)
-        )
-        | (
-            (F.col("p_brand") == "Brand#23")
-            & F.col("p_size").between(1, 25)
-            & F.col("l_quantity").between(10, 30)
-        )
-        | (
-            (F.col("p_brand") == "Brand#34")
-            & F.col("p_size").between(1, 35)
-            & F.col("l_quantity").between(20, 40)
-        )
-    )
-    return (
-        l.join(F.broadcast(p), p.p_partkey == l.l_partkey)
-        .filter(cond)
-        .agg(
-            _dsum(_exact_rev(), "revenue"),
-            F.count("*").alias("n_rows"),
-        )
-    )
 
 
 @register(
@@ -959,7 +804,7 @@ def q22(spark, sf_dir):
 # window / rollup / cube / distinct / set ops / pivot
 # ---------------------------------------------------------------------------
 
-@register(
+register(
     "window_top3_orders_per_customer",
     sql="""
     SELECT o_custkey, o_orderkey, o_totalprice, CAST(rn AS INT) AS rn
@@ -971,19 +816,9 @@ def q22(spark, sf_dir):
     ) WHERE rn <= 3
     """,
 )
-def window_top3(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-    )
-    return (
-        o.select("o_custkey", "o_orderkey", "o_totalprice")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-    )
 
 
-@register(
+register(
     "window_running_user_value",
     sql="""
     SELECT user_id, event_id,
@@ -996,28 +831,9 @@ def window_top3(spark, sf_dir):
     FROM events
     """,
 )
-def window_running(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("ts").asc(), F.col("event_id").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w2 = Window.partitionBy("user_id").orderBy(
-        F.col("ts").asc(), F.col("event_id").asc()
-    )
-    return e.select(
-        "user_id",
-        "event_id",
-        F.sum(F.col("value").cast("decimal(18,4)"))
-        .over(w)
-        .cast("double")
-        .alias("running_value"),
-        F.row_number().over(w2).alias("seq"),
-    )
 
 
-@register(
+register(
     "window_sessionization",
     sql="""
     WITH gaps AS (
@@ -1035,35 +851,9 @@ def window_running(spark, sf_dir):
     FROM gaps GROUP BY user_id
     """,
 )
-def window_sessionization(spark, sf_dir):
-    """30-minute-gap sessionization. The gap test compares FULL
-    microsecond epochs (unix_micros), not second-truncated casts:
-    ``ts.cast("long")`` floors each timestamp to whole seconds, so a
-    true gap of 1800.5 s could truncate to exactly 1800 and FAIL the
-    strict > test the SQL interval comparison passes — every ts in the
-    events table carries sub-second parts, so the truncated form was
-    one boundary-straddling pair away from a wrong session count
-    (r14 queries.py entry-body review)."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
-    prev = F.lag("ts").over(w)
-    new_session = F.when(
-        prev.isNull()
-        | (F.unix_micros(F.col("ts")) - F.unix_micros(prev)
-           > 1800 * 1_000_000),
-        1,
-    ).otherwise(0)
-    return (
-        e.withColumn("new_session", new_session)
-        .groupBy("user_id")
-        .agg(
-            F.sum("new_session").cast("bigint").alias("n_sessions"),
-            F.count("*").alias("n_events"),
-        )
-    )
 
 
-@register(
+register(
     "rollup_lineitem_status",
     sql="""
     SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
@@ -1071,14 +861,9 @@ def window_sessionization(spark, sf_dir):
     FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
 )
-def rollup_lineitem(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
-    return l.rollup("l_returnflag", "l_linestatus").agg(
-        F.count("*").alias("n"), _dsum(F.col("l_quantity"), "sum_qty")
-    )
 
 
-@register(
+register(
     "cube_orders_status_priority",
     sql="""
     SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
@@ -1086,14 +871,9 @@ def rollup_lineitem(spark, sf_dir):
     FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
     """,
 )
-def cube_orders(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    return o.cube("o_orderstatus", "o_orderpriority").agg(
-        F.count("*").alias("n"), _dsum(F.col("o_totalprice"), "sum_price")
-    )
 
 
-@register(
+register(
     "distinct_aggregates",
     sql="""
     SELECT l_returnflag,
@@ -1103,13 +883,6 @@ def cube_orders(spark, sf_dir):
     FROM lineitem GROUP BY l_returnflag
     """,
 )
-def distinct_aggs(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
-    return l.groupBy("l_returnflag").agg(
-        F.countDistinct("l_partkey").alias("n_parts"),
-        F.countDistinct("l_suppkey").alias("n_supps"),
-        F.countDistinct("l_orderkey").alias("n_orders"),
-    )
 
 
 @register(
@@ -1191,7 +964,7 @@ def pivot_rf(spark, sf_dir):
     )
 
 
-@register(
+register(
     "window_lead_lag_monthly",
     sql="""
     WITH monthly AS (
@@ -1211,30 +984,9 @@ def pivot_rf(spark, sf_dir):
     FROM monthly
     """,
 )
-def window_lead_lag(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    monthly = o.groupBy(
-        F.year("o_orderdate").cast("int").alias("y"),
-        F.month("o_orderdate").cast("int").alias("m"),
-    ).agg(_dsum(F.col("o_totalprice"), "revenue"))
-    w = Window.orderBy("y", "m")
-    prev = F.lag("revenue").over(w)
-    return monthly.select(
-        "y",
-        "m",
-        "revenue",
-        prev.alias("prev_revenue"),
-        F.lead("revenue").over(w).alias("next_revenue"),
-        F.round(
-            F.when(
-                prev.isNotNull() & (prev != 0), (F.col("revenue") - prev) / prev
-            ),
-            8,
-        ).alias("mom_change"),
-    )
 
 
-@register(
+register(
     "window_moving_avg_frames",
     sql="""
     SELECT o_custkey, o_orderkey, o_totalprice,
@@ -1248,22 +1000,6 @@ def window_lead_lag(spark, sf_dir):
     FROM orders
     """,
 )
-def window_moving_avg(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    order = [F.col("o_orderdate").asc(), F.col("o_orderkey").asc()]
-    w3 = Window.partitionBy("o_custkey").orderBy(*order).rowsBetween(-2, 0)
-    wp = (
-        Window.partitionBy("o_custkey")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_totalprice",
-        F.round(F.avg("o_totalprice").over(w3), 6).alias("ma3"),
-        F.round(F.min("o_totalprice").over(wp), 6).alias("prior_min"),
-    )
 
 
 @register(
@@ -1366,7 +1102,7 @@ def timeseries_ewma_quantized(spark, sf_dir):
     )
 
 
-@register(
+register(
     "global_topn_orders",
     sql="""
     SELECT o_orderkey, o_custkey, o_totalprice
@@ -1375,20 +1111,6 @@ def timeseries_ewma_quantized(spark, sf_dir):
     LIMIT 100
     """,
 )
-def global_topn_orders(spark, sf_dir):
-    """Global ORDER BY + LIMIT: Spark plans TakeOrderedAndProject —
-    each partition keeps a local top-100 heap and only those rows
-    reach the driver-side merge, NEVER a full-table sort shuffle
-    (tests/test_plans.py pins the plan). The difference between a
-    bounded-memory top-N and a total sort is the whole game for
-    leaderboard queries on a 100 TB fact table. Deterministic
-    tie-break on the key."""
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.select("o_orderkey", "o_custkey", "o_totalprice")
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
-        .limit(100)
-    )
 
 
 @register(
@@ -1428,7 +1150,7 @@ def window_time_range_frames(spark, sf_dir):
     )
 
 
-@register(
+register(
     "window_rank_ntile",
     sql="""
     SELECT c_custkey, c_mktsegment,
@@ -1444,18 +1166,6 @@ def window_time_range_frames(spark, sf_dir):
     FROM customer
     """,
 )
-def window_rank_ntile(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.col("c_acctbal").desc(), F.col("c_custkey").asc()
-    )
-    return c.select(
-        "c_custkey",
-        "c_mktsegment",
-        F.dense_rank().over(w).cast("bigint").alias("bal_rank"),
-        F.ntile(4).over(w).cast("int").alias("bal_quartile"),
-        F.round(F.percent_rank().over(w), 8).alias("bal_pct_rank"),
-    )
 
 
 @register(
@@ -1695,7 +1405,7 @@ def percentile_functions(spark, sf_dir):
     )
 
 
-@register(
+register(
     "stats_aggregates",
     sql="""
     SELECT l_returnflag,
@@ -1706,16 +1416,6 @@ def percentile_functions(spark, sf_dir):
     FROM lineitem GROUP BY l_returnflag
     """,
 )
-def stats_aggregates(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
-    return l.groupBy("l_returnflag").agg(
-        F.round(F.stddev_pop("l_quantity"), 6).alias("qty_stddev"),
-        F.round(F.var_pop("l_discount"), 8).alias("disc_var"),
-        F.round(F.corr("l_quantity", "l_extendedprice"), 8).alias("qty_price_corr"),
-        F.round(F.covar_pop("l_quantity", "l_extendedprice"), 4).alias(
-            "qty_price_covar"
-        ),
-    )
 
 
 @register(
@@ -1746,7 +1446,7 @@ def unpivot_lineitem_measures(spark, sf_dir):
     )
 
 
-@register(
+register(
     "regr_bool_aggregates",
     sql="""
     SELECT l_linestatus,
@@ -1759,22 +1459,6 @@ def unpivot_lineitem_measures(spark, sf_dir):
     FROM lineitem GROUP BY l_linestatus
     """,
 )
-def regr_bool_aggregates(spark, sf_dir):
-    """Linear-regression and boolean aggregates (SQL:2016 surface);
-    slope/intercept rounded in both engines so double accumulation
-    order cannot leak into the hash."""
-    l = _t(spark, sf_dir, "lineitem")
-    return l.groupBy("l_linestatus").agg(
-        F.round(F.regr_slope("l_extendedprice", "l_quantity"), 6).alias(
-            "price_per_qty"
-        ),
-        F.round(F.regr_intercept("l_extendedprice", "l_quantity"), 6).alias(
-            "price_at_zero"
-        ),
-        F.regr_count("l_extendedprice", "l_quantity").alias("n_pairs"),
-        F.bool_and(F.col("l_quantity") > 0).alias("all_positive_qty"),
-        F.bool_or(F.col("l_discount") > 0.09).alias("any_big_discount"),
-    )
 
 
 @register(
@@ -1866,7 +1550,7 @@ def argmax_aggregates(spark, sf_dir):
     )
 
 
-@register(
+register(
     "histogram_equi_width",
     sql="""
     SELECT CAST(FLOOR((o_totalprice - 0.0) / ((600000.0 - 0.0) / 24))
@@ -1878,29 +1562,6 @@ def argmax_aggregates(spark, sf_dir):
     GROUP BY 1
     """,
 )
-def histogram_equi_width(spark, sf_dir):
-    """Equi-width histogram via the SQL:2016 `width_bucket` builtin —
-    the profiling primitive behind optimizer statistics and data-drift
-    monitors. The DuckDB twin inlines width_bucket's exact definition
-    (floor((x-lo)/((hi-lo)/nb))+1, the same IEEE operation order Spark's
-    WidthBucket codegen uses), so boundary values land in the same
-    bucket in both engines. One map-side-combinable agg, no shuffle
-    beyond the 26-key exchange."""
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.withColumn(
-            "bucket",
-            F.width_bucket(
-                F.col("o_totalprice"), F.lit(0.0), F.lit(600000.0), F.lit(24)
-            ),
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.round(F.min("o_totalprice"), 2).alias("lo"),
-            F.round(F.max("o_totalprice"), 2).alias("hi"),
-        )
-    )
 
 
 @register(
@@ -2163,7 +1824,7 @@ def semi_anti(spark, sf_dir):
     )
 
 
-@register(
+register(
     "broadcast_join_brand_volume",
     sql="""
     SELECT p.p_brand,
@@ -2174,14 +1835,6 @@ def semi_anti(spark, sf_dir):
     GROUP BY p.p_brand
     """,
 )
-def broadcast_brand(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_size") >= 20)
-    return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        .groupBy("p_brand")
-        .agg(_dsum(F.col("l_quantity"), "sum_qty"), F.count("*").alias("n"))
-    )
 
 
 @register(
@@ -2568,7 +2221,7 @@ def text_bpe_token_count(spark, sf_dir):
     return d.select("doc_id", X.bpe_ish_token_count("text").alias("n_bpe_tokens"))
 
 
-@register(
+register(
     "json_extraction",
     sql="""
     SELECT event_id,
@@ -2576,14 +2229,6 @@ def text_bpe_token_count(spark, sf_dir):
     FROM events
     """,
 )
-def json_funcs(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    return e.select(
-        "event_id",
-        F.regexp_extract(F.col("props"), r'"k": (-?[0-9]+)', 1)
-        .cast("bigint")
-        .alias("prop_k"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3549,7 +3194,7 @@ def source_token_drift(spark, sf_dir):
     )
 
 
-@register(
+register(
     "orders_cohort_ltv",
     sql="""
     WITH firsts AS (
@@ -3577,36 +3222,6 @@ def source_token_drift(spark, sf_dir):
     GROUP BY cohort_month, month_offset
     """,
 )
-def orders_cohort_ltv(spark, sf_dir):
-    """Cohort lifetime-value matrix: customers grouped by first-order
-    month, revenue and active counts tracked by month offset — the
-    retention-x-revenue report subscription businesses live on.
-    The per-customer cohort frame is tiny and broadcast back onto
-    orders; month arithmetic is integer (year*12+month deltas), so no
-    calendar-library divergence between engines."""
-    o = _t(spark, sf_dir, "orders")
-    firsts = o.groupBy("o_custkey").agg(
-        F.date_trunc("month", F.min("o_orderdate")).alias("cohort_month")
-    )
-    facts = o.join(F.broadcast(firsts), "o_custkey").select(
-        "cohort_month",
-        (
-            (F.year("o_orderdate") - F.year("cohort_month")) * 12
-            + (F.month("o_orderdate") - F.month("cohort_month"))
-        ).cast("int").alias("month_offset"),
-        "o_custkey",
-        "o_totalprice",
-    )
-    return (
-        facts.filter(F.col("month_offset") < 12)
-        .groupBy("cohort_month", "month_offset")
-        .agg(
-            F.count_distinct("o_custkey").cast("bigint").alias(
-                "active_customers"
-            ),
-            _dsum(F.col("o_totalprice"), "revenue"),
-        )
-    )
 
 
 @register(
@@ -3767,7 +3382,7 @@ def parts_abc_pareto(spark, sf_dir):
         return out.localCheckpoint(eager=True)
 
 
-@register(
+register(
     "events_error_budget",
     sql="""
     SELECT CAST(DATE_TRUNC('day', ts) AS TIMESTAMP) AS day,
@@ -3781,23 +3396,9 @@ def parts_abc_pareto(spark, sf_dir):
     GROUP BY 1
     """,
 )
-def events_error_budget(spark, sf_dir):
-    """SRE error-budget monitor: daily error share with a burn flag —
-    one conditional-count agg, the alerting query that runs on every
-    event stream. The threshold compare is the same IEEE expression on
-    both engines, so the boolean verdict can't split."""
-    e = load_events(spark, sf_dir)
-    err = F.count_if(F.col("event_type") == "error")
-    rate = err.cast("double") / F.count("*")
-    return e.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
-        F.count("*").cast("bigint").alias("n_events"),
-        err.cast("bigint").alias("n_errors"),
-        F.round(rate, 6).alias("error_rate"),
-        (rate > 0.2).alias("budget_burned"),
-    )
 
 
-@register(
+register(
     "orders_priority_mix_shift",
     sql="""
     WITH m AS (
@@ -3818,30 +3419,6 @@ def events_error_budget(spark, sf_dir):
     FROM shares
     """,
 )
-def orders_priority_mix_shift(spark, sf_dir):
-    """Mix-shift monitor: each priority class's monthly share and its
-    month-over-month delta (LAG window) — the composition-drift report
-    that separates volume changes from mix changes. Slim per-month
-    frame; the window runs over |months| x |priorities| rows."""
-    o = _t(spark, sf_dir, "orders")
-    m = o.groupBy(
-        F.date_trunc("month", "o_orderdate").alias("month"),
-        "o_orderpriority",
-    ).agg(F.count("*").cast("bigint").alias("n"))
-    tot = m.groupBy("month").agg(F.sum("n").cast("bigint").alias("n_month"))
-    shares = m.join(tot, "month").select(
-        "month", "o_orderpriority",
-        F.round(F.col("n").cast("double") / F.col("n_month"), 6).alias(
-            "share"
-        ),
-    )
-    w = Window.partitionBy("o_orderpriority").orderBy("month")
-    return shares.select(
-        "month", "o_orderpriority", "share",
-        F.round(F.col("share") - F.lag("share").over(w), 6).alias(
-            "share_delta"
-        ),
-    )
 
 
 @register(
@@ -4012,7 +3589,7 @@ def events_dau_wau_stickiness(spark, sf_dir):
     )
 
 
-@register(
+register(
     "events_markov_transitions",
     sql="""
     WITH ordered AS (
@@ -4033,33 +3610,6 @@ def events_dau_wau_stickiness(spark, sf_dir):
     FROM pairs p JOIN totals t ON p.event_type = t.event_type
     """,
 )
-def events_markov_transitions(spark, sf_dir):
-    """First-order Markov transition matrix over per-user event
-    sequences (LEAD window + two aggs) — the behavioral-model fit
-    behind next-action prediction and anomaly scoring. One shuffle on
-    user_id for the ordering window; the transition counts are
-    |types|^2, map-side combinable."""
-    e = load_events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        e.withColumn("next_type", F.lead("event_type").over(w))
-        .filter(F.col("next_type").isNotNull())
-        .groupBy("event_type", "next_type")
-        .agg(F.count("*").cast("bigint").alias("n"))
-    )
-    totals = pairs.groupBy("event_type").agg(
-        F.sum("n").cast("bigint").alias("n_total")
-    )
-    return (
-        pairs.join(totals, "event_type")
-        .select(
-            F.col("event_type").alias("from_type"),
-            F.col("next_type").alias("to_type"),
-            "n",
-            F.round(F.col("n").cast("double") / F.col("n_total"), 6)
-            .alias("prob"),
-        )
-    )
 
 
 @register(
@@ -4263,7 +3813,7 @@ def try_cast_tolerant_ingest(spark, sf_dir):
     )
 
 
-@register(
+register(
     "null_safe_join_semantics",
     sql="""
     WITH k AS (
@@ -4276,30 +3826,6 @@ def try_cast_tolerant_ingest(spark, sf_dir):
      AND a.n_nationkey < b.n_nationkey
     """,
 )
-def null_safe_join_semantics(spark, sf_dir):
-    """Null-safe equality join (Spark ``<=>`` / ANSI ``IS NOT DISTINCT
-    FROM``): NULL keys MATCH each other instead of silently dropping —
-    the semantics entity-resolution pipelines need when the join key
-    is legitimately absent. The NULLIF-derived key makes one region's
-    nations all-NULL; the gate proves they pair with each other while
-    plain ``=`` would discard them."""
-    n = _t(spark, sf_dir, "nation").select(
-        "n_nationkey",
-        F.nullif(F.col("n_regionkey"), F.lit(2)).alias("rk"),
-    )
-    a, b = n.alias("a"), n.alias("b")
-    return (
-        a.join(
-            b,
-            F.col("a.rk").eqNullSafe(F.col("b.rk"))
-            & (F.col("a.n_nationkey") < F.col("b.n_nationkey")),
-        )
-        .select(
-            F.col("a.n_nationkey").alias("n1"),
-            F.col("b.n_nationkey").alias("n2"),
-            F.col("a.rk").isNull().alias("joined_on_null"),
-        )
-    )
 
 
 @register(
@@ -5214,7 +4740,7 @@ def multimodal_frame_sample(spark, sf_dir):
     return out.select("media_id", F.col("frame_ts_ms").cast("bigint").alias("frame_ts_ms"))
 
 
-@register(
+register(
     "math_conditional_functions",
     sql="""
     SELECT l_orderkey, l_linenumber,
@@ -5231,26 +4757,6 @@ def multimodal_frame_sample(spark, sf_dir):
     FROM lineitem WHERE l_orderkey % 100 = 0
     """,
 )
-def math_conditional(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 100 == 0)
-    return l.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.round(F.abs(F.col("l_discount") - 0.05), 6).alias("disc_dev"),
-        F.round(F.sqrt("l_quantity"), 6).alias("qty_sqrt"),
-        F.round(F.log(F.col("l_extendedprice") + 1), 6).alias("price_ln"),
-        F.round(F.pow(F.col("l_tax") + 1, 2), 6).alias("tax_sq"),
-        F.ceil(F.col("l_quantity") / 7.0).cast("bigint").alias("qty_bucket"),
-        F.greatest("l_discount", "l_tax").alias("max_rate"),
-        F.least("l_discount", "l_tax").alias("min_rate"),
-        F.coalesce(F.nullif("l_returnflag", F.lit("N")), F.lit("NONE")).alias(
-            "flag_or_none"
-        ),
-        F.when(F.col("l_quantity") > 40, "bulk")
-        .when(F.col("l_quantity") > 20, "mid")
-        .otherwise("small")
-        .alias("qty_class"),
-    )
 
 
 @register(
@@ -6198,7 +5704,7 @@ def pack_sequences_budget(spark, sf_dir):
     return TR.pack_sequences(d, budget=256)
 
 
-@register(
+register(
     "curriculum_stages_per_lang",
     sql="""
     SELECT doc_id, lang,
@@ -6207,19 +5713,6 @@ def pack_sequences_budget(spark, sf_dir):
     FROM documents
     """,
 )
-def curriculum_stages_per_lang(spark, sf_dir):
-    """Curriculum staging: decile buckets short-to-long WITHIN each
-    language — the easy-first ordering a curriculum-trained run feeds
-    shard by shard. Per-language window partitions keep the sort
-    distributed (no global single-reducer NTILE; the same per-shard
-    shape as pack_sequences_per_lang), and the (n_chars, doc_id) key
-    is all-integer so the stage assignment is engine-exact."""
-    d = _t(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy("n_chars", "doc_id")
-    return d.select(
-        "doc_id", "lang",
-        F.ntile(10).over(w).cast("int").alias("stage"),
-    )
 
 
 @register(
@@ -10614,7 +10107,7 @@ def hll_sketch_union_rollup(spark, sf_dir):
     )
 
 
-@register(
+register(
     "ansi_safe_arithmetic",
     sql="""
     SELECT l_linestatus,
@@ -10627,28 +10120,6 @@ def hll_sketch_union_rollup(spark, sf_dir):
     FROM lineitem GROUP BY l_linestatus
     """,
 )
-def ansi_safe_arithmetic(spark, sf_dir):
-    """ANSI-safe arithmetic (`try_divide`): Spark 4 defaults
-    spark.sql.ansi.enabled=true, where a plain division raises
-    DIVIDE_BY_ZERO and kills the job — at 100 TB one dirty row must
-    not fail a stage, so the try_* family (NULL on error) is the
-    production arithmetic path, mirrored by DuckDB's native
-    NULL-on-zero division in the oracle. The engineered denominator
-    (l_quantity - 25) hits zero on real rows; NULL rates drop out of
-    COUNT/SUM identically in both engines. Terms are decimal-cast
-    before summing so the aggregate is order-insensitive (the _dsum
-    idiom)."""
-    l = _t(spark, sf_dir, "lineitem")
-    rate = F.expr("try_divide(l_extendedprice, l_quantity - 25)")
-    return l.groupBy("l_linestatus").agg(
-        F.sum(rate.cast("decimal(28,10)"))
-        .cast("double")
-        .alias("sum_rate"),
-        F.count_if(F.col("l_quantity") == 25)
-        .cast("bigint")
-        .alias("n_div0"),
-        F.count(rate).cast("bigint").alias("n_rated"),
-    )
 
 
 @register(
@@ -10679,7 +10150,7 @@ def string_agg_listagg(spark, sf_dir):
     )
 
 
-@register(
+register(
     "mode_median_functions",
     sql="""
     SELECT l_linestatus,
@@ -10689,27 +10160,9 @@ def string_agg_listagg(spark, sf_dir):
     FROM lineitem GROUP BY l_linestatus
     """,
 )
-def mode_median_functions(spark, sf_dir):
-    """Spark 3.4+ ``mode()`` / ``median()`` builtin aggregates (the
-    direct SQL forms of the most-frequent-value and exact-median
-    asks; pandas_udaf_median pins the UDAF route, this pins the
-    JVM-native one — zero Python, whole-stage codegen). Mode ties are
-    engine-arbitrary in BOTH Spark and DuckDB, so the probed column
-    is engineered unimodal: least(l_quantity, 10) folds the 10..50
-    range onto 10, making 10 the unique mode per group (~80% mass) —
-    the entry grades determinism-safe mode semantics, not tie luck.
-    l_quantity is integral-valued, so the DuckDB BIGINT cast (rounds)
-    and Spark's (truncates) agree, and medians land on .0/.5 values
-    that are exact in binary floating point."""
-    l = _t(spark, sf_dir, "lineitem")
-    capped = F.least(F.col("l_quantity"), F.lit(10)).cast("bigint")
-    return l.groupBy("l_linestatus").agg(
-        F.mode(capped).cast("bigint").alias("mode_qty"),
-        F.median(F.col("l_quantity")).cast("double").alias("median_qty"),
-    )
 
 
-@register(
+register(
     "histogram_width_bucket",
     sql="""
     SELECT CASE WHEN FLOOR(l_extendedprice) >= 120000
@@ -10722,28 +10175,6 @@ def mode_median_functions(spark, sf_dir):
     FROM lineitem GROUP BY 1
     """,
 )
-def histogram_width_bucket(spark, sf_dir):
-    """Single-pass fixed-width histogram via ``width_bucket`` (SQL
-    2023; the profiling primitive for choosing range-partition bounds
-    and spotting skew before a big job). One scan, one hash-agg on
-    ~nb+2 groups — at 100 TB this is the cheap way to see a column's
-    distribution, vs an ORDER BY-based quantile pass. Bucketing is
-    floored to integral dollars first so the bucket arithmetic is
-    exact integer-in-double on both engines (DuckDB has no
-    width_bucket; the oracle mirrors the SQL-standard definition
-    arithmetically: values >= hi land in bucket nb+1). Sum uses the
-    decimal-cast _dsum idiom for order-insensitive totals."""
-    l = _t(spark, sf_dir, "lineitem")
-    return l.groupBy(
-        F.expr(
-            "width_bucket(floor(l_extendedprice), 0, 120000, 12)"
-        ).cast("bigint").alias("bucket")
-    ).agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum(F.col("l_extendedprice").cast("decimal(28,10)"))
-        .cast("double")
-        .alias("sum_price"),
-    )
 
 
 @register(
@@ -10905,7 +10336,7 @@ def benford_first_digit(spark, sf_dir):
     )
 
 
-@register(
+register(
     "attribution_last_touch",
     sql="""
     WITH seq AS (
@@ -10922,32 +10353,6 @@ def benford_first_digit(spark, sf_dir):
     GROUP BY prev_type
     """,
 )
-def attribution_last_touch(spark, sf_dir):
-    """Last-touch conversion attribution: for every purchase, credit
-    the event type IMMEDIATELY preceding it in the user's timeline
-    (LAG over ts,event_id — deterministic tiebreak) — the marketing
-    report behind channel budgets. Distinct from the Markov entry:
-    that counts ALL transitions; this conditions on conversions only.
-    One user_id shuffle for the window, then a |types|-group agg —
-    map-side combinable, no self-join."""
-    e = load_events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.select(
-        "user_id",
-        "event_type",
-        F.lag("event_type").over(w).alias("prev_type"),
-    )
-    return (
-        seq.filter(
-            (F.col("event_type") == "purchase")
-            & F.col("prev_type").isNotNull()
-        )
-        .groupBy(F.col("prev_type").alias("channel"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_conversions"),
-            F.count_distinct("user_id").cast("bigint").alias("n_users"),
-        )
-    )
 
 
 @register(
@@ -11003,7 +10408,7 @@ def events_seasonal_anomaly(spark, sf_dir):
     )
 
 
-@register(
+register(
     "events_adoption_curve",
     sql="""
     WITH firsts AS (
@@ -11022,36 +10427,9 @@ def events_seasonal_anomaly(spark, sf_dir):
     FROM adds
     """,
 )
-def events_adoption_curve(spark, sf_dir):
-    """Cumulative-adoption curve: distinct users ever seen, by day —
-    the growth chart. This is the SCALABLE translation of the naive
-    'COUNT(DISTINCT user) OVER (ORDER BY day)' (which no engine
-    supports and whose semi-naive forms re-scan history per day):
-    each user reduces to ONE first-seen row, those fold to a per-day
-    new-user count, and the cumsum runs over the tiny O(days) series
-    — raw events are scanned exactly once, and the only window input
-    is the aggregated frame (the ACF/mix-shift slim-series shape)."""
-    e = load_events(spark, sf_dir)
-    firsts = e.groupBy("user_id").agg(
-        F.min(F.date_trunc("day", "ts")).alias("first_day")
-    )
-    adds = firsts.groupBy(F.col("first_day").alias("day")).agg(
-        F.count("*").cast("bigint").alias("new_users")
-    )
-    w = (
-        Window.orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return adds.select(
-        "day",
-        "new_users",
-        F.sum("new_users").over(w).cast("bigint").alias(
-            "cumulative_users"
-        ),
-    )
 
 
-@register(
+register(
     "events_peak_hours",
     sql="""
     WITH hourly AS (
@@ -11068,32 +10446,6 @@ def events_adoption_curve(spark, sf_dir):
     WHERE p IS NOT NULL AND nx IS NOT NULL AND n > p AND n > nx
     """,
 )
-def events_peak_hours(spark, sf_dir):
-    """Local-extrema detection: hours whose event count strictly
-    exceeds BOTH sequence neighbors (LAG/LEAD over the hourly series)
-    — the peak finder behind alerting and capacity reports. Neighbors
-    are sequence neighbors over OBSERVED hours (a gap-filled calendar
-    variant would first join the date spine); strict > on exact
-    integer counts means the verdict cannot split on ties or
-    rounding. The raw scan reduces to the O(hours) frame before any
-    window touches it."""
-    e = load_events(spark, sf_dir)
-    hourly = e.groupBy(
-        F.date_trunc("hour", "ts").alias("h")
-    ).agg(F.count("*").cast("bigint").alias("n"))
-    w = Window.orderBy("h")
-    neigh = hourly.select(
-        "h",
-        "n",
-        F.lag("n").over(w).alias("p"),
-        F.lead("n").over(w).alias("nx"),
-    )
-    return neigh.filter(
-        F.col("p").isNotNull()
-        & F.col("nx").isNotNull()
-        & (F.col("n") > F.col("p"))
-        & (F.col("n") > F.col("nx"))
-    ).select(F.col("h").alias("hour_ts"), "n")
 
 
 @register(

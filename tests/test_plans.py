@@ -39,6 +39,34 @@ def test_q3_broadcasts_dimensions(spark):
     assert "EqualTo(c_mktsegment,BUILDING)" in plan  # filter reached the scan
 
 
+def test_plan_audit_shows_which_side_a_join_builds_on(spark):
+    """q3's twin as Spark SQL has the body's join and scan counts, but
+    its FROM order builds the broadcast on lineitem: only the audit's
+    scan order and build sides tell the two plans apart."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from plan_audit import audit
+
+    def facts(df):
+        return audit(
+            df._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                    "formatted"
+                )
+            )
+        )
+
+    body = facts(Q.REGISTRY["q3_shipping_priority"]["fn"](spark, SF))
+    twin = facts(Q._sql_entry(Q.REGISTRY["q3_shipping_priority"]["sql"])(spark, SF))
+    assert body["scan_order"] == ["lineitem", "orders", "customer"]
+    assert body["build_sides"] == ["orders", "customer"]
+    assert "lineitem" in twin["build_sides"]
+    counts = ("exchanges", "bhj", "smj", "scans", "pushed_nonempty")
+    assert [body[k] for k in counts] == [twin[k] for k in counts]
+
+
 def test_q19_disjunctive_filter_pushdown(spark):
     plan = _plan(spark, "q19_disjunctive_filter")
     # the OR-of-ANDs brand/size predicate is pushed into the part scan

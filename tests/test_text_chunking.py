@@ -179,6 +179,54 @@ def test_bigram_logprob_ranks_transition_quality(spark):
     assert all(out[i] == out[0] for i in range(8))
 
 
+def test_bigram_logprob_half_boundary_engine_exact(spark, tmp_path):
+    """Pin an sf0.1 gate-sweep finding: the per-doc mean of quantized
+    log terms is a LATTICE rational (micro-units over n_bigrams) whose
+    6th decimal lands EXACTLY on .5 whenever qsum = n/2 (mod n) — and
+    there Spark's and DuckDB's ROUND split on the same double. The
+    floor-quantized form has no half boundary. This corpus is
+    engineered onto the boundary: doc 1 ("x y z") has qterms
+    -510826 and -693147 micro-units -> qsum=-1203973 (odd) over n=2
+    -> mean -601986.5 exactly; both engines must now agree on
+    floor = -0.601987."""
+    rows = [
+        (1, "x y z", "en", "t", 5),
+        (2, "x y", "en", "t", 3),
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string,"
+        " n_chars long"
+    )
+    df.coalesce(1).write.mode("overwrite").parquet(
+        str(tmp_path / "documents.parquet")
+    )
+
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    got = {
+        r["doc_id"]: (r["n_bigrams"], r["mean_logprob"])
+        for r in entry.queries()["bigram_logprob_quality"](
+            spark, str(tmp_path)
+        ).collect()
+    }
+    assert got[1] == (2, -0.601987)  # floor of the exact -601986.5
+
+    con = duckdb.connect()
+    con.execute(
+        f"create view documents as select * from "
+        f"'{tmp_path}/documents.parquet/*.parquet'"
+    )
+    oracle = {
+        r[0]: (r[1], r[2])
+        for r in con.execute(
+            entry.oracle_sql()["bigram_logprob_quality"]
+        ).fetchall()
+    }
+    assert oracle == got
+
+
 def test_apply_token_merges_order_and_overlap(spark):
     """Merges apply in rule order with left-to-right non-overlapping
     replacement; chained merges compose across rules, token counts

@@ -44,6 +44,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from gate_sim import _canon  # noqa: E402  (the one result comparator)
+from mssql_dataframe_spark import cache  # noqa: E402
 
 LAYOUT_A = {
     # AQE disabled in layout A: runtime re-planning (partition
@@ -67,6 +68,7 @@ def _run_layout(spark, fn, sf_dir: str, layout: dict) -> pd.DataFrame:
         saved[k] = spark.conf.get(k, None)
         spark.conf.set(k, v)
     try:
+        cache.release()
         spark.catalog.clearCache()
         return fn(spark, sf_dir).toPandas()
     finally:

@@ -36,9 +36,10 @@ TABLES = [
 ]
 
 
-def _canon(df: pd.DataFrame) -> tuple[pd.DataFrame, dict]:
+def _canon(df: pd.DataFrame, digits: int = 12) -> tuple[pd.DataFrame, dict]:
     """Sort columns by name, canonicalize dtypes the driver treats as
-    equivalent (datetime64 resolution, object-vs-string), sort rows.
+    equivalent (datetime64 resolution, object-vs-string), round floats
+    to ``digits`` significant digits, sort rows.
     Returns (frame, {col: original float width}) — the width map is
     compared separately, since the value-rounding path below coerces
     everything to float64."""
@@ -55,7 +56,8 @@ def _canon(df: pd.DataFrame) -> tuple[pd.DataFrame, dict]:
             df[c] = df[c].astype(object)
         elif str(dt).startswith("float"):
             # driver hashes at repr precision; normalize -0.0 and round
-            # to 12 significant digits so final-ulp noise doesn't flag.
+            # (12 significant digits by default) so final-ulp noise
+            # doesn't flag.
             # The ORIGINAL width is recorded first: coercing float32 to
             # float64 before the dtype check would silently mask the
             # exact values-equal/width-differs gate risk this tool
@@ -65,7 +67,7 @@ def _canon(df: pd.DataFrame) -> tuple[pd.DataFrame, dict]:
             df[c] = df[c].map(
                 lambda v: None
                 if v is None or (isinstance(v, float) and math.isnan(v))
-                else float(f"{v + 0.0:.12g}")
+                else float(f"{v + 0.0:.{digits}g}")
             )
             df[c] = df[c].astype("float64")
     key = [
@@ -76,7 +78,51 @@ def _canon(df: pd.DataFrame) -> tuple[pd.DataFrame, dict]:
     return df.iloc[order].reset_index(drop=True), widths
 
 
+def compare(
+    spd: pd.DataFrame, dpd: pd.DataFrame, digits: int = 12, exact: bool = False
+) -> list[str]:
+    """The differences between a Spark result and its DuckDB twin's:
+    column names, row count, pandas dtypes and float widths, and the
+    values after :func:`_canon` at ``digits`` significant digits —
+    equal to a relative 1e-9, or ``exact``ly. Empty when they agree."""
+    issues = []
+    try:
+        if sorted(spd.columns) != sorted(dpd.columns):
+            issues.append(
+                f"cols spark={sorted(spd.columns)} "
+                f"duck={sorted(dpd.columns)}"
+            )
+        elif len(spd) != len(dpd):
+            issues.append(f"rows spark={len(spd)} duck={len(dpd)}")
+        else:
+            (s, sw), (d, dw) = _canon(spd, digits), _canon(dpd, digits)
+            dtype_diff = [
+                (c, str(s[c].dtype), str(d[c].dtype))
+                for c in s.columns
+                if str(s[c].dtype) != str(d[c].dtype)
+            ]
+            dtype_diff += [
+                (c, sw.get(c, "—"), dw.get(c, "—"))
+                for c in s.columns
+                if sw.get(c) != dw.get(c)
+            ]
+            if dtype_diff:
+                issues.append(f"DTYPE {dtype_diff}")
+            try:
+                pd.testing.assert_frame_equal(
+                    s, d, check_dtype=False, check_exact=exact, rtol=1e-9
+                )
+            except AssertionError as e:
+                issues.append(f"VALUES {str(e).splitlines()[-1][:160]}")
+    except Exception as e:  # noqa: BLE001 - isolate per entry: one
+        # uncanonicalizable frame (e.g. an exotic tz-aware dtype)
+        # must not abort the rest of a 240-entry sweep unchecked
+        issues.append(f"COMPARE-ERROR {type(e).__name__}: {e}")
+    return issues
+
+
 def run(sf_dir: str, names: list[str]) -> int:
+    from mssql_dataframe_spark import cache
     from mssql_dataframe_spark.session import connect
 
     spark = connect(app_name="gate_sim")
@@ -92,9 +138,11 @@ def run(sf_dir: str, names: list[str]) -> int:
     n_fail = 0
     for name in names:
         t0 = time.time()
-        # entries may persist intermediates (LSH signatures, shingle
-        # rows); drop them between entries so a long sweep doesn't
-        # accumulate cache pressure (bench.py does the same per run)
+        # entries may persist or checkpoint intermediates (LSH
+        # signatures, shingle rows); free them between entries so a
+        # long sweep doesn't accumulate cache pressure. clearCache()
+        # alone misses the checkpoint blocks cache.release() frees.
+        cache.release()
         spark.catalog.clearCache()
         try:
             sdf = queries[name](spark, sf_dir)
@@ -108,40 +156,7 @@ def run(sf_dir: str, names: list[str]) -> int:
             n_fail += 1
             print(f"ERROR     {name}: {type(e).__name__}: {e}")
             continue
-        issues = []
-        try:
-            if sorted(spd.columns) != sorted(dpd.columns):
-                issues.append(
-                    f"cols spark={sorted(spd.columns)} "
-                    f"duck={sorted(dpd.columns)}"
-                )
-            elif len(spd) != len(dpd):
-                issues.append(f"rows spark={len(spd)} duck={len(dpd)}")
-            else:
-                (s, sw), (d, dw) = _canon(spd), _canon(dpd)
-                dtype_diff = [
-                    (c, str(s[c].dtype), str(d[c].dtype))
-                    for c in s.columns
-                    if str(s[c].dtype) != str(d[c].dtype)
-                ]
-                dtype_diff += [
-                    (c, sw.get(c, "—"), dw.get(c, "—"))
-                    for c in s.columns
-                    if sw.get(c) != dw.get(c)
-                ]
-                if dtype_diff:
-                    issues.append(f"DTYPE {dtype_diff}")
-                try:
-                    pd.testing.assert_frame_equal(
-                        s, d, check_dtype=False, check_exact=False,
-                        rtol=1e-9,
-                    )
-                except AssertionError as e:
-                    issues.append(f"VALUES {str(e).splitlines()[-1][:160]}")
-        except Exception as e:  # noqa: BLE001 - isolate per entry: one
-            # uncanonicalizable frame (e.g. an exotic tz-aware dtype)
-            # must not abort the rest of a 240-entry sweep unchecked
-            issues.append(f"COMPARE-ERROR {type(e).__name__}: {e}")
+        issues = compare(spd, dpd)
         el = time.time() - t0
         if issues:
             n_fail += 1

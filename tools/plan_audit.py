@@ -18,7 +18,7 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
-from mssql_dataframe_spark import connect  # noqa: E402
+from mssql_dataframe_spark import cache, connect  # noqa: E402
 from mssql_dataframe_spark import queries as Q  # noqa: E402
 
 import bench  # noqa: E402  (HEADLINE list lives there)
@@ -130,6 +130,70 @@ def _ops(plan: str, node: str) -> int:
     return len(re.findall(rf"\(\d+\) {node}", plan))
 
 
+#: one operator line of a formatted plan's tree: the ``:- +- |``
+#: connector prefix, an optional whole-stage-codegen ``*``, and the
+#: node text ending in its ``(id)``
+_TREE_LINE = re.compile(r"^([ :+|-]*)(?:\* )?([A-Za-z][^\n]*?) \((\d+)\)(?:,|$)")
+
+
+def _scan_tables(plan: str) -> dict[int, str]:
+    """Node id -> table name for every file scan: the last segment of
+    its first Location path that is a plain name, format extension
+    dropped. Generated names (a store's ``files/f_<hex>.parquet``) are
+    skipped, so a store table reads as its directory and the audit
+    stays the same from run to run."""
+    tables = {}
+    for m in re.finditer(
+        r"^\((\d+)\) Scan (?:parquet|csv|json|orc|text)[^\n]*\n"
+        r"(?:(?!\n)[^\n]*\n)*?Location: \w+[^\[\n]*\[([^,\]\n]*)",
+        plan,
+        re.M,
+    ):
+        names = [
+            seg.split(".")[0]
+            for seg in m.group(2).split("/")
+            if re.fullmatch(r"[A-Za-z_]\w*(\.\w+)?", seg)
+            and not re.search(r"[0-9a-f]{16}", seg)
+            and seg != "files"
+        ]
+        tables[int(m.group(1))] = names[-1] if names else "?"
+    return tables
+
+
+def _build_sides(plan: str, tables: dict[int, str]) -> list[str]:
+    """For each hash or nested-loop join in the plan trees, in id
+    order, the leaves under its build child: scanned tables by name,
+    other leaves (LocalTableScan, ReusedExchange, ...) by node name."""
+    joins = {}
+    for block in plan.split("\n\n"):
+        nodes = []  # (indent, id, text)
+        for line in block.splitlines():
+            m = _TREE_LINE.match(line)
+            if m and not line.startswith("("):
+                nodes.append((len(m.group(1)), int(m.group(3)), m.group(2)))
+        for i, (indent, nid, text) in enumerate(nodes):
+            side = re.search(r"\bBuild(Left|Right)\b", text)
+            if not side:
+                continue
+            # the node's subtree: the following lines indented deeper;
+            # its children are the first level of them, left first
+            sub = []
+            for node in nodes[i + 1:]:
+                if node[0] <= indent:
+                    break
+                sub.append(node)
+            kids = [j for j, n in enumerate(sub) if n[0] == sub[0][0]]
+            k = 0 if side.group(1) == "Left" else len(kids) - 1
+            build = sub[kids[k]:(kids + [len(sub)])[k + 1]]
+            leaves = [
+                tables.get(nid2, " ".join(text2.split()))
+                for j, (ind2, nid2, text2) in enumerate(build)
+                if j + 1 == len(build) or build[j + 1][0] <= ind2
+            ]
+            joins[nid] = "+".join(leaves)
+    return [joins[n] for n in sorted(joins)]
+
+
 def audit(plan: str) -> dict:
     # field count = names-followed-by-colon (comma-split breaks on
     # decimal(p,s)); flat table schemas, so no nested-struct inflation
@@ -138,6 +202,7 @@ def audit(plan: str) -> dict:
         for m in re.finditer(r"ReadSchema: struct<([^\n]*)>", plan)
     ]
     pushed = re.findall(r"PushedFilters: \[([^\]\n]*)\]", plan)
+    tables = _scan_tables(plan)
     return {
         "exchanges": _ops(plan, "Exchange"),
         "bhj": _ops(plan, "BroadcastHashJoin"),
@@ -163,6 +228,11 @@ def audit(plan: str) -> dict:
         ),
         "read_cols": read_cols,
         "pushed_nonempty": sum(1 for p in pushed if p.strip()),
+        # which relation each join builds on, and the order tables are
+        # scanned in: equal counts can still hide a broadcast of the
+        # wrong (large) side
+        "scan_order": [tables[n] for n in sorted(tables)],
+        "build_sides": _build_sides(plan, tables),
     }
 
 
@@ -183,6 +253,7 @@ def main() -> None:
             # table cell of a round-over-round-diffed artifact
             msg = " ".join(str(exc).split()).replace("|", "/")
             rows.append((name, None, f"ERROR {type(exc).__name__}: {msg}"[:160]))
+        cache.release()
         spark.catalog.clearCache()
 
     out = [
@@ -199,14 +270,16 @@ def main() -> None:
         "PushedFilters (pushdown). Caveats: AQE plans print codegen ids "
         "only once finalized, so codegen=0 means not-yet-finalized, not "
         "interpreted; queries with no row filter legitimately show 0 "
-        "pushed filters.",
+        "pushed filters. Scan order lists the scanned tables by plan "
+        "node id; build sides list, per hash or nested-loop join, the "
+        "tables under its build child (`+` joins the leaves of one side).",
         "",
-        "| query | exch | joins (b/sm/sh/nl) | codegen | py | cache | scans | cols/scan | pushed |",
-        "|---|---|---|---|---|---|---|---|---|",
+        "| query | exch | joins (b/sm/sh/nl) | codegen | py | cache | scans | cols/scan | pushed | scan order | build sides |",
+        "|---|---|---|---|---|---|---|---|---|---|---|",
     ]
     for name, a, note in rows:
         if a is None:
-            out.append(f"| {name} | — | — | — | — | — | — | — | {note} |")
+            out.append(f"| {name} | — | — | — | — | — | — | — | {note} | — | — |")
             continue
         joins = f"{a['bhj']}/{a['smj']}/{a['shj']}/{a['bnl']}"
         cols = ",".join(str(c) for c in a["read_cols"]) or "—"
@@ -216,7 +289,9 @@ def main() -> None:
         out.append(
             f"| {name} | {a['exchanges']} | {joins} | {a['codegen']} "
             f"| {py} | {a['cached']} | {a['scans']} | {cols} "
-            f"| {a['pushed_nonempty']}/{a['scans']} |"
+            f"| {a['pushed_nonempty']}/{a['scans']} "
+            f"| {','.join(a['scan_order']) or '—'} "
+            f"| {','.join(a['build_sides']) or '—'} |"
         )
     path = os.path.join(os.path.dirname(__file__), "..", "PLAN_AUDIT.md")
     with open(path, "w") as f:
